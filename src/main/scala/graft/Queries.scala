@@ -83,6 +83,17 @@ object Queries {
     Files.setLastModifiedTime(dst, FileTime.fromMillis(mtime))
   }
 
+  /** Drops each table and deletes its warehouse directory, so a query
+    * that builds a managed store starts from nothing even when an
+    * earlier run left files behind. */
+  private def dropTables(s: SparkSession, tables: String*): Unit =
+    tables.foreach { t =>
+      s.sql(s"DROP TABLE IF EXISTS $t")
+      val loc = new org.apache.hadoop.fs.Path(
+        s.conf.get("spark.sql.warehouse.dir"), t)
+      loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+    }
+
   /** Stopword list shared by quality scoring (and its oracle SQL). */
   val Stopwords: Seq[String] = Seq("the", "a", "and", "of", "to", "is", "in")
   private val StopSql = Stopwords.map(w => s"'$w'").mkString(", ")
@@ -104,31 +115,19 @@ object Queries {
       |                        string_split(lower(text),' ')[i+1],
       |                        string_split(lower(text),' ')[i+2])) END)""".stripMargin
 
-  /** DuckDB SQL for the [[graft.operators.Sampling]] open md5 coin of
-    * `key` under `salt`: first 6 hex digits → integer v, coin =
-    * (v + 0.5)/2^24 — the q117 digit-extraction device, shared by the
-    * deterministic-offset oracles (q206). */
   /** DuckDB replay of [[graft.operators.Sampling.hexInt]] — the raw
     * 24-bit integer from the first six hex digits of md5(key || salt)
     * (the integer [[OpenCoinSql]] shifts onto the open unit interval).
     * Used by the checksum oracles (q215). */
-  private def HexIntSql(key: String, salt: String): String = {
-    val h = s"md5($key || '$salt')"
-    val terms = (0 until 6).map { i =>
-      val dig = s"ascii(substr($h, ${i + 1}, 1))"
-      s"(CASE WHEN $dig >= 97 THEN $dig - 87 ELSE $dig - 48 END) * ${1 << (4 * (5 - i))}"
-    }.mkString(" + ")
-    s"($terms)"
-  }
+  private def HexIntSql(key: String, salt: String): String =
+    s"(${uTerms(s"md5($key || '$salt')")})"
 
-  private def OpenCoinSql(key: String, salt: String): String = {
-    val h = s"md5($key || '$salt')"
-    val terms = (0 until 6).map { i =>
-      val dig = s"ascii(substr($h, ${i + 1}, 1))"
-      s"(CASE WHEN $dig >= 97 THEN $dig - 87 ELSE $dig - 48 END) * ${1 << (4 * (5 - i))}"
-    }.mkString(" + ")
-    s"((($terms) + 0.5) / 16777216.0)"
-  }
+  /** DuckDB SQL for the [[graft.operators.Sampling]] open md5 coin of
+    * `key` under `salt`: first 6 hex digits → integer v, coin =
+    * (v + 0.5)/2^24 — the q117 digit-extraction device, shared by the
+    * deterministic-offset oracles (q206). */
+  private def OpenCoinSql(key: String, salt: String): String =
+    s"(((${uTerms(s"md5($key || '$salt')")}) + 0.5) / 16777216.0)"
 
   /** DuckDB replay of the MONOLITHIC corpus datasheet at
     * (source, lang) grain — shared by q127 (one-shot) and q204 (the
@@ -169,24 +168,19 @@ object Queries {
     * q117 (one-shot) and q201 (the streaming reservoir maintenance,
     * whose top-k merge identity makes accumulation EQUAL the one-shot
     * sample). */
-  private val AesTop10Sql: String = {
-    val uTerms = (0 until 6).map { i =>
-      val dig = s"ascii(substr(h, ${i + 1}, 1))"
-      s"(CASE WHEN $dig >= 97 THEN $dig - 87 ELSE $dig - 48 END) * ${1 << (4 * (5 - i))}"
-    }.mkString("\n    + ")
+  private val AesTop10Sql: String =
     s"""WITH w AS (SELECT doc_id, lang,
        |    len(string_split(lower(text), ' ')) AS wt,
        |    md5(doc_id::VARCHAR || ':aes') AS h
        |  FROM documents),
        |k AS (SELECT doc_id, lang,
-       |    pow((($uTerms) + 0.5) / 16777216.0, 1.0 / wt) AS key
+       |    pow(((${uTerms("h")}) + 0.5) / 16777216.0, 1.0 / wt) AS key
        |  FROM w),
        |r AS (SELECT doc_id, lang,
        |    CAST(row_number() OVER (PARTITION BY lang
        |      ORDER BY key DESC, doc_id) AS BIGINT) AS rank
        |  FROM k)
        |SELECT doc_id, lang, rank FROM r WHERE rank <= 10""".stripMargin
-  }
 
   /** DuckDB replay of the MONOLITHIC KMV chain (sketch per source →
     * pairwise Beyer estimator at k=128) — the shared gate of q183 (the
@@ -1744,12 +1738,7 @@ object Queries {
         // a previous JVM's run leaves table DIRECTORIES the fresh
         // in-memory catalog doesn't know about — saveAsTable then fails
         // with LOCATION_ALREADY_EXISTS, so clear both name and location
-        for (t <- Seq(table, s"${table}_bands")) {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-        }
+        dropTables(s, table, s"${table}_bands")
         operators.Incremental.writeStore(
           docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", table, 8)
         val dir = tempStagingDir("graft_q68_")
@@ -2169,12 +2158,7 @@ object Queries {
         import java.nio.file.attribute.FileTime
         val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
         val table = "q79_emb_store"
-        for (t <- Seq(table, s"${table}_bands")) {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-        }
+        dropTables(s, table, s"${table}_bands")
         operators.Incremental.writeEmbeddingStore(
           emb.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", table, 8)
         def scaled(src: org.apache.spark.sql.DataFrame, offset: Long) =
@@ -2332,10 +2316,6 @@ object Queries {
           .select(col("doc_id"), col("lang"))
       },
       Some {
-        val uTerms = (0 until 6).map { i =>
-          val dig = s"ascii(substr(h, ${i + 1}, 1))"
-          s"(CASE WHEN $dig >= 97 THEN $dig - 87 ELSE $dig - 48 END) * ${1 << (4 * (5 - i))}"
-        }.mkString("\n    + ")
         s"""WITH c AS (SELECT lang, count(*) AS n_g FROM documents GROUP BY lang),
            |t AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
            |w AS (SELECT lang, n_g / n AS p_g, sqrt(n_g / n) AS w_g FROM c, t),
@@ -2345,7 +2325,7 @@ object Queries {
            |u AS (SELECT doc_id, lang, md5(doc_id::VARCHAR || ':mix') AS h
            |      FROM documents),
            |v AS (SELECT doc_id, lang,
-           |  CAST($uTerms AS DOUBLE) / 16777216.0 AS u
+           |  CAST(${uTerms("h")} AS DOUBLE) / 16777216.0 AS u
            |  FROM u)
            |SELECT v.doc_id, v.lang FROM v JOIN r USING (lang)
            |WHERE v.u < r.rate_g""".stripMargin
@@ -2364,10 +2344,6 @@ object Queries {
           .select(col("doc_id"), col("lang"), col("rep_idx"))
       },
       Some {
-        val uTerms = (0 until 6).map { i =>
-          val dig = s"ascii(substr(h, ${i + 1}, 1))"
-          s"(CASE WHEN $dig >= 97 THEN $dig - 87 ELSE $dig - 48 END) * ${1 << (4 * (5 - i))}"
-        }.mkString("\n    + ")
         s"""WITH c AS (SELECT lang, count(*) AS n_g FROM documents GROUP BY lang),
            |t AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
            |w AS (SELECT lang, n_g / n AS p_g, sqrt(n_g / n) AS w_g FROM c, t),
@@ -2376,7 +2352,7 @@ object Queries {
            |u AS (SELECT doc_id, lang, md5(doc_id::VARCHAR || ':rep') AS h
            |      FROM documents),
            |v AS (SELECT doc_id, lang,
-           |  CAST($uTerms AS DOUBLE) / 16777216.0 AS u
+           |  CAST(${uTerms("h")} AS DOUBLE) / 16777216.0 AS u
            |  FROM u),
            |k AS (SELECT v.doc_id, v.lang,
            |  CAST(floor(r.rate_g) AS BIGINT)
@@ -2458,7 +2434,7 @@ object Queries {
              |FROM p LEFT JOIN r2 USING (doc_id)""".stripMargin)),
 
     Q("q86_corpus_prep_substring",
-      (s, d) => { val ctx = new Ctx(s, d); import ctx._
+      (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         // the q51 composition extended one stage: quality gate → lang
         // gate → exact dedup → near-dup dedup → SUBSTRING trim — span
         // removal runs on the SURVIVOR set (production order: whole-doc
@@ -2473,9 +2449,9 @@ object Queries {
         // rebuild) would each re-run the whole prep semi-join otherwise
         // (lifecycle: bench clears caches between queries; library
         // callers clearCache/unpersist — the q76 contract)
-        val survivors = tbl("documents").select(col("doc_id"), col("text"))
-          .join(prepared.select("doc_id"), Seq("doc_id"), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val survivors = ck.shared(tbl("documents")
+          .select(col("doc_id"), col("text"))
+          .join(prepared.select("doc_id"), Seq("doc_id"), "left_semi"))
         val trimmed = operators.Dedup.removeDuplicatedSpans(survivors,
             "doc_id", "text", spanLen = 8)
           .withColumnRenamed("id", "doc_id")
@@ -2674,12 +2650,7 @@ object Queries {
         import java.nio.file.Files
         val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
         val table = "q91_emb_store"
-        for (t <- Seq(table, s"${table}_bands")) {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-        }
+        dropTables(s, table, s"${table}_bands")
         operators.Incremental.writeEmbeddingStore(
           emb.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", table, 8)
         def scaled(src: org.apache.spark.sql.DataFrame, offset: Long) =
@@ -3020,12 +2991,7 @@ object Queries {
         import java.nio.file.Files
         val docs = tbl("documents").select(col("doc_id"), col("text"))
         val table = "q98_sig_store"
-        for (t <- Seq(table, s"${table}_bands")) {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-        }
+        dropTables(s, table, s"${table}_bands")
         operators.Incremental.writeStore(
           docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", table, 8)
         val dir = tempStagingDir("graft_q98_")
@@ -3905,16 +3871,12 @@ object Queries {
             (col("est") - col("cnt")).as("overcount"))
       },
       Some {
-        val uTerms = (0 until 6).map { i =>
-          val dig = s"ascii(substr(h, ${i + 1}, 1))"
-          s"(CASE WHEN $dig >= 97 THEN $dig - 87 ELSE $dig - 48 END) * ${1 << (4 * (5 - i))}"
-        }.mkString("\n      + ")
         val build = (0 until 4).map { sd =>
-          s"""SELECT $sd AS seed, ($uTerms) % 1024 AS bucket
+          s"""SELECT $sd AS seed, (${uTerms("h")}) % 1024 AS bucket
              |  FROM (SELECT md5(tok || ':cms$sd') AS h FROM t)""".stripMargin
         }.mkString("\n  UNION ALL ")
         val probe = (0 until 4).map { sd =>
-          s"""SELECT tok, $sd AS seed, ($uTerms) % 1024 AS bucket
+          s"""SELECT tok, $sd AS seed, (${uTerms("h")}) % 1024 AS bucket
              |  FROM (SELECT tok, md5(tok || ':cms$sd') AS h FROM ex)""".stripMargin
         }.mkString("\n  UNION ALL ")
         s"""WITH t AS (SELECT unnest(string_split(lower(text), ' ')) AS tok
@@ -4409,7 +4371,7 @@ object Queries {
       Some(DatasheetSql)),
 
     Q("q128_opq_rotated_pq",
-      (s, d) => { val ctx = new Ctx(s, d); import ctx._
+      (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         // OPQ-style ROTATED product quantization (Ge et al., "Optimized
         // Product Quantization", CVPR 2013 — the parametric eigenvalue-
         // allocation form): full-rank PCA rotation with eigenvalue-
@@ -4454,14 +4416,12 @@ object Queries {
         // both full-probe rankings, the nProbe=1 probe) and the rotated
         // twins three — checkpoint so the rotation projection runs once
         // per side, not once per consumer
-        val rotCorpus = Similarity.rotate(mixed, "embedding", rmodel)
-          .select(col("vec_id"), col("pc"))
-          .localCheckpoint(true)
+        val rotCorpus = ck.proxy(Similarity.rotate(mixed, "embedding", rmodel)
+          .select(col("vec_id"), col("pc")))
         val twins = mixed.filter(col("vec_id") % 101 === 0)
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-        val rotTwins = Similarity.rotate(twins, "embedding", rmodel)
-          .select(col("vec_id"), col("pc"))
-          .localCheckpoint(true)
+        val rotTwins = ck.proxy(Similarity.rotate(twins, "embedding", rmodel)
+          .select(col("vec_id"), col("pc")))
         val cents = Similarity.trainCentroidsKMeans(rotCorpus, "vec_id", "pc",
           dim = 64, cells = 8, iters = 1)
         // (b) full-probe equivalence, k=3, in the rotated space
@@ -4539,16 +4499,12 @@ object Queries {
           .select(col("tok"), col("cnt"), col("est_merged"), col("est_mono"))
       },
       Some {
-        val uTerms = (0 until 6).map { i =>
-          val dig = s"ascii(substr(h, ${i + 1}, 1))"
-          s"(CASE WHEN $dig >= 97 THEN $dig - 87 ELSE $dig - 48 END) * ${1 << (4 * (5 - i))}"
-        }.mkString("\n      + ")
         val build = (0 until 4).map { sd =>
-          s"""SELECT $sd AS seed, ($uTerms) % 1024 AS bucket
+          s"""SELECT $sd AS seed, (${uTerms("h")}) % 1024 AS bucket
              |  FROM (SELECT md5(tok || ':cms$sd') AS h FROM t)""".stripMargin
         }.mkString("\n  UNION ALL ")
         val probe = (0 until 4).map { sd =>
-          s"""SELECT tok, $sd AS seed, ($uTerms) % 1024 AS bucket
+          s"""SELECT tok, $sd AS seed, (${uTerms("h")}) % 1024 AS bucket
              |  FROM (SELECT tok, md5(tok || ':cms$sd') AS h FROM ex)""".stripMargin
         }.mkString("\n  UNION ALL ")
         s"""WITH t AS (SELECT unnest(string_split(lower(text), ' ')) AS tok
@@ -4586,10 +4542,7 @@ object Queries {
         // holds exactly |corpus| + |twins| rows.
         val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
         val table = "q130_ann_store"
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), table)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+        dropTables(s, table)
         val initial = emb.filter(col("vec_id") % 3 =!= 0)
         val (model, _) = Similarity.pqTrain(initial, "vec_id", "embedding",
           dim = 64, m = 8, ksub = 16, iters = 2)
@@ -4727,7 +4680,7 @@ object Queries {
              |CAST(1 AS BIGINT) AS decorrelated_ok""".stripMargin)),
 
     Q("q133_ivfpq_rerank",
-      (s, d) => { val ctx = new Ctx(s, d); import ctx._
+      (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         // IVFADC-R (Jégou, Tavenard, Douze, Amsaleg, ICASSP 2011): ADC
         // shortlist → exact squared-L2 re-rank of only the |Q|·R fetched
         // vectors — the standard billion-scale accuracy recovery step.
@@ -4759,12 +4712,11 @@ object Queries {
         // both recall terms) and the raw ADC ranking three (set check,
         // refine input, recall) — checkpoint the |Q|·k-row lists so the
         // brute-force / ADC rankings run once each
-        val exact = Similarity.bruteForceTopKL2(emb, qs, "vec_id", "embedding", k = 5)
-          .localCheckpoint(true)
+        val exact = ck.proxy(
+          Similarity.bruteForceTopKL2(emb, qs, "vec_id", "embedding", k = 5))
         // (a) R = k: same candidate set, possibly reordered
-        val raw = Similarity.ivfPqTopK(emb, qs, cents, "vec_id", "embedding",
-          model, k = 5, nProbe = 2)
-          .localCheckpoint(true)
+        val raw = ck.proxy(Similarity.ivfPqTopK(emb, qs, cents, "vec_id",
+          "embedding", model, k = 5, nProbe = 2))
         val refSame = Similarity.refineTopK(emb, qs, raw, "vec_id", "embedding", k = 5)
         val setStats = raw.select(col("query_id"), col("neighbor_id"))
           .withColumn("in_raw", lit(1))
@@ -5144,7 +5096,7 @@ object Queries {
              |WHERE top.r = 1""".stripMargin)),
 
     Q("q139_compaction_plan",
-      (s, d) => { val ctx = new Ctx(s, d); import ctx._
+      (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         // Small-file compaction planning (the OPTIMIZE pass) under
         // oracle: units = the (lang, source) write partitions of the
         // documents table, sized by payload bytes (octet_length + a
@@ -5163,8 +5115,8 @@ object Queries {
         // ONE corpus scan: the unit rollup is eagerly materialized at
         // metadata grain, then both the target derivation and the
         // planner read it
-        val units = operators.Maintenance.unitRollup(docs,
-          Seq("lang", "source"), bytes).localCheckpoint(true)
+        val units = ck.proxy(operators.Maintenance.unitRollup(docs,
+          Seq("lang", "source"), bytes))
         val target = units.agg(
           (floor(sum(col("u_bytes")) / 8) + 1).cast("long").as("target"))
         operators.Maintenance.compactionPlanOfUnits(units,
@@ -6346,7 +6298,7 @@ object Queries {
       }),
 
     Q("q162_ann_store_maintenance",
-      (s, d) => { val ctx = new Ctx(s, d); import ctx._
+      (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         // ANN STORE MAINTENANCE — the q91/q98 lifecycle applied to the
         // IVF-PQ index (closing q130's ingest-only gap): tombstone
         // deletes (merge-on-read, O(delete batch), store untouched), a
@@ -6372,12 +6324,7 @@ object Queries {
         // AnnMaintenanceSpec, not here.
         val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
         val table = "q162_ann_store"
-        for (t <- Seq(table, s"${table}_deletes")) {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-        }
+        dropTables(s, table, s"${table}_deletes")
         val initial = emb.filter(col("vec_id") % 3 =!= 0)
         val (model, _) = Similarity.pqTrain(initial, "vec_id", "embedding",
           dim = 64, m = 8, ksub = 16, iters = 2)
@@ -6398,22 +6345,22 @@ object Queries {
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
         // probe with tombstones PENDING (merge-on-read), frozen before
         // the store mutates further
-        val pre = operators.Incremental.annStoreTopK(s, table, queries,
+        val pre = ck.proxy(operators.Incremental.annStoreTopK(s, table,
+            queries,
             "vec_id", "embedding", cs, model, k = 5, nProbe = 8,
-            honorDeletes = true)
-          .localCheckpoint(true)
+            honorDeletes = true))
         // the halt-retry: the SAME batch appends again → duplicate rows
         operators.Incremental.appendToAnnStore(batch1, "vec_id", "embedding",
           cs, model, table, numBuckets = 8)
-        val nBefore = s.table(table).agg(count(lit(1)).as("n_before"))
-          .localCheckpoint(true)
+        val nBefore = ck.proxy(
+          s.table(table).agg(count(lit(1)).as("n_before")))
         operators.Incremental.compactAnnStore(s, table, numBuckets = 8)
         require(operators.Incremental.validateAnnStore(s, table, m = 8),
           "ANN store invalid after compaction")
-        val post = operators.Incremental.annStoreTopK(s, table, queries,
+        val post = ck.proxy(operators.Incremental.annStoreTopK(s, table,
+            queries,
             "vec_id", "embedding", cs, model, k = 5, nProbe = 8,
-            honorDeletes = true)
-          .localCheckpoint(true)
+            honorDeletes = true))
         // copy-on-write upsert: re-encode CHANGED vectors (scaled 2x)
         val ups = emb.filter(col("vec_id") % 11 === 0 &&
             col("vec_id") % 3 =!= 0 && col("vec_id") % 7 =!= 0)
@@ -6781,7 +6728,7 @@ object Queries {
              |FROM dh""".stripMargin)),
 
     Q("q169_incremental_image_dedup",
-      (s, d) => { val ctx = new Ctx(s, d); import ctx._
+      (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         implicit val ss = s
         // INCREMENTAL IMAGE DEDUP — the q62 cross-snapshot discipline
         // on the perceptual-hash store: history persists as (id, dhash)
@@ -6803,12 +6750,7 @@ object Queries {
         // fail the hash.
         val docs = tbl("documents")
         val table = "q169_phash_store"
-        for (t <- Seq(table, s"${table}_bands")) {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-        }
+        dropTables(s, table, s"${table}_bands")
         def ph(m: org.apache.spark.sql.Dataset[
             operators.Multimodal.MediaRecord]) =
           operators.Multimodal.perceptualHashes(m)
@@ -6822,10 +6764,10 @@ object Queries {
               expr("(doc_id div 3) % 2 = 0")))
           .unionByName(operators.Multimodal.brightenedImagesFromDocuments(
             storeDocs.filter(col("doc_id") % 13 === 0), 1000000L, 16)))
-        val surv1 = operators.Incremental.dedupHashesAgainst(b1,
+        // frozen BEFORE the store grows
+        val surv1 = ck.proxy(operators.Incremental.dedupHashesAgainst(b1,
             s.table(table), "media_id", col("dhash"), maxHamming = 3,
-            storeBands = Some(s.table(s"${table}_bands")))
-          .localCheckpoint(true) // freeze BEFORE the store grows
+            storeBands = Some(s.table(s"${table}_bands"))))
         operators.Incremental.appendToHashStore(surv1, "media_id",
           col("dhash"), table, numBuckets = 8, maxHamming = 3)
         val b2 = ph(operators.Multimodal.imagesFromDocuments(
@@ -6863,12 +6805,7 @@ object Queries {
         // layout re-suppresses a group-(a) doc and fails the hash.
         val docs = tbl("documents")
         val table = "q170_text_store"
-        for (t <- Seq(table, s"${table}_bands")) {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-        }
+        dropTables(s, table, s"${table}_bands")
         val storeDocs = docs.filter(col("doc_id") % 3 =!= 0)
         operators.Incremental.writeStore(storeDocs, "doc_id", "text",
           table, numBuckets = 8)
@@ -7259,7 +7196,7 @@ object Queries {
           |  LEFT JOIN nd ON nd.doc_id = g.doc_id""".stripMargin)),
 
     Q("q179_forget_edges",
-      (s, d) => { val ctx = new Ctx(s, d); import ctx._
+      (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         // FORGET-PROTOCOL EDGES under the oracle (q170's sibling): the
         // spec-only surfaces the r12 lesson warns about, made
         // hash-checked —
@@ -7280,12 +7217,7 @@ object Queries {
         //      contract pattern).
         val docs = tbl("documents")
         val table = "q179_text_store"
-        for (t <- Seq(table, s"${table}_bands")) {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-        }
+        dropTables(s, table, s"${table}_bands")
         val storeDocs = docs.filter(col("doc_id") % 3 =!= 0)
         operators.Incremental.writeStore(storeDocs, "doc_id", "text",
           table, numBuckets = 8)
@@ -7299,20 +7231,13 @@ object Queries {
         operators.Incremental.forgetFromStore(s, fset, table, numBuckets = 8)
         require(operators.Incremental.validateStore(s, table),
           "store/bands diverged after forget")
-        val n1 = s.table(table).agg(count(lit(1)).as("n1"))
-          .localCheckpoint(true)
+        val n1 = ck.proxy(s.table(table).agg(count(lit(1)).as("n1")))
         operators.Incremental.forgetFromStore(s, fset, table, numBuckets = 8)
         require(operators.Incremental.validateStore(s, table),
           "store/bands diverged after second forget")
-        val n2 = s.table(table).agg(count(lit(1)).as("n2"))
-          .localCheckpoint(true)
+        val n2 = ck.proxy(s.table(table).agg(count(lit(1)).as("n2")))
         val annTable = "q179_ann_store"
-        for (t <- Seq(annTable, s"${annTable}_deletes")) {
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val loc = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-        }
+        dropTables(s, annTable, s"${annTable}_deletes")
         val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
           .filter(col("vec_id") % 5 === 0)
         val (model, _) = Similarity.pqTrain(emb, "vec_id", "embedding",
@@ -7457,7 +7382,7 @@ object Queries {
              |FROM g""".stripMargin)),
 
     Q("q181_kcenter_twolevel",
-      (s, d) => { val ctx = new Ctx(s, d); import ctx._
+      (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         // TWO-LEVEL GONZALEZ (q177's k >= ~10^3 scale path, implemented
         // not just documented): partition-local farthest-first coresets
         // in ONE mapPartitions pass, then the exact running-min
@@ -7476,8 +7401,8 @@ object Queries {
         //    IDENTICAL selection (the range-partition pinning).
         val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
         val k = 6
-        val sel = Similarity.kCenterSelectTwoLevel(emb, "vec_id",
-          "embedding", k, parts = 8, localFactor = 2).localCheckpoint(true)
+        val sel = ck.proxy(Similarity.kCenterSelectTwoLevel(emb, "vec_id",
+          "embedding", k, parts = 8, localFactor = 2))
         val selAgain = Similarity.kCenterSelectTwoLevel(emb.repartition(13),
           "vec_id", "embedding", k, parts = 8, localFactor = 2)
         val single = Similarity.kCenterSelect(emb, "vec_id", "embedding", k)
@@ -8776,7 +8701,7 @@ object Queries {
               |FROM r GROUP BY 1, 2""".stripMargin)),
 
     Q("q216_consensus_dedup",
-      (s, d) => { val ctx = new Ctx(s, d); import ctx._
+      (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         // ensemble dedup vote: a pair must be flagged by ≥ 2 of three
         // independent signals (3-gram Jaccard ≥ 0.5, 3-gram containment
         // ≥ 0.6 in either direction, prefix levenshtein ≤ 4) before a
@@ -8807,7 +8732,7 @@ object Queries {
         // signal. The vote table keeps only the pair ids, so the
         // per-signal score columns the library operators emit are
         // never needed here.
-        val inv = Checkpoints.dataGrain(
+        val inv = ck.dataGrain(
           Dedup.shingleIndex(u, "doc_id", "text", shingleLen = 3))
         val invA = inv.select(col("id").as("id_a"), col("sz").as("sz_a"),
           col("tok"))
@@ -8820,7 +8745,7 @@ object Queries {
         // blowup) to the near-dup set (proxy grain), and the plan
         // still computes the shared aggregate once (guide §2.3
         // "project early" / §5 "filter before materializing")
-        val co = invA.join(invB, Seq("tok"))
+        val co = ck.proxy(invA.join(invB, Seq("tok"))
           .filter(col("id_a") < col("id_b"))
           .groupBy("id_a", "id_b", "sz_a", "sz_b")
           .agg(count(lit(1)).as("inter"))
@@ -8829,8 +8754,7 @@ object Queries {
           .withColumn("f_c", col("inter").cast("double") /
             least(col("sz_a"), col("sz_b")) >= 0.6)
           .filter(col("f_j") || col("f_c"))
-          .select(col("id_a"), col("id_b"), col("f_j"), col("f_c"))
-          .localCheckpoint(true)
+          .select(col("id_a"), col("id_b"), col("f_j"), col("f_c")))
         val jac = co.filter(col("f_j")).select(col("id_a"), col("id_b"))
         val con = co.filter(col("f_c")).select(col("id_a"), col("id_b"))
         val fuz = Dedup.fuzzyDupPairs(u, "doc_id", "text",
@@ -8881,7 +8805,7 @@ object Queries {
               |FROM g WHERE f_jac + f_con + f_fuz >= 2""".stripMargin)),
 
     Q("q217_dup_triangles",
-      (s, d) => { val ctx = new Ctx(s, d); import ctx._
+      (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         // dup-graph transitivity: per-node triangle counts and local
         // clustering coefficients over the 3-gram-Jaccard ≥ 0.015 pair
         // graph — cliques (template families) vs chains (borderline
@@ -8894,7 +8818,7 @@ object Queries {
         // edge-grain at a loose gate (0.015 keeps most co-occurring
         // pairs) — spill-safe serialized materialization, not the
         // deserialized default (the r20 32-core regression lesson)
-        val edges = Checkpoints.dataGrain(
+        val edges = ck.dataGrain(
           Dedup.jaccardPairs(tbl("documents"), "doc_id",
             "text", threshold = 0.015, shingleLen = 3))
         operators.Graph.triangleStats(edges, "id_a", "id_b")
@@ -8923,13 +8847,13 @@ object Queries {
               |FROM deg LEFT JOIN pn USING (n)""".stripMargin)),
 
     Q("q218_dedup_threshold_sweep",
-      (s, d) => { val ctx = new Ctx(s, d); import ctx._
+      (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         // dedup-gate tuning curve: pair and flagged-doc counts at each
         // candidate threshold, from ONE pair materialization at the
         // loosest gate (0.02) — candidate generation never re-runs per
         // gate, the sweep is pair-grain. Zero-hit thresholds still
         // appear (grid left-join), so the curve is complete.
-        val pairs = Checkpoints.dataGrain(
+        val pairs = ck.dataGrain(
           Dedup.jaccardPairs(tbl("documents"), "doc_id",
             "text", threshold = 0.02, shingleLen = 3))
         Dedup.thresholdSweep(pairs, "jaccard",

@@ -9,18 +9,12 @@ import org.apache.spark.sql.functions._
   * All column expressions (codegen'd built-ins + higher-order functions) —
   * no UDFs, so they vectorize and survive a 1000-executor scale-up with no
   * serialization overhead. Oracle-parity note: token operations use plain
-  * single-space splitting where a DuckDB oracle must reproduce them; the
-  * regex variants are library-side extras.
+  * single-space splitting where a DuckDB oracle must reproduce them.
   */
 object Text {
 
   /** Whitespace tokens (exact single-space split — oracle-reproducible). */
   def tokens(text: Column): Column = split(text, " ")
-
-  /** Regex word tokens — BPE-ish pre-tokenizer: word pieces, numbers, or
-    * single non-space symbols (library-side; mirrors GPT-2-style regex). */
-  def regexTokens(text: Column): Column =
-    filter(split(text, "(?=[^\\p{L}\\p{N}])|(?<=[^\\p{L}\\p{N}])"), t => length(trim(t)) > 0)
 
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 

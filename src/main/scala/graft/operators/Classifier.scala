@@ -453,14 +453,15 @@ object Classifier {
   def weightedConformalGateFromState(state: DataFrame,
                                      applyDf: DataFrame, groupCol: String,
                                      scoreCol: Column, alphaNum: Long,
-                                     alphaDen: Long): DataFrame = {
+                                     alphaDen: Long): DataFrame =
+    Checkpoints.scoped { ck =>
     // the folded state feeds BOTH the weight estimate and the
     // threshold reduction (each with several internal references); a
     // caller's shard-merge plan would re-run once per reference —
     // measured 98 scans / 186 exchanges in q250's un-checkpointed
     // plan. The state is distinct-(group, score)-grain: a lightweight
     // proxy, safe to materialize eagerly.
-    val st = state.localCheckpoint(true)
+    val st = ck.proxy(state)
     val thr = weightedConformalFromState(st, groupCol,
       shiftWeightsFromState(st, applyDf, groupCol), alphaNum, alphaDen)
       .withColumnRenamed(groupCol, s"__g_$groupCol")

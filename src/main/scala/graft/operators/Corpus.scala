@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.Text
 
 /** Composed training-corpus preparation: the end-to-end shape of an LLM
@@ -21,20 +20,6 @@ import graft.functions.Text
   * scan). Stages compose lazily — Catalyst fuses the projections.
   */
 object Corpus {
-
-  /** The prepared corpus plus a cache-lifecycle handle. The two persisted
-    * intermediates are registered in the session CacheManager, which
-    * holds them STRONGLY until unpersist()/clearCache() — they are NOT
-    * dropped when the plan goes unreferenced. Call [[release]] once `df`
-    * has been materialized (written/collected); in a long-lived session
-    * composing many corpora, skipping it accumulates cached blocks for
-    * the session lifetime. */
-  final case class PreparedCorpus(df: DataFrame,
-                                  private val cached: Seq[DataFrame]) {
-    def release(): Unit = cached.foreach(_.unpersist())
-    def isReleased: Boolean =
-      cached.forall(_.storageLevel == StorageLevel.NONE)
-  }
 
   /** @param maxDocFreq prefix-filter knob forwarded to
     *   [[Dedup.jaccardPairs]]: shingles present in more than this fraction
@@ -70,21 +55,20 @@ object Corpus {
                      nearDupThreshold: Double, maxDocFreq: Double = 0.5,
                      transitiveDedup: Boolean = false,
                      evalDocs: Option[DataFrame] = None,
-                     contaminationThreshold: Double = 0.8): PreparedCorpus = {
+                     contaminationThreshold: Double = 0.8): ManagedFrame =
+    Checkpoints.managed { ck =>
     val id = col(idCol); val text = col(textCol)
 
     // persisted: consumed by both the exact-keep aggregate and the
     // exact-set semi join — without a materialization barrier the
     // quality+lang scan re-runs per branch (~3× the corpus scan; at
-    // 100 TB that is two extra full passes). MEMORY_AND_DISK spills
-    // rather than recomputing. Lifecycle: the caller releases via the
-    // returned handle.
-    val gated = docs
+    // 100 TB that is two extra full passes). Lifecycle: the caller
+    // releases via the returned handle.
+    val gated = ck.shared(docs
       .withColumn("quality", Text.qualityScore(text, stopwords))
       .withColumn("lang_pred", Text.langId(lower(text), langMarkers))
       .filter(col("quality") >= minQuality &&
-        col("lang_pred").isin(keepLangs.toSeq.map(lit): _*))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        col("lang_pred").isin(keepLangs.toSeq.map(lit): _*)))
 
     // exact dedup: min id per content hash
     val exactKeep = gated.groupBy(md5(text).as("__h"))
@@ -92,8 +76,7 @@ object Corpus {
       .select(idCol)
     // persisted: consumed by the jaccard inverted index AND the final
     // left_anti probe
-    val exact = gated.join(exactKeep, Seq(idCol), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val exact = ck.shared(gated.join(exactKeep, Seq(idCol), "left_semi"))
 
     // near-dup dedup: greedy (drop docs with a smaller-id near-dup) or
     // cluster-consistent (keep one survivor per transitive dup cluster).
@@ -103,18 +86,14 @@ object Corpus {
     // over the corpus runs once per stage (§2.4). Persisted only when
     // a second consumer exists.
     val inv0 = Dedup.shingleIndex(exact, idCol, textCol, shingleLen = 3)
-    val inv =
-      if (evalDocs.isEmpty) inv0
-      else inv0.persist(StorageLevel.MEMORY_AND_DISK)
+    val inv = if (evalDocs.isEmpty) inv0 else ck.shared(inv0)
     val pairs = Dedup.jaccardPairsFromIndex(
       Dedup.hotFiltered(exact, inv, maxDocFreq), nearDupThreshold)
-    val (dupOf, extraCached) =
-      if (!transitiveDedup)
-        (pairs.select(col("id_b").as(idCol)).distinct(), Seq.empty[DataFrame])
+    val dupOf =
+      if (!transitiveDedup) pairs.select(col("id_b").as(idCol)).distinct()
       else {
-        val labels = Dedup.connectedComponents(pairs)
-        (labels.filter(col("id") =!= col("rep")).select(col("id").as(idCol)),
-          Seq(labels))
+        val labels = ck.adopt(Dedup.connectedComponents(pairs))
+        labels.filter(col("id") =!= col("rep")).select(col("id").as(idCol))
       }
     val deduped = exact.join(dupOf, Seq(idCol), "left_anti")
     // optional eval-set decontamination, LAST: checked on the docs that
@@ -122,19 +101,18 @@ object Corpus {
     // deduped set twice (train index + the anti-join). The train index
     // is the shared `inv` filtered to survivors (an id semi-join), not
     // a second tokenize pass over the corpus.
-    val (cleaned, decontCached) = evalDocs match {
-      case None => (deduped, Seq.empty[DataFrame])
+    val cleaned = evalDocs match {
+      case None => deduped
       case Some(ev) =>
-        val d = deduped.persist(StorageLevel.MEMORY_AND_DISK)
+        val d = ck.shared(deduped)
         val survIdx = inv.join(d.select(col(idCol).as("id")),
           Seq("id"), "left_semi")
-        (Dedup.decontaminateFromIndex(d, survIdx, ev, idCol, textCol,
-          contaminationThreshold), Seq(d, inv))
+        Dedup.decontaminateFromIndex(d, survIdx, ev, idCol, textCol,
+          contaminationThreshold)
     }
-    val result = cleaned
+    cleaned
       .select(id, Text.tokenCount(text).as("n_tokens"), col("quality"),
         col("lang_pred"))
-    PreparedCorpus(result, Seq(gated, exact) ++ extraCached ++ decontCached)
   }
 
   /** Per-document DROP LEDGER — the audit artifact behind every
@@ -181,31 +159,27 @@ object Corpus {
                         keepLangs: Set[String], minQuality: Double,
                         nearDupThreshold: Double, maxDocFreq: Double = 0.5,
                         evalDocs: Option[DataFrame] = None,
-                        contaminationThreshold: Double = 0.8): ManagedFrame = {
+                        contaminationThreshold: Double = 0.8): ManagedFrame =
+    Checkpoints.managed { ck =>
     val id = col(idCol); val text = col(textCol)
-    val scored = docs
+    val scored = ck.shared(docs
       .withColumn("quality", Text.qualityScore(text, stopwords))
-      .withColumn("lang_pred", Text.langId(lower(text), langMarkers))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("lang_pred", Text.langId(lower(text), langMarkers)))
     val gated = scored.filter(col("quality") >= minQuality &&
       col("lang_pred").isin(keepLangs.toSeq.map(lit): _*))
     val exactKeep = gated.groupBy(md5(text).as("__h"))
       .agg(min(id).as(idCol)).select(idCol)
-    val exact = gated.join(exactKeep, Seq(idCol), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val exact = ck.shared(gated.join(exactKeep, Seq(idCol), "left_semi"))
     // the prepareManaged shared-index shape: one shingle index feeds
     // the near-dup stage and (with `evalDocs`) the contamination
     // train side
     val inv0 = Dedup.shingleIndex(exact, idCol, textCol, shingleLen = 3)
-    val inv =
-      if (evalDocs.isEmpty) inv0
-      else inv0.persist(StorageLevel.MEMORY_AND_DISK)
+    val inv = if (evalDocs.isEmpty) inv0 else ck.shared(inv0)
     val nearDupIds = Dedup.jaccardPairsFromIndex(
         Dedup.hotFiltered(exact, inv, maxDocFreq), nearDupThreshold)
       .select(col("id_b").as(idCol)).distinct()
     val dedupedOpt = evalDocs.map { _ =>
-      exact.join(nearDupIds, Seq(idCol), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      ck.shared(exact.join(nearDupIds, Seq(idCol), "left_anti"))
     }
     val contamIds = evalDocs.zip(dedupedOpt).map { case (ev, deduped) =>
       val survIdx = inv.join(deduped.select(col(idCol).as("id")),
@@ -223,15 +197,13 @@ object Corpus {
       case Some(c) => base.join(flag(c, "__ct"), Seq(idCol), "left")
       case None    => base.withColumn("__ct", lit(null).cast("long"))
     }
-    ManagedFrame(withContam.select(id, col("quality"), col("lang_pred"),
+    withContam.select(id, col("quality"), col("lang_pred"),
       when(col("quality") < minQuality, "quality")
         .when(!col("lang_pred").isin(keepLangs.toSeq.map(lit): _*), "lang")
         .when(col("__ek").isNull, "exact_dup")
         .when(col("__nd").isNotNull, "near_dup")
         .when(col("__ct").isNotNull, "contaminated")
-        .otherwise("kept").as("stage")),
-      cached = Seq(scored, exact) ++ dedupedOpt.toSeq ++
-        (if (evalDocs.isEmpty) Nil else Seq(inv)))
+        .otherwise("kept").as("stage"))
   }
 
   /** [[prepareManaged]] without the lifecycle handle — for one-shot jobs

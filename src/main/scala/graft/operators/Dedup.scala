@@ -45,7 +45,7 @@ object Dedup {
     * the shingle string (distinct strings stay distinct w.h.p., so
     * |A∩B| and doc-frequency counts are unchanged). Ensemble callers
     * that need several signals over the SAME corpus should build this
-    * once, `localCheckpoint(true)` it, and feed the `FromIndex`
+    * once, checkpoint it (proxy grain), and feed the `FromIndex`
     * variants — the index is a lightweight proxy (id, size, 8-byte
     * hash), so materializing it once replaces 2 corpus
     * scans+shingle-explodes PER SIGNAL SIDE with one. */
@@ -256,7 +256,8 @@ object Dedup {
     * sub-linear on skewed real-text gram distributions. */
   def fuzzyDupPairs(docs: DataFrame, idCol: String, textCol: String,
                     prefixTokens: Int = 6, maxDist: Int = 4,
-                    qgramLen: Int = 2): DataFrame = {
+                    qgramLen: Int = 2): DataFrame =
+    Checkpoints.scoped { ck =>
     require(prefixTokens >= 1, "prefixTokens must be positive")
     require(maxDist >= 0, "maxDist must be non-negative")
     require(qgramLen >= 1, "qgramLen must be positive")
@@ -271,20 +272,18 @@ object Dedup {
     // (id + a `prefixTokens`-token key / a 2-char gram), so eager
     // localCheckpoints pay one materialization for one-pass candidate
     // generation — guide §2.4/§8's "decide on small rows" shape.
-    val keyed = docs.select(col(idCol).as("id"),
+    val keyed = ck.proxy(docs.select(col(idCol).as("id"),
         concat_ws(" ",
           slice(Text.tokens(lower(col(textCol))), 1, prefixTokens)).as("k"))
-      .withColumn("klen", length(col("k")))
-      .localCheckpoint(true)
+      .withColumn("klen", length(col("k"))))
     // distinct q-gram types per key (guarded: sequence(1, hi) with
     // hi < 1 would generate a DESCENDING range, not an empty one)
     val grams = keyed.withColumn("gs",
       when(col("klen") >= q, array_distinct(expr(
         s"transform(sequence(1, length(k) - ${q - 1}), i -> substr(k, i, $q))")))
         .otherwise(array().cast("array<string>")))
-    val exploded = grams.select(col("id"), col("klen"),
-        explode(col("gs")).as("g_s"))
-      .localCheckpoint(true)
+    val exploded = ck.proxy(grams.select(col("id"), col("klen"),
+        explode(col("gs")).as("g_s")))
     // global df per gram type: bounded by |charset|^q — model metadata
     val dfTab = exploded.groupBy("g_s").agg(count(lit(1)).as("g_df"))
     val ranked = exploded.join(dfTab, Seq("g_s"))
@@ -307,7 +306,7 @@ object Dedup {
       .select(col("id"), col("klen"), lit(Long.MinValue).as("g"))
     // posts feeds both sides of the candidate self-join: checkpoint so
     // the df-rank window runs once, not once per side
-    val posts = ranked.unionByName(sentinel).localCheckpoint(true)
+    val posts = ck.proxy(ranked.unionByName(sentinel))
     // the |len| <= maxDist band is a NECESSARY condition for lev <= k,
     // so applying it on the posted klen BEFORE the pair distinct (and
     // before the key-string enrichment) prunes candidates at the
@@ -406,7 +405,8 @@ object Dedup {
     * materializing and reclaim it deterministically. */
   def softDedupWeightsManaged(docs: DataFrame, idCol: String,
                               textCol: String, shingleLen: Int = 3,
-                              beta: Double = 0.5): ManagedFrame = {
+                              beta: Double = 0.5): ManagedFrame =
+    Checkpoints.managed { ck =>
     require(beta > 0, "beta must be positive")
     val sh = docs.select(col(idCol).as("id"),
         explode(Text.shingles(lower(col(textCol)), shingleLen)).as("sh_s"))
@@ -415,19 +415,17 @@ object Dedup {
     // persisted: the min-aggregate and the final projection are two
     // consumers — without this the explode/df/join pipeline (the
     // operator's entire cost) runs twice per action
-    val commonness = sh.join(df, Seq("sh"))
+    val commonness = ck.shared(sh.join(df, Seq("sh"))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_shingles"),
-        (sum(col("df")).cast("double") / count(lit(1))).as("commonness"))
-      .persist()
+        (sum(col("df")).cast("double") / count(lit(1))).as("commonness")))
     val cmin = commonness.agg(min(col("commonness")).as("c_min"))
     val w = if (beta == 0.5) sqrt(col("c_min") / col("commonness"))
             else pow(col("c_min") / col("commonness"), lit(beta))
-    ManagedFrame(commonness.crossJoin(broadcast(cmin))
+    commonness.crossJoin(broadcast(cmin))
       .select(col("id"), col("n_shingles"),
         round(col("commonness"), 6).as("commonness"),
-        round(w, 6).as("weight")),
-      cached = Seq(commonness))
+        round(w, 6).as("weight"))
   }
 
   /** MinHash signature: `numHashes` hash families; sig[i] = min over
@@ -662,14 +660,15 @@ object Dedup {
     * 1-row aggregates glued by broadcast gates. */
   def lshRecallAudit(docs: DataFrame, idCol: String, textCol: String,
                      threshold: Double, bands: Int, rowsPerBand: Int,
-                     shingleLen: Int = 3): DataFrame = {
+                     shingleLen: Int = 3): DataFrame =
+    Checkpoints.scoped { ck =>
     // both pair sets feed TWO branches each (the recall join and the
     // precision anti-join); un-materialized, each branch re-runs the
     // full inverted-index / banded candidate machinery (measured 48
     // parquet scans in q195's plan). Pair-grain proxies — checkpoint.
-    val exact = Checkpoints.dataGrain(
+    val exact = ck.dataGrain(
       jaccardPairs(docs, idCol, textCol, threshold, shingleLen))
-    val lsh = Checkpoints.dataGrain(
+    val lsh = ck.dataGrain(
       minhashLshPairs(docs, idCol, textCol, threshold, shingleLen,
           bands, rowsPerBand)
         .select(col("id_a"), col("id_b"), lit(1L).as("detected")))
@@ -718,13 +717,13 @@ object Dedup {
   def contaminationBlastRadius(train: DataFrame, evalDocs: DataFrame,
                                idCol: String, textCol: String,
                                threshold: Double, dupThreshold: Double,
-                               shingleLen: Int = 3): DataFrame = {
+                               shingleLen: Int = 3): DataFrame =
+    Checkpoints.scoped { ck =>
     // id-grain proxy consumed by three branches (rep lookup, via_dup
     // anti-join, final union) — checkpoint so the containment
     // inverted-index join runs once
-    val direct = contaminationPairs(train, evalDocs, idCol, textCol,
-      threshold, shingleLen).select(col("train_id").as(idCol)).distinct()
-      .localCheckpoint(true)
+    val direct = ck.proxy(contaminationPairs(train, evalDocs, idCol, textCol,
+      threshold, shingleLen).select(col("train_id").as(idCol)).distinct())
     val comps = connectedComponents(
         jaccardPairs(train, idCol, textCol, dupThreshold, shingleLen))
       .select(col("id").as(idCol), col("rep"))
@@ -1228,12 +1227,10 @@ object Dedup {
     * the materialized blocks — every round stays O(1) to plan. On a
     * cluster with executor churn, prefer `sparkContext.setCheckpointDir`
     * + reliable `checkpoint()` for the same truncation with HDFS-backed
-    * blocks. Every superseded round's checkpoint blocks are freed via
-    * [[Checkpoints.release]] as soon as the next round materializes
-    * (Dataset.unpersist does NOT free checkpoint storage), so
-    * block-manager state stays O(1) in rounds. The returned labels are
-    * one materialized node-grain block set; long-lived callers release
-    * it with `Checkpoints.release` after consuming. */
+    * blocks. Every superseded round's checkpoint is released as soon as
+    * the next round materializes, so block-manager state stays O(1) in
+    * rounds. The returned labels are one checkpointed node-grain table,
+    * handed to the caller ([[Checkpoints]]). */
   def connectedComponents(pairs: DataFrame, idACol: String = "id_a",
                           idBCol: String = "id_b", maxRounds: Int = 50): DataFrame =
     connectedComponentsWithRounds(pairs, idACol, idBCol, maxRounds)._1
@@ -1243,7 +1240,8 @@ object Dedup {
     * assert on it directly. */
   def connectedComponentsWithRounds(pairs: DataFrame, idACol: String = "id_a",
                                     idBCol: String = "id_b",
-                                    maxRounds: Int = 50): (DataFrame, Int) = {
+                                    maxRounds: Int = 50): (DataFrame, Int) =
+    Checkpoints.scoped { ck =>
     val a = col(idACol); val b = col(idBCol)
     // Canonicalize ONCE and checkpoint BEFORE dropping self-pairs: every
     // later reference (first round, convergence probe, the final node
@@ -1251,7 +1249,7 @@ object Dedup {
     // pipeline — `pairs` is typically a full LSH/inverted-index plan,
     // and a second reference to it would re-run that whole plan just to
     // list node ids (measured ~2 s/extra pass on q57's input).
-    val canon = Checkpoints.dataGrain(
+    val canon = ck.dataGrain(
       pairs.select(greatest(a, b).as("u"), least(a, b).as("v"))
         .distinct())
     // down-edges (larger -> smaller); self-pairs drop here and resurface
@@ -1273,25 +1271,18 @@ object Dedup {
     var converged = false
     while (!converged) {
       val sym = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      val stats = sym.groupBy("u").agg(
+      val stats = ck.proxy(sym.groupBy("u").agg(
           min(col("v")).as("mn"),
           countDistinct(when(col("v") < col("u"), col("v"))).as("nds"),
-          max((col("v") > col("u")).cast("int")).as("hl"))
-        .localCheckpoint(true)
+          max((col("v") > col("u")).cast("int")).as("hl")))
       converged = stats
         .filter(col("nds") > 1 || (col("nds") >= 1 && col("hl") === 1))
         .isEmpty
-      if (converged) {
-        Checkpoints.release(stats)
-      } else {
-        if (round >= maxRounds) {
-          Checkpoints.release(stats)
-          if (round >= 1) Checkpoints.release(edges)
-          Checkpoints.release(canon)
+      if (!converged) {
+        if (round >= maxRounds)
           throw new IllegalArgumentException(
             s"connectedComponents did not converge in $maxRounds star rounds - " +
               "raise maxRounds")
-        }
         // large-star: for each center u with m = min(Γ(u) ∪ u), every
         // LARGER neighbor v re-wires to (v, m). The min comes from the
         // materialized stats — node-sized, so AQE broadcasts it.
@@ -1302,35 +1293,27 @@ object Dedup {
         // small-star over the now-directed down-edges: each node's smaller
         // neighbors flatten under its minimum, plus the node itself.
         val ssMin = lsEdges.groupBy("u").agg(min(col("v")).as("m"))
-        val next = Checkpoints.dataGrain(
+        val next = ck.dataGrain(
           lsEdges.join(ssMin, Seq("u"))
             .filter(col("v") =!= col("m"))
             .select(col("v").as("u"), col("m").as("v"))
             .unionAll(ssMin.select(col("u"), col("m").as("v")))
             .distinct())
-        Checkpoints.release(stats)
-        // round 0's edge set is a filter OVER canon's checkpoint (its
-        // plan holds canon's LogicalRDD — releasing it would kill the
-        // final node join); from round 1 on, `edges` is this loop's
-        // own superseded checkpoint and its blocks are dead now
-        if (round >= 1) Checkpoints.release(edges)
+        // round 0's edge set is a filter over canon, which the scope
+        // does not release here; later rounds free their own checkpoint
+        ck.release(edges)
         edges = next
         round += 1
       }
+      ck.release(stats)
     }
     // star edges ARE the labels for non-root nodes; roots and singleton
     // (self-pair-only) nodes map to themselves via the left join
     val nodes = canon.select(col("u").as("id"))
       .unionAll(canon.select(col("v").as("id"))).distinct()
-    val labels = nodes
+    val labels = ck.proxy(nodes
       .join(edges.select(col("u").as("id"), col("v").as("rep")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("rep"), col("id")).as("rep"))
-      .localCheckpoint(true)
-    // labels are materialized; free the loop's remaining blocks (if
-    // edges is still round-0's filter over canon, releasing it just
-    // releases canon's RDD — idempotent with the canon release below)
-    Checkpoints.release(edges)
-    Checkpoints.release(canon)
+      .select(col("id"), coalesce(col("rep"), col("id")).as("rep")))
     (labels, round)
   }
 
@@ -1402,14 +1385,14 @@ object Dedup {
     * candidate-volume math as [[simhashDupPairs]] (whose scaladoc is
     * the reference). */
   def hammingDupPairs(docs: DataFrame, idCol: String, hashCol: Column,
-                      maxHamming: Int = 3): DataFrame = {
+                      maxHamming: Int = 3): DataFrame =
+    Checkpoints.scoped { ck =>
     require(maxHamming >= 0 && maxHamming < 64, "maxHamming must be in [0, 64)")
     // eager checkpoint: three downstream consumers (banded explode + the
     // two verify re-joins) would otherwise re-run the simhash kernel over
     // the corpus per reference — the same discipline as
     // [[Incremental.dedupAgainst]]'s signature checkpoint
-    val sig = docs.select(col(idCol).as("id"), hashCol.as("sh"))
-      .localCheckpoint(true)
+    val sig = ck.proxy(docs.select(col(idCol).as("id"), hashCol.as("sh")))
     val bandVals = hammingBandCols(maxHamming)
     val banded = sig.select(col("id"),
       posexplode(array(bandVals: _*)).as(Seq("band", "bval")))
@@ -1432,8 +1415,8 @@ object Dedup {
     * survivors are rows with id == rep — greedy per-pair selection can
     * keep two docs that are both near-dups of a third but not of each
     * other, the closure keeps exactly one. Same lifecycle contract as
-    * connectedComponents: labels are checkpointed, callers unpersist()
-    * after consuming. */
+    * connectedComponents: labels are checkpointed and handed to the
+    * caller. */
   def embeddingDupClusters(emb: DataFrame, idCol: String, vecCol: String,
                            threshold: Double, bands: Int = 64,
                            bitsPerBand: Int = 16): DataFrame =
@@ -1602,13 +1585,13 @@ object Dedup {
     * posting counts, not silent). */
   def winnowDupPairs(docs: DataFrame, idCol: String, textCol: String,
                      k: Int, w: Int, maxDocs: Long,
-                     minShared: Long): DataFrame = {
+                     minShared: Long): DataFrame =
+    Checkpoints.scoped { ck =>
     // (id, h) proxy consumed by the liveness aggregate and both sides
     // of the pair self-join — checkpoint so the winnowing window runs
     // once, not once per branch
-    val fp = winnowFingerprints(docs, idCol, textCol, k, w)
-      .select(col(idCol), col("h")).distinct()
-      .localCheckpoint(true)
+    val fp = ck.proxy(winnowFingerprints(docs, idCol, textCol, k, w)
+      .select(col(idCol), col("h")).distinct())
     val live = fp.groupBy(col("h"))
       .agg(count(lit(1)).as("nd"))
       .filter(col("nd") <= maxDocs)

@@ -14,16 +14,13 @@ import org.apache.spark.sql.functions._
   * (keyed by src) and ONE aggregate back to node grain (keyed by dst);
   * both exchanges carry ids and doubles, never payloads, and the edge
   * table's partitioning is reusable across iterations. Ranks are
-  * materialized per iteration (localCheckpoint, the
-  * [[Dedup]]-connected-components discipline) so lineage stays one
-  * iteration deep instead of replanning the whole chain each round,
-  * and every SUPERSEDED iteration's checkpoint blocks are freed via
-  * [[Checkpoints.release]] the moment the next vector materializes —
-  * block-manager storage stays O(1) in `iters` (spec-asserted), so a
-  * long-lived driver can call this in a loop without accumulating
-  * node-grain RDD storage. The RESULT is itself one checkpointed
-  * node-grain vector; callers embedding this in a service release it
-  * with `Checkpoints.release` after consuming.
+  * checkpointed per iteration (the [[Dedup]]-connected-components
+  * discipline) so lineage stays one iteration deep instead of
+  * replanning the whole chain each round, and every SUPERSEDED
+  * iteration's checkpoint is released the moment the next vector
+  * materializes — block-manager storage stays O(1) in `iters`
+  * (spec-asserted). The RESULT is itself one checkpointed node-grain
+  * vector, handed to the caller ([[Checkpoints]]).
   */
 object Graph {
 
@@ -65,7 +62,8 @@ object Graph {
     pageRankImpl(edges, Some(seeds), iters, damping)
 
   private def pageRankImpl(edges: DataFrame, seeds: Option[DataFrame],
-                           iters: Int, damping: Double): DataFrame = {
+                           iters: Int, damping: Double): DataFrame =
+    Checkpoints.scoped { ck =>
     require(iters >= 1, "iters must be >= 1")
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
@@ -73,22 +71,20 @@ object Graph {
     // lineage (the connected-components discipline): the iteration
     // loop must not replan or recompute the node set / degree-joined
     // edge list every round
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
+    val nodes = ck.proxy(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
     // edge-grain (the one data-grain table in the loop): serialized
     // spill-safe storage, not deserialized row objects
-    val withDeg = Checkpoints.dataGrain(e.join(outDeg, Seq("src")))
+    val withDeg = ck.dataGrain(e.join(outDeg, Seq("src")))
     val n = nodes.count().toDouble
     require(n > 0, "pageRank: empty edge set")
     // dangling nodes = dst-only nodes, from ONE anti-join against the
     // checkpointed edge layout's src side (no second full count);
     // node-grain but typically tiny, materialized once like the layout
-    val dangling = nodes.join(
+    val dangling = ck.proxy(nodes.join(
         withDeg.select(col("src").as("node")).distinct(),
-        Seq("node"), "left_anti")
-      .localCheckpoint(true)
+        Seq("node"), "left_anti"))
     val nDangling = dangling.count()
     // teleport distribution: uniform 1/n (a LAZY constant projection of
     // the checkpointed node set — a checkpoint of its own would be one
@@ -105,11 +101,10 @@ object Graph {
         val twRow = tot.head()
         require(!twRow.isNullAt(0) && twRow.getDouble(0) > 0,
           "personalizedPageRank: seed weights must have positive total")
-        nodes.join(sw, Seq("node"), "left")
+        ck.proxy(nodes.join(sw, Seq("node"), "left")
           .crossJoin(broadcast(tot))
           .select(col("node"),
-            (coalesce(col("w"), lit(0.0)) / col("tw")).as("t"))
-          .localCheckpoint(true)
+            (coalesce(col("w"), lit(0.0)) / col("tw")).as("t")))
     }
     // the uniform path keeps its exact historical arithmetic
     // ((1−d)/n as ONE division — the q158 oracle replays that op
@@ -126,7 +121,7 @@ object Graph {
     // keep stride 1 — their dm sub-aggregate re-reads pr, and a lazy
     // pr would recompute the previous step once per reference.
     var pr = tele.select(col("node"), col("t").as("pr"))
-    var lastCk: Option[DataFrame] = None
+    var lastCk = pr
     var depth = 0
     for (i <- 0 until iters) {
       val contribs = withDeg
@@ -155,21 +150,12 @@ object Graph {
       depth += 1
       val strideHit = depth >= (if (nDangling == 0) 2 else 1)
       if (strideHit || i == iters - 1) {
-        val prev = lastCk
-        pr = stepped.localCheckpoint(true)
-        // the superseded rank vector's blocks are dead the moment the
-        // new one is materialized — free them now, not at session GC
-        prev.foreach(Checkpoints.release)
-        lastCk = Some(pr)
+        pr = ck.proxy(stepped)
+        ck.release(lastCk)
+        lastCk = pr
         depth = 0
       } else pr = stepped
     }
-    // the result is independent of the layout once checkpointed; only
-    // the returned vector's blocks remain (callers release after use)
-    Checkpoints.release(tele)
-    Checkpoints.release(nodes)
-    Checkpoints.release(withDeg)
-    Checkpoints.release(dangling)
     pr
   }
 
@@ -197,7 +183,8 @@ object Graph {
     * pair generators emit). All outputs are exact integers; clustering
     * = 2T/(d(d−1)) is an exact-int IEEE ratio — no rounding needed. */
   def triangleStats(pairs: DataFrame, aCol: String = "id_a",
-                    bCol: String = "id_b"): DataFrame = {
+                    bCol: String = "id_b"): DataFrame =
+    Checkpoints.scoped { ck =>
     val e = pairs.select(col(aCol).cast("long").as("u"),
       col(bCol).cast("long").as("v"))
     val und = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
@@ -212,7 +199,7 @@ object Graph {
     // spill-safe (dataGrain) — the r20 deserialized checkpoint of this
     // exact table was the worst 32-core driver-rig regression — while
     // still computing the degree-attach joins once, not once per branch
-    val o = Checkpoints.dataGrain(
+    val o = ck.dataGrain(
       und.join(du, Seq("u")).join(dv, Seq("v"))
         .filter(col("du") < col("dv") ||
           (col("du") === col("dv") && col("u") < col("v")))

@@ -80,11 +80,11 @@ object Incremental {
     * one pass; [[validateStore]] detects the divergence. */
   private def writeBoth(sig0: DataFrame, table: String, numBuckets: Int,
                         bands: Int, rowsPerBand: Int,
-                        mode: org.apache.spark.sql.SaveMode): Unit = {
-    val sig = sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try writeBothPrepared(sig, table, numBuckets, bands, rowsPerBand, mode)
-    finally sig.unpersist()
-  }
+                        mode: org.apache.spark.sql.SaveMode): Unit =
+    Checkpoints.scoped { ck =>
+      writeBothPrepared(ck.shared(sig0), table, numBuckets, bands,
+        rowsPerBand, mode)
+    }
 
   /** [[writeBoth]] for a signature set the caller has ALREADY
     * materialized (persisted or checkpointed): both writes re-read the
@@ -135,14 +135,15 @@ object Incremental {
     * and bands → identical drops; candidate pairs are distinct-ed by
     * id — spec-asserted), so compaction is a storage/scan optimization
     * to run periodically, not a correctness requirement. The eager
-    * localCheckpoint breaks lineage to the tables being overwritten
+    * checkpoint breaks lineage to the tables being overwritten
     * (Spark refuses to overwrite a table it is still reading from). */
   def compactStore(spark: SparkSession, table: String, numBuckets: Int,
                    bands: Int = 32, rowsPerBand: Int = 2): Unit =
-    writeBoth(Checkpoints.dataGrain(
-        spark.table(table).dropDuplicates("id")),
-      table, numBuckets, bands, rowsPerBand,
-      org.apache.spark.sql.SaveMode.Overwrite)
+    Checkpoints.scoped { ck =>
+      writeBoth(ck.dataGrain(spark.table(table).dropDuplicates("id")),
+        table, numBuckets, bands, rowsPerBand,
+        org.apache.spark.sql.SaveMode.Overwrite)
+    }
 
   /** Append a batch's signatures to an existing [[writeStore]] store —
     * the production loop: after a batch is processed its docs join the
@@ -189,7 +190,7 @@ object Incremental {
                 numBuckets: Int, threshold: Double,
                 emit: (DataFrame, Long) => Unit, shingleLen: Int = 3,
                 bands: Int = 32, rowsPerBand: Int = 2): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
+    (batch: DataFrame, batchId: Long) => Checkpoints.scoped { ck =>
       val spark = batch.sparkSession
       // broadcast anti-join: one micro-batch of ids is small by
       // construction, and broadcasting preserves the store tables'
@@ -202,9 +203,9 @@ object Incremental {
       // ONE materialized signature set per batch: the dedup stage and
       // the append below share it — the append otherwise re-runs the
       // shingle/minhash kernels over the batch it just deduped
-      val nsig = signatures(batch, idCol, textCol, shingleLen, bands,
-        rowsPerBand).localCheckpoint(true)
-      val survivors = dedupAgainstSig(batch, nsig, store, idCol,
+      val nsig = ck.proxy(signatures(batch, idCol, textCol, shingleLen,
+        bands, rowsPerBand))
+      val survivors = dedupAgainstSig(ck, batch, nsig, store, idCol,
         threshold, bands, rowsPerBand, storeBands = Some(storeBands))
       emit(survivors, batchId)
       writeBothPrepared(nsig, storeTable, numBuckets, bands, rowsPerBand,
@@ -255,24 +256,27 @@ object Incremental {
                    textCol: String, threshold: Double, shingleLen: Int = 3,
                    bands: Int = 32, rowsPerBand: Int = 2,
                    storeBands: Option[DataFrame] = None): DataFrame =
-    dedupAgainstSig(newDocs,
-      signatures(newDocs, idCol, textCol, shingleLen, bands, rowsPerBand)
-        .localCheckpoint(true),
-      store, idCol, threshold, bands, rowsPerBand, storeBands)
+    Checkpoints.scoped { ck =>
+      dedupAgainstSig(ck, newDocs,
+        ck.proxy(signatures(newDocs, idCol, textCol, shingleLen, bands,
+          rowsPerBand)),
+        store, idCol, threshold, bands, rowsPerBand, storeBands)
+    }
 
   /** [[dedupAgainst]] over a signature set the caller has already
     * materialized (the [[dedupSink]] share: dedup and append consume
-    * ONE checkpoint of the batch's signatures). */
-  private def dedupAgainstSig(newDocs: DataFrame, nsig: DataFrame,
+    * ONE checkpoint of the batch's signatures); materializes into the
+    * caller's scope. */
+  private def dedupAgainstSig(ck: Checkpoints.Scope, newDocs: DataFrame,
+                              nsig: DataFrame,
                               store: DataFrame, idCol: String,
                               threshold: Double, bands: Int, rowsPerBand: Int,
                               storeBands: Option[DataFrame]): DataFrame = {
     // exact stage: batch-internal min-id per hash, then store anti-join
     val exactKeep = nsig.groupBy("content_hash").agg(min(col("id")).as("id"))
       .select("id")
-    val exact = nsig.join(exactKeep, Seq("id"), "left_semi")
-      .join(store.select("content_hash"), Seq("content_hash"), "left_anti")
-      .localCheckpoint(true)
+    val exact = ck.proxy(nsig.join(exactKeep, Seq("id"), "left_semi")
+      .join(store.select("content_hash"), Seq("content_hash"), "left_anti"))
 
     // near-dup candidates: batch bands vs store bands + batch self-join,
     // id-only through the banded shuffles
@@ -348,26 +352,16 @@ object Incremental {
     writeEmbeddingBoth(embeddingSignatures(emb, idCol, vecCol, bands, bitsPerBand),
       table, numBuckets, bands, bitsPerBand, org.apache.spark.sql.SaveMode.Overwrite)
 
-  /** Append a batch's embedding signatures to an existing
-    * [[writeEmbeddingStore]] store — same whole-batch-vs-survivors policy
-    * trade-off as [[appendToStore]]. */
-  def appendToEmbeddingStore(emb: DataFrame, idCol: String, vecCol: String,
-                             table: String, numBuckets: Int, bands: Int = 64,
-                             bitsPerBand: Int = 16): Unit =
-    writeEmbeddingBoth(embeddingSignatures(emb, idCol, vecCol, bands, bitsPerBand),
-      table, numBuckets, bands, bitsPerBand, org.apache.spark.sql.SaveMode.Append)
-
   /** Non-atomicity and recovery mirror [[writeBoth]]: `_bands` is derived
     * state — rebuild it from `table` via [[embeddingBandTable]] after a
     * partial append. */
   private def writeEmbeddingBoth(sig0: DataFrame, table: String,
                                  numBuckets: Int, bands: Int, bitsPerBand: Int,
-                                 mode: org.apache.spark.sql.SaveMode): Unit = {
-    val sig = sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try writeEmbeddingBothPrepared(sig, table, numBuckets, bands, bitsPerBand,
-      mode)
-    finally sig.unpersist()
-  }
+                                 mode: org.apache.spark.sql.SaveMode): Unit =
+    Checkpoints.scoped { ck =>
+      writeEmbeddingBothPrepared(ck.shared(sig0), table, numBuckets, bands,
+        bitsPerBand, mode)
+    }
 
   /** [[writeEmbeddingBoth]] for an already-materialized signature set
     * (the [[writeBothPrepared]] discipline). */
@@ -404,10 +398,11 @@ object Incremental {
   def compactEmbeddingStore(spark: SparkSession, table: String,
                             numBuckets: Int, bands: Int = 64,
                             bitsPerBand: Int = 16): Unit =
-    writeEmbeddingBoth(
-      Checkpoints.dataGrain(spark.table(table).dropDuplicates("id")),
-      table, numBuckets, bands, bitsPerBand,
-      org.apache.spark.sql.SaveMode.Overwrite)
+    Checkpoints.scoped { ck =>
+      writeEmbeddingBoth(ck.dataGrain(spark.table(table).dropDuplicates("id")),
+        table, numBuckets, bands, bitsPerBand,
+        org.apache.spark.sql.SaveMode.Overwrite)
+    }
 
   /** Streaming ingest dedup for EMBEDDINGS: the [[dedupSink]] loop over
     * the hyperplane store — dedup each micro-batch of vectors against
@@ -421,7 +416,7 @@ object Incremental {
                          numBuckets: Int, threshold: Double,
                          emit: (DataFrame, Long) => Unit, bands: Int = 64,
                          bitsPerBand: Int = 16): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
+    (batch: DataFrame, batchId: Long) => Checkpoints.scoped { ck =>
       val spark = batch.sparkSession
       val batchIds = broadcast(batch.select(col(idCol).as("id")))
       val store = spark.table(storeTable).join(batchIds, Seq("id"), "left_anti")
@@ -429,8 +424,8 @@ object Incremental {
         .join(batchIds, Seq("id"), "left_anti")
       // one materialized signature set per batch, shared by dedup and
       // append (the dedupSink discipline)
-      val nsig = embeddingSignatures(batch, idCol, vecCol, bands, bitsPerBand)
-        .localCheckpoint(true)
+      val nsig = ck.proxy(
+        embeddingSignatures(batch, idCol, vecCol, bands, bitsPerBand))
       val survivors = dedupEmbeddingsAgainstSig(batch, nsig, store, idCol,
         threshold, bands, bitsPerBand, storeBands = Some(storeBands))
       emit(survivors, batchId)
@@ -580,18 +575,18 @@ object Incremental {
   def upsertAnnStore(spark: SparkSession, emb: DataFrame, idCol: String,
                      vecCol: String, cs: Similarity.CentroidSet,
                      model: Similarity.PqModel, table: String,
-                     numBuckets: Int): Unit = {
+                     numBuckets: Int): Unit =
+    Checkpoints.scoped { ck =>
     val enc = annEncode(emb, idCol, vecCol, cs, model)
-    // localCheckpoint breaks lineage to the table being overwritten
+    // the checkpoint breaks lineage to the table being overwritten
     // (the compactStore discipline)
-    val merged = Checkpoints.dataGrain(
+    val merged = ck.dataGrain(
       spark.table(table).select("cell_id", "id", "codes")
         .join(enc.select("id"), Seq("id"), "left_anti")
         .select("cell_id", "id", "codes")
         .unionByName(enc.select("cell_id", "id", "codes")))
     ParquetSink.bucketed(merged, table, Seq("cell_id"), numBuckets,
       mode = org.apache.spark.sql.SaveMode.Overwrite)
-    Checkpoints.release(merged)
   }
 
   /** Compaction: one row per id (replayed appends dedup), pending
@@ -610,26 +605,24 @@ object Incremental {
     * anti-join them to no effect, so decisions never change
     * (q162-pinned). Both writes keep their bucket layouts. */
   def compactAnnStore(spark: SparkSession, table: String,
-                      numBuckets: Int): Unit = {
+                      numBuckets: Int): Unit =
+    Checkpoints.scoped { ck =>
     val del = s"${table}_deletes"
     val hasDel = spark.catalog.tableExists(del)
     val tomb =
       if (hasDel) spark.table(del).select("id").distinct()
       else spark.emptyDataFrame.withColumn("id", lit(0L)).limit(0)
-    val live = Checkpoints.dataGrain(
+    val live = ck.dataGrain(
       spark.table(table).select("cell_id", "id", "codes")
         .dropDuplicates("id")
         .join(tomb, Seq("id"), "left_anti")
         .select("cell_id", "id", "codes"))
     ParquetSink.bucketed(live, table, Seq("cell_id"), numBuckets,
       mode = org.apache.spark.sql.SaveMode.Overwrite)
-    Checkpoints.release(live)
-    if (hasDel) {
-      val empty = spark.table(del).limit(0).localCheckpoint(true)
-      ParquetSink.bucketed(empty, del, Seq("id"), numBuckets,
-        mode = org.apache.spark.sql.SaveMode.Overwrite)
-      Checkpoints.release(empty)
-    }
+    ck.release(live)
+    if (hasDel)
+      ParquetSink.bucketed(ck.proxy(spark.table(del).limit(0)), del, Seq("id"),
+        numBuckets, mode = org.apache.spark.sql.SaveMode.Overwrite)
   }
 
   /** Store invariants after maintenance: no duplicate ids, every code
@@ -659,10 +652,11 @@ object Incremental {
                              idCol: String, vecCol: String, threshold: Double,
                              bands: Int = 64, bitsPerBand: Int = 16,
                              storeBands: Option[DataFrame] = None): DataFrame =
-    dedupEmbeddingsAgainstSig(newEmb,
-      embeddingSignatures(newEmb, idCol, vecCol, bands, bitsPerBand)
-        .localCheckpoint(true),
-      store, idCol, threshold, bands, bitsPerBand, storeBands)
+    Checkpoints.scoped { ck =>
+      dedupEmbeddingsAgainstSig(newEmb,
+        ck.proxy(embeddingSignatures(newEmb, idCol, vecCol, bands, bitsPerBand)),
+        store, idCol, threshold, bands, bitsPerBand, storeBands)
+    }
 
   /** [[dedupEmbeddingsAgainst]] over an already-materialized signature
     * set (the [[embeddingDedupSink]] share). */
@@ -742,14 +736,13 @@ object Incremental {
 
   private def writeHashBoth(sig0: DataFrame, table: String, numBuckets: Int,
                             maxHamming: Int,
-                            mode: org.apache.spark.sql.SaveMode): Unit = {
-    val sig = sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+                            mode: org.apache.spark.sql.SaveMode): Unit =
+    Checkpoints.scoped { ck =>
+      val sig = ck.shared(sig0)
       ParquetSink.bucketed(sig, table, Seq("id"), numBuckets, mode = mode)
       ParquetSink.bucketed(hashBandTable(sig, maxHamming),
         s"${table}_bands", Seq("band", "bval"), numBuckets, mode = mode)
-    } finally sig.unpersist()
-  }
+    }
 
   // ── right-to-be-forgotten: id-level deletion across the signature ──
   //    stores. A takedown/consent-revocation must remove a document's
@@ -766,17 +759,15 @@ object Incremental {
 
   // one shared forget path: scan minus ids, checkpoint-truncated,
   // handed to the store kind's both-layouts rewriter — a future fix to
-  // the forget semantics (extra filtering, error-path release) lands
-  // once instead of drifting across three copies
+  // the forget semantics (e.g. extra filtering) lands once instead of
+  // drifting across three copies
   private def forgetImpl(spark: SparkSession, ids: DataFrame,
                          table: String,
-                         rewrite: DataFrame => Unit): Unit = {
-    val remaining = spark.table(table)
-      .join(ids.select(col("id")), Seq("id"), "left_anti")
-      .localCheckpoint(true)
-    rewrite(remaining)
-    Checkpoints.release(remaining)
-  }
+                         rewrite: DataFrame => Unit): Unit =
+    Checkpoints.scoped { ck =>
+      rewrite(ck.proxy(spark.table(table)
+        .join(ids.select(col("id")), Seq("id"), "left_anti")))
+    }
 
   /** Forget `ids` (an (id) DataFrame) from a [[writeStore]] TEXT
     * signature store. */
@@ -831,9 +822,8 @@ object Incremental {
                                 idCol: String, hashCol: Column,
                                 maxHamming: Int = 3,
                                 storeBands: Option[DataFrame] = None)
-      : ManagedFrame = {
-    val nsig = newDf.select(col(idCol).as("id"), hashCol.as("sh"))
-      .localCheckpoint(true)
+      : ManagedFrame = Checkpoints.managed { ck =>
+    val nsig = ck.proxy(newDf.select(col(idCol).as("id"), hashCol.as("sh")))
     val nBand = nsig.select(col("id"),
       posexplode(array(Dedup.hammingBandCols(maxHamming): _*))
         .as(Seq("band", "bval")))
@@ -861,10 +851,7 @@ object Incremental {
       .distinct()
     val keep = nsig.select(col("id").as(idCol))
       .join(drop.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-    // nsig's checkpoint blocks back the RETURNED plan; the handle
-    // releases exactly them (and nothing the caller owns)
-    ManagedFrame(newDf.join(keep, Seq(idCol), "left_semi"),
-      cached = Nil, checkpointed = Seq(nsig))
+    newDf.join(keep, Seq(idCol), "left_semi")
   }
 
   /** Merge two mergeable-moment stat tables (running store + batch

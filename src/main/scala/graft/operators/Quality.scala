@@ -99,11 +99,11 @@ object Quality {
     * both, exact IEEE on equal inputs — the q87 argument) and no
     * bucket boundary sits on a float-sum ulp. */
   def perplexityBuckets(docs: DataFrame, idCol: String, textCol: String)(
-      implicit spark: SparkSession): DataFrame = {
-    val toks = docs.select(col(idCol).as("id"),
-      explode(graft.functions.Text.tokens(lower(col(textCol)))).as("tok"))
-      .persist()
-    val vocab = toks.groupBy("tok").agg(count(lit(1)).as("cnt")).persist()
+      implicit spark: SparkSession): DataFrame =
+    Checkpoints.scoped { ck =>
+    val toks = ck.shared(docs.select(col(idCol).as("id"),
+      explode(graft.functions.Text.tokens(lower(col(textCol)))).as("tok")))
+    val vocab = ck.shared(toks.groupBy("tok").agg(count(lit(1)).as("cnt")))
     unigramBucketsFrom(toks, vocab)
   }
 
@@ -113,14 +113,14 @@ object Quality {
     * rounded ppl values are bit-identical whichever entry point built
     * the base. */
   private def unigramBucketsFrom(toks: DataFrame,
-                                 vocab: DataFrame): DataFrame = {
+                                 vocab: DataFrame): DataFrame =
+    Checkpoints.scoped { ck =>
     val total = vocab.agg(sum("cnt").as("total"))
-    val scored = toks.join(broadcast(vocab), Seq("tok"))
+    val scored = ck.shared(toks.join(broadcast(vocab), Seq("tok"))
       .crossJoin(broadcast(total))
       .groupBy(col("id"))
       .agg(round(exp(-avg(log(col("cnt").cast("double") / col("total")))), 6)
-        .as("ppl"))
-      .persist()
+        .as("ppl")))
     val bounds = scored.agg(
       percentile(col("ppl"), lit(1.0 / 3)).as("t33"),
       percentile(col("ppl"), lit(2.0 / 3)).as("t66"))
@@ -159,11 +159,12 @@ object Quality {
     * `clearCache()` reclaims them (the q76/q86 contract). */
   def bigramPerplexityBuckets(docs: DataFrame, idCol: String,
                               textCol: String, lambda: Double = 0.75)(
-      implicit spark: SparkSession): DataFrame = {
-    val base = docs.select(col(idCol).as("id"),
-      graft.functions.Text.tokens(lower(col(textCol))).as("w")).persist()
+      implicit spark: SparkSession): DataFrame =
+    Checkpoints.scoped { ck =>
+    val base = ck.shared(docs.select(col(idCol).as("id"),
+      graft.functions.Text.tokens(lower(col(textCol))).as("w")))
     val toks = base.select(col("id"), explode(col("w")).as("tok"))
-    val uni = toks.groupBy("tok").agg(count(lit(1)).as("c1")).persist()
+    val uni = ck.shared(toks.groupBy("tok").agg(count(lit(1)).as("c1")))
     bigramBucketsFrom(base, uni, lambda)
   }
 
@@ -178,11 +179,12 @@ object Quality {
     * the separate entry points. */
   def uniAndBigramPerplexityBuckets(docs: DataFrame, idCol: String,
                                     textCol: String, lambda: Double = 0.75)(
-      implicit spark: SparkSession): (DataFrame, DataFrame) = {
-    val base = docs.select(col(idCol).as("id"),
-      graft.functions.Text.tokens(lower(col(textCol))).as("w")).persist()
+      implicit spark: SparkSession): (DataFrame, DataFrame) =
+    Checkpoints.scoped { ck =>
+    val base = ck.shared(docs.select(col(idCol).as("id"),
+      graft.functions.Text.tokens(lower(col(textCol))).as("w")))
     val toks = base.select(col("id"), explode(col("w")).as("tok"))
-    val uni = toks.groupBy("tok").agg(count(lit(1)).as("c1")).persist()
+    val uni = ck.shared(toks.groupBy("tok").agg(count(lit(1)).as("c1")))
     (unigramBucketsFrom(toks, uni.withColumnRenamed("c1", "cnt")),
       bigramBucketsFrom(base, uni, lambda))
   }
@@ -191,18 +193,17 @@ object Quality {
     * prepared token-array base (`id`, `w`) and unigram count table
     * (`tok`, `c1`), both persisted by the caller. */
   private def bigramBucketsFrom(base: DataFrame, uni: DataFrame,
-                                lambda: Double): DataFrame = {
+                                lambda: Double): DataFrame =
+    Checkpoints.scoped { ck =>
     require(lambda > 0 && lambda <= 1, "lambda must be in (0, 1]")
     val total = uni.agg(sum("c1").as("total"))
-    val pairs = base.select(col("id"),
+    val pairs = ck.shared(base.select(col("id"),
       explode(zip_with(
         slice(col("w"), lit(1), size(col("w")) - 1),
         slice(col("w"), lit(2), size(col("w")) - 1),
         (a, b) => struct(a.as("prev"), b.as("cur")))).as("bg"))
-      .select(col("id"), col("bg.prev").as("prev"), col("bg.cur").as("cur"))
-      .persist()
-    val bi = pairs.groupBy("prev", "cur").agg(count(lit(1)).as("c2"))
-      .persist()
+      .select(col("id"), col("bg.prev").as("prev"), col("bg.cur").as("cur")))
+    val bi = ck.shared(pairs.groupBy("prev", "cur").agg(count(lit(1)).as("c2")))
     val ctx = bi.groupBy("prev").agg(sum("c2").as("cctx"))
     // operand order mirrors the SQL replay verbatim: coeff * (ratio),
     // ratios first (int/int division is an exact IEEE double on every
@@ -221,12 +222,11 @@ object Quality {
       .crossJoin(broadcast(total))
       .select(col("id"),
         (-log(col("c1").cast("double") / col("total"))).as("s1"))
-    val scored = s1.join(s2, Seq("id"), "left")
+    val scored = ck.shared(s1.join(s2, Seq("id"), "left")
       .select(col("id"), round(exp(
         (col("s1") + coalesce(col("s2"), lit(0.0))) /
           (lit(1L) + coalesce(col("n2"), lit(0L))).cast("double")), 6)
-        .as("ppl"))
-      .persist()
+        .as("ppl")))
     val bounds = scored.agg(
       percentile(col("ppl"), lit(1.0 / 3)).as("t33"),
       percentile(col("ppl"), lit(2.0 / 3)).as("t66"))
@@ -286,14 +286,15 @@ object Quality {
     * between-query `clearCache()` reclaims them. */
   def knTrigramPerplexityBuckets(docs: DataFrame, idCol: String,
                                  textCol: String, discount: Double = 0.75)(
-      implicit spark: SparkSession): DataFrame = {
+      implicit spark: SparkSession): DataFrame =
+    Checkpoints.scoped { ck =>
     require(discount > 0 && discount < 1, "discount must be in (0, 1)")
     val dD = lit(discount)
-    val base = docs.select(col(idCol).as("id"),
-      graft.functions.Text.tokens(lower(col(textCol))).as("w")).persist()
+    val base = ck.shared(docs.select(col(idCol).as("id"),
+      graft.functions.Text.tokens(lower(col(textCol))).as("w")))
     // narrow trigram fan-out; <3-token docs contribute no trigrams (the
     // sequence guard keeps bounds ascending — the q85 discipline)
-    val tri = base.select(col("id"), explode(
+    val tri = ck.shared(base.select(col("id"), explode(
         when(size(col("w")) >= 3, transform(
           sequence(lit(1), size(col("w")) - 2),
           i => struct(element_at(col("w"), i).as("u"),
@@ -302,15 +303,14 @@ object Quality {
           .otherwise(array().cast("array<struct<u:string,v:string,wd:string>>")))
         .as("t"))
       .select(col("id"), col("t.u").as("u"), col("t.v").as("v"),
-        col("t.wd").as("wd"))
-      .persist()
-    val t3 = tri.groupBy("u", "v", "wd").agg(count(lit(1)).as("c3")).persist()
+        col("t.wd").as("wd")))
+    val t3 = ck.shared(tri.groupBy("u", "v", "wd").agg(count(lit(1)).as("c3")))
     val ctx3 = t3.groupBy("u", "v")
       .agg(sum("c3").as("cuv"), count(lit(1)).as("n3"))
     // continuation counts: one row per (v,w) trigram margin, its count =
     // distinct preceding u (t3 rows are distinct types)
-    val cb = t3.groupBy(col("v"), col("wd"))
-      .agg(count(lit(1)).as("cbw")).persist()
+    val cb = ck.shared(t3.groupBy(col("v"), col("wd"))
+      .agg(count(lit(1)).as("cbw")))
     val ctx2 = cb.groupBy("v").agg(sum("cbw").as("scv"), count(lit(1)).as("n2"))
     val cu = cb.groupBy("wd").agg(count(lit(1)).as("cw"))
     val tt = cb.agg(count(lit(1)).as("tt"))
@@ -348,7 +348,7 @@ object Quality {
       .join(broadcast(cu), Seq("wd"), "left")
       .crossJoin(broadcast(tt))
       .select(col("id"), (-log(pcG)).as("s1"))
-    val scored = s1
+    val scored = ck.shared(s1
       .join(s2, Seq("id"), "left")
       .join(s3, Seq("id"), "left")
       .select(col("id"), round(exp(
@@ -356,8 +356,7 @@ object Quality {
           coalesce(col("s3"), lit(0.0))) /
           (lit(1L) + when(col("s2").isNull, 0L).otherwise(1L) +
             coalesce(col("n3cnt"), lit(0L))).cast("double")), 6)
-        .as("ppl"))
-      .persist()
+        .as("ppl")))
     val bounds = scored.agg(
       percentile(col("ppl"), lit(1.0 / 3)).as("t33"),
       percentile(col("ppl"), lit(2.0 / 3)).as("t66"))
@@ -684,7 +683,8 @@ object Quality {
     * leaves the (report-sized) block to the session CacheManager —
     * fine for one-shot jobs; long-lived services should use this. */
   def kAnonymizedStatsManaged(df: DataFrame, groupCols: Seq[String],
-                              k: Long, weight: Column): ManagedFrame = {
+                              k: Long, weight: Column): ManagedFrame =
+    Checkpoints.managed { ck =>
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     require(k >= 1, "k must be positive")
     // persist: the marked group table feeds the census, the visible
@@ -696,7 +696,7 @@ object Quality {
     // instead of a separate census aggregate + crossJoin chain.
     val winOrd = org.apache.spark.sql.expressions.Window.orderBy(
       col("__small") +: col("n_rows") +: groupCols.map(col): _*)
-    val g = df.groupBy(groupCols.map(c => col(c).cast("string").as(c)): _*)
+    val g = ck.shared(df.groupBy(groupCols.map(c => col(c).cast("string").as(c)): _*)
       .agg(count(lit(1)).as("n_rows"), sum(weight).cast("long").as("sum_w"))
       .withColumn("__small", col("n_rows") < k)
       .withColumn("__n_small",
@@ -705,8 +705,7 @@ object Quality {
             .rowsBetween(Long.MinValue, Long.MaxValue)))
       .withColumn("__rn", row_number().over(winOrd))
       .withColumn("__supp", col("__small") ||
-        (col("__n_small") === 1L && col("__rn") === 1L))
-      .persist()
+        (col("__n_small") === 1L && col("__rn") === 1L)))
     val visible = g.filter(!col("__supp"))
       .select(groupCols.map(col) :+ col("n_rows") :+
         lit(1L).as("n_groups") :+ col("sum_w"): _*)
@@ -717,7 +716,7 @@ object Quality {
       .filter(col("n_rows").isNotNull)
       .select(groupCols.map(c => lit("__suppressed__").as(c)) :+
         col("n_rows") :+ col("n_groups") :+ col("sum_w"): _*)
-    ManagedFrame(visible.unionByName(suppressed), cached = Seq(g))
+    visible.unionByName(suppressed)
   }
 
   /** l-DIVERSITY publication gate — [[kAnonymizedStats]]'s companion
@@ -754,7 +753,8 @@ object Quality {
     * materializing frees exactly it. */
   def lDiverseStatsManaged(df: DataFrame, groupCols: Seq[String],
                            sensitiveCol: String, l: Long,
-                           weight: Column): ManagedFrame = {
+                           weight: Column): ManagedFrame =
+    Checkpoints.managed { ck =>
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     require(l >= 1, "l must be positive")
     val gc = groupCols.map(c => col(c).cast("string").as(c))
@@ -765,7 +765,7 @@ object Quality {
     // (small-last ordering puts the smallest VISIBLE group at rn=1)
     val winOrd = org.apache.spark.sql.expressions.Window.orderBy(
       col("__small") +: col("n_rows") +: groupCols.map(col): _*)
-    val g = df.groupBy(gc: _*)
+    val g = ck.shared(df.groupBy(gc: _*)
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col(sensitiveCol)).as("n_sv"),
         sum(weight).cast("long").as("sum_w"))
@@ -776,8 +776,7 @@ object Quality {
             .rowsBetween(Long.MinValue, Long.MaxValue)))
       .withColumn("__rn", row_number().over(winOrd))
       .withColumn("__supp", col("__small") ||
-        (col("__n_small") === 1L && col("__rn") === 1L))
-      .persist()
+        (col("__n_small") === 1L && col("__rn") === 1L)))
     val visible = g.filter(!col("__supp"))
       .select(groupCols.map(col) :+ col("n_rows") :+ col("n_sv") :+
         lit(1L).as("n_groups") :+ col("sum_w"): _*)
@@ -796,7 +795,7 @@ object Quality {
       .filter(col("n_rows").isNotNull)
       .select(groupCols.map(c => lit("__suppressed__").as(c)) :+
         col("n_rows") :+ col("n_sv") :+ col("n_groups") :+ col("sum_w"): _*)
-    ManagedFrame(visible.unionByName(suppressed), cached = Seq(g))
+    visible.unionByName(suppressed)
   }
 
   /** SLICE-CONFOUNDING audit — mutual information between two slicing
@@ -825,14 +824,14 @@ object Quality {
     * margins and the joint entropy); same [[ManagedFrame]] contract as
     * [[kAnonymizedStatsManaged]]. */
   def columnAssociationManaged(df: DataFrame, aCol: String,
-                               bCol: String): ManagedFrame = {
+                               bCol: String): ManagedFrame =
+    Checkpoints.managed { ck =>
     val lg2 = log(lit(2.0))
     // persist: the contingency table feeds four subtrees (total, both
     // margins, joint entropy) — one corpus aggregate instead of four
-    val cells = df.groupBy(col(aCol).cast("string").as("a"),
+    val cells = ck.shared(df.groupBy(col(aCol).cast("string").as("a"),
         col(bCol).cast("string").as("b"))
-      .agg(count(lit(1)).as("n_ab"))
-      .persist()
+      .agg(count(lit(1)).as("n_ab")))
     val tot = cells.agg(sum(col("n_ab")).as("n"))
     val ma = cells.groupBy("a").agg(sum(col("n_ab")).as("n_a"))
     val mb = cells.groupBy("b").agg(sum(col("n_ab")).as("n_b"))
@@ -862,7 +861,7 @@ object Quality {
           (col("h_a") + col("h_b") - col("__h_ab")) /
             ((col("h_a") + col("h_b")) / 2.0))
           .otherwise(lit(0.0)), 6).as("nmi"))
-    ManagedFrame(out, cached = Seq(cells))
+    out
   }
 
   /** t-CLOSENESS publication gate — the third rung of the privacy
@@ -918,15 +917,15 @@ object Quality {
     * marked group table (feeds both output branches). */
   def tCloseStatsManaged(df: DataFrame, groupCols: Seq[String],
                          sensitiveCol: Column, tNum: Long, tDen: Long,
-                         weight: Column): ManagedFrame = {
+                         weight: Column): ManagedFrame =
+    Checkpoints.managed { ck =>
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     require(tDen >= 1 && tNum >= 0, "t must be a non-negative rational")
     val gc = groupCols.map(c => col(c).cast("string").as(c))
     val dec = "decimal(38,0)"
     // (group, value) grain — the only corpus-sized aggregate
-    val gv = df.groupBy(gc :+ sensitiveCol.cast("long").as("__v"): _*)
-      .agg(count(lit(1)).as("__c"), sum(weight).cast("long").as("__w"))
-      .persist()
+    val gv = ck.shared(df.groupBy(gc :+ sensitiveCol.cast("long").as("__v"): _*)
+      .agg(count(lit(1)).as("__c"), sum(weight).cast("long").as("__w")))
     // global domain margin: per-value totals, cumulative D_i, rank
     val domW = org.apache.spark.sql.expressions.Window.orderBy(col("__v"))
     val dom = gv.groupBy(col("__v")).agg(sum(col("__c")).as("__d"))
@@ -958,7 +957,7 @@ object Quality {
     val denom = (col("__m") - lit(1)) * col("n_rows").cast(dec) * col("__n")
     val winOrd = org.apache.spark.sql.expressions.Window.orderBy(
       col("__small") +: col("n_rows") +: groupCols.map(col): _*)
-    val g = sg
+    val g = ck.shared(sg
       .withColumn("__small",
         col("__s") * lit(tDen) > denom * lit(tNum))
       .withColumn("emd", when(col("__m") > 1,
@@ -970,8 +969,7 @@ object Quality {
             .rowsBetween(Long.MinValue, Long.MaxValue)))
       .withColumn("__rn", row_number().over(winOrd))
       .withColumn("__supp", col("__small") ||
-        (col("__n_small") === 1L && col("__rn") === 1L))
-      .persist()
+        (col("__n_small") === 1L && col("__rn") === 1L)))
     val visible = g.filter(!col("__supp"))
       .select(groupCols.map(col) :+ col("n_rows") :+ col("emd") :+
         lit(1L).as("n_groups") :+ col("sum_w"): _*)
@@ -1002,6 +1000,6 @@ object Quality {
       .filter(col("n_rows").isNotNull)
       .select(groupCols.map(c => lit("__suppressed__").as(c)) :+
         col("n_rows") :+ col("emd") :+ col("n_groups") :+ col("sum_w"): _*)
-    ManagedFrame(visible.unionByName(suppressed), cached = Seq(gv, g))
+    visible.unionByName(suppressed)
   }
 }

@@ -34,11 +34,11 @@ object Retrieval {
     * score rounded to 6 decimals (the cross-engine determinism
     * contract). */
   private def scores(docs: DataFrame, idCol: String, textCol: String,
-                     q: DataFrame, k1: Double, b: Double): DataFrame = {
-    val base = docs.select(col(idCol).as("id"),
+                     q: DataFrame, k1: Double, b: Double): DataFrame =
+    Checkpoints.scoped { ck =>
+    val base = ck.shared(docs.select(col(idCol).as("id"),
         Text.tokens(lower(col(textCol))).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("double"))
-      .persist()
+      .withColumn("dl", size(col("toks")).cast("double")))
     val stats = base.agg(count(lit(1)).cast("double").as("__n"),
       avg(col("dl")).as("__avgdl"))
     val tf = base.select(col("id"), col("dl"), explode(col("toks")).as("term"))
@@ -170,7 +170,8 @@ object Retrieval {
     * Output: (queryCol, rbo, n_shared = |A_D ∩ B_D|). */
   def rankBiasedOverlap(runA: DataFrame, runB: DataFrame,
                         queryCol: String, idCol: String, rankCol: String,
-                        depth: Int, p: Double = 0.75): DataFrame = {
+                        depth: Int, p: Double = 0.75): DataFrame =
+    Checkpoints.scoped { ck =>
     require(depth >= 1, "depth must be positive")
     require(p > 0 && p < 1, "p must be in (0, 1)")
     // each run feeds TWO branches (the shared-overlap join and the
@@ -185,10 +186,9 @@ object Retrieval {
     // as absent; the bm25TopK/rrfFuse top-k shape always carries
     // rank 1, so such queries do not arise from the library rankers).
     def side(df: DataFrame, out: String) =
-      df.select(col(queryCol), col(idCol),
+      ck.proxy(df.select(col(queryCol), col(idCol),
           col(rankCol).cast("long").as(out))
-        .filter(col(out) <= depth)
-        .localCheckpoint(true)
+        .filter(col(out) <= depth))
     val a = side(runA, "ra")
     val b = side(runB, "rb")
     val shared = a.join(b, Seq(queryCol, idCol))

@@ -31,8 +31,8 @@ object Selection {
     *     within-partition running sums in parallel.
     * offset + within-partition sum equals the naive window EXACTLY
     * (range boundaries respect each group's total order; costs are
-    * integer-summed). The ranged input is `localCheckpoint`ed
-    * (eager) — a RELIABLE materialization, not a cache hint: the
+    * integer-summed). The ranged input is checkpointed (eager,
+    * data grain) — a RELIABLE materialization, not a cache hint: the
     * offsets pass and the final cumsum must see the SAME range
     * boundaries and partition ids, and a plain persist() keeps the
     * lineage alive, so losing a cached block silently RE-EVALUATES
@@ -40,16 +40,13 @@ object Selection {
     * offsets would join against a different partitioning, corrupting
     * cum_cost without any error. Checkpointing truncates the lineage:
     * a lost block is an explicit job failure, never a silent
-    * re-partition. On a cluster with executor churn, reliable
-    * `checkpoint()` (HDFS-backed) or a staging table gives the same
-    * truncation with replayable blocks — the localCheckpoint call is
-    * where that swap happens. Blocks free when the plan's RDD is
-    * GC'd (the ContextCleaner), same lifecycle as
-    * [[Dedup.connectedComponents]]' round states. */
+    * re-partition. The result reads the checkpoint, so it passes to
+    * the caller ([[Checkpoints]]). */
   private def phasedCumsum(df: DataFrame, groupCols: Seq[String],
-                           orderBy: Seq[Column], costCol: Column): DataFrame = {
+                           orderBy: Seq[Column], costCol: Column): DataFrame =
+    Checkpoints.scoped { ck =>
     val grp = groupCols.map(col)
-    val ranged = Checkpoints.dataGrain(
+    val ranged = ck.dataGrain(
       df.withColumn("__cost", costCol.cast("long"))
         .repartitionByRange(grp ++ orderBy: _*)
         .sortWithinPartitions(grp ++ orderBy: _*)
@@ -219,12 +216,13 @@ object Selection {
     * round absorbs partial-sum order. */
   def importanceSelect(raw: DataFrame, target: DataFrame, idCol: String,
                        textCol: String, k: Int, numBuckets: Int = 256,
-                       salt: String = ":dsir"): DataFrame = {
+                       salt: String = ":dsir"): DataFrame =
+    Checkpoints.scoped { ck =>
     require(k >= 1, "k must be positive")
     require(numBuckets >= 2 && numBuckets <= (1 << 24) &&
       (numBuckets & (numBuckets - 1)) == 0,
       "numBuckets must be a power of two in [2, 2^24] (unbiased modulus)")
-    val rawF = hashedNgrams(raw, idCol, textCol, salt, numBuckets).persist()
+    val rawF = ck.shared(hashedNgrams(raw, idCol, textCol, salt, numBuckets))
     val rb = rawF.groupBy("b").agg(count(lit(1)).as("cr"))
     val tb = hashedNgrams(target, idCol, textCol, salt, numBuckets)
       .groupBy("b").agg(count(lit(1)).as("ct"))
@@ -270,7 +268,8 @@ object Selection {
     * broadcast-1-row gates. Arithmetic stays integral until θ, whose
     * single division both engines of a replay round identically. */
   def waterFillBudget(docs: DataFrame, groupCol: String, costCol: Column,
-                      budget: Long, maxEpochs: Int): DataFrame = {
+                      budget: Long, maxEpochs: Int): DataFrame =
+    Checkpoints.scoped { ck =>
     require(budget >= 0, "budget must be non-negative")
     require(maxEpochs >= 1, "maxEpochs must be positive")
     val sizes = docs.groupBy(col(groupCol))
@@ -278,14 +277,13 @@ object Selection {
       .withColumn("cap", col("group_tokens") * maxEpochs)
     val n1 = sizes.agg(count(lit(1)).as("n"))
     val w = Window.orderBy(col("cap").asc, col(groupCol).asc)
-    val ranked = sizes.crossJoin(broadcast(n1))
+    val ranked = ck.shared(sizes.crossJoin(broadcast(n1))
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("prefix", sum(col("cap")).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("sat_here",
         col("cap") * (col("n") - col("rn") + lit(1L)) <=
-          lit(budget) - (col("prefix") - col("cap")))
-      .persist()
+          lit(budget) - (col("prefix") - col("cap"))))
     val s1 = ranked.agg(
       coalesce(max(when(col("sat_here"), col("rn"))), lit(0L)).as("s"))
     val withS = ranked.crossJoin(broadcast(s1))
@@ -562,19 +560,20 @@ object Selection {
     * "re-evaluations ≪ n·k" contract. */
   private[graft] def maxCoverageSelectCounted(
       docs: DataFrame, idCol: String, textCol: String,
-      k: Int, shingleLen: Int = 3): (DataFrame, Long) = {
+      k: Int, shingleLen: Int = 3): (DataFrame, Long) =
+    Checkpoints.scoped { ck =>
     require(k >= 1, "k must be positive")
     val session = docs.sparkSession
     import session.implicits._
     val batchCap = 64
     val seedCap = 4
-    val base = Checkpoints.dataGrain(
+    val base = ck.dataGrain(
       docs.select(col(idCol).cast("long").as("id"),
           explode(graft.functions.Text.shingles(lower(col(textCol)),
             shingleLen)).as("sh_s"))
         .select(col("id"), xxhash64(col("sh_s")).as("sh")))
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var covered: DataFrame = null
+    var covered: Option[DataFrame] = None
     var reevals = 0L
     var done = false
     // round-1 full sweep (unavoidable — no bounds exist yet) seeds the
@@ -585,14 +584,13 @@ object Selection {
     // costs one head fetch + one (rarely two) restricted gains job +
     // the covered-set update, instead of per-round bound-table
     // checkpoint churn (measured 2.8x on q224's floor before this)
-    val g1 = base.groupBy("id").agg(count(lit(1)).as("ub"))
-      .localCheckpoint(true)
+    val g1 = ck.proxy(base.groupBy("id").agg(count(lit(1)).as("ub")))
     reevals += g1.count()
     val overlay = scala.collection.mutable.HashMap.empty[Long, Long]
     val selected = scala.collection.mutable.HashSet.empty[Long]
     def coveredGains(ids: Seq[Long]): Map[Long, Long] = {
-      val rem = (if (covered == null) base
-        else base.join(broadcast(covered), Seq("sh"), "left_anti"))
+      val rem = covered.fold(base)(c =>
+          base.join(broadcast(c), Seq("sh"), "left_anti"))
         .filter(col("id").isin(ids: _*))
         .groupBy("id").agg(count(lit(1)).as("g"))
         .collect().map(r0 => r0.getLong(0) -> r0.getLong(1)).toMap
@@ -666,20 +664,16 @@ object Selection {
           done = true // everything covered: greedy stops
         case Some((winner, gain)) =>
           val nextCov0 = base.filter(col("id") === winner).select("sh")
-          val nextCov = (if (covered == null) nextCov0
-            else covered.unionByName(nextCov0)).distinct()
-            .localCheckpoint(true)
+          val nextCov = ck.proxy(
+            covered.fold(nextCov0)(_.unionByName(nextCov0)).distinct())
           val total = nextCov.count()
-          if (covered != null) Checkpoints.release(covered)
-          covered = nextCov
+          covered.foreach(ck.release)
+          covered = Some(nextCov)
           selected += winner
           acc += ((r.toLong, winner, gain, total))
           r += 1
       }
     }
-    if (covered != null) Checkpoints.release(covered)
-    Checkpoints.release(g1)
-    Checkpoints.release(base)
     (acc.toSeq.toDF("round", "id", "marginal_gain", "covered_total"), reevals)
   }
 
@@ -739,14 +733,13 @@ object Selection {
     * trajectory instead of an opaque NoSuchElementException (r19,
     * advisor finding). */
   private def greedyFacilityLoop(pairs0: DataFrame, corpusIds: DataFrame,
-                                 idCol: String, k: Int): DataFrame = {
+                                 idCol: String, k: Int): DataFrame =
+    Checkpoints.scoped { ck =>
     val spark = pairs0.sparkSession
     import spark.implicits._
-    val pairs = pairs0.persist()
-    var best = corpusIds.select(col("__j"), lit(0L).as("__b"))
-      .localCheckpoint(true)
+    val pairs = ck.shared(pairs0)
+    var best = ck.proxy(corpusIds.select(col("__j"), lit(0L).as("__b")))
     val sel = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var superseded: DataFrame = null
     val chosen = scala.collection.mutable.Set.empty[Long]
     var objective = 0L
     var r = 1
@@ -768,23 +761,16 @@ object Selection {
         objective += wg
         chosen += wid
         sel += ((r.toLong, wid, wg, objective))
-        superseded = best
-        best = best
+        val superseded = best
+        best = ck.proxy(best
           .join(pairs.filter(col("__c") === wid)
             .select(col("__j"), col("__s")), Seq("__j"), "left")
           .select(col("__j"),
-            greatest(col("__b"), coalesce(col("__s"), lit(0L))).as("__b"))
-          .localCheckpoint(true)
-        // the superseded best-service checkpoint is corpus-id-sized;
-        // release it the moment the next round's state materializes
-        // (the PageRank/Checkpoints discipline) — k un-released copies
-        // is a real block-manager leak at corpus scale (r19)
-        Checkpoints.release(superseded)
+            greatest(col("__b"), coalesce(col("__s"), lit(0L))).as("__b")))
+        ck.release(superseded)
         r += 1
       }
     }
-    pairs.unpersist(false)
-    Checkpoints.release(best)
     sel.toSeq.toDF("round", idCol, "marginal_gain", "objective_total")
   }
 
@@ -831,7 +817,8 @@ object Selection {
       corpus: DataFrame, candidates: DataFrame, idCol: String,
       vecCol: String, k: Int, simScale: Double = 1e4,
       batchCap: Int = 64,
-      fetchCapBatches: Int = 16): (DataFrame, Long, Long, Long) = {
+      fetchCapBatches: Int = 16): (DataFrame, Long, Long, Long) =
+    Checkpoints.scoped { ck =>
     require(k >= 1, "need k >= 1")
     require(batchCap >= 1 && fetchCapBatches >= 1,
       "batchCap and fetchCapBatches must be >= 1")
@@ -844,17 +831,14 @@ object Selection {
       col(vecCol).as("__vc"))
     val corp = corpus.select(col(idCol).cast("long").as("__j"),
       col(vecCol).as("__vj"))
-    val pairs = corp.crossJoin(broadcast(cand))
+    val pairs = ck.shared(corp.crossJoin(broadcast(cand))
       .select(col("__c"), col("__j"),
         round(graft.functions.Vectors.cosine(col("__vc"), col("__vj")) *
-          lit(simScale), 0).cast("long").as("__s"))
-      .persist()
-    var best = corp.select(col("__j"), lit(0L).as("__b"))
-      .localCheckpoint(true)
+          lit(simScale), 0).cast("long").as("__s")))
+    var best = ck.proxy(corp.select(col("__j"), lit(0L).as("__b")))
     // round-1 full sweep = the immutable bound table (gains vs best=0)
-    val g1 = pairs.groupBy(col("__c"))
-      .agg(sum(greatest(col("__s"), lit(0L))).as("ub"))
-      .localCheckpoint(true)
+    val g1 = ck.proxy(pairs.groupBy(col("__c"))
+      .agg(sum(greatest(col("__s"), lit(0L))).as("ub")))
     var evals = g1.count()
     val nCand = evals
     var maxFetch = 0L
@@ -954,19 +938,15 @@ object Selection {
           overlay.remove(wid)
           sel += ((r.toLong, wid, wg, objective))
           val superseded = best
-          best = best
+          best = ck.proxy(best
             .join(pairs.filter(col("__c") === wid)
               .select(col("__j"), col("__s")), Seq("__j"), "left")
             .select(col("__j"),
-              greatest(col("__b"), coalesce(col("__s"), lit(0L))).as("__b"))
-            .localCheckpoint(true)
-          Checkpoints.release(superseded)
+              greatest(col("__b"), coalesce(col("__s"), lit(0L))).as("__b")))
+          ck.release(superseded)
           r += 1
       }
     }
-    pairs.unpersist(false)
-    Checkpoints.release(best)
-    Checkpoints.release(g1)
     (sel.toSeq.toDF("round", idCol, "marginal_gain", "objective_total"),
       evals, maxFetch, nFallbacks)
   }

@@ -51,8 +51,8 @@ object Sessionize {
     * stage s's lazy plan would otherwise embed stages 1..s−1 and the
     * per-stage output row would re-join the stage-1 frontier per
     * branch — O(S²) scans of the event stream instead of the |stages|
-    * passes this contract promises. persist() (lazy, shared within the
-    * output action) rather than an eager localCheckpoint: lineage
+    * passes this contract promises. A shared persist (lazy, filled by
+    * the output action) rather than an eager checkpoint: lineage
     * depth is bounded by |stages| (no unbounded-loop planning blowup
     * to truncate, unlike PageRank), and eager materialization costs
     * |stages| extra driver jobs that the single output action avoids
@@ -60,7 +60,8 @@ object Sessionize {
     * blocks follow the CacheManager lifecycle (the q35/q51 precedent).
     * All-integer output (µs lags), exact in any engine. */
   def funnel(events: DataFrame, userCol: String, tsCol: String,
-             typeCol: String, stages: Seq[String]): DataFrame = {
+             typeCol: String, stages: Seq[String]): DataFrame =
+    Checkpoints.scoped { ck =>
     require(stages.nonEmpty, "stages must be non-empty")
     val us = unix_micros(col(tsCol))
     def stageMin(stage: String, after: Option[DataFrame]): DataFrame = {
@@ -73,11 +74,10 @@ object Sessionize {
       gated.groupBy("u").agg(min(col("t")).as("stage_t"))
     }
     val frontiers = stages.tail.scanLeft(
-      stageMin(stages.head, None).persist()) {
+      ck.shared(stageMin(stages.head, None))) {
       (prev, stage) =>
-        stageMin(stage,
-          Some(prev.select(col("u"), col("stage_t").as("prev_t"))))
-          .persist()
+        ck.shared(stageMin(stage,
+          Some(prev.select(col("u"), col("stage_t").as("prev_t")))))
     }
     val first = frontiers.head.select(col("u"), col("stage_t").as("t0"))
     stages.zip(frontiers).zipWithIndex.map { case ((name, fr), i) =>

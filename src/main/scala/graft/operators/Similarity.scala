@@ -370,7 +370,8 @@ object Similarity {
     * brute force — every cell scanned). */
   def ivfProbeSweep(corpus: DataFrame, queries: DataFrame,
                     centroids: DataFrame, idCol: String, vecCol: String,
-                    k: Int, probes: Seq[Int]): DataFrame = {
+                    k: Int, probes: Seq[Int]): DataFrame =
+    Checkpoints.scoped { ck =>
     val cs = collectCentroids(centroids)
     val ps = probes.distinct.sorted
     require(ps.nonEmpty && ps.head >= 1, "probe grid must be >= 1")
@@ -386,59 +387,53 @@ object Similarity {
     // candidate grain: |queries| x (probed-cell rows). Checkpointed so
     // the |grid| windows and the hit join re-read it instead of
     // re-running the corpus scan per depth. Released before return.
-    val cand = assigned.join(probed, Seq("cell_id"))
+    val cand = ck.proxy(assigned.join(probed, Seq("cell_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos", Vectors.cosine(col("query_vec"), col("neighbor_vec")))
-      .select(col("query_id"), col("neighbor_id"), col("probe_pos"), col("cos"))
-      .localCheckpoint(true)
-    try {
-      val bf = bruteForceTopK(corpus, queries, idCol, vecCol, k)
-        .select(col("query_id"), col("neighbor_id"))
-      val perP = ps.map { p =>
-        cand.filter(col("probe_pos") < p)
-          .withColumn("rnk", row_number().over(
-            Window.partitionBy(col("query_id"))
-              .orderBy(col("cos").desc, col("neighbor_id"))))
-          .filter(col("rnk") <= k)
-          .select(lit(p).as("n_probe"), col("query_id"), col("neighbor_id"))
-      }.reduce(_.unionByName(_))
-      val hits = perP.join(bf, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("n_probe").agg(count(lit(1)).as("n_hit"))
-      val nBf = bf.agg(count(lit(1)).as("n_bf"))
-      // scan cost: per query, rows living in its first-p cells — cell
-      // sizes are a model-grain aggregate joined to the probed list
-      val cellSizes = assigned.groupBy("cell_id")
-        .agg(count(lit(1)).as("c_rows"))
-      val qCells = probed.join(cellSizes, Seq("cell_id"), "left")
-        .select(col("probe_pos"), coalesce(col("c_rows"), lit(0L)).as("c_rows"))
-      val denom = queries.agg(count(lit(1)).as("n_q"))
-        .crossJoin(corpus.agg(count(lit(1)).as("n_corpus")))
-      val scans = ps.map(p => qCells.filter(col("probe_pos") < p)
-          .agg(coalesce(sum(col("c_rows")), lit(0L)).as("scanned"))
-          .select(lit(p).as("n_probe"), col("scanned")))
-        .reduce(_.unionByName(_))
-      val session = corpus.sparkSession
-      import session.implicits._
-      val grid = ps.toDF("n_probe")
-        .select(col("n_probe").cast("long").as("n_probe"))
-      // the |grid|-row result is EAGERLY materialized before the
-      // candidate checkpoint is released below — returning a lazy plan
-      // over a released checkpoint is the exact failure mode the
-      // ManagedFrame scaladoc warns about (truncated lineage cannot
-      // recompute)
-      grid.join(hits.select(col("n_probe").cast("long").as("n_probe"),
-          col("n_hit")), Seq("n_probe"), "left")
-        .join(scans.select(col("n_probe").cast("long").as("n_probe"),
-          col("scanned")), Seq("n_probe"), "left")
-        .crossJoin(broadcast(nBf)).crossJoin(broadcast(denom))
-        .select(col("n_probe"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"), col("n_bf"),
-          round(coalesce(col("n_hit"), lit(0L)).cast("double") /
-            col("n_bf"), 6).as("recall_at_k"),
-          round(col("scanned").cast("double") /
-            (col("n_q") * col("n_corpus")), 6).as("scan_frac"))
-        .localCheckpoint(true)
-    } finally graft.operators.Checkpoints.release(cand)
+      .select(col("query_id"), col("neighbor_id"), col("probe_pos"), col("cos")))
+    val bf = bruteForceTopK(corpus, queries, idCol, vecCol, k)
+      .select(col("query_id"), col("neighbor_id"))
+    val perP = ps.map { p =>
+      cand.filter(col("probe_pos") < p)
+        .withColumn("rnk", row_number().over(
+          Window.partitionBy(col("query_id"))
+            .orderBy(col("cos").desc, col("neighbor_id"))))
+        .filter(col("rnk") <= k)
+        .select(lit(p).as("n_probe"), col("query_id"), col("neighbor_id"))
+    }.reduce(_.unionByName(_))
+    val hits = perP.join(bf, Seq("query_id", "neighbor_id"), "left_semi")
+      .groupBy("n_probe").agg(count(lit(1)).as("n_hit"))
+    val nBf = bf.agg(count(lit(1)).as("n_bf"))
+    // scan cost: per query, rows living in its first-p cells — cell
+    // sizes are a model-grain aggregate joined to the probed list
+    val cellSizes = assigned.groupBy("cell_id")
+      .agg(count(lit(1)).as("c_rows"))
+    val qCells = probed.join(cellSizes, Seq("cell_id"), "left")
+      .select(col("probe_pos"), coalesce(col("c_rows"), lit(0L)).as("c_rows"))
+    val denom = queries.agg(count(lit(1)).as("n_q"))
+      .crossJoin(corpus.agg(count(lit(1)).as("n_corpus")))
+    val scans = ps.map(p => qCells.filter(col("probe_pos") < p)
+        .agg(coalesce(sum(col("c_rows")), lit(0L)).as("scanned"))
+        .select(lit(p).as("n_probe"), col("scanned")))
+      .reduce(_.unionByName(_))
+    val session = corpus.sparkSession
+    import session.implicits._
+    val grid = ps.toDF("n_probe")
+      .select(col("n_probe").cast("long").as("n_probe"))
+    // the |grid|-row result is EAGERLY materialized so the candidate
+    // checkpoint can be released on return (a lazy plan over a
+    // released checkpoint could not recompute)
+    ck.proxy(grid.join(hits.select(col("n_probe").cast("long").as("n_probe"),
+        col("n_hit")), Seq("n_probe"), "left")
+      .join(scans.select(col("n_probe").cast("long").as("n_probe"),
+        col("scanned")), Seq("n_probe"), "left")
+      .crossJoin(broadcast(nBf)).crossJoin(broadcast(denom))
+      .select(col("n_probe"),
+        coalesce(col("n_hit"), lit(0L)).as("n_hit"), col("n_bf"),
+        round(coalesce(col("n_hit"), lit(0L)).cast("double") /
+          col("n_bf"), 6).as("recall_at_k"),
+        round(col("scanned").cast("double") /
+          (col("n_q") * col("n_corpus")), 6).as("scan_frac")))
   }
 
   /** Auto-tuned IVF defaults — closes the "tune iters/cells per corpus"
@@ -528,38 +523,37 @@ object Similarity {
     * At 100 TB you train on a SAMPLE (codebooks are ≪ data, like the
     * IVF centroids); encoding the full corpus stays map-only. */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
-              m: Int, ksub: Int, iters: Int): (PqModel, Seq[Double]) = {
+              m: Int, ksub: Int, iters: Int): (PqModel, Seq[Double]) =
+    Checkpoints.scoped { ck =>
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subDim = dim / m
-    val vecs = corpus.select(col(idCol).as("__id"),
-      Vectors.toDouble(col(vecCol)).as("__v")).persist()
-    try {
-      val init = subspaceCells(vecs, m, subDim,
-        j => pmod(xxhash64(col("__id"), lit(j)), lit(ksub.toLong)))
+    val vecs = ck.shared(corpus.select(col(idCol).as("__id"),
+      Vectors.toDouble(col(vecCol)).as("__v")))
+    val init = subspaceCells(vecs, m, subDim,
+      j => pmod(xxhash64(col("__id"), lit(j)), lit(ksub.toLong)))
+      .groupBy("j", "c")
+      .agg(Vectors.centroid(col("sv"), subDim).as("centroid"))
+    var cb = collectCodebooks(init, m, ksub, subDim, None)
+    val errs = scala.collection.mutable.ArrayBuffer[Double]()
+    def meanErr(): Double = vecs.select(
+      graft.plans.exprs.pqAdc(
+        graft.plans.exprs.pqEncode(col("__v"), cb, m, ksub),
+        graft.plans.exprs.pqLut(col("__v"), cb, m, ksub), ksub).as("e"))
+      .agg(avg(col("e"))).head().getDouble(0)
+    errs += meanErr()
+    for (_ <- 0 until iters) {
+      val codes = vecs.withColumn("__codes",
+        graft.plans.exprs.pqEncode(col("__v"), cb, m, ksub))
+      val updated = subspaceCells(codes, m, subDim,
+        j => element_at(col("__codes"), j + 1))
         .groupBy("j", "c")
         .agg(Vectors.centroid(col("sv"), subDim).as("centroid"))
-      var cb = collectCodebooks(init, m, ksub, subDim, None)
-      val errs = scala.collection.mutable.ArrayBuffer[Double]()
-      def meanErr(): Double = vecs.select(
-        graft.plans.exprs.pqAdc(
-          graft.plans.exprs.pqEncode(col("__v"), cb, m, ksub),
-          graft.plans.exprs.pqLut(col("__v"), cb, m, ksub), ksub).as("e"))
-        .agg(avg(col("e"))).head().getDouble(0)
+      // empty cells keep their previous codeword (standard dead-unit
+      // handling; keeps the model total and the error monotone)
+      cb = collectCodebooks(updated, m, ksub, subDim, Some(cb))
       errs += meanErr()
-      for (_ <- 0 until iters) {
-        val codes = vecs.withColumn("__codes",
-          graft.plans.exprs.pqEncode(col("__v"), cb, m, ksub))
-        val updated = subspaceCells(codes, m, subDim,
-          j => element_at(col("__codes"), j + 1))
-          .groupBy("j", "c")
-          .agg(Vectors.centroid(col("sv"), subDim).as("centroid"))
-        // empty cells keep their previous codeword (standard dead-unit
-        // handling; keeps the model total and the error monotone)
-        cb = collectCodebooks(updated, m, ksub, subDim, Some(cb))
-        errs += meanErr()
-      }
-      (PqModel(m, ksub, subDim, cb), errs.toSeq)
-    } finally vecs.unpersist()
+    }
+    (PqModel(m, ksub, subDim, cb), errs.toSeq)
   }
 
   /** IVF-PQ: the coarse IVF router composed with PQ codes — the
@@ -725,8 +719,8 @@ object Similarity {
     *
     * Scale shape — RUNNING MIN (the standard Gonzalez bookkeeping):
     * the state is (id, v, d_min) where d_min is the rounded min sq-L2
-    * to the centers selected SO FAR, materialized with an eager
-    * localCheckpoint each round. Round r is then ONE narrow projection
+    * to the centers selected SO FAR, checkpointed (eagerly) each
+    * round. Round r is then ONE narrow projection
     * with exactly ONE codegen'd sq-L2 kernel (against the single new
     * plan-literal center) folded into `least(d_min, ·)`, feeding ONE
     * TakeOrderedAndProject (map-side limit 1 per partition → a 1-row
@@ -734,10 +728,10 @@ object Similarity {
     * a constant-depth expression tree, where the naive form (rebuild
     * the min over ALL r centers every round) is Σr = k²/2 evals with a
     * k-deep `least` tree: the exact pathology [[Tokenizer.encode]]'s
-    * scaladoc diagnoses for per-merge HOF replay. Superseded state
-    * checkpoints are freed deterministically ([[Checkpoints.release]]
-    * — the PageRank discipline), so block-manager footprint stays one
-    * state generation regardless of k. For k ≥ ~10³ at corpus scale,
+    * scaladoc diagnoses for per-merge HOF replay. Superseded state is
+    * released as soon as the next round materializes (the PageRank
+    * discipline), so block-manager footprint stays one state
+    * generation regardless of k. For k ≥ ~10³ at corpus scale,
     * the remaining cost is k sequential driver rounds; the published
     * fix is a partition-local pre-coreset (two-level Gonzalez: run
     * farthest-first per partition for k' > k local centers, then the
@@ -763,37 +757,36 @@ object Similarity {
     * point's min distance to the earlier centers (non-increasing for
     * rank ≥ 2 — the greedy invariant; NULL for the seed). */
   def kCenterSelect(emb: DataFrame, idCol: String, vecCol: String,
-                    k: Int): DataFrame = {
+                    k: Int): DataFrame =
+    Checkpoints.scoped { ck =>
     require(k >= 1, "k must be >= 1")
     val spark = emb.sparkSession
-    val base = emb.select(col(idCol).cast("long").as("id"),
-      Vectors.toDouble(col(vecCol)).as("v")).persist()
-    try {
-      val seedRows = base.orderBy(col("id")).limit(1).collect()
-      require(seedRows.nonEmpty, "kCenterSelect: empty input embedding set")
-      val seed = seedRows.head
-      var centers =
-        Vector((seed.getLong(0), seed.getSeq[Double](1), Option.empty[Double]))
-      // (id, v, d_min) vs the centers so far; rebuilt (not re-derived)
-      // each round from ONE new-center kernel — see the scaladoc
-      var state: DataFrame = null
-      for (_ <- 1 until k) {
-        val next = Checkpoints.dataGrain(
-          kCenterRound(if (state == null) base else state,
-            centers.last._2, first = state == null))
-        if (state != null) Checkpoints.release(state)
-        state = next
-        val cand = state
-          .orderBy(col("d_min").desc, col("id")).limit(1).collect().head
-        centers = centers :+
-          ((cand.getLong(0), cand.getSeq[Double](1), Some(cand.getDouble(2))))
-      }
-      if (state != null) Checkpoints.release(state)
-      import spark.implicits._
-      centers.zipWithIndex.map { case ((id, _, dOpt), i) =>
-        ((i + 1).toLong, id, dOpt)
-      }.toDF("sel_rank", idCol, "cover_d")
-    } finally { base.unpersist(); () }
+    val base = ck.shared(emb.select(col(idCol).cast("long").as("id"),
+      Vectors.toDouble(col(vecCol)).as("v")))
+    val seedRows = base.orderBy(col("id")).limit(1).collect()
+    require(seedRows.nonEmpty, "kCenterSelect: empty input embedding set")
+    val seed = seedRows.head
+    var centers =
+      Vector((seed.getLong(0), seed.getSeq[Double](1), Option.empty[Double]))
+    // (id, v, d_min) vs the centers so far; rebuilt (not re-derived)
+    // each round from ONE new-center kernel — see the scaladoc
+    var state = base
+    for (r <- 1 until k) {
+      val next = ck.dataGrain(
+        kCenterRound(state, centers.last._2, first = r == 1))
+      // round 1 supersedes the persisted input itself: no later round
+      // reads it
+      ck.release(state)
+      state = next
+      val cand = state
+        .orderBy(col("d_min").desc, col("id")).limit(1).collect().head
+      centers = centers :+
+        ((cand.getLong(0), cand.getSeq[Double](1), Some(cand.getDouble(2))))
+    }
+    import spark.implicits._
+    centers.zipWithIndex.map { case ((id, _, dOpt), i) =>
+      ((i + 1).toLong, id, dOpt)
+    }.toDF("sel_rank", idCol, "cover_d")
   }
 
   /** One k-center round's projection: fold the new center's (rounded)

@@ -103,31 +103,30 @@ object Tokenizer {
     * materialize the new symbol table. Stops early when no pair
     * remains. Returns the ordered merge table. */
   def trainMerges(docs: DataFrame, textCol: String,
-                  nMerges: Int): Seq[(String, String)] = {
+                  nMerges: Int): Seq[(String, String)] =
+    Checkpoints.scoped { ck =>
     require(nMerges >= 0, "nMerges must be non-negative")
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var cached = toSymbols(docs, textCol).persist()
+    var cached = ck.shared(toSymbols(docs, textCol))
     cached.count()
-    try {
-      var continue = true
-      var i = 0
-      while (i < nMerges && continue) {
-        val top = pairCounts(cached)
-          .orderBy(col("cnt").desc, col("a"), col("b"))
-          .limit(1).collect()
-        if (top.isEmpty) continue = false
-        else {
-          val (a, b) = (top(0).getString(0), top(0).getString(1))
-          merges += ((a, b))
-          val next = cached
-            .select(applyMerge(col("sym"), a, b).as("sym")).persist()
-          next.count()
-          cached.unpersist()
-          cached = next
-        }
-        i += 1
+    var continue = true
+    var i = 0
+    while (i < nMerges && continue) {
+      val top = pairCounts(cached)
+        .orderBy(col("cnt").desc, col("a"), col("b"))
+        .limit(1).collect()
+      if (top.isEmpty) continue = false
+      else {
+        val (a, b) = (top(0).getString(0), top(0).getString(1))
+        merges += ((a, b))
+        val next = ck.shared(cached
+          .select(applyMerge(col("sym"), a, b).as("sym")))
+        next.count()
+        ck.release(cached)
+        cached = next
       }
-    } finally cached.unpersist()
+      i += 1
+    }
     merges.toSeq
   }
 
@@ -168,57 +167,55 @@ object Tokenizer {
     * vs strict's 2·nMerges. */
   def trainMergesBatchedWithRounds(docs: DataFrame, textCol: String,
                                    nMerges: Int, maxBatch: Int):
-      (Seq[(String, String)], Int) = {
+      (Seq[(String, String)], Int) = Checkpoints.scoped { ck =>
     require(nMerges >= 0, "nMerges must be non-negative")
     require(maxBatch >= 1, "maxBatch must be >= 1")
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var cached = toSymbols(docs, textCol).persist()
+    var cached = ck.shared(toSymbols(docs, textCol))
     cached.count()
     var rounds = 0
-    try {
-      var continue = true
-      while (merges.size < nMerges && continue) {
-        val k = math.min(maxBatch, nMerges - merges.size)
-        // collect a deterministic candidate prefix wide enough that
-        // shield skips rarely starve the batch (model-grain rows)
-        val ranked = pairCounts(cached)
-          .orderBy(col("cnt").desc, col("a"), col("b"))
-          .limit(k * 8).collect()
-        rounds += 1
-        if (ranked.isEmpty) continue = false
-        else {
-          val used = scala.collection.mutable.Set.empty[String]
-          val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-          val it = ranked.iterator
-          while (batch.size < k && it.hasNext) {
-            val r = it.next()
-            val (a, b) = (r.getString(0), r.getString(1))
-            if (!used(a) && !used(b) && !used(a + b)) {
-              batch += ((a, b))
-              used += a; used += b; used += (a + b)
-            }
+    var continue = true
+    while (merges.size < nMerges && continue) {
+      val k = math.min(maxBatch, nMerges - merges.size)
+      // collect a deterministic candidate prefix wide enough that
+      // shield skips rarely starve the batch (model-grain rows)
+      val ranked = pairCounts(cached)
+        .orderBy(col("cnt").desc, col("a"), col("b"))
+        .limit(k * 8).collect()
+      rounds += 1
+      if (ranked.isEmpty) continue = false
+      else {
+        val used = scala.collection.mutable.Set.empty[String]
+        val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+        val it = ranked.iterator
+        while (batch.size < k && it.hasNext) {
+          val r = it.next()
+          val (a, b) = (r.getString(0), r.getString(1))
+          if (!used(a) && !used(b) && !used(a + b)) {
+            batch += ((a, b))
+            used += a; used += b; used += (a + b)
           }
-          merges ++= batch
-          // apply via the JVM twin (spec-pinned bit-identical to the
-          // applyMerges fold): one narrow typed map instead of
-          // `maxBatch` nested interpreted aggregate() expressions —
-          // measured 2.5 s -> ~0.3 s per round at fixture scale
-          val spark = cached.sparkSession
-          import spark.implicits._
-          val bcBatch = spark.sparkContext.broadcast(batch.toArray)
-          val next = cached.select(col("sym")).as[Seq[String]]
-            .map { s =>
-              val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-              buf ++= s
-              applyMergesJvm(buf, bcBatch.value).toSeq
-            }
-            .toDF("sym").persist()
-          next.count()
-          cached.unpersist()
-          cached = next
         }
+        merges ++= batch
+        // apply via the JVM twin (spec-pinned bit-identical to the
+        // applyMerges fold): one narrow typed map instead of
+        // `maxBatch` nested interpreted aggregate() expressions —
+        // measured 2.5 s -> ~0.3 s per round at fixture scale
+        val spark = cached.sparkSession
+        import spark.implicits._
+        val bcBatch = spark.sparkContext.broadcast(batch.toArray)
+        val next = ck.shared(cached.select(col("sym")).as[Seq[String]]
+          .map { s =>
+            val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+            buf ++= s
+            applyMergesJvm(buf, bcBatch.value).toSeq
+          }
+          .toDF("sym"))
+        next.count()
+        ck.release(cached)
+        cached = next
       }
-    } finally cached.unpersist()
+    }
     (merges.toSeq, rounds)
   }
 

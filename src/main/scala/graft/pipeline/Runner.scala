@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analytics.{ImdbSchemas, ImdbTransforms, ImdbMarts}
+import graft.operators.Checkpoints
 import graft.quality.Expectations
 import graft.quality.Expectations.dsl._
 import graft.sources.{ParquetSink, TsvSource}
@@ -36,7 +37,8 @@ final class Runner(spark: SparkSession, rawDir: String, outDir: String) {
     *   ge_validate_athena.py:25 — LIMIT 5000 — made reproducible). The
     *   100 TB setting: gate cost becomes O(sample), not O(table). */
   def run(runDateArg: Option[String] = None, minRows: Long = 1,
-          validationSampleRate: Option[Double] = None): RunReport = {
+          validationSampleRate: Option[Double] = None): RunReport =
+    Checkpoints.scoped { ck =>
     val runDate = resolveRunDate(runDateArg)
 
     // ingest fingerprint gate (S4/S5/I1)
@@ -59,8 +61,8 @@ final class Runner(spark: SparkSession, rawDir: String, outDir: String) {
     // lineage once instead of the reference's triple recompute (SURVEY §4)
     val movies = ImdbTransforms.movieFacts(basics, ratings, crew, principals,
       names, akas, runDate)
-    val episodes = ImdbTransforms.episodeFacts(episode, basics, ratings,
-      principals, names, runDate).cache()
+    val episodes = ck.shared(ImdbTransforms.episodeFacts(episode, basics,
+      ratings, principals, names, runDate))
     val seasons = ImdbTransforms.seasonSummary(episodes)
 
     ParquetSink.append(movies, s"$outDir/analytics_movie_facts_v2",
@@ -129,7 +131,6 @@ final class Runner(spark: SparkSession, rawDir: String, outDir: String) {
     Runner.dbtNotNullProbes(mfv,
       spark.read.parquet(s"$outDir/marts_episode_season_trends"))
 
-    episodes.unpersist()
     val report = RunReport(runDate, smokeCount, statuses.toMap)
     Manifest.write(s"$outDir/_manifests/$runDate", report)                // S6
     sources.foreach(s => registry.record(s, new java.io.File(s"$rawDir/$s.tsv")))

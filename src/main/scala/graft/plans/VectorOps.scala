@@ -304,8 +304,6 @@ object VectorOps {
     h
   }
 
-  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
   /** Gopher-style repetition signal: fraction of the doc's tokens
     * covered by the single most frequent word n-gram (count × n /
     * tokens, capped at 1.0 — overlapping self-repeats like "x x x x"

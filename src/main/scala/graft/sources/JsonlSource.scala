@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructType}
+import graft.operators.{Checkpoints, ManagedFrame}
 
 /** JSONL corpus source — the training-data ingest staple (sharded,
   * append-friendly, splittable when uncompressed; gzip shards are NOT
@@ -29,11 +30,12 @@ object JsonlSource {
       .json(path)
 
   /** [[quarantine]] result: `good` rows (quarantine column dropped),
-    * `corrupt` raw lines, and the shared parsed scan's cache lifecycle
-    * (release() after both branches are materialized — the
-    * Corpus.prepareManaged discipline). */
+    * `corrupt` raw lines, and the shared parsed scan's handle: call
+    * [[release]] after both branches are materialized. */
   final case class Quarantined(good: DataFrame, corrupt: DataFrame,
-                               release: () => Unit)
+                               private val parsed: ManagedFrame) {
+    def release(): Unit = parsed.release()
+  }
 
   /** Split a [[read]] result into good vs corrupt rows. The parsed scan
     * is persisted and SHARED by both branches: Spark disallows a
@@ -42,10 +44,11 @@ object JsonlSource {
     * cache also stops the good/reject branches from parsing every shard
     * twice. */
   def quarantine(df0: DataFrame): Quarantined = {
-    val df = df0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val parsed = Checkpoints.managed(_.shared(df0))
+    val df = parsed.df
     Quarantined(
       good = df.filter(df.col(CorruptCol).isNull).drop(CorruptCol),
       corrupt = df.filter(df.col(CorruptCol).isNotNull).select(CorruptCol),
-      release = () => { df.unpersist(); () })
+      parsed)
   }
 }

@@ -102,14 +102,6 @@ object EventStreams {
       }
   }
 
-  /** File-based incremental source: process exactly the files that have
-    * arrived since the last run (`Trigger.AvailableNow` semantics) —
-    * the streaming analogue of the reference's change-detected ingest
-    * (SURVEY S4/I1). */
-  def incrementalFileSource(spark: SparkSession, path: String,
-                            schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(path)
-
   /** Exactly-once event dedup across batches: watermarked
     * `dropDuplicates` keeps O(events-in-watermark) state per key —
     * the streaming form of exact dedup (late duplicates beyond the
