@@ -2048,9 +2048,8 @@ object Queries {
         docs.write.mode("overwrite").json(data)
         Files.writeString(Paths.get(data, "corrupt.json"),
           """{"doc_id": 1, "lang": "en", "text": unterminated""" + "\n")
-        // lifecycle: the shared parsed scan stays cached through the
-        // driver's materialization of this result (bench clears caches
-        // between queries; library callers invoke q.release())
+        // the shared parsed scan stays cached until this result is
+        // materialized; Checkpoints.release on the result frees it
         val q = sources.JsonlSource.quarantine(
           sources.JsonlSource.read(s, data,
             org.apache.spark.sql.types.StructType(docs.schema.fields)))
@@ -2447,8 +2446,7 @@ object Queries {
           minQuality = 0.5, nearDupThreshold = 0.6, maxDocFreq = 1.0)
         // persisted: three consumers (token totals, span explode, text
         // rebuild) would each re-run the whole prep semi-join otherwise
-        // (lifecycle: bench clears caches between queries; library
-        // callers clearCache/unpersist — the q76 contract)
+        // (Checkpoints.release on the result frees it)
         val survivors = ck.shared(tbl("documents")
           .select(col("doc_id"), col("text"))
           .join(prepared.select("doc_id"), Seq("doc_id"), "left_semi"))

@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * A query that throws is listed in `_FAILED` and makes the run exit
+  * with status 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
@@ -17,16 +19,29 @@ object Verify {
       .config(graft.sources.Tables.nanosConf._1, graft.sources.Tables.nanosConf._2)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failed = dump(spark, sfDir, outDir, only)
+    spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Writes every query in `only` (all when empty) under `outDir`, then
+    * `oracle_sql.json` and `_FAILED` (the failed names, one per line);
+    * returns the names of the queries that threw. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           only: Set[String]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -42,6 +57,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Files.writeString(Paths.get(s"$outDir/_FAILED"),
+      failed.map(_ + "\n").mkString)
+    failed.toSeq
   }
 }

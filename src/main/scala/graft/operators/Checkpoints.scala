@@ -4,6 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -13,8 +14,8 @@ import org.apache.spark.storage.StorageLevel
   * through this object (a spec enforces it), so the storage decision is
   * one module's.
   *
-  * An operator body opens a [[Scope]] ([[scoped]], or [[managed]] for a
-  * [[ManagedFrame]] result) and materializes by declared kind:
+  * An operator body opens a [[Scope]] with [[scoped]] and materializes
+  * by declared kind:
   *  - [[Scope.proxy]]: eager, lineage-truncating, deserialized blocks
   *    (`localCheckpoint(true)`) — small proxy-grain state (ids, hashes,
   *    rank vectors, per-round loop state) whose deserialized reads are
@@ -42,44 +43,54 @@ import org.apache.spark.storage.StorageLevel
   * superseded loop state early, at the point the next round has
   * materialized; it does nothing for a table the scope does not own.
   *
-  * Hand-off. Owned tables the result still reads pass to the caller:
-  * from [[scoped]], checkpoints are freed by [[release]] on the result
-  * once it is materialized (shared persists follow the session's
-  * `clearCache()`); from [[managed]], the [[ManagedFrame]] handle holds
-  * exactly them and its `release()` frees them and nothing else. A
-  * caller that takes over a callee's handed-off result inside its own
-  * scope declares it with [[Scope.adopt]].
+  * Hand-off. Owned tables the result still reads pass to the caller,
+  * and [[release]] on the result, once it is materialized, is the one
+  * way to free them. Every materialization carries the engine's mark
+  * (the checkpoint RDD's name, the cache entry's table name), so
+  * `release` walks the result's plan and frees exactly the marked
+  * tables it reads — a checkpoint or cache the caller made itself is
+  * never touched, and no registry outlives the scope. A caller that
+  * skips it keeps them until `spark.catalog.clearCache()` and the
+  * ContextCleaner reclaim them.
   *
   * Local checkpoints live in executor block managers; with executor
   * churn a reliable `checkpoint()` gives the same truncation with
   * replayable blocks — this object is where that swap would happen. */
 object Checkpoints {
 
+  /** The engine's mark on its own materializations. */
+  private val Mark = "graft.Checkpoints"
+
   /** Materialization scope of one operator body; see [[Checkpoints]]. */
   final class Scope private[Checkpoints] {
     private val owned = mutable.ArrayBuffer.empty[Owned]
 
-    private def own(df: DataFrame, shared: Boolean): DataFrame = {
-      owned += new Owned(df, shared)
-      df
-    }
-
     /** Eager deserialized checkpoint of proxy-grain state. */
-    def proxy(df: DataFrame): DataFrame =
-      own(df.localCheckpoint(true), shared = false)
+    def proxy(df: DataFrame): DataFrame = checkpoint(df.localCheckpoint(true))
 
     /** Eager serialized, disk-backed checkpoint of a data-grain table. */
     def dataGrain(df: DataFrame): DataFrame =
-      own(df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER),
-        shared = false)
+      checkpoint(df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER))
 
-    /** Lazy `MEMORY_AND_DISK` persist shared by several consumers. */
-    def shared(df: DataFrame): DataFrame =
-      own(df.persist(StorageLevel.MEMORY_AND_DISK), shared = true)
+    private def checkpoint(df: DataFrame): DataFrame = {
+      val rdds = leafRdds(df.queryExecution.analyzed)
+      rdds.foreach(_.setName(Mark))
+      owned += new Owned(df, rdds)
+      df
+    }
 
-    /** Take ownership of the checkpoints a callee handed to this body
-      * with its result (everything [[Checkpoints.release]] would free). */
-    def adopt(df: DataFrame): DataFrame = own(df, shared = false)
+    /** Lazy `MEMORY_AND_DISK` persist shared by several consumers. A plan
+      * already cached stays its maker's: the scope neither marks nor
+      * owns it. */
+    def shared(df: DataFrame): DataFrame = {
+      val ds = impl(df)
+      val cm = ds.sparkSession.sharedState.cacheManager
+      if (cm.lookupCachedData(ds).isEmpty) {
+        cm.cacheQuery(ds, Some(Mark), StorageLevel.MEMORY_AND_DISK)
+        owned += new Owned(df, Nil)
+      }
+      df
+    }
 
     /** Free `df` now if this scope owns it; otherwise do nothing. */
     def release(df: DataFrame): Unit = {
@@ -88,33 +99,26 @@ object Checkpoints {
     }
 
     /** Frees every owned table `result` does not read (all of them for a
-      * result holding no DataFrame); returns the rest. */
-    private[Checkpoints] def close(result: Any): Seq[Owned] = {
+      * result holding no DataFrame); the rest pass to the caller. */
+    private[Checkpoints] def close(result: Any): Unit = {
       val plans = framesOf(result).map(_.queryExecution.analyzed).toSeq
       val leaves = plans.flatMap(leafRdds).map(_.id).toSet
-      val (kept, dropped) = owned.partition(_.readBy(plans, leaves))
+      owned.filterNot(_.readBy(plans, leaves)).foreach(_.free())
       owned.clear()
-      dropped.foreach(_.free())
-      kept.toSeq
     }
   }
 
-  /** One table a scope owns. A checkpoint is the RDDs behind its
-    * `LogicalRDD` leaves; a shared table is its CacheManager entry. */
-  final class Owned private[Checkpoints] (private[Checkpoints] val df: DataFrame,
-                                          shared: Boolean) {
-    private val rdds = if (shared) Nil else leafRdds(df.queryExecution.analyzed)
+  /** One table a scope owns: a checkpoint is the RDDs behind its
+    * `LogicalRDD` leaves; a shared table (no RDDs) is its CacheManager
+    * entry. */
+  private final class Owned(val df: DataFrame, rdds: Seq[RDD[_]]) {
+    private def shared = rdds.isEmpty
 
-    private[operators] def free(): Unit =
+    def free(): Unit =
       if (shared) { df.unpersist(); () }
       else rdds.foreach(_.unpersist(blocking = false))
 
-    private[operators] def isFree: Boolean =
-      if (shared) df.storageLevel == StorageLevel.NONE
-      else rdds.forall(_.getStorageLevel == StorageLevel.NONE)
-
-    private[Checkpoints] def readBy(plans: Seq[LogicalPlan],
-                                    leaves: Set[Int]): Boolean =
+    def readBy(plans: Seq[LogicalPlan], leaves: Set[Int]): Boolean =
       if (shared) {
         val p = df.queryExecution.analyzed
         plans.exists(_.collectFirstWithSubqueries {
@@ -124,34 +128,36 @@ object Checkpoints {
   }
 
   /** Runs `body` in a fresh [[Scope]] and returns its result; see the
-    * object doc for what is freed on exit. */
-  def scoped[T](body: Scope => T): T = run(body)._1
-
-  /** [[scoped]] for an operator returning a [[ManagedFrame]]: the owned
-    * tables `df` still reads go on the handle instead of to the caller. */
-  def managed(body: Scope => DataFrame): ManagedFrame = {
-    val (df, kept) = run(body)
-    ManagedFrame(df, kept)
-  }
-
-  private def run[T](body: Scope => T): (T, Seq[Owned]) = {
+    * object doc for what is freed on exit and what is handed off. */
+  def scoped[T](body: Scope => T): T = {
     val scope = new Scope
     val out =
       try body(scope)
       catch { case e: Throwable => scope.close(()); throw e }
-    (out, scope.close(out))
+    scope.close(out)
+    out
   }
 
-  /** Frees the checkpoint blocks behind every `LogicalRDD` leaf of `df`
-    * (async) — the caller's side of the hand-off. Call only after `df`
-    * has been materialized, and only on a result whose checkpoints the
-    * caller owns: a released local checkpoint cannot recompute. On a
-    * plan without checkpoints this is a no-op. */
-  def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  /** Frees every engine checkpoint and shared persist that `df` reads
+    * (checkpoints async) — the caller's side of the hand-off. Call it
+    * once `df` has been materialized: a released local checkpoint cannot
+    * recompute. Checkpoints and caches the caller made are left alone;
+    * on a plan that reads none of the engine's tables this is a no-op. */
+  def release(df: DataFrame): Unit = {
+    val plan = df.queryExecution.analyzed
+    leafRdds(plan).filter(_.name == Mark).foreach(_.unpersist(blocking = false))
+    val session = impl(df).sparkSession
+    val cm = session.sharedState.cacheManager
+    if (!cm.isEmpty)
+      plan.collectWithSubqueries { case p => cm.lookupCachedData(session, p) }
+        .flatten.distinct
+        .filter(_.cachedRepresentation.cacheBuilder.tableName.contains(Mark))
+        .foreach(cd => cm.uncacheQuery(session, cd.plan, cascade = false,
+          blocking = false))
+  }
+
+  private def impl(df: DataFrame): classic.Dataset[_] =
+    df.asInstanceOf[classic.Dataset[_]]
 
   /** The DataFrames a scope's result holds: itself, or the fields of a
     * tuple or case class (collections are not searched). */
@@ -165,16 +171,4 @@ object Checkpoints {
   /** The RDDs behind a plan's checkpoint (`LogicalRDD`) leaves. */
   private def leafRdds(plan: LogicalPlan): Seq[RDD[_]] =
     plan.collectWithSubqueries { case lr: LogicalRDD => lr.rdd }
-}
-
-/** A DataFrame plus the operator-owned tables backing it, handed over by
-  * [[Checkpoints.managed]]. Call [[release]] once `df` has been
-  * materialized (written / collected); it frees exactly those tables,
-  * never a checkpoint or cache the caller owns. A long-lived session
-  * that skips it keeps them for the session lifetime. */
-final case class ManagedFrame(df: DataFrame,
-                              private val owned: Seq[Checkpoints.Owned]) {
-  def release(): Unit = owned.foreach(_.free())
-  /** True when every operator-owned table has been freed. */
-  def isReleased: Boolean = owned.forall(_.isFree)
 }

@@ -13,7 +13,7 @@ import graft.functions.Text
   * either GREEDILY (drop any doc with a smaller-id near-dup — the
   * default) or CLUSTER-CONSISTENTLY (`transitiveDedup = true`: one
   * survivor per connected component of the pair graph). Both are
-  * deterministic; see [[prepareManaged]] for the difference.
+  * deterministic; see [[prepare]] for the difference.
   *
   * Scale: each stage is one narrow projection or one keyed shuffle; the
   * near-dup stage reuses [[Dedup.jaccardPairs]]' inverted index (no O(n²)
@@ -21,7 +21,12 @@ import graft.functions.Text
   */
 object Corpus {
 
-  /** @param maxDocFreq prefix-filter knob forwarded to
+  /** The composed corpus. Its persisted stage intermediates (and, in
+    * cluster mode, the component labels) pass to the caller:
+    * [[Checkpoints.release]] on the result, once materialized, frees
+    * exactly them.
+    *
+    * @param maxDocFreq prefix-filter knob forwarded to
     *   [[Dedup.jaccardPairs]]: shingles present in more than this fraction
     *   of docs are dropped from the inverted index before the pair join.
     *   The DEFAULT is capped (0.5) — on web-scale text, stopword-grade
@@ -40,30 +45,29 @@ object Corpus {
     *   transitive closure keeps exactly one doc per dup cluster).
     *   The cluster mode runs the iterative component computation EAGERLY
     *   at composition time (it is a fixpoint of Spark jobs, not one
-    *   declarative plan); its labels join the managed cache lifecycle.
+    *   declarative plan); its labels are released with the result.
     * @param evalDocs when set, a final DECONTAMINATION stage drops
     *   surviving docs whose shingle containment against any eval doc
     *   reaches `contaminationThreshold` ([[Dedup.decontaminate]]) — the
     *   production order is gate → dedup → decontaminate, so eval overlap
     *   is checked on the docs that would actually ship. The deduped set
-    *   joins the managed cache lifecycle (the stage references it twice).
+    *   is persisted (the stage references it twice).
     * @param contaminationThreshold containment level at which a doc is
     *   considered contaminated (only used with `evalDocs`). */
-  def prepareManaged(docs: DataFrame, idCol: String, textCol: String,
-                     stopwords: Seq[String], langMarkers: Seq[(String, Seq[String])],
-                     keepLangs: Set[String], minQuality: Double,
-                     nearDupThreshold: Double, maxDocFreq: Double = 0.5,
-                     transitiveDedup: Boolean = false,
-                     evalDocs: Option[DataFrame] = None,
-                     contaminationThreshold: Double = 0.8): ManagedFrame =
-    Checkpoints.managed { ck =>
+  def prepare(docs: DataFrame, idCol: String, textCol: String,
+              stopwords: Seq[String], langMarkers: Seq[(String, Seq[String])],
+              keepLangs: Set[String], minQuality: Double,
+              nearDupThreshold: Double, maxDocFreq: Double = 0.5,
+              transitiveDedup: Boolean = false,
+              evalDocs: Option[DataFrame] = None,
+              contaminationThreshold: Double = 0.8): DataFrame =
+    Checkpoints.scoped { ck =>
     val id = col(idCol); val text = col(textCol)
 
     // persisted: consumed by both the exact-keep aggregate and the
     // exact-set semi join — without a materialization barrier the
     // quality+lang scan re-runs per branch (~3× the corpus scan; at
-    // 100 TB that is two extra full passes). Lifecycle: the caller
-    // releases via the returned handle.
+    // 100 TB that is two extra full passes).
     val gated = ck.shared(docs
       .withColumn("quality", Text.qualityScore(text, stopwords))
       .withColumn("lang_pred", Text.langId(lower(text), langMarkers))
@@ -92,7 +96,7 @@ object Corpus {
     val dupOf =
       if (!transitiveDedup) pairs.select(col("id_b").as(idCol)).distinct()
       else {
-        val labels = ck.adopt(Dedup.connectedComponents(pairs))
+        val labels = Dedup.connectedComponents(pairs)
         labels.filter(col("id") =!= col("rep")).select(col("id").as(idCol))
       }
     val deduped = exact.join(dupOf, Seq(idCol), "left_anti")
@@ -132,11 +136,9 @@ object Corpus {
     * joins at doc grain — ids and one-byte markers, never text — and
     * the stage column is one CASE over the flags, evaluated in the
     * pipeline's own stage order so a doc failing several gates
-    * reports the first. Cache lifecycle: like [[prepare]], the staged
-    * intermediates stay persisted for the one-shot caller (process
-    * exit or `spark.catalog.clearCache()` reclaims them — the q76/q86
-    * contract); long-lived sessions composing many ledgers should use
-    * [[dropLedgerManaged]] and release. */
+    * reports the first. Like [[prepare]], the persisted stage
+    * intermediates pass to the caller; [[Checkpoints.release]] on the
+    * materialized ledger frees them. */
   def dropLedger(docs: DataFrame, idCol: String, textCol: String,
                  stopwords: Seq[String],
                  langMarkers: Seq[(String, Seq[String])],
@@ -144,23 +146,7 @@ object Corpus {
                  nearDupThreshold: Double, maxDocFreq: Double = 0.5,
                  evalDocs: Option[DataFrame] = None,
                  contaminationThreshold: Double = 0.8): DataFrame =
-    dropLedgerManaged(docs, idCol, textCol, stopwords, langMarkers,
-      keepLangs, minQuality, nearDupThreshold, maxDocFreq, evalDocs,
-      contaminationThreshold).df
-
-  /** [[dropLedger]] with the cache-lifecycle handle — the
-    * [[prepareManaged]] discipline: the two (three with `evalDocs`)
-    * persisted stage intermediates are returned on the handle so a
-    * long-lived service composing many ledgers reclaims them
-    * deterministically instead of accumulating cached block sets. */
-  def dropLedgerManaged(docs: DataFrame, idCol: String, textCol: String,
-                        stopwords: Seq[String],
-                        langMarkers: Seq[(String, Seq[String])],
-                        keepLangs: Set[String], minQuality: Double,
-                        nearDupThreshold: Double, maxDocFreq: Double = 0.5,
-                        evalDocs: Option[DataFrame] = None,
-                        contaminationThreshold: Double = 0.8): ManagedFrame =
-    Checkpoints.managed { ck =>
+    Checkpoints.scoped { ck =>
     val id = col(idCol); val text = col(textCol)
     val scored = ck.shared(docs
       .withColumn("quality", Text.qualityScore(text, stopwords))
@@ -170,7 +156,7 @@ object Corpus {
     val exactKeep = gated.groupBy(md5(text).as("__h"))
       .agg(min(id).as(idCol)).select(idCol)
     val exact = ck.shared(gated.join(exactKeep, Seq(idCol), "left_semi"))
-    // the prepareManaged shared-index shape: one shingle index feeds
+    // the prepare shared-index shape: one shingle index feeds
     // the near-dup stage and (with `evalDocs`) the contamination
     // train side
     val inv0 = Dedup.shingleIndex(exact, idCol, textCol, shingleLen = 3)
@@ -205,21 +191,6 @@ object Corpus {
         .when(col("__ct").isNotNull, "contaminated")
         .otherwise("kept").as("stage"))
   }
-
-  /** [[prepareManaged]] without the lifecycle handle — for one-shot jobs
-    * where the process exit (or an explicit spark.catalog.clearCache())
-    * reclaims the cached intermediates. Long-lived sessions composing
-    * many corpora should use [[prepareManaged]] and release. */
-  def prepare(docs: DataFrame, idCol: String, textCol: String,
-              stopwords: Seq[String], langMarkers: Seq[(String, Seq[String])],
-              keepLangs: Set[String], minQuality: Double,
-              nearDupThreshold: Double, maxDocFreq: Double = 0.5,
-              transitiveDedup: Boolean = false,
-              evalDocs: Option[DataFrame] = None,
-              contaminationThreshold: Double = 0.8): DataFrame =
-    prepareManaged(docs, idCol, textCol, stopwords, langMarkers, keepLangs,
-      minQuality, nearDupThreshold, maxDocFreq, transitiveDedup, evalDocs,
-      contaminationThreshold).df
 
   /** Corpus SNAPSHOT DIFF — the data-versioning audit between two
     * pipeline runs: which documents were added, removed, changed, or

@@ -390,23 +390,12 @@ object Dedup {
     * ratio of exact integer sums (sum(df)/n_shingles — exact IEEE on
     * every engine), min over exact doubles is exact, and sqrt of the
     * exact ratio is correctly rounded — the weight replays
-    * bit-identically cross-engine before the 1e-6 rounding. */
+    * bit-identically cross-engine before the 1e-6 rounding. The
+    * persisted commonness aggregate passes to the caller;
+    * [[Checkpoints.release]] on the materialized weights frees it. */
   def softDedupWeights(docs: DataFrame, idCol: String, textCol: String,
                        shingleLen: Int = 3, beta: Double = 0.5): DataFrame =
-    softDedupWeightsManaged(docs, idCol, textCol, shingleLen, beta).df
-
-  /** [[softDedupWeights]] with the cache-lifecycle handle — the
-    * [[Corpus.prepareManaged]] discipline. The one persisted
-    * intermediate (the doc-grain commonness aggregate, consumed by both
-    * the min gate and the final projection) is operator-owned; the
-    * unmanaged variant leaves it for the one-shot caller's process exit
-    * or `clearCache()` (the q76/q86 contract), while long-lived
-    * sessions composing many weight tables call `release()` after
-    * materializing and reclaim it deterministically. */
-  def softDedupWeightsManaged(docs: DataFrame, idCol: String,
-                              textCol: String, shingleLen: Int = 3,
-                              beta: Double = 0.5): ManagedFrame =
-    Checkpoints.managed { ck =>
+    Checkpoints.scoped { ck =>
     require(beta > 0, "beta must be positive")
     val sh = docs.select(col(idCol).as("id"),
         explode(Text.shingles(lower(col(textCol)), shingleLen)).as("sh_s"))

@@ -230,7 +230,7 @@ object Incremental {
     *  2. near-dup stage — drop an exact survivor with Jaccard ≥
     *     `threshold` against ANY store doc, or against a smaller-id
     *     exact survivor in the batch (the non-cascading greedy rule of
-    *     [[Corpus.prepareManaged]]).
+    *     [[Corpus.prepare]]).
     *
     * Equivalent to a full greedy re-dedup of store ∪ batch restricted to
     * batch ids whenever store ids precede batch ids (exact dups share
@@ -800,29 +800,14 @@ object Incremental {
     * rule on the pigeonhole candidate machinery — recall is EXACT, not
     * probabilistic). With `storeBands` (the bucketed `_bands` table)
     * the candidate join is exchange-free on the store side; per-batch
-    * cost ∝ batch. */
+    * cost ∝ batch. The batch-signature checkpoint backing the result
+    * passes to the caller; [[Checkpoints.release]] on the materialized
+    * result frees it and leaves a caller-made checkpoint of `newDf` or
+    * `store` readable. */
   def dedupHashesAgainst(newDf: DataFrame, store: DataFrame, idCol: String,
                          hashCol: Column, maxHamming: Int = 3,
                          storeBands: Option[DataFrame] = None): DataFrame =
-    dedupHashesAgainstManaged(newDf, store, idCol, hashCol, maxHamming,
-      storeBands).df
-
-  /** [[dedupHashesAgainst]] with the checkpoint-lifecycle handle. The
-    * operator's ONE owned block set is the internal batch-signature
-    * checkpoint backing the returned plan; `release()` frees exactly
-    * it. Do NOT instead direct [[Checkpoints.release]] at the returned
-    * plan wholesale — release walks every LogicalRDD leaf, so if the
-    * caller's `store` or `newDf` is itself locally checkpointed their
-    * blocks would be freed too, and a local checkpoint's truncated
-    * lineage can never recompute (any later use of those caller-owned
-    * datasets fails). The unmanaged variant leaves the batch-grain
-    * id+hash blocks to ride until the ContextCleaner sweep — fine for
-    * one-shot jobs; streaming/looping ingesters should use this. */
-  def dedupHashesAgainstManaged(newDf: DataFrame, store: DataFrame,
-                                idCol: String, hashCol: Column,
-                                maxHamming: Int = 3,
-                                storeBands: Option[DataFrame] = None)
-      : ManagedFrame = Checkpoints.managed { ck =>
+    Checkpoints.scoped { ck =>
     val nsig = ck.proxy(newDf.select(col(idCol).as("id"), hashCol.as("sh")))
     val nBand = nsig.select(col("id"),
       posexplode(array(Dedup.hammingBandCols(maxHamming): _*))

@@ -91,13 +91,13 @@ object Quality {
     * scoring join — unpersisted, the corpus would tokenize twice; the
     * [[Retrieval]] `scores` convention), the vocab (|V| rows — the
     * 1-row total and the broadcast join), and the scored set (|docs|
-    * rows — the boundary aggregate and the final projection). The
-    * caller's between-query `clearCache()` reclaims them (the
-    * q76/q86 contract). Perplexities
-    * are ROUNDED (6 places) before the boundary quantile AND the
-    * comparison, so both engines interpolate identical inputs (R-7 on
-    * both, exact IEEE on equal inputs — the q87 argument) and no
-    * bucket boundary sits on a float-sum ulp. */
+    * rows — the boundary aggregate and the final projection); they
+    * pass to the caller, and [[Checkpoints.release]] on the
+    * materialized result frees them. Perplexities are ROUNDED (6
+    * places) before the boundary quantile AND the comparison, so both
+    * engines interpolate identical inputs (R-7 on both, exact IEEE on
+    * equal inputs — the q87 argument) and no bucket boundary sits on a
+    * float-sum ulp. */
   def perplexityBuckets(docs: DataFrame, idCol: String, textCol: String)(
       implicit spark: SparkSession): DataFrame =
     Checkpoints.scoped { ck =>
@@ -155,8 +155,8 @@ object Quality {
     * broadcast-1-row gate — the corpus is never reshuffled to be
     * bucketed. Persisted: the token-array base (3 consumers), the
     * bigram positions (2), the unigram vocab (3), the bigram vocab
-    * (2), the scored set (2); the caller's between-query
-    * `clearCache()` reclaims them (the q76/q86 contract). */
+    * (2), the scored set (2); [[Checkpoints.release]] on the
+    * materialized result frees them. */
   def bigramPerplexityBuckets(docs: DataFrame, idCol: String,
                               textCol: String, lambda: Double = 0.75)(
       implicit spark: SparkSession): DataFrame =
@@ -282,8 +282,8 @@ object Quality {
     * chain), so both engines agree to the 6-place rounding the
     * tercile boundaries compare at. Persisted: the token-array base
     * (3 consumers), the trigram occurrences (2), t3 (3), the (v,w)
-    * continuation table (4), the scored set (2); the caller's
-    * between-query `clearCache()` reclaims them. */
+    * continuation table (4), the scored set (2);
+    * [[Checkpoints.release]] on the materialized result frees them. */
   def knTrigramPerplexityBuckets(docs: DataFrame, idCol: String,
                                  textCol: String, discount: Double = 0.75)(
       implicit spark: SparkSession): DataFrame =
@@ -673,18 +673,7 @@ object Quality {
     * branches hash-replay exactly. */
   def kAnonymizedStats(df: DataFrame, groupCols: Seq[String], k: Long,
                        weight: Column): DataFrame =
-    kAnonymizedStatsManaged(df, groupCols, k, weight).df
-
-  /** [[kAnonymizedStats]] with the persist-lifecycle handle
-    * ([[ManagedFrame]], the [[Incremental.dedupHashesAgainstManaged]]
-    * discipline): the operator's ONE owned persist is the marked
-    * group-grain table feeding both output branches; `release()` after
-    * materializing `df` unpersists exactly it. The unmanaged variant
-    * leaves the (report-sized) block to the session CacheManager —
-    * fine for one-shot jobs; long-lived services should use this. */
-  def kAnonymizedStatsManaged(df: DataFrame, groupCols: Seq[String],
-                              k: Long, weight: Column): ManagedFrame =
-    Checkpoints.managed { ck =>
+    Checkpoints.scoped { ck =>
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     require(k >= 1, "k must be positive")
     // persist: the marked group table feeds the census, the visible
@@ -745,16 +734,7 @@ object Quality {
   def lDiverseStats(df: DataFrame, groupCols: Seq[String],
                     sensitiveCol: String, l: Long,
                     weight: Column): DataFrame =
-    lDiverseStatsManaged(df, groupCols, sensitiveCol, l, weight).df
-
-  /** [[lDiverseStats]] with the persist-lifecycle handle — same
-    * [[ManagedFrame]] contract as [[kAnonymizedStatsManaged]]: the one
-    * owned persist is the marked group table; `release()` after
-    * materializing frees exactly it. */
-  def lDiverseStatsManaged(df: DataFrame, groupCols: Seq[String],
-                           sensitiveCol: String, l: Long,
-                           weight: Column): ManagedFrame =
-    Checkpoints.managed { ck =>
+    Checkpoints.scoped { ck =>
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     require(l >= 1, "l must be positive")
     val gc = groupCols.map(c => col(c).cast("string").as(c))
@@ -817,15 +797,7 @@ object Quality {
     * round-6 float convention (the q200 entropy device). */
   def columnAssociation(df: DataFrame, aCol: String,
                         bCol: String): DataFrame =
-    columnAssociationManaged(df, aCol, bCol).df
-
-  /** [[columnAssociation]] with the persist-lifecycle handle — the one
-    * owned persist is the contingency table (feeds the total, both
-    * margins and the joint entropy); same [[ManagedFrame]] contract as
-    * [[kAnonymizedStatsManaged]]. */
-  def columnAssociationManaged(df: DataFrame, aCol: String,
-                               bCol: String): ManagedFrame =
-    Checkpoints.managed { ck =>
+    Checkpoints.scoped { ck =>
     val lg2 = log(lit(2.0))
     // persist: the contingency table feeds four subtrees (total, both
     // margins, joint entropy) — one corpus aggregate instead of four
@@ -908,17 +880,7 @@ object Quality {
   def tCloseStats(df: DataFrame, groupCols: Seq[String],
                   sensitiveCol: Column, tNum: Long, tDen: Long,
                   weight: Column): DataFrame =
-    tCloseStatsManaged(df, groupCols, sensitiveCol, tNum, tDen, weight).df
-
-  /** [[tCloseStats]] with the persist-lifecycle handle — same
-    * [[ManagedFrame]] contract as [[kAnonymizedStatsManaged]]: the two
-    * owned persists are the (group, value)-grain counts (feed the
-    * grid, the group margins and the rollup's union recompute) and the
-    * marked group table (feeds both output branches). */
-  def tCloseStatsManaged(df: DataFrame, groupCols: Seq[String],
-                         sensitiveCol: Column, tNum: Long, tDen: Long,
-                         weight: Column): ManagedFrame =
-    Checkpoints.managed { ck =>
+    Checkpoints.scoped { ck =>
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     require(tDen >= 1 && tNum >= 0, "t must be a non-negative rational")
     val gc = groupCols.map(c => col(c).cast("string").as(c))

@@ -23,10 +23,8 @@ import graft.functions.Text
   * count. Corpus stats (N, avgdl) are a 1-row aggregate and the
   * per-term idf table has |terms| rows — both broadcast. The tokenized
   * corpus is persisted (two consumers: the stats aggregate and the tf
-  * explode would otherwise re-tokenize) under the repo-wide cache
-  * lifecycle contract: the bench clears caches between queries, and
-  * library callers own `spark.catalog.clearCache()`/unpersist — the
-  * q76/q86 convention. */
+  * explode would otherwise re-tokenize); it passes to the caller, and
+  * [[Checkpoints.release]] on the materialized result frees it. */
 object Retrieval {
 
   /** Shared Okapi scoring: `q` is a normalized (query_id, term) table;

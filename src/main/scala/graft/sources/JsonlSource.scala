@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructType}
-import graft.operators.{Checkpoints, ManagedFrame}
+import graft.operators.Checkpoints
 
 /** JSONL corpus source — the training-data ingest staple (sharded,
   * append-friendly, splittable when uncompressed; gzip shards are NOT
@@ -29,13 +29,11 @@ object JsonlSource {
       .option("columnNameOfCorruptRecord", CorruptCol)
       .json(path)
 
-  /** [[quarantine]] result: `good` rows (quarantine column dropped),
-    * `corrupt` raw lines, and the shared parsed scan's handle: call
-    * [[release]] after both branches are materialized. */
-  final case class Quarantined(good: DataFrame, corrupt: DataFrame,
-                               private val parsed: ManagedFrame) {
-    def release(): Unit = parsed.release()
-  }
+  /** [[quarantine]] result: `good` rows (quarantine column dropped) and
+    * `corrupt` raw lines. Both read the shared parsed scan;
+    * [[Checkpoints.release]] on either branch, once both are
+    * materialized, frees it. */
+  final case class Quarantined(good: DataFrame, corrupt: DataFrame)
 
   /** Split a [[read]] result into good vs corrupt rows. The parsed scan
     * is persisted and SHARED by both branches: Spark disallows a
@@ -43,12 +41,10 @@ object JsonlSource {
     * just `_corrupt_record` without re-parsing), and at corpus scale the
     * cache also stops the good/reject branches from parsing every shard
     * twice. */
-  def quarantine(df0: DataFrame): Quarantined = {
-    val parsed = Checkpoints.managed(_.shared(df0))
-    val df = parsed.df
+  def quarantine(df0: DataFrame): Quarantined = Checkpoints.scoped { ck =>
+    val df = ck.shared(df0)
     Quarantined(
       good = df.filter(df.col(CorruptCol).isNull).drop(CorruptCol),
-      corrupt = df.filter(df.col(CorruptCol).isNotNull).select(CorruptCol),
-      parsed)
+      corrupt = df.filter(df.col(CorruptCol).isNotNull).select(CorruptCol))
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, Incremental, Similarity}
+import org.apache.spark.sql.CacheProbe
+import graft.operators.{Checkpoints, Dedup, Incremental, Similarity}
 import graft.sources.Tables
 
 class DedupSimilaritySpec extends AnyFunSuite {
@@ -183,16 +184,19 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(prep(transitive = true) == Set(1L))
   }
 
-  test("Corpus.prepareManaged: cache lifecycle — persisted until released") {
+  test("Corpus.prepare: cache lifecycle — persisted until released") {
+    spark.catalog.clearCache()
     val docs = Tables(spark, TestSpark.sf0001, "documents")
-    val prepared = graft.operators.Corpus.prepareManaged(docs, "doc_id", "text",
+    val prepared = graft.operators.Corpus.prepare(docs, "doc_id", "text",
       stopwords = Seq("the", "and", "of"),
       langMarkers = Seq("en" -> Seq("the", "and")), keepLangs = Set("en", "und"),
       minQuality = 0.0, nearDupThreshold = 0.6)
-    prepared.df.count() // materialize (populates the two persisted stages)
-    assert(!prepared.isReleased, "intermediates should be cached pre-release")
-    prepared.release()
-    assert(prepared.isReleased, "release() must unpersist both intermediates")
+    prepared.count() // materialize (populates the two persisted stages)
+    assert(CacheProbe.entries(spark) == 2,
+      "both intermediates should be cached pre-release")
+    Checkpoints.release(prepared)
+    assert(CacheProbe.entries(spark) == 0,
+      "release must unpersist both intermediates")
   }
 
   test("Corpus decontamination stage: composed == standalone, lifecycle covers it") {
@@ -207,15 +211,18 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val survivors = docs.join(base.select("doc_id"), Seq("doc_id"), "left_semi")
     val refIds = Dedup.decontaminate(survivors, ev, "doc_id", "text", 0.6)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val composed = graft.operators.Corpus.prepareManaged(train, "doc_id", "text",
+    spark.catalog.clearCache()
+    val composed = graft.operators.Corpus.prepare(train, "doc_id", "text",
       Queries.Stopwords, Queries.LangMarkers, Set("en"), 0.5, 0.6,
       maxDocFreq = 1.0, evalDocs = Some(ev), contaminationThreshold = 0.6)
-    val got = composed.df.select("doc_id").collect().map(_.getLong(0)).toSet
+    val got = composed.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == refIds, s"composed-only=${got -- refIds} ref-only=${refIds -- got}")
-    // the extra persisted branch (the deduped set) joins the lifecycle
-    assert(!composed.isReleased)
-    composed.release()
-    assert(composed.isReleased, "release() must also unpersist the decontam branch")
+    // the extra persisted branches (shared index, deduped set) are
+    // released with the result
+    assert(CacheProbe.entries(spark) == 4)
+    Checkpoints.release(composed)
+    assert(CacheProbe.entries(spark) == 0,
+      "release must also unpersist the decontam branch")
   }
 
   test("embeddingDupPairs: finds an injected duplicate vector") {
@@ -780,36 +787,28 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(withEv.count() == docs.count())
   }
 
-  test("dropLedgerManaged / softDedupWeightsManaged: release returns the " +
-       "session cache to baseline; results equal the unmanaged variants") {
+  test("dropLedger / softDedupWeights: release returns the session cache " +
+       "to baseline") {
     import graft.operators.Corpus
     spark.catalog.clearCache()
     val docs = Tables(spark, TestSpark.sf0001, "documents")
-    val baseline = spark.sharedState.cacheManager.isEmpty
 
-    val managed = Corpus.dropLedgerManaged(docs, "doc_id", "text",
+    val ledger = Corpus.dropLedger(docs, "doc_id", "text",
       Queries.Stopwords, Queries.LangMarkers, keepLangs = Set("en"),
       minQuality = 0.5, nearDupThreshold = 0.6, maxDocFreq = 1.0,
       evalDocs = Some(docs.limit(2).select(col("doc_id"), col("text"))))
-    val ledgerRows = managed.df.collect()
-    assert(!managed.isReleased && !spark.sharedState.cacheManager.isEmpty,
-      "the staged intermediates are persisted while the handle is live")
-    managed.release()
-    assert(managed.isReleased)
-    assert(spark.sharedState.cacheManager.isEmpty == baseline,
+    val ledgerRows = ledger.collect()
+    assert(!spark.sharedState.cacheManager.isEmpty,
+      "the staged intermediates stay persisted until released")
+    Checkpoints.release(ledger)
+    assert(spark.sharedState.cacheManager.isEmpty,
       "release must return the CacheManager to its pre-call state")
     assert(ledgerRows.length == docs.count())
 
-    val mw = Dedup.softDedupWeightsManaged(docs, "doc_id", "text")
-    val wRows = mw.df.collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    assert(!mw.isReleased)
-    mw.release()
-    assert(mw.isReleased && spark.sharedState.cacheManager.isEmpty == baseline)
-    // unmanaged delegate: identical weights (then clean up its persist)
-    val plain = Dedup.softDedupWeights(docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    assert(plain == wRows)
-    spark.catalog.clearCache()
+    val w = Dedup.softDedupWeights(docs, "doc_id", "text")
+    assert(w.collect().nonEmpty && !spark.sharedState.cacheManager.isEmpty)
+    Checkpoints.release(w)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("kCenterSelect: hand farthest-first trajectory, tie on id, " +

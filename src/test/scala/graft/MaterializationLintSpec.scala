@@ -4,14 +4,17 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Only `operators/Checkpoints.scala` may checkpoint, persist, cache or
-  * name a storage level in `src/main`: every other site declares a kind
-  * through a `Checkpoints` scope. `Bench.scala` is exempt — its timed
-  * protocol clears caches itself and must stay byte-identical. */
+/** Only `operators/Checkpoints.scala` may checkpoint, persist, cache,
+  * unpersist, clear the cache or name a storage level in `src/main`:
+  * every other site declares a kind through a `Checkpoints` scope and
+  * hands results off through `Checkpoints.release`. `Bench.scala` is
+  * exempt — its timed protocol clears caches itself and must stay
+  * byte-identical. */
 class MaterializationLintSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
   private val exempt = Set("graft/operators/Checkpoints.scala", "graft/Bench.scala")
-  private val forbidden = Seq("localCheckpoint(", ".persist(", ".cache()", "StorageLevel")
+  private val forbidden = Seq("localCheckpoint(", ".persist(", ".cache()", "StorageLevel",
+    ".unpersist(", "clearCache(")
 
   /** Source text with comments removed, so documentation may still name
     * what the code must not call. */

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{Checkpoints, Dedup, Multimodal}
 import graft.sources.Tables
 
 /** Perceptual image hashing (aHash/dHash) + the generalized Hamming
@@ -232,12 +232,12 @@ class PerceptualHashSpec extends AnyFunSuite {
         spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
-  test("dedupHashesAgainstManaged: release frees ONLY the operator's " +
+  test("dedupHashesAgainst: release frees ONLY the operator's " +
        "internal checkpoint — a caller-owned checkpointed batch " +
        "survives and stays usable") {
     import spark.implicits._
     import graft.operators.Incremental
-    val table = "phash_managed_spec"
+    val table = "phash_release_spec"
     for (t <- Seq(table, s"${table}_bands")) spark.sql(s"DROP TABLE IF EXISTS $t")
     try {
       Incremental.writeHashStore(Seq(1L -> 0L).toDF("id", "h"), "id",
@@ -247,12 +247,15 @@ class PerceptualHashSpec extends AnyFunSuite {
       // too, and a truncated lineage cannot recompute
       val callerBatch = Seq(10L -> 1L, 11L -> -1L).toDF("id", "h")
         .localCheckpoint(true)
-      val managed = Incremental.dedupHashesAgainstManaged(callerBatch,
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val survivors = Incremental.dedupHashesAgainst(callerBatch,
         spark.table(table), "id", col("h"), maxHamming = 3,
         storeBands = Some(spark.table(s"${table}_bands")))
-      val surv = managed.df.select("id").as[Long].collect().toSet
+      val surv = survivors.select("id").as[Long].collect().toSet
       assert(surv == Set(11L), s"got $surv") // 10 is ham-1 vs the store
-      managed.release()
+      Checkpoints.release(survivors)
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+        "release must free the operator's batch-signature checkpoint")
       // the caller's checkpoint must still be materialized and readable
       assert(callerBatch.count() == 2,
         "caller-owned checkpoint blocks must survive the scoped release")

@@ -13,6 +13,14 @@ import org.apache.spark.sql.functions._
   *   java -cp ... graft.ScaleProbeMain [celf|fuzzy|kmv]
   */
 object ScaleProbeMain {
+  /** Frees a checkpoint the probe made itself ([[graft.operators.Checkpoints.release]]
+    * frees only the engine's own). */
+  private def dropCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist()
+      case _ => ()
+    }
+
   def main(a: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -138,7 +146,7 @@ object ScaleProbeMain {
         val posts2 = bucketStats(d, q = 2)
         println(s"FUZZYDIV q=2 docs=$n bucketMax=${posts2.get(0)} " +
           s"bucketP99=${posts2.get(1)} buckets=${posts2.get(2)} (stats only)")
-        graft.operators.Checkpoints.release(d)
+        dropCheckpoint(d)
       }
       for (n <- Seq(5000, 5000, 50000)) { // first 5k run absorbs JIT
         val d = corpus(n)
@@ -150,7 +158,7 @@ object ScaleProbeMain {
         println(f"FUZZYDIV q=3 docs=$n pairs=$pairs wall=$dt%7.2f s " +
           s"bucketMax=${posts.get(0)} bucketP99=${posts.get(1)} " +
           s"buckets=${posts.get(2)}")
-        graft.operators.Checkpoints.release(d)
+        dropCheckpoint(d)
       }
     }
 
@@ -212,8 +220,8 @@ object ScaleProbeMain {
           f"reduction=${nPairsDense.toDouble / nPairs}%.1fx " +
           s"sel=${traj.map(_.getLong(1)).mkString(",")}")
       }
-      graft.operators.Checkpoints.release(emb)
-      graft.operators.Checkpoints.release(cand)
+      dropCheckpoint(emb)
+      dropCheckpoint(cand)
     }
 
     if (which == "kmv" || which == "all") {
@@ -231,7 +239,7 @@ object ScaleProbeMain {
         val t2 = System.nanoTime()
         println(f"KMV sf=$sf docs=$n sketchRows=$skRows matrixRows=$m " +
           f"sketchBuild=${(t1 - t0) / 1e9}%7.2f s matrix=${(t2 - t1) / 1e9}%7.3f s")
-        graft.operators.Checkpoints.release(sk)
+        dropCheckpoint(sk)
       }
     }
     if (which == "tclose") {
@@ -261,11 +269,11 @@ object ScaleProbeMain {
         val m = d.select((col("n_chars") / lit(width)).cast("long"))
           .distinct().count()
         val t0 = System.nanoTime()
-        val out = graft.operators.Quality.tCloseStatsManaged(d, Seq("src2"),
+        val out = graft.operators.Quality.tCloseStats(d, Seq("src2"),
           col("n_chars") / lit(width), 13L, 200L, col("n_chars"))
-        val rows = out.df.count()
+        val rows = out.count()
         val dt = (System.nanoTime() - t0) / 1e9
-        out.release()
+        graft.operators.Checkpoints.release(out)
         if (pass == 2)
           println(f"TCLOSE sf=$sf wide=$wide docs=$n |G|=$groups m=$m " +
             f"grid=${groups * m} outRows=$rows wall=$dt%6.2f s")

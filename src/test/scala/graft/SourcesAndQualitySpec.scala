@@ -131,7 +131,7 @@ class SourcesAndQualitySpec extends AnyFunSuite {
         (4L, "fr", "delta epsilon zeta")))
       // good rows carry no quarantine column
       assert(!q.good.columns.contains(JsonlSource.CorruptCol))
-    } finally q.release()
+    } finally graft.operators.Checkpoints.release(q.good)
   }
 
   test("latest pointer: written, monotone, readable") {
