@@ -1527,11 +1527,12 @@ object Queries {
         // oracle recomputes the greedy semantics exactly (LSH verify
         // makes the output exact-Jaccard w.h.p., the q24 argument).
         val docs = tbl("documents")
-        val store = operators.Incremental.signatures(
-          docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text")
-        operators.Incremental.dedupAgainst(
+        val kind = operators.Lsh.MinHash()
+        val store = kind.signatures(
+          docs.filter(col("doc_id") % 3 =!= 0), "doc_id", col("text"))
+        operators.Incremental.dedupAgainst(kind,
             docs.filter(col("doc_id") % 3 === 0), store,
-            "doc_id", "text", threshold = 0.6)
+            "doc_id", col("text"), threshold = 0.6)
           .select(col("doc_id"))
       },
       Some(s"""WITH t AS (SELECT doc_id, md5(text) AS h, $ShinglesSql AS sh
@@ -1739,8 +1740,9 @@ object Queries {
         // in-memory catalog doesn't know about — saveAsTable then fails
         // with LOCATION_ALREADY_EXISTS, so clear both name and location
         dropTables(s, table, s"${table}_bands")
-        operators.Incremental.writeStore(
-          docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", table, 8)
+        val kind = operators.Lsh.MinHash()
+        operators.Incremental.writeStore(kind,
+          docs.filter(col("doc_id") % 3 =!= 0), "doc_id", col("text"), table, 8)
         val dir = tempStagingDir("graft_q68_")
         val src = Files.createDirectories(dir.resolve("in"))
         val out = dir.resolve("out").toString
@@ -1753,8 +1755,8 @@ object Queries {
         val stream = s.readStream.schema(streamed.schema)
           .option("maxFilesPerTrigger", 1).parquet(src.toString)
         val query = stream.writeStream
-          .foreachBatch(operators.Incremental.dedupSink("doc_id", "text", table, 8,
-            threshold = 0.6,
+          .foreachBatch(operators.Incremental.dedupSink(kind,
+            "doc_id", col("text"), table, 8, threshold = 0.6,
             emit = (surv, batchId) =>
               surv.write.mode("overwrite").parquet(s"$out/batch_$batchId")))
           .option("checkpointLocation", dir.resolve("ckpt").toString)
@@ -1849,9 +1851,10 @@ object Queries {
           .unionByName(emb.filter(col("vec_id") < 5)
             .select((col("vec_id") + 1000000).as("vec_id"),
               transform(col("embedding"), x => x * lit(2.0f)).as("embedding")))
-        operators.Incremental.dedupEmbeddingsAgainst(batch,
-            operators.Incremental.embeddingSignatures(store, "vec_id", "embedding"),
-            "vec_id", "embedding", threshold = 0.95)
+        val kind = operators.Lsh.Hyperplane()
+        operators.Incremental.dedupAgainst(kind, batch,
+            kind.signatures(store, "vec_id", col("embedding")),
+            "vec_id", col("embedding"), threshold = 0.95)
           .select(col("vec_id"))
       },
       Some("""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -2137,7 +2140,7 @@ object Queries {
       (s, d) => { val ctx = new Ctx(s, d); import ctx._
         // streaming EMBEDDING dedup END-TO-END — the q68 recipe on the
         // second modality: a real file stream under Trigger.AvailableNow
-        // drives Incremental.embeddingDedupSink; each micro-batch dedups
+        // drives Incremental.dedupSink; each micro-batch dedups
         // its vectors against the persisted hyperplane store, emits
         // survivors, appends itself. Planted scaled copies (x2.0f —
         // exact in float, cosine exactly 1.0 both engines) exercise both
@@ -2158,8 +2161,9 @@ object Queries {
         val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
         val table = "q79_emb_store"
         dropTables(s, table, s"${table}_bands")
-        operators.Incremental.writeEmbeddingStore(
-          emb.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", table, 8)
+        val kind = operators.Lsh.Hyperplane()
+        operators.Incremental.writeStore(kind,
+          emb.filter(col("vec_id") % 3 =!= 0), "vec_id", col("embedding"), table, 8)
         def scaled(src: org.apache.spark.sql.DataFrame, offset: Long) =
           src.select((col("vec_id") + offset).as("vec_id"),
             transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
@@ -2180,8 +2184,9 @@ object Queries {
         val stream = s.readStream.schema(batchA.schema)
           .option("maxFilesPerTrigger", 1).parquet(src.toString)
         val query = stream.writeStream
-          .foreachBatch(operators.Incremental.embeddingDedupSink(
-            "vec_id", "embedding", table, 8, threshold = 0.95,
+          .foreachBatch(operators.Incremental.dedupSink(
+            kind, "vec_id", col("embedding"), table, 8,
+            threshold = 0.95,
             emit = (surv, batchId) =>
               surv.write.mode("overwrite").parquet(s"$out/batch_$batchId")))
           .option("checkpointLocation", dir.resolve("ckpt").toString)
@@ -2633,7 +2638,7 @@ object Queries {
     Q("q91_store_maintenance",
       (s, d) => { val ctx = new Ctx(s, d); import ctx._
         // STORE MAINTENANCE under a live stream — q79's pipeline halted
-        // mid-sequence for compactEmbeddingStore + rebuildEmbeddingBands,
+        // mid-sequence for compactStore + rebuildBands,
         // then resumed from the checkpoint: batch A processes, the store
         // is compacted and its derived band table rebuilt, batch B
         // processes against the maintained store. The oracle is q79's
@@ -2649,8 +2654,9 @@ object Queries {
         val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
         val table = "q91_emb_store"
         dropTables(s, table, s"${table}_bands")
-        operators.Incremental.writeEmbeddingStore(
-          emb.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", table, 8)
+        val kind = operators.Lsh.Hyperplane()
+        operators.Incremental.writeStore(kind,
+          emb.filter(col("vec_id") % 3 =!= 0), "vec_id", col("embedding"), table, 8)
         def scaled(src: org.apache.spark.sql.DataFrame, offset: Long) =
           src.select((col("vec_id") + offset).as("vec_id"),
             transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
@@ -2670,8 +2676,9 @@ object Queries {
           val stream = s.readStream.schema(batchA.schema)
             .option("maxFilesPerTrigger", 1).parquet(src.toString)
           val query = stream.writeStream
-            .foreachBatch(operators.Incremental.embeddingDedupSink(
-              "vec_id", "embedding", table, 8, threshold = 0.95,
+            .foreachBatch(operators.Incremental.dedupSink(
+              kind, "vec_id", col("embedding"), table, 8,
+              threshold = 0.95,
               emit = (surv, batchId) =>
                 surv.write.mode("overwrite").parquet(s"$out/batch_$batchId")))
             .option("checkpointLocation", dir.resolve("ckpt").toString)
@@ -2681,9 +2688,9 @@ object Queries {
         }
         stageStreamFile(batchA, src, "batch_a", now - 120000)
         runStream() // processes batch A, appends it to the store
-        operators.Incremental.compactEmbeddingStore(s, table, 8)
-        operators.Incremental.rebuildEmbeddingBands(s, table, 8)
-        require(operators.Incremental.validateStore(s, table, bands = 64),
+        operators.Incremental.compactStore(kind, s, table, 8)
+        operators.Incremental.rebuildBands(kind, s, table, 8)
+        require(operators.Incremental.validateStore(kind, s, table),
           "store/bands diverged after maintenance")
         stageStreamFile(batchB, src, "batch_b", now - 60000)
         runStream() // checkpoint resume: batch B only, maintained store
@@ -2990,8 +2997,9 @@ object Queries {
         val docs = tbl("documents").select(col("doc_id"), col("text"))
         val table = "q98_sig_store"
         dropTables(s, table, s"${table}_bands")
-        operators.Incremental.writeStore(
-          docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", table, 8)
+        val kind = operators.Lsh.MinHash()
+        operators.Incremental.writeStore(kind,
+          docs.filter(col("doc_id") % 3 =!= 0), "doc_id", col("text"), table, 8)
         val dir = tempStagingDir("graft_q98_")
         val src = Files.createDirectories(dir.resolve("in"))
         val out = dir.resolve("out").toString
@@ -3001,8 +3009,9 @@ object Queries {
           val stream = s.readStream.schema(streamed.schema)
             .option("maxFilesPerTrigger", 1).parquet(src.toString)
           val query = stream.writeStream
-            .foreachBatch(operators.Incremental.dedupSink("doc_id", "text",
-              table, 8, threshold = 0.6,
+            .foreachBatch(operators.Incremental.dedupSink(
+              kind, "doc_id", col("text"), table, 8,
+              threshold = 0.6,
               emit = (surv, batchId) =>
                 surv.write.mode("overwrite").parquet(s"$out/batch_$batchId")))
             .option("checkpointLocation", dir.resolve("ckpt").toString)
@@ -3013,9 +3022,9 @@ object Queries {
         stageStreamFile(streamed.filter(expr("(doc_id div 3) % 2 = 0")), src,
           "batch_a", now - 120000)
         runStream() // processes batch A, appends it to the store
-        operators.Incremental.compactStore(s, table, 8)
-        operators.Incremental.rebuildBands(s, table, 8)
-        require(operators.Incremental.validateStore(s, table),
+        operators.Incremental.compactStore(kind, s, table, 8)
+        operators.Incremental.rebuildBands(kind, s, table, 8)
+        require(operators.Incremental.validateStore(kind, s, table),
           "store/bands diverged after maintenance")
         stageStreamFile(streamed.filter(expr("(doc_id div 3) % 2 = 1")), src,
           "batch_b", now - 60000)
@@ -6730,7 +6739,7 @@ object Queries {
         implicit val ss = s
         // INCREMENTAL IMAGE DEDUP — the q62 cross-snapshot discipline
         // on the perceptual-hash store: history persists as (id, dhash)
-        // + a (band, bval, id) table bucketed on the Manku band keys,
+        // + a (band, bucket, id) table bucketed on the Manku band keys,
         // each crawl batch dedups against ALL history with cost ∝
         // batch (candidate join probes the bucketed `_bands` table —
         // zero store-side exchange; popcount verify re-joins two
@@ -6754,20 +6763,21 @@ object Queries {
           operators.Multimodal.perceptualHashes(m)
             .select(col("media_id"), col("dhash"))
         val storeDocs = docs.filter(col("doc_id") % 3 =!= 0)
-        operators.Incremental.writeHashStore(
+        val kind = operators.Lsh.Pigeonhole(maxHamming = 3)
+        operators.Incremental.writeStore(kind,
           ph(operators.Multimodal.imagesFromDocuments(storeDocs)),
-          "media_id", col("dhash"), table, numBuckets = 8, maxHamming = 3)
+          "media_id", col("dhash"), table, numBuckets = 8)
         val b1 = ph(operators.Multimodal.imagesFromDocuments(
             docs.filter(col("doc_id") % 3 === 0 &&
               expr("(doc_id div 3) % 2 = 0")))
           .unionByName(operators.Multimodal.brightenedImagesFromDocuments(
             storeDocs.filter(col("doc_id") % 13 === 0), 1000000L, 16)))
         // frozen BEFORE the store grows
-        val surv1 = ck.proxy(operators.Incremental.dedupHashesAgainst(b1,
-            s.table(table), "media_id", col("dhash"), maxHamming = 3,
+        val surv1 = ck.proxy(operators.Incremental.dedupAgainst(kind, b1,
+            s.table(table), "media_id", col("dhash"), threshold = 0.0,
             storeBands = Some(s.table(s"${table}_bands"))))
-        operators.Incremental.appendToHashStore(surv1, "media_id",
-          col("dhash"), table, numBuckets = 8, maxHamming = 3)
+        operators.Incremental.appendToStore(kind, surv1, "media_id",
+          col("dhash"), table, numBuckets = 8)
         val b2 = ph(operators.Multimodal.imagesFromDocuments(
             docs.filter(col("doc_id") % 3 === 0 &&
               expr("(doc_id div 3) % 2 = 1")))
@@ -6775,8 +6785,8 @@ object Queries {
             docs.filter(col("doc_id") % 3 === 0 &&
               expr("(doc_id div 3) % 2 = 0") && col("doc_id") % 5 === 0),
             2000000L, 0)))
-        val surv2 = operators.Incremental.dedupHashesAgainst(b2,
-          s.table(table), "media_id", col("dhash"), maxHamming = 3,
+        val surv2 = operators.Incremental.dedupAgainst(kind, b2,
+          s.table(table), "media_id", col("dhash"), threshold = 0.0,
           storeBands = Some(s.table(s"${table}_bands")))
         surv1.select(col("media_id")).withColumn("batch", lit("b1"))
           .unionByName(
@@ -6805,15 +6815,16 @@ object Queries {
         val table = "q170_text_store"
         dropTables(s, table, s"${table}_bands")
         val storeDocs = docs.filter(col("doc_id") % 3 =!= 0)
-        operators.Incremental.writeStore(storeDocs, "doc_id", "text",
+        val kind = operators.Lsh.MinHash()
+        operators.Incremental.writeStore(kind, storeDocs, "doc_id", col("text"),
           table, numBuckets = 8)
         // modulus COPRIME to the store's 3: %21 here would make the
         // forgotten set provably empty (21 ⊆ 3·Z) and the whole forget
         // protocol vacuous — 22 keeps ~|store|/33 real forget targets
         val forgotten = storeDocs.filter(col("doc_id") % 22 === 0)
-        operators.Incremental.forgetFromStore(s,
+        operators.Incremental.forgetFromStore(kind, s,
           forgotten.select(col("doc_id").as("id")), table, numBuckets = 8)
-        require(operators.Incremental.validateStore(s, table),
+        require(operators.Incremental.validateStore(kind, s, table),
           "store/bands diverged after forget")
         val batch = forgotten
           .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
@@ -6822,8 +6833,8 @@ object Queries {
           .unionByName(docs.filter(col("doc_id") % 3 === 0 &&
               expr("(doc_id div 3) % 2 = 0"))
             .select(col("doc_id"), col("text")))
-        operators.Incremental.dedupAgainst(batch, s.table(table),
-            "doc_id", "text", threshold = 0.6,
+        operators.Incremental.dedupAgainst(kind, batch, s.table(table),
+            "doc_id", col("text"), threshold = 0.6,
             storeBands = Some(s.table(s"${table}_bands")))
           .select(col("doc_id"))
       },
@@ -7217,7 +7228,8 @@ object Queries {
         val table = "q179_text_store"
         dropTables(s, table, s"${table}_bands")
         val storeDocs = docs.filter(col("doc_id") % 3 =!= 0)
-        operators.Incremental.writeStore(storeDocs, "doc_id", "text",
+        val kind = operators.Lsh.MinHash()
+        operators.Incremental.writeStore(kind, storeDocs, "doc_id", col("text"),
           table, numBuckets = 8)
         val present = storeDocs.filter(col("doc_id") % 22 === 0)
           .select(col("doc_id").as("id"))
@@ -7226,12 +7238,12 @@ object Queries {
           .unionByName(docs.filter(col("doc_id") % 97 === 0)
             .select((col("doc_id") + 5000000L).as("id")))
         val fset = present.unionByName(absent)
-        operators.Incremental.forgetFromStore(s, fset, table, numBuckets = 8)
-        require(operators.Incremental.validateStore(s, table),
+        operators.Incremental.forgetFromStore(kind, s, fset, table, numBuckets = 8)
+        require(operators.Incremental.validateStore(kind, s, table),
           "store/bands diverged after forget")
         val n1 = ck.proxy(s.table(table).agg(count(lit(1)).as("n1")))
-        operators.Incremental.forgetFromStore(s, fset, table, numBuckets = 8)
-        require(operators.Incremental.validateStore(s, table),
+        operators.Incremental.forgetFromStore(kind, s, fset, table, numBuckets = 8)
+        require(operators.Incremental.validateStore(kind, s, table),
           "store/bands diverged after second forget")
         val n2 = ck.proxy(s.table(table).agg(count(lit(1)).as("n2")))
         val annTable = "q179_ann_store"
@@ -7270,8 +7282,8 @@ object Queries {
             .select((col("doc_id") + 3000000L).as("doc_id"), col("text")))
           .unionByName(storeDocs.filter(col("doc_id") % 23 === 0)
             .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-        operators.Incremental.dedupAgainst(batch, s.table(table),
-            "doc_id", "text", threshold = 0.6,
+        operators.Incremental.dedupAgainst(kind, batch, s.table(table),
+            "doc_id", col("text"), threshold = 0.6,
             storeBands = Some(s.table(s"${table}_bands")))
           .select(col("doc_id"))
           .crossJoin(broadcast(n1.crossJoin(n2).crossJoin(guard)

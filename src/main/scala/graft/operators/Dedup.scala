@@ -417,13 +417,6 @@ object Dedup {
         round(w, 6).as("weight"))
   }
 
-  /** MinHash signature: `numHashes` hash families; sig[i] = min over
-    * shingles. Native one-pass expression (graft.plans.MinHashSig) —
-    * the HOF formulation (transform × aggregate) re-evaluates the
-    * shingle child per hash family after projection collapse. */
-  def minhashSignature(shingleSet: Column, numHashes: Int): Column =
-    graft.plans.exprs.minhashSig(shingleSet, numHashes)
-
   /** LSH BAND-PLAN optimizer for [[minhashLshPairs]] — picks
     * (rowsPerBand r, bands b) for a target Jaccard threshold t under a
     * hash budget H, instead of folklore defaults. For each candidate
@@ -508,38 +501,9 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       threshold: Double, shingleLen: Int = 1,
                       bands: Int = 32, rowsPerBand: Int = 2): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val shingleSets = docs.select(col(idCol).as("id"),
-      array_distinct(Text.shingles(lower(col(textCol)), shingleLen)).as("sh"))
-    val sig = shingleSets.withColumn("sig", minhashSignature(col("sh"), numHashes))
-    // band value = hash of that band's slice of the signature.
-    // Candidate generation ships ONLY (band, bucket, id) — at 100 TB the
-    // shingle sets stay out of the banded shuffle and are re-joined by id
-    // for the verify step. Bands are built as a Scala-level array (many
-    // syntactic refs to `sig`) so CollapseProject keeps the signature in
-    // its own projection instead of inlining it per band.
-    val bandCols = (0 until bands).map(b =>
-      xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)), lit(b)))
-    val banded = sig.select(col("id"),
-      posexplode(array(bandCols: _*)).as(Seq("band", "bucket")))
-    val cand = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(banded.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()   // dedup multi-band hits
-    // verify ships array<long> hashed shingle ids, not the strings —
-    // same |A∩B| / sizes w.h.p. (VectorOps.hashTokens64), a fraction of
-    // the shuffle bytes of word n-gram strings
-    val hashedSets = shingleSets.select(col("id"),
-      graft.plans.exprs.hashTokens64(col("sh")).as("shh"))
-    cand
-      .join(hashedSets.select(col("id").as("id_a"), col("shh").as("sh_a")), Seq("id_a"))
-      .join(hashedSets.select(col("id").as("id_b"), col("shh").as("sh_b")), Seq("id_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("jaccard",
-        col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    val kind = Lsh.MinHash(shingleLen, bands, rowsPerBand)
+    Lsh.selfPairs(kind, kind.signatures(docs, idCol, col(textCol)), threshold)
+      .select(col("id_a"), col("id_b"), round(col("score"), 6).as("jaccard"))
   }
 
   /** Eval-set decontamination pairs: CONTAINMENT of an eval doc's
@@ -1313,6 +1277,42 @@ object Dedup {
   def simhash(text: Column): Column =
     graft.plans.exprs.simhash64(Text.tokens(lower(text)))
 
+  /** SimHash near-dup pairs within `maxHamming` bits WITHOUT an all-pairs
+    * scan (Manku et al., WWW'07): the 64-bit fingerprint splits into
+    * maxHamming+1 bit-bands — a pair differing in at most maxHamming
+    * bits matches EXACTLY on at least one band (pigeonhole), so
+    * candidates come from equality self-joins on (band, value), id-only
+    * through the banded shuffle, and are verified with an exact popcount
+    * re-joined by id (the LSH discipline of [[minhashLshPairs]]). Recall
+    * is EXACT (pigeonhole, not probabilistic). Candidate volume: random
+    * far pairs collide on a w-bit band with prob 2^-w — at maxHamming=3
+    * (4×16-bit bands) that is ~n²/2¹⁶ per band; for corpora where that
+    * grows too fat, trade shuffle for precision with Manku's rotation
+    * trick (more tables over permuted bits) before widening bands. */
+  def simhashDupPairs(docs: DataFrame, idCol: String, textCol: String,
+                      maxHamming: Int = 3): DataFrame =
+    hammingDupPairs(docs, idCol, simhash(col(textCol)), maxHamming)
+
+  /** The Manku pigeonhole machinery over an ARBITRARY 64-bit
+    * fingerprint expression — [[simhashDupPairs]] generalized so other
+    * 64-bit perceptual signatures (image aHash/dHash —
+    * [[Multimodal.perceptualHashes]]) reuse the exact-recall banded
+    * join instead of an all-pairs scan. Same plan, contracts, and
+    * candidate-volume math as [[simhashDupPairs]] (whose scaladoc is
+    * the reference). */
+  def hammingDupPairs(docs: DataFrame, idCol: String, hashCol: Column,
+                      maxHamming: Int = 3): DataFrame =
+    Checkpoints.scoped { ck =>
+    val kind = Lsh.Pigeonhole(maxHamming)
+    // eager checkpoint: three downstream consumers (banded explode + the
+    // two verify re-joins) would otherwise re-run the simhash kernel over
+    // the corpus per reference — the same discipline as
+    // [[Incremental.dedupAgainst]]'s signature checkpoint
+    val sig = ck.proxy(kind.signatures(docs, idCol, hashCol))
+    Lsh.selfPairs(kind, sig, threshold = 0.0)
+      .select(col("id_a"), col("id_b"), col("score").cast("int").as("hamming"))
+  }
+
   /** Embedding near-dup pairs: cosine ≥ threshold via hyperplane-LSH
     * bucketing (narrow signature pass + banded shuffle), exact cosine
     * verify inside each bucket. `bands` buckets of `bitsPerBand` bits;
@@ -1334,129 +1334,11 @@ object Dedup {
     * collisions ~45× per band; recall is then bought back with more
     * bands (64), whose per-band cost is only more signature words in the
     * narrow codegen'd kernel pass. */
-  /** SimHash near-dup pairs within `maxHamming` bits WITHOUT an all-pairs
-    * scan (Manku et al., WWW'07): the 64-bit fingerprint splits into
-    * maxHamming+1 bit-bands — a pair differing in at most maxHamming
-    * bits matches EXACTLY on at least one band (pigeonhole), so
-    * candidates come from equality self-joins on (band, value), id-only
-    * through the banded shuffle, and are verified with an exact popcount
-    * re-joined by id (the LSH discipline of [[minhashLshPairs]]). Recall
-    * is EXACT (pigeonhole, not probabilistic). Candidate volume: random
-    * far pairs collide on a w-bit band with prob 2^-w — at maxHamming=3
-    * (4×16-bit bands) that is ~n²/2¹⁶ per band; for corpora where that
-    * grows too fat, trade shuffle for precision with Manku's rotation
-    * trick (more tables over permuted bits) before widening bands. */
-  def simhashDupPairs(docs: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3): DataFrame =
-    hammingDupPairs(docs, idCol, simhash(col(textCol)), maxHamming)
-
-  /** The pigeonhole band values of a 64-bit fingerprint column `sh`:
-    * maxHamming+1 bit-slices — shared by [[hammingDupPairs]] and the
-    * incremental hash store ([[Incremental]]), which must derive
-    * byte-identical band keys or the store join silently loses
-    * recall. */
-  private[operators] def hammingBandCols(maxHamming: Int): Seq[Column] = {
-    val nBands = maxHamming + 1
-    val width = 64 / nBands
-    (0 until nBands).map { b =>
-      val lo = b * width
-      val w = if (b == nBands - 1) 64 - lo else width
-      val mask = if (w == 64) -1L else (1L << w) - 1
-      shiftrightunsigned(col("sh"), lo).bitwiseAND(lit(mask))
-    }
-  }
-
-  /** The Manku pigeonhole machinery over an ARBITRARY 64-bit
-    * fingerprint expression — [[simhashDupPairs]] generalized so other
-    * 64-bit perceptual signatures (image aHash/dHash —
-    * [[Multimodal.perceptualHashes]]) reuse the exact-recall banded
-    * join instead of an all-pairs scan. Same plan, contracts, and
-    * candidate-volume math as [[simhashDupPairs]] (whose scaladoc is
-    * the reference). */
-  def hammingDupPairs(docs: DataFrame, idCol: String, hashCol: Column,
-                      maxHamming: Int = 3): DataFrame =
-    Checkpoints.scoped { ck =>
-    require(maxHamming >= 0 && maxHamming < 64, "maxHamming must be in [0, 64)")
-    // eager checkpoint: three downstream consumers (banded explode + the
-    // two verify re-joins) would otherwise re-run the simhash kernel over
-    // the corpus per reference — the same discipline as
-    // [[Incremental.dedupAgainst]]'s signature checkpoint
-    val sig = ck.proxy(docs.select(col(idCol).as("id"), hashCol.as("sh")))
-    val bandVals = hammingBandCols(maxHamming)
-    val banded = sig.select(col("id"),
-      posexplode(array(bandVals: _*)).as(Seq("band", "bval")))
-    banded.select(col("band"), col("bval"), col("id").as("id_a"))
-      .join(banded.select(col("band"), col("bval"), col("id").as("id_b")),
-        Seq("band", "bval"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-      .join(sig.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sig.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("hamming", expr("bit_count(sh_a ^ sh_b)"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming").cast("int").as("hamming"))
-  }
-
-  /** Cluster-consistent embedding dedup: [[embeddingDupPairs]] →
-    * [[connectedComponents]], so embedding-space dup clusters get the
-    * same one-survivor-per-transitive-cluster semantics as Jaccard
-    * clusters (q58). Returns (id, rep) per node in the pair graph;
-    * survivors are rows with id == rep — greedy per-pair selection can
-    * keep two docs that are both near-dups of a third but not of each
-    * other, the closure keeps exactly one. Same lifecycle contract as
-    * connectedComponents: labels are checkpointed and handed to the
-    * caller. */
-  def embeddingDupClusters(emb: DataFrame, idCol: String, vecCol: String,
-                           threshold: Double, bands: Int = 64,
-                           bitsPerBand: Int = 16): DataFrame =
-    connectedComponents(
-      embeddingDupPairs(emb, idCol, vecCol, threshold, bands, bitsPerBand))
-
-  /** Hyperplane signature word columns (`sig_0..sig_{w-1}`) for `bands ×
-    * bitsPerBand` planes — shared between [[embeddingDupPairs]] and the
-    * incremental embedding store ([[Incremental.embeddingSignatures]]). */
-  private[operators] def hyperplaneSigCols(v: Column, bands: Int,
-                                           bitsPerBand: Int): Seq[Column] = {
-    require(64 % bitsPerBand == 0, "bitsPerBand must divide 64 (bands may not straddle words)")
-    val planes = bands * bitsPerBand
-    val nWords = (planes + 63) / 64
-    (0 until nWords).map { wd =>
-      Vectors.hyperplaneSignature(v, math.min(64, planes - wd * 64), wd * 64)
-        .as(s"sig_$wd")
-    }
-  }
-
-  /** LSH band values over [[hyperplaneSigCols]]' words: band b is the
-    * `bitsPerBand`-bit slice of its word (bands never straddle words). */
-  private[operators] def hyperplaneBandCols(bands: Int,
-                                            bitsPerBand: Int): Seq[Column] =
-    (0 until bands).map { b =>
-      val word = b * bitsPerBand / 64
-      val shift = b * bitsPerBand % 64
-      shiftright(col(s"sig_$word"), shift).bitwiseAND((1L << bitsPerBand) - 1)
-    }
-
   def embeddingDupPairs(emb: DataFrame, idCol: String, vecCol: String,
                         threshold: Double, bands: Int = 64, bitsPerBand: Int = 16): DataFrame = {
-    val sigCols = hyperplaneSigCols(col("v"), bands, bitsPerBand)
-    val sig = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .select(col("id") +: col("v") +: sigCols: _*)
-    val bandCols = hyperplaneBandCols(bands, bitsPerBand)
-    // id-only candidate pairs through the banded shuffle; vectors re-join
-    // by id for the exact-cosine verify (same discipline as MinHash-LSH)
-    val banded = sig.select(col("id"),
-      posexplode(array(bandCols: _*)).as(Seq("band", "bucket")))
-    val vecs = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-    banded.select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(banded.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-      .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
-      .withColumn("cos", Vectors.cosine(col("v_a"), col("v_b")))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
+    val kind = Lsh.Hyperplane(bands, bitsPerBand)
+    Lsh.selfPairs(kind, kind.signatures(emb, idCol, col(vecCol)), threshold)
+      .select(col("id_a"), col("id_b"), round(col("score"), 4).as("cos"))
   }
 
   /** Dense-vector eval-set DECONTAMINATION — the embedding counterpart
@@ -1482,12 +1364,8 @@ object Dedup {
   def embeddingDecontaminate(corpus: DataFrame, evalSet: DataFrame,
                              idCol: String, vecCol: String, threshold: Double,
                              bands: Int = 64, bitsPerBand: Int = 16): DataFrame = {
-    val sigCols = hyperplaneSigCols(col("v"), bands, bitsPerBand)
-    val bandCols = hyperplaneBandCols(bands, bitsPerBand)
-    def banded(df: DataFrame) = df
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .select(col("id") +: col("v") +: sigCols: _*)
-      .select(col("id"), posexplode(array(bandCols: _*)).as(Seq("band", "bucket")))
+    val kind = Lsh.Hyperplane(bands, bitsPerBand)
+    def banded(df: DataFrame) = Lsh.bands(kind, kind.signatures(df, idCol, col(vecCol)))
     val cand = banded(corpus)
       .join(broadcast(banded(evalSet)
         .select(col("band"), col("bucket"), col("id").as("eval_id"))),

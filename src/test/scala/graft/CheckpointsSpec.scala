@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Checkpoints, Corpus, Dedup, Graph, Incremental, Quality,
+import graft.operators.{Checkpoints, Corpus, Dedup, Graph, Incremental, Lsh, Quality,
   Selection, Tokenizer}
 import graft.sources.{JsonlSource, Tables}
 
@@ -102,15 +102,17 @@ class CheckpointsSpec extends AnyFunSuite {
     "Dedup.softDedupWeights" -> (() => {
       materializeAndRelease(Dedup.softDedupWeights(docs, "doc_id", "text"))
     }),
-    "Incremental.dedupHashesAgainst" -> (() => {
+    "Incremental.dedupAgainst(Pigeonhole)" -> (() => {
       import spark.implicits._
       val table = "ckpt_leak_hash_store"
+      val kind = Lsh.Pigeonhole()
       try {
-        Incremental.writeHashStore(Seq(1L -> 0L).toDF("id", "h"), "id",
+        Incremental.writeStore(kind, Seq(1L -> 0L).toDF("id", "h"), "id",
           col("h"), table, numBuckets = 4)
-        materializeAndRelease(Incremental.dedupHashesAgainst(
+        materializeAndRelease(Incremental.dedupAgainst(kind,
           Seq(10L -> 1L, 11L -> -1L).toDF("id", "h"), spark.table(table),
-          "id", col("h"), storeBands = Some(spark.table(s"${table}_bands"))))
+          "id", col("h"), threshold = 0.0,
+          storeBands = Some(spark.table(s"${table}_bands"))))
       } finally
         for (t <- Seq(table, s"${table}_bands")) spark.sql(s"DROP TABLE IF EXISTS $t")
     }),

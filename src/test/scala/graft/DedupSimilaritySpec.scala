@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.CacheProbe
-import graft.operators.{Checkpoints, Dedup, Incremental, Similarity}
+import graft.operators.{Checkpoints, Dedup, Incremental, Lsh, Similarity}
 import graft.sources.Tables
 
 class DedupSimilaritySpec extends AnyFunSuite {
@@ -372,10 +372,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("incremental edges: empty batch and empty store") {
     val docs = Tables(spark, TestSpark.sf0001, "documents")
     val none = docs.filter($"doc_id" < 0)
-    val store = Incremental.signatures(docs, "doc_id", "text")
+    val kind = Lsh.MinHash()
+    val store = kind.signatures(docs, "doc_id", $"text")
     // first-ever batch (empty store): survivors = within-batch dedup only
-    val emptyStore = Incremental.signatures(none, "doc_id", "text")
-    val selfOnly = Incremental.dedupAgainst(docs, emptyStore, "doc_id", "text", 0.6)
+    val emptyStore = kind.signatures(none, "doc_id", $"text")
+    val selfOnly = Incremental.dedupAgainst(kind, docs, emptyStore, "doc_id", $"text", 0.6)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val exactKeep = docs.groupBy(md5($"text")).agg(min($"doc_id").as("doc_id"))
       .select("doc_id")
@@ -386,7 +387,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(selfOnly == ref)
     // empty batch: no rows, no crash
-    assert(Incremental.dedupAgainst(none, store, "doc_id", "text", 0.6).isEmpty)
+    assert(Incremental.dedupAgainst(kind, none, store, "doc_id", $"text", 0.6).isEmpty)
   }
 
   test("incremental multi-batch loop with appendToStore == one full recompute") {
@@ -406,14 +407,15 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .filter($"doc_id" >= s1)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     // production loop: seed store with b1, process b2, append b2, process b3
-    Incremental.writeStore(b1, "doc_id", "text", "loop_store", 8)
+    val kind = Lsh.MinHash()
+    Incremental.writeStore(kind, b1, "doc_id", $"text", "loop_store", 8)
     try {
       def run(b: org.apache.spark.sql.DataFrame) =
-        Incremental.dedupAgainst(b, spark.table("loop_store"), "doc_id", "text",
-            0.6, storeBands = Some(spark.table("loop_store_bands")))
+        Incremental.dedupAgainst(kind, b, spark.table("loop_store"), "doc_id",
+            $"text", 0.6, storeBands = Some(spark.table("loop_store_bands")))
           .select("doc_id").collect().map(_.getLong(0)).toSet
       val r2 = run(b2)
-      Incremental.appendToStore(b2, "doc_id", "text", "loop_store", 8)
+      Incremental.appendToStore(kind, b2, "doc_id", $"text", "loop_store", 8)
       val r3 = run(b3)
       assert((r2 ++ r3) == full,
         s"loop-only=${(r2 ++ r3) -- full} full-only=${full -- (r2 ++ r3)}")
@@ -423,7 +425,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("embeddingDupClusters: transitive closure where greedy pairs diverge") {
+  test("embedding dup clusters: transitive closure where greedy pairs diverge") {
     // a~c and b~c at cosine ≥ 0.95, but a!~b (cos 36° ≈ 0.81): greedy
     // per-pair dedup keeps {a, b}; the cluster rule keeps exactly one
     // survivor of {a, b, c}. 18°-rotations of e1 in the (e1, e2) plane,
@@ -433,7 +435,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
       Array(math.cos(angle).toFloat, math.sin(angle).toFloat) ++ Array.fill(6)(0.0f)
     val emb = Seq(
       (1L, vec(th)), (2L, vec(-th)), (3L, vec(0.0))).toDF("vec_id", "embedding")
-    val labels = Dedup.embeddingDupClusters(emb, "vec_id", "embedding", 0.95)
+    val labels = Dedup.connectedComponents(
+      Dedup.embeddingDupPairs(emb, "vec_id", "embedding", 0.95))
     val m = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     labels.unpersist()
     assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 1L), m.toString)
@@ -456,8 +459,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val full = exact.join(dropped, Seq("doc_id"), "left_anti")
       .filter($"doc_id" >= split)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val inc = Incremental.dedupAgainst(batch,
-        Incremental.signatures(store, "doc_id", "text"), "doc_id", "text", 0.6)
+    val kind = Lsh.MinHash()
+    val inc = Incremental.dedupAgainst(kind, batch,
+        kind.signatures(store, "doc_id", $"text"), "doc_id", $"text", 0.6)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(inc == full, s"inc-only=${inc -- full} full-only=${full -- inc}")
     // same result through a materialized bucketed store, and the exact
@@ -465,13 +469,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // is disabled for this part: at test scale AQE broadcasts the tiny
     // store (bucketing is then moot); at corpus scale the store is the
     // BIG side and the shuffled join is what the bucket layout serves.
-    Incremental.writeStore(store, "doc_id", "text", "sig_store", 8)
+    Incremental.writeStore(kind, store, "doc_id", $"text", "sig_store", 8)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
-      val viaTable = Incremental.dedupAgainst(batch, spark.table("sig_store"),
-          "doc_id", "text", 0.6,
+      val viaTable = Incremental.dedupAgainst(kind, batch, spark.table("sig_store"),
+          "doc_id", $"text", 0.6,
           storeBands = Some(spark.table("sig_store_bands")))
         .select("doc_id")
       assert(viaTable.collect().map(_.getLong(0)).toSet == full)
@@ -485,7 +489,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       // the exact-stage anti-join itself runs inside dedupAgainst's eager
       // checkpoint, so assert bucketing on that join shape directly: the
       // store side must read its bucket layout (no store-side exchange)
-      val anti = Incremental.signatures(batch, "doc_id", "text")
+      val anti = kind.signatures(batch, "doc_id", $"text")
         .join(spark.table("sig_store").select("content_hash"),
           Seq("content_hash"), "left_anti")
       anti.collect()
@@ -520,9 +524,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val full = all.join(dropped, Seq("vec_id"), "left_anti")
       .join(batch.select("vec_id"), Seq("vec_id"), "left_semi")
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val inc = Incremental.dedupEmbeddingsAgainst(batch,
-        Incremental.embeddingSignatures(store, "vec_id", "embedding"),
-        "vec_id", "embedding", 0.95)
+    val kind = Lsh.Hyperplane()
+    val inc = Incremental.dedupAgainst(kind, batch,
+        kind.signatures(store, "vec_id", $"embedding"),
+        "vec_id", $"embedding", 0.95)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(inc == full, s"inc-only=${inc -- full} full-only=${full -- inc}")
     assert((full -- inc).isEmpty && full.nonEmpty)
@@ -532,13 +537,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // candidate join must read the pre-banded table through its
     // (band, bucket) bucket layout (broadcast disabled — at corpus scale
     // the store is the BIG side, same rationale as the minhash spec)
-    Incremental.writeEmbeddingStore(store, "vec_id", "embedding", "emb_store", 8)
+    Incremental.writeStore(kind, store, "vec_id", $"embedding", "emb_store", 8)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
-      val viaTable = Incremental.dedupEmbeddingsAgainst(batch,
-        spark.table("emb_store"), "vec_id", "embedding", 0.95,
+      val viaTable = Incremental.dedupAgainst(kind, batch,
+        spark.table("emb_store"), "vec_id", $"embedding", 0.95,
         storeBands = Some(spark.table("emb_store_bands")))
       assert(viaTable.select("vec_id").collect().map(_.getLong(0)).toSet == full)
       val plan = viaTable.queryExecution.explainString(

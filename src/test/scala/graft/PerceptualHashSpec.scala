@@ -173,7 +173,7 @@ class PerceptualHashSpec extends AnyFunSuite {
        "in-batch); bucketed store keeps the candidate join " +
        "exchange-free on the store side") {
     import spark.implicits._
-    import graft.operators.Incremental
+    import graft.operators.{Incremental, Lsh}
     val table = "phash_store_spec"
     for (t <- Seq(table, s"${table}_bands")) spark.sql(s"DROP TABLE IF EXISTS $t")
     // synthetic signatures: base patterns + planted near/far variants
@@ -204,15 +204,16 @@ class PerceptualHashSpec extends AnyFunSuite {
       }
     }
     try {
-      Incremental.writeHashStore(store0.toSeq.toDF("id", "h"), "id",
-        col("h"), table, numBuckets = 4, maxHamming = 3)
+      val kind = Lsh.Pigeonhole(maxHamming = 3)
+      Incremental.writeStore(kind, store0.toSeq.toDF("id", "h"), "id",
+        col("h"), table, numBuckets = 4)
       val expected = ref()
       val got = Seq(batch1, batch2).map { b =>
-        val surv = Incremental.dedupHashesAgainst(b.toSeq.toDF("id", "h"),
-            spark.table(table), "id", col("h"), maxHamming = 3,
+        val surv = Incremental.dedupAgainst(kind, b.toSeq.toDF("id", "h"),
+            spark.table(table), "id", col("h"), threshold = 0.0,
             storeBands = Some(spark.table(s"${table}_bands")))
           .localCheckpoint(true)
-        Incremental.appendToHashStore(surv, "id", col("h"), table, 4, 3)
+        Incremental.appendToStore(kind, surv, "id", col("h"), table, 4)
         surv.select("id").as[Long].collect().toSet
       }
       assert(got == expected, s"got $got want $expected")
@@ -220,13 +221,13 @@ class PerceptualHashSpec extends AnyFunSuite {
       // (the ParquetSink.bucketed exchange-free contract, plan-proven
       // for this store family in the q62/q91 incremental specs; at
       // spec scale AQE broadcasts either side, so the durable claim
-      // is the LAYOUT): signatures on id, bands on (band, bval) —
+      // is the LAYOUT): signatures on id, bands on (band, bucket) —
       // appends preserved both (Spark rejects mixed bucket specs)
       def bucketSpec(t: String) = spark.sql(s"DESCRIBE EXTENDED $t")
         .filter($"col_name".isin("Num Buckets", "Bucket Columns"))
         .select("data_type").as[String].collect().toSeq
       assert(bucketSpec(table) == Seq("4", "[`id`]"))
-      assert(bucketSpec(s"${table}_bands") == Seq("4", "[`band`, `bval`]"))
+      assert(bucketSpec(s"${table}_bands") == Seq("4", "[`band`, `bucket`]"))
     } finally
       for (t <- Seq(table, s"${table}_bands"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -236,20 +237,21 @@ class PerceptualHashSpec extends AnyFunSuite {
        "internal checkpoint — a caller-owned checkpointed batch " +
        "survives and stays usable") {
     import spark.implicits._
-    import graft.operators.Incremental
+    import graft.operators.{Incremental, Lsh}
     val table = "phash_release_spec"
     for (t <- Seq(table, s"${table}_bands")) spark.sql(s"DROP TABLE IF EXISTS $t")
     try {
-      Incremental.writeHashStore(Seq(1L -> 0L).toDF("id", "h"), "id",
-        col("h"), table, numBuckets = 4, maxHamming = 3)
+      val kind = Lsh.Pigeonhole(maxHamming = 3)
+      Incremental.writeStore(kind, Seq(1L -> 0L).toDF("id", "h"), "id",
+        col("h"), table, numBuckets = 4)
       // the caller's OWN local checkpoint — the blanket-release hazard:
       // releasing the returned plan wholesale would free these blocks
       // too, and a truncated lineage cannot recompute
       val callerBatch = Seq(10L -> 1L, 11L -> -1L).toDF("id", "h")
         .localCheckpoint(true)
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val survivors = Incremental.dedupHashesAgainst(callerBatch,
-        spark.table(table), "id", col("h"), maxHamming = 3,
+      val survivors = Incremental.dedupAgainst(kind, callerBatch,
+        spark.table(table), "id", col("h"), threshold = 0.0,
         storeBands = Some(spark.table(s"${table}_bands")))
       val surv = survivors.select("id").as[Long].collect().toSet
       assert(surv == Set(11L), s"got $surv") // 10 is ham-1 vs the store
@@ -268,7 +270,7 @@ class PerceptualHashSpec extends AnyFunSuite {
        "stores stay valid, and the hash-store decision flips — a " +
        "re-ingested forgotten signature is admitted") {
     import spark.implicits._
-    import graft.operators.Incremental
+    import graft.operators.{Incremental, Lsh}
     val tables = Seq("fgt_text", "fgt_emb", "fgt_hash")
     for (t <- tables; v <- Seq(t, s"${t}_bands"))
       spark.sql(s"DROP TABLE IF EXISTS $v")
@@ -278,23 +280,25 @@ class PerceptualHashSpec extends AnyFunSuite {
       val emb = Tables(spark, TestSpark.sf0001, "embeddings")
         .filter($"vec_id" < 60)
       // text store
-      Incremental.writeStore(docs, "doc_id", "text", "fgt_text", 4)
-      Incremental.forgetFromStore(spark,
+      val text = Lsh.MinHash()
+      Incremental.writeStore(text, docs, "doc_id", $"text", "fgt_text", 4)
+      Incremental.forgetFromStore(text, spark,
         docs.filter($"doc_id" % 7 === 0).select($"doc_id".as("id")),
         "fgt_text", 4)
-      assert(Incremental.validateStore(spark, "fgt_text"))
+      assert(Incremental.validateStore(text, spark, "fgt_text"))
       // embedding store
-      Incremental.writeEmbeddingStore(emb, "vec_id", "embedding",
-        "fgt_emb", 4)
-      Incremental.forgetFromEmbeddingStore(spark,
+      val vec = Lsh.Hyperplane()
+      Incremental.writeStore(vec, emb, "vec_id", $"embedding", "fgt_emb", 4)
+      Incremental.forgetFromStore(vec, spark,
         emb.filter($"vec_id" % 7 === 0).select($"vec_id".as("id")),
         "fgt_emb", 4)
-      assert(Incremental.validateStore(spark, "fgt_emb", bands = 64))
+      assert(Incremental.validateStore(vec, spark, "fgt_emb"))
       // hash store
+      val hash = Lsh.Pigeonhole(3)
       val hs = Seq(1L -> 100L, 2L -> 200L, 3L -> 300L).toDF("id", "h")
-      Incremental.writeHashStore(hs, "id", col("h"), "fgt_hash", 4, 3)
-      Incremental.forgetFromHashStore(spark, Seq(2L).toDF("id"),
-        "fgt_hash", 4, 3)
+      Incremental.writeStore(hash, hs, "id", col("h"), "fgt_hash", 4)
+      Incremental.forgetFromStore(hash, spark, Seq(2L).toDF("id"),
+        "fgt_hash", 4)
       for (t <- tables; v <- Seq(t, s"${t}_bands")) {
         val gone = spark.table(v)
           .filter(if (t == "fgt_hash") $"id" === 2L else $"id" % 7 === 0)
@@ -303,8 +307,8 @@ class PerceptualHashSpec extends AnyFunSuite {
       // decision flip: a copy of the FORGOTTEN signature (id 2, h=200)
       // is re-admitted; a copy of a REMEMBERED one (h=300) still drops
       val batch = Seq(10L -> 200L, 11L -> 300L).toDF("id", "h")
-      val surv = Incremental.dedupHashesAgainst(batch,
-          spark.table("fgt_hash"), "id", col("h"), 3,
+      val surv = Incremental.dedupAgainst(hash, batch,
+          spark.table("fgt_hash"), "id", col("h"), 0.0,
           Some(spark.table("fgt_hash_bands")))
         .select("id").as[Long].collect().toSet
       assert(surv == Set(10L), s"got $surv")

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only plan/timing probe for the optimization rounds.
   *
@@ -18,15 +17,8 @@ import org.apache.spark.sql.SparkSession
 object PlanDumpMain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.sources.Tables.nanosConf._1, graft.sources.Tables.nanosConf._2)
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
 

@@ -1,17 +1,10 @@
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object ProfMain {
   def main(a: Array[String]): Unit = {
     // same env conventions as Bench/Verify so the tool runs anywhere
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false")
-      .config(graft.sources.Tables.nanosConf._1, graft.sources.Tables.nanosConf._2)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.sources.Tables(spark, sfDir, "documents")
     def t(name: String)(f: => Long): Unit = {

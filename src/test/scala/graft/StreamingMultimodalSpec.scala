@@ -87,17 +87,17 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   test("streaming ingest dedup: micro-batches dedup against a growing store") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.operators.Incremental
+    import graft.operators.{Incremental, Lsh}
     // seed store: doc 1 ("alpha beta gamma")
     val seed = Seq((1L, "alpha beta gamma")).toDF("doc_id", "text")
-    Incremental.writeStore(seed, "doc_id", "text", "stream_store", 4)
+    Incremental.writeStore(Lsh.MinHash(), seed, "doc_id", col("text"), "stream_store", 4)
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     try {
       val input = MemoryStream[(Long, String)]
       val q = input.toDF().toDF("doc_id", "text")
         .writeStream
-        .foreachBatch(Incremental.dedupSink("doc_id", "text", "stream_store", 4,
-          threshold = 0.9,
+        .foreachBatch(Incremental.dedupSink(Lsh.MinHash(), "doc_id", col("text"),
+          "stream_store", 4, threshold = 0.9,
           emit = (df, _) => got.synchronized {
             got ++= df.select("doc_id").collect().map(_.getLong(0))
           }))
@@ -123,15 +123,16 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("dedupSink replay is retry-safe; duplicate store rows are decision-neutral") {
     import spark.implicits._
-    import graft.operators.Incremental
+    import graft.operators.{Incremental, Lsh}
     val emitted = scala.collection.mutable.Map.empty[Long, Seq[Long]]
-    val sink = Incremental.dedupSink("doc_id", "text", "retry_store", 4,
+    val kind = Lsh.MinHash()
+    val sink = Incremental.dedupSink(kind, "doc_id", col("text"), "retry_store", 4,
       threshold = 0.9,
       emit = (df, bid) => emitted.synchronized {
         emitted(bid) = df.select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
       })
-    Incremental.writeStore(Seq((1L, "alpha beta gamma")).toDF("doc_id", "text"),
-      "doc_id", "text", "retry_store", 4)
+    Incremental.writeStore(kind, Seq((1L, "alpha beta gamma")).toDF("doc_id", "text"),
+      "doc_id", col("text"), "retry_store", 4)
     try {
       val b1 = Seq((10L, "alpha beta gamma"), (11L, "delta epsilon zeta"))
         .toDF("doc_id", "text")
@@ -150,26 +151,26 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       sink(b2, 1L)
       assert(emitted(1L) == Seq(21L), emitted.toString)
       // compaction rewrites one row per id and changes no decision
-      Incremental.compactStore(spark, "retry_store", 4)
+      Incremental.compactStore(kind, spark, "retry_store", 4)
       assert(spark.table("retry_store").count() == 5) // 1, 10, 11, 20, 21
-      assert(Incremental.validateStore(spark, "retry_store"))
-      val again = Incremental.dedupAgainst(
+      assert(Incremental.validateStore(kind, spark, "retry_store"))
+      val again = Incremental.dedupAgainst(kind,
           Seq((30L, "delta epsilon zeta"), (31L, "pi rho sigma"))
             .toDF("doc_id", "text"),
-          spark.table("retry_store"), "doc_id", "text", 0.9,
+          spark.table("retry_store"), "doc_id", col("text"), 0.9,
           storeBands = Some(spark.table("retry_store_bands")))
         .select("doc_id").collect().map(_.getLong(0)).toSeq
       assert(again == Seq(31L), again.toString)
-      // partial writeBoth failure simulated: a batch lands in the store
-      // but not in _bands → validateStore flags it, rebuildBands recovers
+      // partial append simulated: a batch lands in the store but not in
+      // _bands → validateStore flags it, rebuildBands recovers
       graft.sources.ParquetSink.bucketed(
-        Incremental.signatures(Seq((40L, "tau upsilon phi")).toDF("doc_id", "text"),
-          "doc_id", "text"),
+        kind.signatures(Seq((40L, "tau upsilon phi")).toDF("doc_id", "text"),
+          "doc_id", col("text")),
         "retry_store", Seq("content_hash"), 4,
         mode = org.apache.spark.sql.SaveMode.Append)
-      assert(!Incremental.validateStore(spark, "retry_store"))
-      Incremental.rebuildBands(spark, "retry_store", 4)
-      assert(Incremental.validateStore(spark, "retry_store"))
+      assert(!Incremental.validateStore(kind, spark, "retry_store"))
+      Incremental.rebuildBands(kind, spark, "retry_store", 4)
+      assert(Incremental.validateStore(kind, spark, "retry_store"))
     } finally {
       spark.sql("DROP TABLE retry_store")
       spark.sql("DROP TABLE retry_store_bands")
@@ -178,17 +179,18 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("embeddingDedupSink replay is retry-safe; compaction and band rebuild recover") {
     import spark.implicits._
-    import graft.operators.Incremental
+    import graft.operators.{Incremental, Lsh}
     def v(x: Float, y: Float): Array[Float] = Array(x, y) ++ Array.fill(6)(0.0f)
     val emitted = scala.collection.mutable.Map.empty[Long, Seq[Long]]
-    val sink = Incremental.embeddingDedupSink("vec_id", "embedding",
+    val kind = Lsh.Hyperplane()
+    val sink = Incremental.dedupSink(kind, "vec_id", col("embedding"),
       "eretry_store", 4, threshold = 0.95,
       emit = (df, bid) => emitted.synchronized {
         emitted(bid) = df.select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
       })
-    Incremental.writeEmbeddingStore(
+    Incremental.writeStore(kind,
       Seq((1L, v(1.0f, 0.0f))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", "eretry_store", 4)
+      "vec_id", col("embedding"), "eretry_store", 4)
     try {
       // 10 is a scaled copy of the seed (cosine 1.0, dropped); 11 is new
       val b1 = Seq((10L, v(2.0f, 0.0f)), (11L, v(0.0f, 1.0f)))
@@ -207,28 +209,28 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       sink(b2, 1L)
       assert(emitted(1L) == Seq(21L), emitted.toString)
       // compaction rewrites one row per id and changes no decision
-      Incremental.compactEmbeddingStore(spark, "eretry_store", 4)
+      Incremental.compactStore(kind, spark, "eretry_store", 4)
       assert(spark.table("eretry_store").count() == 5) // 1, 10, 11, 20, 21
-      assert(Incremental.validateStore(spark, "eretry_store", bands = 64))
-      val again = Incremental.dedupEmbeddingsAgainst(
+      assert(Incremental.validateStore(kind, spark, "eretry_store"))
+      val again = Incremental.dedupAgainst(kind,
           Seq((30L, v(0.0f, 7.0f)), (31L, v(1.0f, -1.0f)))
             .toDF("vec_id", "embedding"),
-          spark.table("eretry_store"), "vec_id", "embedding", 0.95,
+          spark.table("eretry_store"), "vec_id", col("embedding"), 0.95,
           storeBands = Some(spark.table("eretry_store_bands")))
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       assert(again == Seq(31L), again.toString)
-      // partial writeEmbeddingBoth failure: a batch lands in the store
-      // but not in _bands → validateStore flags it, the EMBEDDING
-      // rebuild (hyperplane band derivation) recovers
+      // partial append: a batch lands in the store but not in _bands →
+      // validateStore flags it, the rebuild (hyperplane band
+      // derivation) recovers
       graft.sources.ParquetSink.bucketed(
-        Incremental.embeddingSignatures(
+        kind.signatures(
           Seq((40L, v(3.0f, 3.0f))).toDF("vec_id", "embedding"),
-          "vec_id", "embedding"),
+          "vec_id", col("embedding")),
         "eretry_store", Seq("id"), 4,
         mode = org.apache.spark.sql.SaveMode.Append)
-      assert(!Incremental.validateStore(spark, "eretry_store", bands = 64))
-      Incremental.rebuildEmbeddingBands(spark, "eretry_store", 4)
-      assert(Incremental.validateStore(spark, "eretry_store", bands = 64))
+      assert(!Incremental.validateStore(kind, spark, "eretry_store"))
+      Incremental.rebuildBands(kind, spark, "eretry_store", 4)
+      assert(Incremental.validateStore(kind, spark, "eretry_store"))
     } finally {
       spark.sql("DROP TABLE eretry_store")
       spark.sql("DROP TABLE eretry_store_bands")
@@ -238,19 +240,19 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   test("streaming embedding dedup: micro-batches dedup vectors against a growing store") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.operators.Incremental
+    import graft.operators.{Incremental, Lsh}
     def v(x: Float, y: Float): Array[Float] = Array(x, y) ++ Array.fill(6)(0.0f)
     // seed store: one unit vector along e1
-    Incremental.writeEmbeddingStore(
+    Incremental.writeStore(Lsh.Hyperplane(),
       Seq((1L, v(1.0f, 0.0f))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", "estream_store", 4)
+      "vec_id", col("embedding"), "estream_store", 4)
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     try {
       val input = MemoryStream[(Long, Array[Float])]
       val q = input.toDF().toDF("vec_id", "embedding")
         .writeStream
-        .foreachBatch(Incremental.embeddingDedupSink("vec_id", "embedding",
-          "estream_store", 4, threshold = 0.95,
+        .foreachBatch(Incremental.dedupSink(Lsh.Hyperplane(), "vec_id",
+          col("embedding"), "estream_store", 4, threshold = 0.95,
           emit = (df, _) => got.synchronized {
             got ++= df.select("vec_id").collect().map(_.getLong(0))
           }))

@@ -5,17 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.sources.Tables.nanosConf._1, graft.sources.Tables.nanosConf._2)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
