@@ -1527,12 +1527,12 @@ object Queries {
         // oracle recomputes the greedy semantics exactly (LSH verify
         // makes the output exact-Jaccard w.h.p., the q24 argument).
         val docs = tbl("documents")
-        val kind = operators.Lsh.MinHash()
-        val store = kind.signatures(
+        val kind = operators.Lsh.MinHash(threshold = 0.6)
+        val store = kind.encode(
           docs.filter(col("doc_id") % 3 =!= 0), "doc_id", col("text"))
         operators.Incremental.dedupAgainst(kind,
             docs.filter(col("doc_id") % 3 === 0), store,
-            "doc_id", col("text"), threshold = 0.6)
+            "doc_id", col("text"))
           .select(col("doc_id"))
       },
       Some(s"""WITH t AS (SELECT doc_id, md5(text) AS h, $ShinglesSql AS sh
@@ -1740,7 +1740,7 @@ object Queries {
         // in-memory catalog doesn't know about — saveAsTable then fails
         // with LOCATION_ALREADY_EXISTS, so clear both name and location
         dropTables(s, table, s"${table}_bands")
-        val kind = operators.Lsh.MinHash()
+        val kind = operators.Lsh.MinHash(threshold = 0.6)
         operators.Incremental.writeStore(kind,
           docs.filter(col("doc_id") % 3 =!= 0), "doc_id", col("text"), table, 8)
         val dir = tempStagingDir("graft_q68_")
@@ -1756,7 +1756,7 @@ object Queries {
           .option("maxFilesPerTrigger", 1).parquet(src.toString)
         val query = stream.writeStream
           .foreachBatch(operators.Incremental.dedupSink(kind,
-            "doc_id", col("text"), table, 8, threshold = 0.6,
+            "doc_id", col("text"), table, 8,
             emit = (surv, batchId) =>
               surv.write.mode("overwrite").parquet(s"$out/batch_$batchId")))
           .option("checkpointLocation", dir.resolve("ckpt").toString)
@@ -1851,10 +1851,10 @@ object Queries {
           .unionByName(emb.filter(col("vec_id") < 5)
             .select((col("vec_id") + 1000000).as("vec_id"),
               transform(col("embedding"), x => x * lit(2.0f)).as("embedding")))
-        val kind = operators.Lsh.Hyperplane()
+        val kind = operators.Lsh.Hyperplane(threshold = 0.95)
         operators.Incremental.dedupAgainst(kind, batch,
-            kind.signatures(store, "vec_id", col("embedding")),
-            "vec_id", col("embedding"), threshold = 0.95)
+            kind.encode(store, "vec_id", col("embedding")),
+            "vec_id", col("embedding"))
           .select(col("vec_id"))
       },
       Some("""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -2161,7 +2161,7 @@ object Queries {
         val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
         val table = "q79_emb_store"
         dropTables(s, table, s"${table}_bands")
-        val kind = operators.Lsh.Hyperplane()
+        val kind = operators.Lsh.Hyperplane(threshold = 0.95)
         operators.Incremental.writeStore(kind,
           emb.filter(col("vec_id") % 3 =!= 0), "vec_id", col("embedding"), table, 8)
         def scaled(src: org.apache.spark.sql.DataFrame, offset: Long) =
@@ -2186,7 +2186,6 @@ object Queries {
         val query = stream.writeStream
           .foreachBatch(operators.Incremental.dedupSink(
             kind, "vec_id", col("embedding"), table, 8,
-            threshold = 0.95,
             emit = (surv, batchId) =>
               surv.write.mode("overwrite").parquet(s"$out/batch_$batchId")))
           .option("checkpointLocation", dir.resolve("ckpt").toString)
@@ -2654,7 +2653,7 @@ object Queries {
         val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
         val table = "q91_emb_store"
         dropTables(s, table, s"${table}_bands")
-        val kind = operators.Lsh.Hyperplane()
+        val kind = operators.Lsh.Hyperplane(threshold = 0.95)
         operators.Incremental.writeStore(kind,
           emb.filter(col("vec_id") % 3 =!= 0), "vec_id", col("embedding"), table, 8)
         def scaled(src: org.apache.spark.sql.DataFrame, offset: Long) =
@@ -2678,7 +2677,6 @@ object Queries {
           val query = stream.writeStream
             .foreachBatch(operators.Incremental.dedupSink(
               kind, "vec_id", col("embedding"), table, 8,
-              threshold = 0.95,
               emit = (surv, batchId) =>
                 surv.write.mode("overwrite").parquet(s"$out/batch_$batchId")))
             .option("checkpointLocation", dir.resolve("ckpt").toString)
@@ -2997,7 +2995,7 @@ object Queries {
         val docs = tbl("documents").select(col("doc_id"), col("text"))
         val table = "q98_sig_store"
         dropTables(s, table, s"${table}_bands")
-        val kind = operators.Lsh.MinHash()
+        val kind = operators.Lsh.MinHash(threshold = 0.6)
         operators.Incremental.writeStore(kind,
           docs.filter(col("doc_id") % 3 =!= 0), "doc_id", col("text"), table, 8)
         val dir = tempStagingDir("graft_q98_")
@@ -3011,7 +3009,6 @@ object Queries {
           val query = stream.writeStream
             .foreachBatch(operators.Incremental.dedupSink(
               kind, "doc_id", col("text"), table, 8,
-              threshold = 0.6,
               emit = (surv, batchId) =>
                 surv.write.mode("overwrite").parquet(s"$out/batch_$batchId")))
             .option("checkpointLocation", dir.resolve("ckpt").toString)
@@ -4529,8 +4526,8 @@ object Queries {
 
     Q("q130_ann_store_ingest",
       (s, d) => { val ctx = new Ctx(s, d); import ctx._
-        // INCREMENTAL ANN INGESTION — the IVF-PQ index under the
-        // bucketed-store discipline (q68/q91's production loop applied
+        // INCREMENTAL ANN INGESTION — the IVF-PQ index as a store kind
+        // on the shared store verbs (q68/q91's production loop applied
         // to the ANN index): centroids + codebooks trained once on the
         // initial corpus and FROZEN; the initial corpus is written as a
         // cell_id-bucketed store; two later batches (the held-out third
@@ -4555,23 +4552,24 @@ object Queries {
           dim = 64, m = 8, ksub = 16, iters = 2)
         val cents = Similarity.trainCentroidsKMeans(initial, "vec_id",
           "embedding", dim = 64, cells = 8, iters = 2)
-        val cs = Similarity.collectCentroids(cents)
-        operators.Incremental.writeAnnStore(initial, "vec_id", "embedding",
-          cs, model, table, numBuckets = 8)
+        val kind = operators.Incremental.IvfPq(
+          Similarity.collectCentroids(cents), model)
+        operators.Incremental.writeStore(kind, initial, "vec_id",
+          col("embedding"), table, numBuckets = 8)
         val twins = emb.filter(col("vec_id") % 101 === 0)
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
         val batch1 = emb.filter(col("vec_id") % 3 === 0 &&
           expr("(vec_id div 3) % 2 = 0"))
         val batch2 = emb.filter(col("vec_id") % 3 === 0 &&
           expr("(vec_id div 3) % 2 = 1")).unionByName(twins)
-        operators.Incremental.appendToAnnStore(batch1, "vec_id", "embedding",
-          cs, model, table, numBuckets = 8)
-        operators.Incremental.appendToAnnStore(batch2, "vec_id", "embedding",
-          cs, model, table, numBuckets = 8)
+        operators.Incremental.appendToStore(kind, batch1, "vec_id",
+          col("embedding"), table, numBuckets = 8)
+        operators.Incremental.appendToStore(kind, batch2, "vec_id",
+          col("embedding"), table, numBuckets = 8)
         val union = emb.unionByName(twins)
         // (a) store probes == monolithic IVF-PQ over the ingested union
-        val fromStore = operators.Incremental.annStoreTopK(s, table, twins,
-          "vec_id", "embedding", cs, model, k = 5, nProbe = 8)
+        val fromStore = operators.Incremental.annStoreTopK(kind, s, table,
+          twins, "vec_id", col("embedding"), k = 5, nProbe = 8)
         val mono = Similarity.ivfPqTopK(union, twins, cents, "vec_id",
           "embedding", model, k = 5, nProbe = 8)
         val eqStats = fromStore.withColumnRenamed("neighbor_id", "n_st")
@@ -4583,8 +4581,8 @@ object Queries {
               col("adc_st") === col("adc_mo"), lit(0L)).otherwise(lit(1L)))
               .as("n_diff"))
         // (b) batch-2 twin recall at nProbe = 1 against the store
-        val p1 = operators.Incremental.annStoreTopK(s, table, twins,
-          "vec_id", "embedding", cs, model, k = 1, nProbe = 1)
+        val p1 = operators.Incremental.annStoreTopK(kind, s, table, twins,
+          "vec_id", col("embedding"), k = 1, nProbe = 1)
         val selfErr = Similarity.pqEncode(twins, "embedding", model)
           .select(col("vec_id").as("query_id"),
             graft.plans.exprs.pqAdc(col("codes"),
@@ -6307,77 +6305,69 @@ object Queries {
     Q("q162_ann_store_maintenance",
       (s, d) => Checkpoints.scoped { ck => val ctx = new Ctx(s, d); import ctx._
         // ANN STORE MAINTENANCE — the q91/q98 lifecycle applied to the
-        // IVF-PQ index (closing q130's ingest-only gap): tombstone
-        // deletes (merge-on-read, O(delete batch), store untouched), a
-        // REPLAYED append (the halt-retry event that leaves duplicate
-        // rows), compaction (dedup by id + fold tombstones + clear),
-        // then a copy-on-write upsert with genuinely CHANGED vectors.
-        // Contracts in-plan (frozen models aren't SQL-replayable — the
-        // q130 pattern):
-        //  (a) decision-invisibility: probes with tombstones PENDING
+        // IVF-PQ index on the shared store verbs (closing q130's
+        // ingest-only gap): a copy-on-write forget, a REPLAYED append
+        // (the halt-retry event that leaves duplicate rows), compaction
+        // (dedup by id), then a copy-on-write upsert with genuinely
+        // CHANGED vectors. Contracts in-plan (frozen models aren't
+        // SQL-replayable — the q130 pattern):
+        //  (a) decision-invisibility: probes right after the forget
         //      (before the replay) equal probes after compaction
-        //      row-for-row — merge-on-read filtering, replay-dup
-        //      absorption, and tombstone folding never change an
+        //      row-for-row — replay-dup absorption never changes an
         //      answer;
         //  (b) the post-upsert store answers exactly like a monolithic
         //      IVF-PQ index over the logical live corpus (initial −
-        //      deletes + batch, upserted rows replaced);
-        //  (c) row accounting: the replay IS visible in storage
-        //      (|initial| + 2·|batch| rows before compaction) and
-        //      gone after (one row per live id, upsert count-neutral).
-        // validateAnnStore gates the compacted store in-plan; both
-        // bucket layouts (store on cell_id, tombstones on id) are
-        // preserved across every step — spec-asserted in
-        // AnnMaintenanceSpec, not here.
+        //      forgotten + batch, upserted rows replaced);
+        //  (c) row accounting: the forget removed its rows and the
+        //      replay IS visible in storage (|initial| − |forgotten| +
+        //      2·|batch| rows before compaction), and both are gone
+        //      after (one row per live id, upsert count-neutral).
+        // validateStore gates the compacted store in-plan; the cell_id
+        // bucket layout is preserved across every step — spec-asserted
+        // in AnnMaintenanceSpec, not here.
         val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
         val table = "q162_ann_store"
-        dropTables(s, table, s"${table}_deletes")
+        dropTables(s, table)
         val initial = emb.filter(col("vec_id") % 3 =!= 0)
         val (model, _) = Similarity.pqTrain(initial, "vec_id", "embedding",
           dim = 64, m = 8, ksub = 16, iters = 2)
         val cents = Similarity.trainCentroidsKMeans(initial, "vec_id",
           "embedding", dim = 64, cells = 8, iters = 2)
-        val cs = Similarity.collectCentroids(cents)
-        operators.Incremental.writeAnnStore(initial, "vec_id", "embedding",
-          cs, model, table, numBuckets = 8)
-        val batch1 = emb.filter(col("vec_id") % 3 === 0 &&
-          expr("(vec_id div 3) % 2 = 0"))
-        operators.Incremental.appendToAnnStore(batch1, "vec_id", "embedding",
-          cs, model, table, numBuckets = 8)
-        val delIds = initial.filter(col("vec_id") % 7 === 0)
-          .select(col("vec_id").as("id"))
-        operators.Incremental.deleteFromAnnStore(s, delIds, table,
-          numBuckets = 8)
+        val kind = operators.Incremental.IvfPq(
+          Similarity.collectCentroids(cents), model)
         val queries = emb.filter(col("vec_id") % 101 === 0)
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-        // probe with tombstones PENDING (merge-on-read), frozen before
-        // the store mutates further
-        val pre = ck.proxy(operators.Incremental.annStoreTopK(s, table,
-            queries,
-            "vec_id", "embedding", cs, model, k = 5, nProbe = 8,
-            honorDeletes = true))
+        def probe() = operators.Incremental.annStoreTopK(kind, s, table,
+          queries, "vec_id", col("embedding"), k = 5, nProbe = 8)
+        operators.Incremental.writeStore(kind, initial, "vec_id",
+          col("embedding"), table, numBuckets = 8)
+        val batch1 = emb.filter(col("vec_id") % 3 === 0 &&
+          expr("(vec_id div 3) % 2 = 0"))
+        operators.Incremental.appendToStore(kind, batch1, "vec_id",
+          col("embedding"), table, numBuckets = 8)
+        val delIds = initial.filter(col("vec_id") % 7 === 0)
+          .select(col("vec_id").as("id"))
+        operators.Incremental.forgetFromStore(kind, s, delIds, table,
+          numBuckets = 8)
+        // probe after the forget, frozen before the store mutates further
+        val pre = ck.proxy(probe())
         // the halt-retry: the SAME batch appends again → duplicate rows
-        operators.Incremental.appendToAnnStore(batch1, "vec_id", "embedding",
-          cs, model, table, numBuckets = 8)
+        operators.Incremental.appendToStore(kind, batch1, "vec_id",
+          col("embedding"), table, numBuckets = 8)
         val nBefore = ck.proxy(
           s.table(table).agg(count(lit(1)).as("n_before")))
-        operators.Incremental.compactAnnStore(s, table, numBuckets = 8)
-        require(operators.Incremental.validateAnnStore(s, table, m = 8),
+        operators.Incremental.compactStore(kind, s, table, numBuckets = 8)
+        require(operators.Incremental.validateStore(kind, s, table),
           "ANN store invalid after compaction")
-        val post = ck.proxy(operators.Incremental.annStoreTopK(s, table,
-            queries,
-            "vec_id", "embedding", cs, model, k = 5, nProbe = 8,
-            honorDeletes = true))
+        val post = ck.proxy(probe())
         // copy-on-write upsert: re-encode CHANGED vectors (scaled 2x)
         val ups = emb.filter(col("vec_id") % 11 === 0 &&
             col("vec_id") % 3 =!= 0 && col("vec_id") % 7 =!= 0)
           .select(col("vec_id"),
             transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
-        operators.Incremental.upsertAnnStore(s, ups, "vec_id", "embedding",
-          cs, model, table, numBuckets = 8)
-        val fin = operators.Incremental.annStoreTopK(s, table, queries,
-          "vec_id", "embedding", cs, model, k = 5, nProbe = 8,
-          honorDeletes = true)
+        operators.Incremental.upsertStore(kind, s, ups, "vec_id",
+          col("embedding"), table, numBuckets = 8)
+        val fin = probe()
         // logical live corpus the store must now answer for
         val live = initial.unionByName(batch1)
           .join(delIds.select(col("id").as("vec_id")), Seq("vec_id"),
@@ -6404,16 +6394,18 @@ object Queries {
         val nLive = live.agg(count(lit(1)).as("n_live"))
         val nInit = initial.agg(count(lit(1)).as("n_init"))
         val nB1 = batch1.agg(count(lit(1)).as("n_b1"))
+        val nDel = delIds.agg(count(lit(1)).as("n_deleted"))
         inv.crossJoin(broadcast(eqm)).crossJoin(broadcast(nStore))
           .crossJoin(broadcast(nLive)).crossJoin(broadcast(nInit))
           .crossJoin(broadcast(nB1)).crossJoin(broadcast(nBefore))
+          .crossJoin(broadcast(nDel))
           .select(
             Clean.flag(col("d_pp") === 0 && col("n_pp") > 0)
               .as("maintenance_invisible"),
             Clean.flag(col("d_fm") === 0 && col("n_fm") > 0)
               .as("store_eq_monolithic"),
-            Clean.flag(col("n_before") === col("n_init") + lit(2) * col("n_b1")
-              && col("n_store") === col("n_live"))
+            Clean.flag(col("n_before") === col("n_init") - col("n_deleted") +
+              lit(2) * col("n_b1") && col("n_store") === col("n_live"))
               .as("row_accounting_ok"))
       },
       Some("""SELECT CAST(1 AS BIGINT) AS maintenance_invisible,
@@ -6774,7 +6766,7 @@ object Queries {
             storeDocs.filter(col("doc_id") % 13 === 0), 1000000L, 16)))
         // frozen BEFORE the store grows
         val surv1 = ck.proxy(operators.Incremental.dedupAgainst(kind, b1,
-            s.table(table), "media_id", col("dhash"), threshold = 0.0,
+            s.table(table), "media_id", col("dhash"),
             storeBands = Some(s.table(s"${table}_bands"))))
         operators.Incremental.appendToStore(kind, surv1, "media_id",
           col("dhash"), table, numBuckets = 8)
@@ -6786,7 +6778,7 @@ object Queries {
               expr("(doc_id div 3) % 2 = 0") && col("doc_id") % 5 === 0),
             2000000L, 0)))
         val surv2 = operators.Incremental.dedupAgainst(kind, b2,
-          s.table(table), "media_id", col("dhash"), threshold = 0.0,
+          s.table(table), "media_id", col("dhash"),
           storeBands = Some(s.table(s"${table}_bands")))
         surv1.select(col("media_id")).withColumn("batch", lit("b1"))
           .unionByName(
@@ -6815,7 +6807,7 @@ object Queries {
         val table = "q170_text_store"
         dropTables(s, table, s"${table}_bands")
         val storeDocs = docs.filter(col("doc_id") % 3 =!= 0)
-        val kind = operators.Lsh.MinHash()
+        val kind = operators.Lsh.MinHash(threshold = 0.6)
         operators.Incremental.writeStore(kind, storeDocs, "doc_id", col("text"),
           table, numBuckets = 8)
         // modulus COPRIME to the store's 3: %21 here would make the
@@ -6834,7 +6826,7 @@ object Queries {
               expr("(doc_id div 3) % 2 = 0"))
             .select(col("doc_id"), col("text")))
         operators.Incremental.dedupAgainst(kind, batch, s.table(table),
-            "doc_id", col("text"), threshold = 0.6,
+            "doc_id", col("text"),
             storeBands = Some(s.table(s"${table}_bands")))
           .select(col("doc_id"))
       },
@@ -7217,18 +7209,15 @@ object Queries {
         //  (2) forget IDEMPOTENCY: re-forgetting the same set is a
         //      no-op (row accounting surfaced as a flag column, store
         //      layouts re-validated in-plan);
-        //  (3) fresh-store honorDeletes (the delete-before-first-write
-        //      edge): an always-honor-deletes probe policy on an ANN
-        //      store that has never seen a delete — no `_deletes`
-        //      table exists — must answer exactly like
-        //      honorDeletes=false, surfaced as a flag column (frozen
-        //      PQ models aren't SQL-replayable — the q130/q162
-        //      contract pattern).
+        //  (3) forget-of-ABSENT on the ANN kind: forgetting ids an
+        //      IVF-PQ store never held leaves its probes unchanged,
+        //      surfaced as a flag column (frozen PQ models aren't
+        //      SQL-replayable — the q130/q162 contract pattern).
         val docs = tbl("documents")
         val table = "q179_text_store"
         dropTables(s, table, s"${table}_bands")
         val storeDocs = docs.filter(col("doc_id") % 3 =!= 0)
-        val kind = operators.Lsh.MinHash()
+        val kind = operators.Lsh.MinHash(threshold = 0.6)
         operators.Incremental.writeStore(kind, storeDocs, "doc_id", col("text"),
           table, numBuckets = 8)
         val present = storeDocs.filter(col("doc_id") % 22 === 0)
@@ -7247,24 +7236,31 @@ object Queries {
           "store/bands diverged after second forget")
         val n2 = ck.proxy(s.table(table).agg(count(lit(1)).as("n2")))
         val annTable = "q179_ann_store"
-        dropTables(s, annTable, s"${annTable}_deletes")
-        val emb = tbl("embeddings").select(col("vec_id"), col("embedding"))
-          .filter(col("vec_id") % 5 === 0)
+        dropTables(s, annTable)
+        val allEmb = tbl("embeddings").select(col("vec_id"), col("embedding"))
+        val emb = allEmb.filter(col("vec_id") % 5 === 0)
         val (model, _) = Similarity.pqTrain(emb, "vec_id", "embedding",
           dim = 64, m = 4, ksub = 16, iters = 1)
         val cents = Similarity.trainCentroidsKMeans(emb, "vec_id",
           "embedding", dim = 64, cells = 4, iters = 1)
-        val cs = Similarity.collectCentroids(cents)
-        operators.Incremental.writeAnnStore(emb, "vec_id", "embedding", cs,
-          model, annTable, numBuckets = 4)
+        val annKind = operators.Incremental.IvfPq(
+          Similarity.collectCentroids(cents), model)
+        operators.Incremental.writeStore(annKind, emb, "vec_id",
+          col("embedding"), annTable, numBuckets = 4)
         val annQ = emb.filter(col("vec_id") % 50 === 0)
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-        def probe(honor: Boolean) = operators.Incremental.annStoreTopK(s,
-          annTable, annQ, "vec_id", "embedding", cs, model, k = 5,
-          nProbe = 4, honorDeletes = honor)
-        val guard = probe(true).withColumnRenamed("neighbor_id", "n_a")
+        def probe() = operators.Incremental.annStoreTopK(annKind, s,
+          annTable, annQ, "vec_id", col("embedding"), k = 5, nProbe = 4)
+        val annBefore = ck.proxy(probe())
+        // absent ids: vectors outside the store's slice, and the
+        // out-of-domain query ids
+        operators.Incremental.forgetFromStore(annKind, s,
+          allEmb.filter(col("vec_id") % 5 =!= 0).select(col("vec_id").as("id"))
+            .unionByName(annQ.select(col("vec_id").as("id"))),
+          annTable, numBuckets = 4)
+        val guard = annBefore.withColumnRenamed("neighbor_id", "n_a")
           .withColumnRenamed("adc", "adc_a")
-          .join(probe(false).withColumnRenamed("neighbor_id", "n_b")
+          .join(probe().withColumnRenamed("neighbor_id", "n_b")
             .withColumnRenamed("adc", "adc_b"), Seq("query_id", "rnk"),
             "full")
           .agg(count(lit(1)).as("n_g"),
@@ -7283,7 +7279,7 @@ object Queries {
           .unionByName(storeDocs.filter(col("doc_id") % 23 === 0)
             .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
         operators.Incremental.dedupAgainst(kind, batch, s.table(table),
-            "doc_id", col("text"), threshold = 0.6,
+            "doc_id", col("text"),
             storeBands = Some(s.table(s"${table}_bands")))
           .select(col("doc_id"))
           .crossJoin(broadcast(n1.crossJoin(n2).crossJoin(guard)

@@ -112,7 +112,7 @@ object Corpus {
         val survIdx = inv.join(d.select(col(idCol).as("id")),
           Seq("id"), "left_semi")
         Dedup.decontaminateFromIndex(d, survIdx, ev, idCol, textCol,
-          contaminationThreshold)
+          contaminationThreshold, shingleLen = 3)
     }
     cleaned
       .select(id, Text.tokenCount(text).as("n_tokens"), col("quality"),
@@ -171,7 +171,7 @@ object Corpus {
       val survIdx = inv.join(deduped.select(col(idCol).as("id")),
         Seq("id"), "left_semi")
       Dedup.contaminationPairsFromIndex(survIdx, ev, idCol, textCol,
-          contaminationThreshold)
+          contaminationThreshold, shingleLen = 3)
         .select(col("train_id").as(idCol)).distinct()
     }
     def flag(ids: DataFrame, name: String) =

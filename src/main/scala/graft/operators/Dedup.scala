@@ -501,8 +501,8 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       threshold: Double, shingleLen: Int = 1,
                       bands: Int = 32, rowsPerBand: Int = 2): DataFrame = {
-    val kind = Lsh.MinHash(shingleLen, bands, rowsPerBand)
-    Lsh.selfPairs(kind, kind.signatures(docs, idCol, col(textCol)), threshold)
+    val kind = Lsh.MinHash(threshold, shingleLen, bands, rowsPerBand)
+    Lsh.selfPairs(kind, kind.encode(docs, idCol, col(textCol)))
       .select(col("id_a"), col("id_b"), round(col("score"), 6).as("jaccard"))
   }
 
@@ -556,11 +556,13 @@ object Dedup {
     * the tokenize+shingle+explode pass over the training corpus runs
     * once and feeds both stages (§2.4). The index construction is
     * [[shingleIndex]]'s own, so counts are identical to the
-    * from-documents path. */
+    * from-documents path. `trainInv` must be a [[shingleIndex]] built
+    * with the same `shingleLen`: `shingleLen` shapes only the eval side,
+    * and mismatched n-gram spaces would share almost no tokens. */
   def contaminationPairsFromIndex(trainInv: DataFrame, evalDocs: DataFrame,
                                   idCol: String, textCol: String,
                                   threshold: Double,
-                                  shingleLen: Int = 3): DataFrame = {
+                                  shingleLen: Int): DataFrame = {
     val ti = trainInv.select(col("id").as("train_id"), col("tok"))
     val ei = evalDocs.select(col(idCol).as("eval_id"),
         graft.functions.Text.shingles(lower(col(textCol)), shingleLen)
@@ -579,11 +581,12 @@ object Dedup {
 
   /** [[decontaminate]] over a prepared train-side index (the
     * [[contaminationPairsFromIndex]] shape): `trainInv` must be the
-    * [[shingleIndex]] of exactly `train`'s documents. */
+    * [[shingleIndex]] of exactly `train`'s documents, built with the
+    * same `shingleLen`. */
   def decontaminateFromIndex(train: DataFrame, trainInv: DataFrame,
                              evalDocs: DataFrame, idCol: String,
                              textCol: String, threshold: Double,
-                             shingleLen: Int = 3): DataFrame = {
+                             shingleLen: Int): DataFrame = {
     val bad = contaminationPairsFromIndex(trainInv, evalDocs, idCol, textCol,
       threshold, shingleLen).select(col("train_id").as(idCol)).distinct()
     train.join(bad, Seq(idCol), "left_anti")
@@ -1308,8 +1311,8 @@ object Dedup {
     // two verify re-joins) would otherwise re-run the simhash kernel over
     // the corpus per reference — the same discipline as
     // [[Incremental.dedupAgainst]]'s signature checkpoint
-    val sig = ck.proxy(kind.signatures(docs, idCol, hashCol))
-    Lsh.selfPairs(kind, sig, threshold = 0.0)
+    val sig = ck.proxy(kind.encode(docs, idCol, hashCol))
+    Lsh.selfPairs(kind, sig)
       .select(col("id_a"), col("id_b"), col("score").cast("int").as("hamming"))
   }
 
@@ -1336,8 +1339,8 @@ object Dedup {
     * narrow codegen'd kernel pass. */
   def embeddingDupPairs(emb: DataFrame, idCol: String, vecCol: String,
                         threshold: Double, bands: Int = 64, bitsPerBand: Int = 16): DataFrame = {
-    val kind = Lsh.Hyperplane(bands, bitsPerBand)
-    Lsh.selfPairs(kind, kind.signatures(emb, idCol, col(vecCol)), threshold)
+    val kind = Lsh.Hyperplane(threshold, bands, bitsPerBand)
+    Lsh.selfPairs(kind, kind.encode(emb, idCol, col(vecCol)))
       .select(col("id_a"), col("id_b"), round(col("score"), 4).as("cos"))
   }
 
@@ -1364,8 +1367,8 @@ object Dedup {
   def embeddingDecontaminate(corpus: DataFrame, evalSet: DataFrame,
                              idCol: String, vecCol: String, threshold: Double,
                              bands: Int = 64, bitsPerBand: Int = 16): DataFrame = {
-    val kind = Lsh.Hyperplane(bands, bitsPerBand)
-    def banded(df: DataFrame) = Lsh.bands(kind, kind.signatures(df, idCol, col(vecCol)))
+    val kind = Lsh.Hyperplane(threshold, bands, bitsPerBand)
+    def banded(df: DataFrame) = Lsh.bands(kind, kind.encode(df, idCol, col(vecCol)))
     val cand = banded(corpus)
       .join(broadcast(banded(evalSet)
         .select(col("band"), col("bucket"), col("id").as("eval_id"))),

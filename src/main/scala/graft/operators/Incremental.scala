@@ -5,32 +5,41 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.sources.ParquetSink
 
-/** Incremental cross-snapshot deduplication — the production shape of
-  * corpus dedup: each ingested batch is checked against a PERSISTED
-  * signature store of everything accepted before, instead of
-  * re-clustering the whole corpus per snapshot (ref: the reference's
+/** Incremental indexes — the production shape of corpus dedup and ANN
+  * search: each ingested batch is checked against (or probed through) a
+  * PERSISTED store of everything accepted before, instead of
+  * re-indexing the whole corpus per snapshot (ref: the reference's
   * append-only raw history + latest-pointer discipline,
-  * `airflow/dags/imdb_raw_ingest.py:70-90`, re-expressed for dedup
+  * `airflow/dags/imdb_raw_ingest.py:70-90`, re-expressed for index
   * state).
   *
-  * One store contract for every signature family ([[Lsh.Kind]]:
-  * MinHash over text, hyperplane over vectors, pigeonhole over 64-bit
-  * perceptual hashes). A store named `table` is two bucketed catalog
+  * One store contract for every index ([[StoreKind]]): the three LSH
+  * signature families ([[Lsh.Kind]]: MinHash over text, hyperplane over
+  * vectors, pigeonhole over 64-bit perceptual hashes) and the IVF-PQ
+  * ANN index ([[IvfPq]]). A store named `table` is one or two catalog
   * tables, each bucketed on the key its per-batch join probes, so
   * neither store side ever shuffles again (ParquetSink.bucketed
   * contract):
-  *  - `table`: the kind's signature rows, bucketed on the kind's
-  *    [[Lsh.Kind.storeKey]] (`content_hash` for MinHash — the exact
-  *    anti-join; `id` otherwise — the verify re-join);
-  *  - `table_bands`: (band, bucket, id) rows, bucketed on (band,
-  *    bucket) — the LSH candidate join. Without it every batch would
-  *    re-explode and re-shuffle the WHOLE store's bands.
+  *  - `table`: the kind's encoded rows, bucketed on the kind's
+  *    [[StoreKind.storeKey]] (`content_hash` for MinHash — the exact
+  *    anti-join; `cell_id` for IVF-PQ — the probe's cell join; `id`
+  *    otherwise — the verify re-join);
+  *  - `table_bands` (LSH kinds only): (band, bucket, id) rows, bucketed
+  *    on (band, bucket) — the LSH candidate join. Without it every
+  *    batch would re-explode and re-shuffle the WHOLE store's bands.
   *
-  * Per-batch cost is proportional to the BATCH: the store is touched
+  * The lifecycle verbs are the same for every kind: [[writeStore]],
+  * [[appendToStore]], [[validateStore]], [[compactStore]],
+  * [[forgetFromStore]] and [[upsertStore]]. Deletes and upserts are
+  * copy-on-write — one rewrite of the store's layouts — so every read
+  * sees exactly the live rows. The reads are per family:
+  * [[dedupAgainst]]/[[dedupSink]] for LSH, [[annStoreTopK]] for IVF-PQ.
+  *
+  * Per-batch cost is proportional to the BATCH: an LSH store is touched
   * by the candidate join against `_bands`, the id-keyed payload
   * re-join for verification and, for MinHash, the content-hash
   * anti-join — each a column-pruned scan, never the text, vector or
-  * media bytes.
+  * media bytes; an IVF-PQ append does not read the store at all.
   *
   * `_bands` is derived state. The two writes of [[writeStore]] /
   * [[appendToStore]] are NOT atomic: a failure between them leaves
@@ -39,71 +48,114 @@ import graft.sources.ParquetSink
   * are still caught — that stage reads only `table`). [[validateStore]]
   * detects the divergence and [[rebuildBands]] re-derives `_bands` from
   * `table` in one pass. Replayed appends leave duplicate rows, which
-  * are decision-neutral (same payloads and bands → same drops;
-  * candidate pairs are distinct-ed by id — spec-asserted);
-  * [[compactStore]] reclaims them, and [[forgetFromStore]] removes ids
-  * with the same rewrite. */
+  * are decision-neutral for LSH (same payloads and bands → same drops;
+  * candidate pairs are distinct-ed by id — spec-asserted) but not for
+  * IVF-PQ (see [[compactStore]]); [[compactStore]] reclaims them. */
 object Incremental {
 
-  /** Write the signature and band tables from one signature set. Both
-    * writes consume the signatures; the shared persist keeps the second
-    * write from re-running the signature kernels over the input. */
-  private def writeBoth(kind: Lsh.Kind, sig0: DataFrame, table: String,
-                        numBuckets: Int, mode: SaveMode): Unit =
+  /** What a store kind declares: its row encoding, its bucket key,
+    * whether it has a derived `_bands` layout, and its validity check. */
+  trait StoreKind {
+    /** Bucket key of the store's row table. */
+    def storeKey: String
+    /** One store row per input row, keyed `id`; `src` is the text,
+      * vector or 64-bit fingerprint the kind encodes. */
+    def encode(df: DataFrame, idCol: String, src: Column): DataFrame
+    /** The `table_bands` rows derived from encoded rows, for a kind whose
+      * store has that layout. */
+    private[operators] def bandRows: Option[DataFrame => DataFrame]
+    /** True iff the store `table` holds the kind's invariants. */
+    private[operators] def valid(spark: SparkSession, table: String): Boolean
+  }
+
+  /** The IVF-PQ ANN index as a store kind — [[Similarity.ivfPqTopK]]'s
+    * corpus side made persistent. A row is (cell_id, id, codes): routing
+    * and PQ encoding fused in ONE zero-exchange projection (the q123
+    * IVFADC shape; both models are driver-held codegen reference
+    * objects) — m small ints instead of the vector, keyed by the cell
+    * the probe join filters on. The models are FROZEN at write time:
+    * batches appended later encode against the same centroids and
+    * codebooks, which is what makes append map-only; retrain + full
+    * rewrite is a separate, deliberate operation.
+    *
+    * The probe join broadcasts the QUERIES, so the store side never
+    * shuffles regardless; the cell_id bucket layout buys the rest of the
+    * lifecycle: appended rows of a cell land in that cell's bucket files
+    * batch after batch (probe scans stay cell-clustered as the index
+    * grows), per-cell maintenance (re-encoding a drifted cell, splitting
+    * a fat one) bucket-prunes to the cell's files (spec-asserted), and a
+    * probe set too large to broadcast can swap the hint for a shuffled
+    * cell_id join that is exchange-free on the store side.
+    * Valid: one row per id, every code row the model's m bytes wide. */
+  final case class IvfPq(cs: Similarity.CentroidSet,
+                         model: Similarity.PqModel) extends StoreKind {
+    def storeKey: String = "cell_id"
+    def encode(df: DataFrame, idCol: String, src: Column): DataFrame =
+      Similarity.pqEncode(
+          Similarity.assignCells(
+            df.select(col(idCol).as("id"), src.as("__v")), "__v", cs),
+          "__v", model)
+        .select(col("cell_id"), col("id"), col("codes"))
+    private[operators] def bandRows: Option[DataFrame => DataFrame] = None
+    private[operators] def valid(spark: SparkSession, table: String): Boolean =
+      spark.table(table).groupBy("id").agg(count(lit(1)).as("n"))
+        .filter(col("n") > 1).isEmpty &&
+      spark.table(table).filter(size(col("codes")) =!= model.m).isEmpty
+  }
+
+  /** Write encoded rows to every layout of the store. With a `_bands`
+    * layout both writes consume the rows; the shared persist keeps the
+    * second write from re-running the encoding kernels over the input. */
+  private def writeEncoded(kind: StoreKind, rows: DataFrame, table: String,
+                           numBuckets: Int, mode: SaveMode): Unit =
     Checkpoints.scoped { ck =>
-      writePrepared(kind, ck.shared(sig0), table, numBuckets, mode)
+      writePrepared(kind, if (kind.bandRows.isEmpty) rows else ck.shared(rows),
+        table, numBuckets, mode)
     }
 
-  /** [[writeBoth]] for a signature set the caller has ALREADY
-    * materialized: both writes re-read it, and no second persist is
-    * stacked on top of it. */
-  private def writePrepared(kind: Lsh.Kind, sig: DataFrame, table: String,
+  /** [[writeEncoded]] for rows the caller has ALREADY materialized: each
+    * write re-reads them, and no second persist is stacked on top. */
+  private def writePrepared(kind: StoreKind, rows: DataFrame, table: String,
                             numBuckets: Int, mode: SaveMode): Unit = {
-    ParquetSink.bucketed(sig, table, Seq(kind.storeKey), numBuckets, mode = mode)
-    ParquetSink.bucketed(Lsh.bands(kind, sig), s"${table}_bands",
-      Seq("band", "bucket"), numBuckets, mode = mode)
+    ParquetSink.bucketed(rows, table, Seq(kind.storeKey), numBuckets, mode = mode)
+    kind.bandRows.foreach(bands => ParquetSink.bucketed(bands(rows),
+      s"${table}_bands", Seq("band", "bucket"), numBuckets, mode = mode))
   }
 
   /** Create (or overwrite) the store `table` from `df`'s (`idCol`,
     * `src`) rows. */
-  def writeStore(kind: Lsh.Kind, df: DataFrame, idCol: String, src: Column,
+  def writeStore(kind: StoreKind, df: DataFrame, idCol: String, src: Column,
                  table: String, numBuckets: Int): Unit =
-    writeBoth(kind, kind.signatures(df, idCol, src), table, numBuckets,
+    writeEncoded(kind, kind.encode(df, idCol, src), table, numBuckets,
       SaveMode.Overwrite)
 
-  /** Append a batch's signatures to a [[writeStore]] store — the
-    * production loop: after a batch is processed its rows join the store
-    * so later batches dedup against them too. Appends preserve the
+  /** Append a batch's rows to a [[writeStore]] store — the production
+    * loop: after a batch is processed its rows join the store so later
+    * batches dedup against (or probe) them too. Appends preserve the
     * bucket spec (Spark validates it against the existing tables), so
-    * both per-batch joins stay exchange-free as the store grows.
+    * the per-batch joins stay exchange-free as the store grows.
     *
-    * Two valid policies, chosen by what you append:
+    * Two valid dedup policies, chosen by what you append:
     *  - append the WHOLE batch → the multi-batch pipeline equals one full
     *    greedy recompute (non-cascading: a dropped row still suppresses
     *    later near-dups) — spec-asserted;
     *  - append only the batch's SURVIVORS → cascading greedy (a maximal
     *    independent set in batch order): smaller store, and a row dropped
     *    as a near-dup of a dropped row gets a second chance. */
-  def appendToStore(kind: Lsh.Kind, df: DataFrame, idCol: String,
+  def appendToStore(kind: StoreKind, df: DataFrame, idCol: String,
                     src: Column, table: String, numBuckets: Int): Unit =
-    writeBoth(kind, kind.signatures(df, idCol, src), table, numBuckets,
+    writeEncoded(kind, kind.encode(df, idCol, src), table, numBuckets,
       SaveMode.Append)
 
-  /** True iff `table` and `table_bands` agree: every store id appears in
-    * the band table exactly `nBands` times per store row. A `false`
-    * means a partial append died between the two writes — run
-    * [[rebuildBands]]. Cost: two column-pruned id scans. */
-  def validateStore(kind: Lsh.Kind, spark: SparkSession,
-                    table: String): Boolean = {
-    val storeIds = spark.table(table).groupBy("id")
-      .agg(count(lit(1)).as("n_sig"))
-    val bandIds = spark.table(s"${table}_bands").groupBy("id")
-      .agg(count(lit(1)).as("n_band"))
-    storeIds.join(bandIds, Seq("id"), "full_outer")
-      .filter(col("n_sig").isNull || col("n_band").isNull ||
-        col("n_band") =!= col("n_sig") * kind.nBands)
-      .isEmpty
-  }
+  /** True iff the store holds its kind's invariants. LSH: every store id
+    * appears in `table_bands` exactly `nBands` times per store row — a
+    * `false` means a partial append died between the two writes (run
+    * [[rebuildBands]]). IVF-PQ: one row per id and m-wide codes — a
+    * `false` means a replayed append awaits [[compactStore]]. Cost: two
+    * column-pruned scans. */
+  def validateStore(kind: StoreKind, spark: SparkSession,
+                    table: String): Boolean =
+    kind.valid(spark, table)
 
   /** Rebuild `table_bands` from `table` — the recovery path after a
     * partial append ([[validateStore]] == false). Safe to run any time:
@@ -114,23 +166,30 @@ object Incremental {
       s"${table}_bands", Seq("band", "bucket"), numBuckets,
       mode = SaveMode.Overwrite)
 
-  /** Rewrite both layouts of the store from `rows` of `table`. The
-    * eager checkpoint breaks lineage to the tables being overwritten
-    * (Spark refuses to overwrite a table it is still reading from). */
-  private def rewriteStore(kind: Lsh.Kind, spark: SparkSession, table: String,
+  /** Rewrite every layout of the store from `rows` of `table`, in the
+    * store's column order. The eager checkpoint breaks lineage to the
+    * tables being overwritten (Spark refuses to overwrite a table it is
+    * still reading from), and every write re-reads it. */
+  private def rewriteStore(kind: StoreKind, spark: SparkSession, table: String,
                            numBuckets: Int,
                            rows: DataFrame => DataFrame): Unit =
     Checkpoints.scoped { ck =>
-      writeBoth(kind, ck.dataGrain(rows(spark.table(table))), table,
-        numBuckets, SaveMode.Overwrite)
+      val store = spark.table(table)
+      writePrepared(kind,
+        ck.dataGrain(rows(store).select(store.columns.map(col): _*)),
+        table, numBuckets, SaveMode.Overwrite)
     }
 
   /** Rewrite the store with one row per id — compaction for rows
     * accumulated by replayed appends (a [[dedupSink]] retry re-appends
-    * its batch). Duplicate rows are decision-neutral, so compaction is a
-    * storage/scan optimization to run periodically, not a correctness
-    * requirement. */
-  def compactStore(kind: Lsh.Kind, spark: SparkSession, table: String,
+    * its batch). For the LSH kinds duplicate rows are decision-neutral,
+    * so compaction is a storage/scan optimization to run periodically.
+    * [[annStoreTopK]]'s ranking window deliberately has NO per-id dedup
+    * (it would cost a second, id-keyed exchange on the single-shuffle
+    * probe plan), so in an IVF-PQ store a duplicated id occupies several
+    * ranks and can evict the true k-th neighbor: a caller that REPLAYS
+    * an append must compact before the next probe (q162 pins this). */
+  def compactStore(kind: StoreKind, spark: SparkSession, table: String,
                    numBuckets: Int): Unit =
     rewriteStore(kind, spark, table, numBuckets, _.dropDuplicates("id"))
 
@@ -140,13 +199,28 @@ object Incremental {
     * strength of data the pipeline no longer holds — deletion has to
     * change future DECISIONS, not just free bytes (q170 pins this: a
     * copy of a forgotten doc is re-admitted, a copy of a remembered one
-    * still drops). Both layouts derive from the same write, so
-    * [[validateStore]] holds after. One store rewrite per call; at
-    * scale, batch forget requests and fold them into compaction. */
-  def forgetFromStore(kind: Lsh.Kind, spark: SparkSession, ids: DataFrame,
+    * still drops; q162 pins it for IVF-PQ probes). Every layout derives
+    * from the same write, so [[validateStore]] holds after. One store
+    * rewrite per call; at scale, batch forget requests and fold them
+    * into compaction. */
+  def forgetFromStore(kind: StoreKind, spark: SparkSession, ids: DataFrame,
                       table: String, numBuckets: Int): Unit =
     rewriteStore(kind, spark, table, numBuckets,
       _.join(ids.select(col("id")), Seq("id"), "left_anti"))
+
+  /** Copy-on-write upsert: rewrite the store minus the batch's ids, plus
+    * the batch encoded with the kind's frozen parameters (present or not
+    * — insert and update are the same operation). One store scan + one
+    * rewrite; at scale, accumulate upserts and apply them in one pass
+    * (or at compaction time), the Delta/Iceberg copy-on-write
+    * discipline. */
+  def upsertStore(kind: StoreKind, spark: SparkSession, df: DataFrame,
+                  idCol: String, src: Column, table: String,
+                  numBuckets: Int): Unit = {
+    val enc = kind.encode(df, idCol, src)
+    rewriteStore(kind, spark, table, numBuckets,
+      _.join(enc.select("id"), Seq("id"), "left_anti").unionByName(enc))
+  }
 
   /** Rows of `newDf` that survive greedy dedup against the historical
     * `store` (a signature table of `kind` — typically `spark.table` over
@@ -157,10 +231,8 @@ object Incremental {
     *     its hash within the batch;
     *  2. near-dup stage — drop a row that verifies against ANY store
     *     row, or against a smaller-id row of the batch (the
-    *     non-cascading greedy rule of [[Corpus.prepare]]).
-    *
-    * `threshold` is the Jaccard (MinHash) or cosine (Hyperplane) floor
-    * of the verify step; Pigeonhole verifies within its `maxHamming`.
+    *     non-cascading greedy rule of [[Corpus.prepare]]), under the
+    *     kind's own bound (Jaccard or cosine `threshold`, `maxHamming`).
     *
     * Equivalent to a full greedy re-dedup of store ∪ batch restricted to
     * batch ids whenever store ids precede batch ids — spec-asserted
@@ -182,12 +254,11 @@ object Incremental {
     *   the candidate join then shuffles the exploded store every batch;
     *   the bucketed band table makes it exchange-free. */
   def dedupAgainst(kind: Lsh.Kind, newDf: DataFrame, store: DataFrame,
-                   idCol: String, src: Column, threshold: Double,
+                   idCol: String, src: Column,
                    storeBands: Option[DataFrame] = None): DataFrame =
     Checkpoints.scoped { ck =>
-      dedupPrepared(ck, kind, newDf,
-        ck.proxy(kind.signatures(newDf, idCol, src)), store, idCol,
-        threshold, storeBands)
+      dedupPrepared(ck, kind, newDf, ck.proxy(kind.encode(newDf, idCol, src)),
+        store, idCol, storeBands)
     }
 
   /** [[dedupAgainst]] over a signature set the caller has already
@@ -197,7 +268,6 @@ object Incremental {
   private def dedupPrepared(ck: Checkpoints.Scope, kind: Lsh.Kind,
                             newDf: DataFrame, nsig: DataFrame,
                             store: DataFrame, idCol: String,
-                            threshold: Double,
                             storeBands: Option[DataFrame]): DataFrame = {
     // exact stage: batch-internal min-id per hash, then store anti-join
     val batch = kind match {
@@ -213,10 +283,10 @@ object Incremental {
     val nBand = Lsh.bands(kind, batch)
     val sBand = storeBands.getOrElse(Lsh.bands(kind, store))
     val dropped =
-      Lsh.verified(kind, Lsh.crossCandidates(sBand, nBand), store, batch, threshold)
+      Lsh.verified(kind, Lsh.crossCandidates(sBand, nBand), store, batch)
         .select(col("id_b").as(idCol))
-        .unionAll(Lsh.verified(kind, Lsh.selfCandidates(nBand), batch, batch,
-          threshold).select(col("id_b").as(idCol)))
+        .unionAll(Lsh.verified(kind, Lsh.selfCandidates(nBand), batch, batch)
+          .select(col("id_b").as(idCol)))
         .distinct()
     newDf.join(
       batch.select(col("id").as(idCol)).join(dropped, Seq(idCol), "left_anti"),
@@ -244,7 +314,7 @@ object Incremental {
     * the re-append leaves behind are decision-neutral for later batches.
     * [[compactStore]] reclaims the space. */
   def dedupSink(kind: Lsh.Kind, idCol: String, src: Column,
-                storeTable: String, numBuckets: Int, threshold: Double,
+                storeTable: String, numBuckets: Int,
                 emit: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => Checkpoints.scoped { ck =>
       val spark = batch.sparkSession
@@ -259,99 +329,33 @@ object Incremental {
       // ONE materialized signature set per batch: the dedup stage and
       // the append below share it — the append otherwise re-runs the
       // signature kernels over the batch it just deduped
-      val nsig = ck.proxy(kind.signatures(batch, idCol, src))
+      val nsig = ck.proxy(kind.encode(batch, idCol, src))
       val survivors = dedupPrepared(ck, kind, batch, nsig, store, idCol,
-        threshold, storeBands = Some(storeBands))
+        storeBands = Some(storeBands))
       emit(survivors, batchId)
       writePrepared(kind, nsig, storeTable, numBuckets, SaveMode.Append)
     }
 
-  // ── incremental ANN ingestion: the IVF-PQ index as a bucketed ────────
-  //    store (Similarity.ivfPqTopK's corpus side made persistent — new
-  //    batches encode map-only and append; probes read the store)
-
-  /** One encoded index row per vector: (cell_id, id, codes) — routing
-    * and PQ encoding fused in ONE zero-exchange projection (the q123
-    * IVFADC shape; both models are driver-held codegen reference
-    * objects). This is everything a probe needs: m small ints instead
-    * of the vector, keyed by the cell the probe join filters on. */
-  def annEncode(emb: DataFrame, idCol: String, vecCol: String,
-                cs: Similarity.CentroidSet,
-                model: Similarity.PqModel): DataFrame =
-    Similarity.pqEncode(
-        Similarity.assignCells(
-          emb.select(col(idCol).as("id"), col(vecCol).as("__v")), "__v", cs),
-        "__v", model)
-      .select(col("cell_id"), col("id"), col("codes"))
-
-  /** Materialize the IVF-PQ index as a catalog table bucketed on
-    * `cell_id` (the [[writeStore]] discipline applied to the ANN
-    * index). The probe join itself broadcasts the QUERIES, so the
-    * store side never shuffles regardless; the cell_id bucket layout
-    * buys the rest of the index lifecycle: appended rows of a cell
-    * land in that cell's bucket files batch after batch (probe scans
-    * stay cell-clustered as the index grows), per-cell maintenance
-    * (re-encoding a drifted cell, splitting a fat one) bucket-prunes
-    * to the cell's files (spec-asserted), and a probe set too large to
-    * broadcast can swap the hint for a shuffled cell_id join that is
-    * exchange-free on the store side. The models are FROZEN at write
-    * time:
-    * batches appended later encode against the same centroids/codebooks,
-    * which is what makes append map-only — retrain + full rewrite is a
-    * separate, deliberate operation (the IVF-PQ analogue of
-    * [[compactStore]]'s rebuild, done when drift accumulates). */
-  def writeAnnStore(emb: DataFrame, idCol: String, vecCol: String,
-                    cs: Similarity.CentroidSet, model: Similarity.PqModel,
-                    table: String, numBuckets: Int): Unit =
-    ParquetSink.bucketed(annEncode(emb, idCol, vecCol, cs, model), table,
-      Seq("cell_id"), numBuckets, mode = SaveMode.Overwrite)
-
-  /** Append a batch to an existing [[writeAnnStore]] index: the batch is
-    * routed + encoded in one zero-exchange projection, and the only
-    * exchange anywhere is the bucketed write's shuffle of the BATCH's
-    * own m-byte code rows into the cell buckets — per-batch cost is
-    * proportional to the batch, never the store (the store is not read
-    * at all). Appends preserve the bucket spec (Spark validates it), so
-    * probes stay exchange-free as the index grows. */
-  def appendToAnnStore(emb: DataFrame, idCol: String, vecCol: String,
-                       cs: Similarity.CentroidSet, model: Similarity.PqModel,
-                       table: String, numBuckets: Int): Unit =
-    ParquetSink.bucketed(annEncode(emb, idCol, vecCol, cs, model), table,
-      Seq("cell_id"), numBuckets, mode = SaveMode.Append)
-
-  /** Top-k ANN probes against a [[writeAnnStore]] index — byte-for-byte
-    * the [[Similarity.ivfPqTopK]] probe side, with the corpus replaced
-    * by the persisted store: queries broadcast with their nProbe target
+  /** Top-k ANN probes against an [[IvfPq]] store — byte-for-byte the
+    * [[Similarity.ivfPqTopK]] probe side, with the corpus replaced by
+    * the persisted store: queries broadcast with their nProbe target
     * cells and ADC LUT, the candidate join filters the store to the
     * probed cells' code rows, and the ONE shuffle exchange in the plan
     * is the final per-query ranking window (map-side-limited by partial
-    * WindowGroupLimit) — spec-asserted. Exactness contract (q130's
-    * oracle): after any append sequence, the result at any nProbe
-    * equals [[Similarity.ivfPqTopK]] over the union of all ingested
-    * batches with the same frozen models, row for row. */
-  def annStoreTopK(spark: SparkSession, table: String, queries: DataFrame,
-                   idCol: String, vecCol: String,
-                   cs: Similarity.CentroidSet, model: Similarity.PqModel,
-                   k: Int, nProbe: Int,
-                   honorDeletes: Boolean = false): DataFrame = {
+    * WindowGroupLimit) — spec-asserted. Exactness contract (q130's and
+    * q162's oracle): on a compacted store, the result at any nProbe
+    * equals [[Similarity.ivfPqTopK]] over the store's live rows (every
+    * ingested or upserted vector not forgotten) with the same frozen
+    * models, row for row. */
+  def annStoreTopK(kind: IvfPq, spark: SparkSession, table: String,
+                   queries: DataFrame, idCol: String, src: Column,
+                   k: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val raw = spark.table(table).select(col("cell_id"),
+    import kind.{cs, model}
+    val store = spark.table(table).select(col("cell_id"),
       col("id").as("neighbor_id"), col("codes"))
-    // merge-on-read deletes: pending tombstones filter the store scan
-    // through a BROADCAST anti-join (tombstones are id-grain and
-    // bounded by the delete rate, never corpus-sized) — the plan keeps
-    // its single ranking-window exchange. A store that has never seen
-    // a delete has no tombstone table yet — treat that as the empty
-    // set (the compactAnnStore guard), so an always-honor-deletes
-    // policy works on a fresh store instead of crashing its first probe
-    val store =
-      if (!honorDeletes || !spark.catalog.tableExists(s"${table}_deletes")) raw
-      else raw.join(
-        broadcast(spark.table(s"${table}_deletes")
-          .select(col("id").as("neighbor_id"))),
-        Seq("neighbor_id"), "left_anti")
     val probed = broadcast(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
+      queries.select(col(idCol).as("query_id"), src.as("__qv"))
         .withColumn("lut", graft.plans.exprs.pqLut(
           graft.functions.Vectors.toDouble(col("__qv")),
           model.codebooks, model.m, model.ksub))
@@ -369,101 +373,6 @@ object Incremental {
       .select(col("query_id"), col("neighbor_id"),
         col("rnk").cast("long").as("rnk"), col("adc"))
   }
-
-  // ── ANN store maintenance: delete / upsert / compaction, the ────────
-  //    q91/q98 lifecycle applied to the IVF-PQ index. Deletes are
-  //    MERGE-ON-READ (tombstones in `table_deletes`, O(delete batch),
-  //    no store rewrite — probes anti-join the broadcast tombstone
-  //    set); upserts are COPY-ON-WRITE (one bucketed rewrite touching
-  //    the whole store — batch them, or fold them into a scheduled
-  //    compaction, which is the rewrite you pay anyway). Compaction
-  //    dedups replayed appends by id, folds pending tombstones in, and
-  //    clears them. All paths preserve BOTH bucket layouts (store on
-  //    cell_id, tombstones on id), so probes stay exchange-free on the
-  //    store side across the full lifecycle. Maintenance is
-  //    decision-INVISIBLE: a probe sees the same live set whether a
-  //    tombstone is pending or compacted away, and a halt between
-  //    compaction's two writes leaves tombstones that re-filter
-  //    already-removed ids — a no-op (q162 pins all of this).
-
-  /** Tombstone a set of ids: append to the `table_deletes` side table
-    * (bucketed on id — the second store layout). Cost ∝ the delete
-    * batch; the store itself is untouched. Contract: a tombstoned id
-    * stays dead until [[compactAnnStore]] clears the tombstone —
-    * re-ingesting a tombstoned id before compaction is a caller error
-    * ([[validateAnnStore]] has no way to order the two events). */
-  def deleteFromAnnStore(spark: SparkSession, ids: DataFrame,
-                         table: String, numBuckets: Int): Unit =
-    ParquetSink.bucketed(ids.select(col("id")).distinct(),
-      s"${table}_deletes", Seq("id"), numBuckets,
-      mode = SaveMode.Append)
-
-  /** Copy-on-write upsert: re-route + re-encode `emb` against the
-    * FROZEN models and rewrite the store with the batch's ids replaced
-    * (present or not — insert and update are the same operation). One
-    * store scan + one bucketed write; the anti-join keying is id-grain.
-    * At scale this is the expensive maintenance verb — accumulate
-    * upserts and apply them in one pass (or at compaction time), the
-    * Delta/Iceberg copy-on-write discipline. */
-  def upsertAnnStore(spark: SparkSession, emb: DataFrame, idCol: String,
-                     vecCol: String, cs: Similarity.CentroidSet,
-                     model: Similarity.PqModel, table: String,
-                     numBuckets: Int): Unit =
-    Checkpoints.scoped { ck =>
-    val enc = annEncode(emb, idCol, vecCol, cs, model)
-    // the checkpoint breaks lineage to the table being overwritten
-    // (the compactStore discipline)
-    val merged = ck.dataGrain(
-      spark.table(table).select("cell_id", "id", "codes")
-        .join(enc.select("id"), Seq("id"), "left_anti")
-        .select("cell_id", "id", "codes")
-        .unionByName(enc.select("cell_id", "id", "codes")))
-    ParquetSink.bucketed(merged, table, Seq("cell_id"), numBuckets,
-      mode = SaveMode.Overwrite)
-  }
-
-  /** Compaction: one row per id (replayed appends dedup), pending
-    * tombstones folded in, tombstone table cleared. Unlike the
-    * text/embedding dedup stores — whose candidate sets are
-    * distinct-ed by id, making duplicate store rows decision-neutral —
-    * [[annStoreTopK]]'s ranking window deliberately has NO per-id
-    * dedup (it would cost a second, id-keyed exchange on the spec-
-    * asserted single-shuffle probe plan), so a duplicated id occupies
-    * multiple ranks and can evict the true k-th neighbor. The
-    * protocol is therefore: a caller that REPLAYS an append (the
-    * halt-retry path) must compact before the next probe; q162 probes
-    * only at compacted states. Store
-    * rewrite FIRST, then the clear: a halt between the writes leaves
-    * tombstones whose ids are already gone from the store — probes
-    * anti-join them to no effect, so decisions never change
-    * (q162-pinned). Both writes keep their bucket layouts. */
-  def compactAnnStore(spark: SparkSession, table: String,
-                      numBuckets: Int): Unit =
-    Checkpoints.scoped { ck =>
-    val del = s"${table}_deletes"
-    val hasDel = spark.catalog.tableExists(del)
-    val tomb =
-      if (hasDel) spark.table(del).select("id").distinct()
-      else spark.emptyDataFrame.withColumn("id", lit(0L)).limit(0)
-    val live = ck.dataGrain(
-      spark.table(table).select("cell_id", "id", "codes")
-        .dropDuplicates("id")
-        .join(tomb, Seq("id"), "left_anti")
-        .select("cell_id", "id", "codes"))
-    ParquetSink.bucketed(live, table, Seq("cell_id"), numBuckets,
-      mode = SaveMode.Overwrite)
-    ck.release(live)
-    if (hasDel)
-      ParquetSink.bucketed(ck.proxy(spark.table(del).limit(0)), del, Seq("id"),
-        numBuckets, mode = SaveMode.Overwrite)
-  }
-
-  /** Store invariants after maintenance: no duplicate ids, every code
-    * row the model's m bytes wide. Two column-pruned scans. */
-  def validateAnnStore(spark: SparkSession, table: String, m: Int): Boolean =
-    spark.table(table).groupBy("id").agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).isEmpty &&
-    spark.table(table).filter(size(col("codes")) =!= m).isEmpty
 
   /** Merge two mergeable-moment stat tables (running store + batch
     * partial) at `keyCols` grain: sums add, mins/maxes fold — the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Text, Vectors}
 
@@ -19,25 +19,34 @@ import graft.functions.{Text, Vectors}
 object Lsh {
 
   /** How a signature family is computed, banded, stored and verified.
-    * A signature table has columns `id`, the kind's [[payload]], and
-    * the kind's signature columns; [[storeKey]] is the column the
-    * store's signature table is bucketed on. */
-  sealed trait Kind {
+    * A signature table ([[encode]]'s output) has columns `id`, the
+    * kind's [[payload]], and the kind's signature columns; its store
+    * has the derived `_bands` layout. Each kind carries its own verify
+    * bound. */
+  sealed trait Kind extends Incremental.StoreKind {
     /** Band rows per signature. */
     def nBands: Int
-    /** Bucket key of the store's signature table. */
-    def storeKey: String
     /** Column the verify step compares. */
     def payload: String
-    /** One signature row per input row; `src` is the text, vector or
-      * 64-bit fingerprint the kind hashes. */
-    def signatures(df: DataFrame, idCol: String, src: Column): DataFrame
     /** The `nBands` band values over a signature table's columns. */
     private[operators] def bandCols: Seq[Column]
     /** The rows of `pairs` whose payloads `a` and `b` verify, with
       * their `score`. */
-    private[operators] def verify(pairs: DataFrame, a: Column, b: Column,
-                                  threshold: Double): DataFrame
+    private[operators] def verify(pairs: DataFrame, a: Column, b: Column): DataFrame
+    private[operators] def bandRows: Option[DataFrame => DataFrame] =
+      Some(Lsh.bands(this, _))
+    /** `table_bands` agrees with `table`: every store id appears in the
+      * band table exactly `nBands` times per store row. */
+    private[operators] def valid(spark: SparkSession, table: String): Boolean = {
+      val storeIds = spark.table(table).groupBy("id")
+        .agg(count(lit(1)).as("n_sig"))
+      val bandIds = spark.table(s"${table}_bands").groupBy("id")
+        .agg(count(lit(1)).as("n_band"))
+      storeIds.join(bandIds, Seq("id"), "full_outer")
+        .filter(col("n_sig").isNull || col("n_band").isNull ||
+          col("n_band") =!= col("n_sig") * nBands)
+        .isEmpty
+    }
   }
 
   /** MinHash over lower-cased `shingleLen`-grams, `bands × rowsPerBand`
@@ -50,12 +59,12 @@ object Lsh {
     *    `rowsPerBand`-long slice, salted by b.
     * Verify: Jaccard ≥ `threshold`. With the 32×2 default a pair at
     * Jaccard j is missed with prob (1−j²)^32. */
-  final case class MinHash(shingleLen: Int = 3, bands: Int = 32,
-                           rowsPerBand: Int = 2) extends Kind {
+  final case class MinHash(threshold: Double, shingleLen: Int = 3,
+                           bands: Int = 32, rowsPerBand: Int = 2) extends Kind {
     def nBands: Int = bands
     def storeKey: String = "content_hash"
     def payload: String = "shh"
-    def signatures(df: DataFrame, idCol: String, src: Column): DataFrame =
+    def encode(df: DataFrame, idCol: String, src: Column): DataFrame =
       df.select(col(idCol).as("id"), md5(src).as("content_hash"),
           array_distinct(Text.shingles(lower(src), shingleLen)).as("sh"))
         .select(col("id"), col("content_hash"),
@@ -64,8 +73,7 @@ object Lsh {
     private[operators] def bandCols: Seq[Column] =
       (0 until bands).map(b => xxhash64(
         concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)), lit(b)))
-    private[operators] def verify(pairs: DataFrame, a: Column, b: Column,
-                                  threshold: Double): DataFrame =
+    private[operators] def verify(pairs: DataFrame, a: Column, b: Column): DataFrame =
       pairs.withColumn("inter", size(array_intersect(a, b)).cast("double"))
         .withColumn("score", col("inter") / (size(a) + size(b) - col("inter")))
         .filter(col("score") >= threshold)
@@ -79,13 +87,13 @@ object Lsh {
     * (1 − (1−acos(c)/π)^bitsPerBand)^bands, ≈ 3e-6 at c = 0.95 with the
     * 64×16 default (see [[Dedup.embeddingDupPairs]] for why 16-bit
     * bands). */
-  final case class Hyperplane(bands: Int = 64, bitsPerBand: Int = 16)
-      extends Kind {
+  final case class Hyperplane(threshold: Double, bands: Int = 64,
+                              bitsPerBand: Int = 16) extends Kind {
     require(64 % bitsPerBand == 0, "bitsPerBand must divide 64 (bands may not straddle words)")
     def nBands: Int = bands
     def storeKey: String = "id"
     def payload: String = "v"
-    def signatures(df: DataFrame, idCol: String, src: Column): DataFrame = {
+    def encode(df: DataFrame, idCol: String, src: Column): DataFrame = {
       val planes = bands * bitsPerBand
       val words = (0 until (planes + 63) / 64).map { wd =>
         Vectors.hyperplaneSignature(col("v"), math.min(64, planes - wd * 64), wd * 64)
@@ -99,8 +107,7 @@ object Lsh {
         shiftright(col(s"sig_${b * bitsPerBand / 64}"), b * bitsPerBand % 64)
           .bitwiseAND((1L << bitsPerBand) - 1)
       }
-    private[operators] def verify(pairs: DataFrame, a: Column, b: Column,
-                                  threshold: Double): DataFrame =
+    private[operators] def verify(pairs: DataFrame, a: Column, b: Column): DataFrame =
       pairs.withColumn("score", Vectors.cosine(a, b))
         .filter(col("score") >= threshold)
   }
@@ -109,13 +116,13 @@ object Lsh {
     * split into maxHamming+1 slices, so two fingerprints within
     * `maxHamming` bits match exactly on at least one slice. Signature
     * table (id, sh). Verify: popcount of the XOR ≤ `maxHamming`; recall
-    * is exact, and `threshold` does not apply. */
+    * is exact. */
   final case class Pigeonhole(maxHamming: Int = 3) extends Kind {
     require(maxHamming >= 0 && maxHamming < 64, "maxHamming must be in [0, 64)")
     def nBands: Int = maxHamming + 1
     def storeKey: String = "id"
     def payload: String = "sh"
-    def signatures(df: DataFrame, idCol: String, src: Column): DataFrame =
+    def encode(df: DataFrame, idCol: String, src: Column): DataFrame =
       df.select(col(idCol).as("id"), src.as("sh"))
     private[operators] def bandCols: Seq[Column] = {
       val width = 64 / nBands
@@ -126,8 +133,7 @@ object Lsh {
         shiftrightunsigned(col("sh"), lo).bitwiseAND(lit(mask))
       }
     }
-    private[operators] def verify(pairs: DataFrame, a: Column, b: Column,
-                                  threshold: Double): DataFrame =
+    private[operators] def verify(pairs: DataFrame, a: Column, b: Column): DataFrame =
       pairs.withColumn("score", bit_count(a.bitwiseXOR(b)))
         .filter(col("score") <= maxHamming)
   }
@@ -158,15 +164,14 @@ object Lsh {
   /** The candidates whose payloads verify, as (id_a, id_b, score):
     * id_a's payload re-joins from signature table `a`, id_b's from `b`. */
   private[operators] def verified(kind: Kind, cand: DataFrame, a: DataFrame,
-                                  b: DataFrame, threshold: Double): DataFrame =
+                                  b: DataFrame): DataFrame =
     kind.verify(cand
         .join(a.select(col("id").as("id_a"), col(kind.payload).as("p_a")), Seq("id_a"))
         .join(b.select(col("id").as("id_b"), col(kind.payload).as("p_b")), Seq("id_b")),
-      col("p_a"), col("p_b"), threshold)
+      col("p_a"), col("p_b"))
       .select("id_a", "id_b", "score")
 
   /** Verified pairs within one signature table, id_a < id_b. */
-  private[operators] def selfPairs(kind: Kind, sig: DataFrame,
-                                   threshold: Double): DataFrame =
-    verified(kind, selfCandidates(bands(kind, sig)), sig, sig, threshold)
+  private[operators] def selfPairs(kind: Kind, sig: DataFrame): DataFrame =
+    verified(kind, selfCandidates(bands(kind, sig)), sig, sig)
 }

@@ -155,7 +155,11 @@ object Retrieval {
     * overlap ignores order and Kendall's τ needs conjoint lists.
     *
     * Each input carries (queryCol, idCol, rankCol) top-D rows (the
-    * [[bm25TopK]]/[[rrfFuse]] shape). Everything runs at RESULT grain:
+    * [[bm25TopK]]/[[rrfFuse]] shape). Rows with rank > `depth` are
+    * ignored entirely: a query whose rows in both runs all exceed
+    * `depth` emits no row, as if it were absent (the library rankers
+    * always carry rank 1, so such queries do not arise from them).
+    * Everything runs at RESULT grain:
     * shared docs join on (query, id); a doc enters every prefix from
     * depth max(ra, rb) on, so per (query, depth) agreement is one
     * aggregate over a spine×shared fan-out bounded by |queries|·D² —
@@ -179,10 +183,7 @@ object Retrieval {
     // depth filter and the 3-column projection sit ABOVE the
     // checkpoint (r20 left them below it), so what materializes is
     // ≤ |Q|·depth narrow rows even when a caller passes an unbounded
-    // ranking. Contract: rows with rank > depth are ignored entirely —
-    // a query whose rows all exceed `depth` contributes nothing (same
-    // as absent; the bm25TopK/rrfFuse top-k shape always carries
-    // rank 1, so such queries do not arise from the library rankers).
+    // ranking.
     def side(df: DataFrame, out: String) =
       ck.proxy(df.select(col(queryCol), col(idCol),
           col(rankCol).cast("long").as(out))

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Incremental, Similarity}
 import graft.sources.Tables
 
-/** The ANN store's maintenance lifecycle (delete / upsert / compaction)
-  * — the plan- and layout-level assertions q162's oracle can't see. */
+/** The ANN store's maintenance lifecycle (forget / upsert / compaction)
+  * on the shared store verbs — the plan- and layout-level assertions
+  * q162's oracle can't see. */
 class AnnMaintenanceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -19,145 +20,94 @@ class AnnMaintenanceSpec extends AnyFunSuite {
       dim = 64, m = 8, ksub = 16, iters = 1)
     val cents = Similarity.trainCentroidsKMeans(initial, "vec_id",
       "embedding", dim = 64, cells = 4, iters = 1)
-    (emb, initial, model, cents, Similarity.collectCentroids(cents))
+    (emb, initial, model, cents,
+      Incremental.IvfPq(Similarity.collectCentroids(cents), model))
   }
 
-  private def dropAll(table: String): Unit =
-    for (t <- Seq(table, s"${table}_deletes"))
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+  private def drop(table: String): Unit =
+    spark.sql(s"DROP TABLE IF EXISTS $table")
 
-  test("delete is merge-on-read: tombstoned ids vanish from probes " +
-       "with NO store rewrite and no extra shuffle in the probe plan") {
-    val (emb, initial, model, cents, cs) = fixture()
-    val table = "annm_store1"
-    dropAll(table)
+  test("compaction folds replay duplicates, forgotten ids leave every " +
+       "probe with a one-shuffle plan, the cell_id bucket layout " +
+       "survives, and re-forgetting is a no-op for probes") {
+    val (emb, initial, _, _, kind) = fixture()
+    val table = "annm_store2"
+    drop(table)
     try {
-      Incremental.writeAnnStore(initial, "vec_id", "embedding", cs, model,
-        table, numBuckets = 4)
-      val storeFiles = spark.table(table).inputFiles.toSet
-      val delIds = initial.filter($"vec_id" % 5 === 0)
-        .select($"vec_id".as("id"))
-      Incremental.deleteFromAnnStore(spark, delIds, table, numBuckets = 4)
-      // the store's data files are byte-identical — no rewrite happened
-      assert(spark.table(table).inputFiles.toSet == storeFiles)
+      Incremental.writeStore(kind, initial, "vec_id", $"embedding", table,
+        numBuckets = 4)
+      val batch = emb.filter($"vec_id" % 3 === 0)
+      Incremental.appendToStore(kind, batch, "vec_id", $"embedding", table,
+        numBuckets = 4)
+      // replayed append (halt-retry): duplicate rows land in the store
+      Incremental.appendToStore(kind, batch, "vec_id", $"embedding", table,
+        numBuckets = 4)
+      val delIds = initial.filter($"vec_id" % 5 === 0).select($"vec_id".as("id"))
+      Incremental.forgetFromStore(kind, spark, delIds, table, numBuckets = 4)
+      val nInitial = initial.count(); val nBatch = batch.count()
+      val nDel = delIds.count()
+      assert(spark.table(table).count() == nInitial - nDel + 2 * nBatch)
       val q = emb.filter($"vec_id" < 5)
-      val probed = Incremental.annStoreTopK(spark, table, q, "vec_id",
-        "embedding", cs, model, k = 50, nProbe = 4, honorDeletes = true)
+      def probe(k: Int) = Incremental.annStoreTopK(kind, spark, table, q,
+        "vec_id", $"embedding", k = k, nProbe = 4)
+      def keyed(k: Int) = probe(k).collect()
+        .map(r => (r.getLong(0), r.getLong(2)) -> (r.getLong(1), r.getDouble(3)))
+        .toMap
+      // forgotten ids are gone from a deep probe, and the plan's only
+      // shuffle is still the ranking window
       val dels = delIds.as[Long].collect().toSet
-      val neigh = probed.select("neighbor_id").as[Long].collect().toSet
+      val neigh = probe(50).select("neighbor_id").as[Long].collect().toSet
       assert(neigh.nonEmpty && neigh.intersect(dels).isEmpty,
-        s"tombstoned ids surfaced: ${neigh.intersect(dels)}")
-      // plan: the tombstone filter rides a BROADCAST anti-join — the
-      // ranking window's exchange stays the plan's only shuffle
-      val plan = probed.queryExecution.executedPlan.toString
+        s"forgotten ids surfaced: ${neigh.intersect(dels)}")
+      val plan = probe(3).queryExecution.executedPlan.toString
         .split("== Initial Plan ==").head
-      assert(plan.contains("LeftAnti") && plan.contains("Broadcast"),
-        plan.take(1200))
       val shuffles = plan.linesIterator
         .filter(l => l.contains("Exchange") && !l.contains("Broadcast")).size
       assert(shuffles == 1, plan.take(1500))
-    } finally dropAll(table)
-  }
-
-  test("honorDeletes on a FRESH store (no tombstone table yet) probes " +
-       "as if the tombstone set were empty, instead of crashing") {
-    val (emb, initial, model, cents, cs) = fixture()
-    val table = "annm_store_fresh"
-    dropAll(table)
-    try {
-      Incremental.writeAnnStore(initial, "vec_id", "embedding", cs, model,
-        table, numBuckets = 4)
-      val q = emb.filter($"vec_id" < 5)
-      // no deleteFromAnnStore has ever run — `<table>_deletes` does not
-      // exist; the always-honor-deletes service policy must still work
-      val guarded = Incremental.annStoreTopK(spark, table, q, "vec_id",
-        "embedding", cs, model, k = 10, nProbe = 4, honorDeletes = true)
-      val plain = Incremental.annStoreTopK(spark, table, q, "vec_id",
-        "embedding", cs, model, k = 10, nProbe = 4, honorDeletes = false)
-      assert(guarded.collect().toSet == plain.collect().toSet,
-        "empty tombstones must be decision-identical to honorDeletes=false")
-    } finally dropAll(table)
-  }
-
-  test("compaction folds replay duplicates + tombstones, clears the " +
-       "tombstone table, preserves BOTH bucket layouts; a halt between " +
-       "its two writes is a no-op for probes and reconverges") {
-    val (emb, initial, model, cents, cs) = fixture()
-    val table = "annm_store2"
-    dropAll(table)
-    try {
-      Incremental.writeAnnStore(initial, "vec_id", "embedding", cs, model,
-        table, numBuckets = 4)
-      val batch = emb.filter($"vec_id" % 3 === 0)
-      Incremental.appendToAnnStore(batch, "vec_id", "embedding", cs, model,
-        table, numBuckets = 4)
-      // replayed append (halt-retry): duplicate rows land in the store
-      Incremental.appendToAnnStore(batch, "vec_id", "embedding", cs, model,
-        table, numBuckets = 4)
-      val delIds = initial.filter($"vec_id" % 5 === 0).select($"vec_id".as("id"))
-      Incremental.deleteFromAnnStore(spark, delIds, table, numBuckets = 4)
-      val nInitial = initial.count(); val nBatch = batch.count()
-      val nDel = delIds.count()
-      assert(spark.table(table).count() == nInitial + 2 * nBatch)
-      val q = emb.filter($"vec_id" < 5)
-      def probe() = Incremental.annStoreTopK(spark, table, q, "vec_id",
-          "embedding", cs, model, k = 3, nProbe = 4, honorDeletes = true)
-        .collect().map(r => (r.getLong(0), r.getLong(2)) ->
-          (r.getLong(1), r.getDouble(3))).toMap
-      Incremental.compactAnnStore(spark, table, numBuckets = 4)
-      // one row per live id; tombstones cleared; invariants hold
+      Incremental.compactStore(kind, spark, table, numBuckets = 4)
+      // one row per live id; invariants hold
       assert(spark.table(table).count() == nInitial + nBatch - nDel)
-      assert(spark.table(s"${table}_deletes").count() == 0)
-      assert(Incremental.validateAnnStore(spark, table, m = 8))
-      val afterCompact = probe()
-      assert(afterCompact.nonEmpty)
-      // both layouts preserved: probing relies on the cell_id bucket
-      // spec (Spark refuses mixed bucket specs on append — exercise
-      // it), and the tombstone table keeps its id bucketing
-      Incremental.appendToAnnStore(emb.filter($"vec_id" % 101 === 0)
+      assert(Incremental.validateStore(kind, spark, table))
+      assert(keyed(3).nonEmpty)
+      // the layout survives the rewrites: probing relies on the cell_id
+      // bucket spec (Spark refuses mixed bucket specs on append —
+      // exercise it)
+      Incremental.appendToStore(kind, emb.filter($"vec_id" % 101 === 0)
           .select(($"vec_id" + 500000L).as("vec_id"), $"embedding"),
-        "vec_id", "embedding", cs, model, table, numBuckets = 4)
+        "vec_id", $"embedding", table, numBuckets = 4)
       def bucketSpec(t: String) = spark.sql(s"DESCRIBE EXTENDED $t")
         .filter($"col_name".isin("Num Buckets", "Bucket Columns"))
         .select("data_type").as[String].collect().toSeq
       assert(bucketSpec(table) == Seq("4", "[`cell_id`]"), bucketSpec(table))
-      assert(bucketSpec(s"${table}_deletes") == Seq("4", "[`id`]"))
-      // simulate the halt AFTER the store rewrite but BEFORE the
-      // tombstone clear: re-tombstone the already-removed ids. Probes
-      // must not change (the anti-join removes nothing), and a rerun
-      // of compaction converges to the same state
-      val beforeHalt = probe()
-      Incremental.deleteFromAnnStore(spark, delIds, table, numBuckets = 4)
-      assert(probe() == beforeHalt,
-        "pending no-op tombstones changed probe decisions")
-      Incremental.compactAnnStore(spark, table, numBuckets = 4)
-      assert(spark.table(s"${table}_deletes").count() == 0)
-      assert(probe() == beforeHalt)
-    } finally dropAll(table)
+      // a retried forget finds none of its ids: probes must not change
+      val before = keyed(3)
+      Incremental.forgetFromStore(kind, spark, delIds, table, numBuckets = 4)
+      assert(keyed(3) == before, "a no-op forget changed probe decisions")
+    } finally drop(table)
   }
 
   test("upsert replaces changed vectors copy-on-write: re-encoded rows " +
        "win, count is id-stable, store equals a monolithic index over " +
        "the upserted corpus") {
-    val (emb, initial, model, cents, cs) = fixture()
+    val (emb, initial, model, cents, kind) = fixture()
     val table = "annm_store3"
-    dropAll(table)
+    drop(table)
     try {
-      Incremental.writeAnnStore(initial, "vec_id", "embedding", cs, model,
-        table, numBuckets = 4)
+      Incremental.writeStore(kind, initial, "vec_id", $"embedding", table,
+        numBuckets = 4)
       val n0 = spark.table(table).count()
       val ups = initial.filter($"vec_id" % 7 === 0)
         .select($"vec_id", transform($"embedding", x => x * lit(2.0f))
           .as("embedding"))
-      Incremental.upsertAnnStore(spark, ups, "vec_id", "embedding", cs,
-        model, table, numBuckets = 4)
+      Incremental.upsertStore(kind, spark, ups, "vec_id", $"embedding",
+        table, numBuckets = 4)
       assert(spark.table(table).count() == n0) // update, not insert
-      assert(Incremental.validateAnnStore(spark, table, m = 8))
+      assert(Incremental.validateStore(kind, spark, table))
       val logical = initial.join(ups.select("vec_id"), Seq("vec_id"),
         "left_anti").unionByName(ups)
       val q = emb.filter($"vec_id" < 5)
-      val viaStore = Incremental.annStoreTopK(spark, table, q, "vec_id",
-        "embedding", cs, model, k = 3, nProbe = 4)
+      val viaStore = Incremental.annStoreTopK(kind, spark, table, q,
+        "vec_id", $"embedding", k = 3, nProbe = 4)
       val mono = Similarity.ivfPqTopK(logical, q, cents, "vec_id",
         "embedding", model, k = 3, nProbe = 4)
       def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -167,9 +117,9 @@ class AnnMaintenanceSpec extends AnyFunSuite {
       // insert path: an id absent from the store lands as a new row
       val ins = emb.filter($"vec_id" % 101 === 0)
         .select(($"vec_id" + 900000L).as("vec_id"), $"embedding")
-      Incremental.upsertAnnStore(spark, ins, "vec_id", "embedding", cs,
-        model, table, numBuckets = 4)
+      Incremental.upsertStore(kind, spark, ins, "vec_id", $"embedding",
+        table, numBuckets = 4)
       assert(spark.table(table).count() == n0 + ins.count())
-    } finally dropAll(table)
+    } finally drop(table)
   }
 }

@@ -111,7 +111,7 @@ class CheckpointsSpec extends AnyFunSuite {
           col("h"), table, numBuckets = 4)
         materializeAndRelease(Incremental.dedupAgainst(kind,
           Seq(10L -> 1L, 11L -> -1L).toDF("id", "h"), spark.table(table),
-          "id", col("h"), threshold = 0.0,
+          "id", col("h"),
           storeBands = Some(spark.table(s"${table}_bands"))))
       } finally
         for (t <- Seq(table, s"${table}_bands")) spark.sql(s"DROP TABLE IF EXISTS $t")

@@ -372,11 +372,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("incremental edges: empty batch and empty store") {
     val docs = Tables(spark, TestSpark.sf0001, "documents")
     val none = docs.filter($"doc_id" < 0)
-    val kind = Lsh.MinHash()
-    val store = kind.signatures(docs, "doc_id", $"text")
+    val kind = Lsh.MinHash(threshold = 0.6)
+    val store = kind.encode(docs, "doc_id", $"text")
     // first-ever batch (empty store): survivors = within-batch dedup only
-    val emptyStore = kind.signatures(none, "doc_id", $"text")
-    val selfOnly = Incremental.dedupAgainst(kind, docs, emptyStore, "doc_id", $"text", 0.6)
+    val emptyStore = kind.encode(none, "doc_id", $"text")
+    val selfOnly = Incremental.dedupAgainst(kind, docs, emptyStore, "doc_id", $"text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val exactKeep = docs.groupBy(md5($"text")).agg(min($"doc_id").as("doc_id"))
       .select("doc_id")
@@ -387,7 +387,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(selfOnly == ref)
     // empty batch: no rows, no crash
-    assert(Incremental.dedupAgainst(kind, none, store, "doc_id", $"text", 0.6).isEmpty)
+    assert(Incremental.dedupAgainst(kind, none, store, "doc_id", $"text").isEmpty)
   }
 
   test("incremental multi-batch loop with appendToStore == one full recompute") {
@@ -407,12 +407,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .filter($"doc_id" >= s1)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     // production loop: seed store with b1, process b2, append b2, process b3
-    val kind = Lsh.MinHash()
+    val kind = Lsh.MinHash(threshold = 0.6)
     Incremental.writeStore(kind, b1, "doc_id", $"text", "loop_store", 8)
     try {
       def run(b: org.apache.spark.sql.DataFrame) =
         Incremental.dedupAgainst(kind, b, spark.table("loop_store"), "doc_id",
-            $"text", 0.6, storeBands = Some(spark.table("loop_store_bands")))
+            $"text", storeBands = Some(spark.table("loop_store_bands")))
           .select("doc_id").collect().map(_.getLong(0)).toSet
       val r2 = run(b2)
       Incremental.appendToStore(kind, b2, "doc_id", $"text", "loop_store", 8)
@@ -459,9 +459,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val full = exact.join(dropped, Seq("doc_id"), "left_anti")
       .filter($"doc_id" >= split)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val kind = Lsh.MinHash()
+    val kind = Lsh.MinHash(threshold = 0.6)
     val inc = Incremental.dedupAgainst(kind, batch,
-        kind.signatures(store, "doc_id", $"text"), "doc_id", $"text", 0.6)
+        kind.encode(store, "doc_id", $"text"), "doc_id", $"text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(inc == full, s"inc-only=${inc -- full} full-only=${full -- inc}")
     // same result through a materialized bucketed store, and the exact
@@ -475,7 +475,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
       val viaTable = Incremental.dedupAgainst(kind, batch, spark.table("sig_store"),
-          "doc_id", $"text", 0.6,
+          "doc_id", $"text",
           storeBands = Some(spark.table("sig_store_bands")))
         .select("doc_id")
       assert(viaTable.collect().map(_.getLong(0)).toSet == full)
@@ -489,7 +489,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       // the exact-stage anti-join itself runs inside dedupAgainst's eager
       // checkpoint, so assert bucketing on that join shape directly: the
       // store side must read its bucket layout (no store-side exchange)
-      val anti = kind.signatures(batch, "doc_id", $"text")
+      val anti = kind.encode(batch, "doc_id", $"text")
         .join(spark.table("sig_store").select("content_hash"),
           Seq("content_hash"), "left_anti")
       anti.collect()
@@ -524,10 +524,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val full = all.join(dropped, Seq("vec_id"), "left_anti")
       .join(batch.select("vec_id"), Seq("vec_id"), "left_semi")
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val kind = Lsh.Hyperplane()
+    val kind = Lsh.Hyperplane(threshold = 0.95)
     val inc = Incremental.dedupAgainst(kind, batch,
-        kind.signatures(store, "vec_id", $"embedding"),
-        "vec_id", $"embedding", 0.95)
+        kind.encode(store, "vec_id", $"embedding"),
+        "vec_id", $"embedding")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(inc == full, s"inc-only=${inc -- full} full-only=${full -- inc}")
     assert((full -- inc).isEmpty && full.nonEmpty)
@@ -543,7 +543,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
       val viaTable = Incremental.dedupAgainst(kind, batch,
-        spark.table("emb_store"), "vec_id", $"embedding", 0.95,
+        spark.table("emb_store"), "vec_id", $"embedding",
         storeBands = Some(spark.table("emb_store_bands")))
       assert(viaTable.select("vec_id").collect().map(_.getLong(0)).toSet == full)
       val plan = viaTable.queryExecution.explainString(
@@ -670,20 +670,20 @@ class DedupSimilaritySpec extends AnyFunSuite {
       dim = 64, m = 8, ksub = 16, iters = 1)
     val cents = Similarity.trainCentroidsKMeans(initial, "vec_id",
       "embedding", dim = 64, cells = 4, iters = 1)
-    val cs = Similarity.collectCentroids(cents)
+    val kind = Incremental.IvfPq(Similarity.collectCentroids(cents), model)
     // an append's whole computation (route + encode) is zero-exchange —
     // per-batch cost is the batch's own scan plus the bucketed write
-    val encPlan = Incremental.annEncode(emb, "vec_id", "embedding", cs, model)
+    val encPlan = kind.encode(emb, "vec_id", $"embedding")
       .queryExecution.executedPlan.toString
     assert(!encPlan.contains("Exchange"), encPlan.take(800))
-    Incremental.writeAnnStore(initial, "vec_id", "embedding", cs, model,
+    Incremental.writeStore(kind, initial, "vec_id", $"embedding",
       "ann_store", numBuckets = 4)
-    Incremental.appendToAnnStore(emb.filter($"vec_id" % 3 === 0), "vec_id",
-      "embedding", cs, model, "ann_store", numBuckets = 4)
+    Incremental.appendToStore(kind, emb.filter($"vec_id" % 3 === 0), "vec_id",
+      $"embedding", "ann_store", numBuckets = 4)
     try {
       val q = emb.filter($"vec_id" < 5)
-      val viaStore = Incremental.annStoreTopK(spark, "ann_store", q,
-        "vec_id", "embedding", cs, model, k = 3, nProbe = 4)
+      val viaStore = Incremental.annStoreTopK(kind, spark, "ann_store", q,
+        "vec_id", $"embedding", k = 3, nProbe = 4)
       val mono = Similarity.ivfPqTopK(emb, q, cents, "vec_id", "embedding",
         model, k = 3, nProbe = 4)
       def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()

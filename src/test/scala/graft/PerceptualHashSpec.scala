@@ -210,7 +210,7 @@ class PerceptualHashSpec extends AnyFunSuite {
       val expected = ref()
       val got = Seq(batch1, batch2).map { b =>
         val surv = Incremental.dedupAgainst(kind, b.toSeq.toDF("id", "h"),
-            spark.table(table), "id", col("h"), threshold = 0.0,
+            spark.table(table), "id", col("h"),
             storeBands = Some(spark.table(s"${table}_bands")))
           .localCheckpoint(true)
         Incremental.appendToStore(kind, surv, "id", col("h"), table, 4)
@@ -251,7 +251,7 @@ class PerceptualHashSpec extends AnyFunSuite {
         .localCheckpoint(true)
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val survivors = Incremental.dedupAgainst(kind, callerBatch,
-        spark.table(table), "id", col("h"), threshold = 0.0,
+        spark.table(table), "id", col("h"),
         storeBands = Some(spark.table(s"${table}_bands")))
       val surv = survivors.select("id").as[Long].collect().toSet
       assert(surv == Set(11L), s"got $surv") // 10 is ham-1 vs the store
@@ -280,14 +280,14 @@ class PerceptualHashSpec extends AnyFunSuite {
       val emb = Tables(spark, TestSpark.sf0001, "embeddings")
         .filter($"vec_id" < 60)
       // text store
-      val text = Lsh.MinHash()
+      val text = Lsh.MinHash(threshold = 0.6)
       Incremental.writeStore(text, docs, "doc_id", $"text", "fgt_text", 4)
       Incremental.forgetFromStore(text, spark,
         docs.filter($"doc_id" % 7 === 0).select($"doc_id".as("id")),
         "fgt_text", 4)
       assert(Incremental.validateStore(text, spark, "fgt_text"))
       // embedding store
-      val vec = Lsh.Hyperplane()
+      val vec = Lsh.Hyperplane(threshold = 0.95)
       Incremental.writeStore(vec, emb, "vec_id", $"embedding", "fgt_emb", 4)
       Incremental.forgetFromStore(vec, spark,
         emb.filter($"vec_id" % 7 === 0).select($"vec_id".as("id")),
@@ -308,7 +308,7 @@ class PerceptualHashSpec extends AnyFunSuite {
       // is re-admitted; a copy of a REMEMBERED one (h=300) still drops
       val batch = Seq(10L -> 200L, 11L -> 300L).toDF("id", "h")
       val surv = Incremental.dedupAgainst(hash, batch,
-          spark.table("fgt_hash"), "id", col("h"), 0.0,
+          spark.table("fgt_hash"), "id", col("h"),
           Some(spark.table("fgt_hash_bands")))
         .select("id").as[Long].collect().toSet
       assert(surv == Set(10L), s"got $surv")

@@ -90,14 +90,14 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     import graft.operators.{Incremental, Lsh}
     // seed store: doc 1 ("alpha beta gamma")
     val seed = Seq((1L, "alpha beta gamma")).toDF("doc_id", "text")
-    Incremental.writeStore(Lsh.MinHash(), seed, "doc_id", col("text"), "stream_store", 4)
+    Incremental.writeStore(Lsh.MinHash(threshold = 0.9), seed, "doc_id", col("text"), "stream_store", 4)
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     try {
       val input = MemoryStream[(Long, String)]
       val q = input.toDF().toDF("doc_id", "text")
         .writeStream
-        .foreachBatch(Incremental.dedupSink(Lsh.MinHash(), "doc_id", col("text"),
-          "stream_store", 4, threshold = 0.9,
+        .foreachBatch(Incremental.dedupSink(Lsh.MinHash(threshold = 0.9), "doc_id", col("text"),
+          "stream_store", 4,
           emit = (df, _) => got.synchronized {
             got ++= df.select("doc_id").collect().map(_.getLong(0))
           }))
@@ -125,9 +125,8 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.operators.{Incremental, Lsh}
     val emitted = scala.collection.mutable.Map.empty[Long, Seq[Long]]
-    val kind = Lsh.MinHash()
+    val kind = Lsh.MinHash(threshold = 0.9)
     val sink = Incremental.dedupSink(kind, "doc_id", col("text"), "retry_store", 4,
-      threshold = 0.9,
       emit = (df, bid) => emitted.synchronized {
         emitted(bid) = df.select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
       })
@@ -157,14 +156,14 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       val again = Incremental.dedupAgainst(kind,
           Seq((30L, "delta epsilon zeta"), (31L, "pi rho sigma"))
             .toDF("doc_id", "text"),
-          spark.table("retry_store"), "doc_id", col("text"), 0.9,
+          spark.table("retry_store"), "doc_id", col("text"),
           storeBands = Some(spark.table("retry_store_bands")))
         .select("doc_id").collect().map(_.getLong(0)).toSeq
       assert(again == Seq(31L), again.toString)
       // partial append simulated: a batch lands in the store but not in
       // _bands → validateStore flags it, rebuildBands recovers
       graft.sources.ParquetSink.bucketed(
-        kind.signatures(Seq((40L, "tau upsilon phi")).toDF("doc_id", "text"),
+        kind.encode(Seq((40L, "tau upsilon phi")).toDF("doc_id", "text"),
           "doc_id", col("text")),
         "retry_store", Seq("content_hash"), 4,
         mode = org.apache.spark.sql.SaveMode.Append)
@@ -182,9 +181,9 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     import graft.operators.{Incremental, Lsh}
     def v(x: Float, y: Float): Array[Float] = Array(x, y) ++ Array.fill(6)(0.0f)
     val emitted = scala.collection.mutable.Map.empty[Long, Seq[Long]]
-    val kind = Lsh.Hyperplane()
+    val kind = Lsh.Hyperplane(threshold = 0.95)
     val sink = Incremental.dedupSink(kind, "vec_id", col("embedding"),
-      "eretry_store", 4, threshold = 0.95,
+      "eretry_store", 4,
       emit = (df, bid) => emitted.synchronized {
         emitted(bid) = df.select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
       })
@@ -215,7 +214,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       val again = Incremental.dedupAgainst(kind,
           Seq((30L, v(0.0f, 7.0f)), (31L, v(1.0f, -1.0f)))
             .toDF("vec_id", "embedding"),
-          spark.table("eretry_store"), "vec_id", col("embedding"), 0.95,
+          spark.table("eretry_store"), "vec_id", col("embedding"),
           storeBands = Some(spark.table("eretry_store_bands")))
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       assert(again == Seq(31L), again.toString)
@@ -223,7 +222,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       // validateStore flags it, the rebuild (hyperplane band
       // derivation) recovers
       graft.sources.ParquetSink.bucketed(
-        kind.signatures(
+        kind.encode(
           Seq((40L, v(3.0f, 3.0f))).toDF("vec_id", "embedding"),
           "vec_id", col("embedding")),
         "eretry_store", Seq("id"), 4,
@@ -243,7 +242,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     import graft.operators.{Incremental, Lsh}
     def v(x: Float, y: Float): Array[Float] = Array(x, y) ++ Array.fill(6)(0.0f)
     // seed store: one unit vector along e1
-    Incremental.writeStore(Lsh.Hyperplane(),
+    Incremental.writeStore(Lsh.Hyperplane(threshold = 0.95),
       Seq((1L, v(1.0f, 0.0f))).toDF("vec_id", "embedding"),
       "vec_id", col("embedding"), "estream_store", 4)
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -251,8 +250,8 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       val input = MemoryStream[(Long, Array[Float])]
       val q = input.toDF().toDF("vec_id", "embedding")
         .writeStream
-        .foreachBatch(Incremental.dedupSink(Lsh.Hyperplane(), "vec_id",
-          col("embedding"), "estream_store", 4, threshold = 0.95,
+        .foreachBatch(Incremental.dedupSink(Lsh.Hyperplane(threshold = 0.95), "vec_id",
+          col("embedding"), "estream_store", 4,
           emit = (df, _) => got.synchronized {
             got ++= df.select("vec_id").collect().map(_.getLong(0))
           }))

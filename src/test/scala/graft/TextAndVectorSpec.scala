@@ -417,6 +417,13 @@ class TextAndVectorSpec extends AnyFunSuite {
       depth = 3, p = 0.5).collect().head
     assert(r3.getAs[Double]("rbo") == 0.0 &&
       r3.getAs[Long]("n_shared") == 0L)
+    // a query whose rows all rank below the depth emits no row
+    val deep = run(Seq((2L, 1L, 4L), (2L, 2L, 5L)))
+    val r4 = Retrieval.rankBiasedOverlap(a.unionByName(deep),
+      b.unionByName(deep), "query_id", "id", "rank", depth = 3, p = 0.5)
+      .collect()
+    assert(r4.map(_.getAs[Long]("query_id")).toSeq == Seq(1L) &&
+      r4.head.getAs[Double]("rbo") == 0.375)
     // symmetry on real ranked lists (RBO(A,B) == RBO(B,A))
     val docs = Tables(spark, TestSpark.sf0001, "documents")
     val probes = Seq((1L, Seq("hash", "filter")), (2L, Seq("window")))
