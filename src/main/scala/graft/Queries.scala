@@ -62,6 +62,14 @@ object Queries {
     dir
   }
 
+  /** Read back the `batch_<id>` directories a `foreachBatch` emitter
+    * wrote under `outDir`. The directory is read with recursive lookup,
+    * not through a glob over its children: Spark's file-stream-sink
+    * metadata probe takes a glob as a literal path and logs a
+    * `FileNotFoundException` trace for it. */
+  private def readEmittedBatches(s: SparkSession, outDir: String): DataFrame =
+    s.read.option("recursiveFileLookup", "true").parquet(outDir)
+
   /** Stage `df` as ONE parquet file at `srcDir/name.parquet` with a
     * pinned mtime — the file-stream fixture shared by the streaming
     * oracles (q68/q79/q89): under maxFilesPerTrigger=1 the file source
@@ -1763,7 +1771,7 @@ object Queries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         query.awaitTermination()
-        s.read.parquet(s"$out/*").select(col("doc_id"))
+        readEmittedBatches(s, out).select(col("doc_id"))
       },
       Some(s"""WITH t AS (SELECT doc_id, md5(text) AS h, $ShinglesSql AS sh,
               |  CASE WHEN doc_id % 3 <> 0 THEN 0
@@ -2192,7 +2200,7 @@ object Queries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         query.awaitTermination()
-        s.read.parquet(s"$out/*").select(col("vec_id"))
+        readEmittedBatches(s, out).select(col("vec_id"))
       },
       Some("""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
              |            FROM embeddings),
@@ -2692,7 +2700,7 @@ object Queries {
           "store/bands diverged after maintenance")
         stageStreamFile(batchB, src, "batch_b", now - 60000)
         runStream() // checkpoint resume: batch B only, maintained store
-        s.read.parquet(s"$out/*").select(col("vec_id"))
+        readEmittedBatches(s, out).select(col("vec_id"))
       },
       Some("""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
              |            FROM embeddings),
@@ -3026,7 +3034,7 @@ object Queries {
         stageStreamFile(streamed.filter(expr("(doc_id div 3) % 2 = 1")), src,
           "batch_b", now - 60000)
         runStream() // checkpoint resume: batch B only, maintained store
-        s.read.parquet(s"$out/*").select(col("doc_id"))
+        readEmittedBatches(s, out).select(col("doc_id"))
       },
       Some(s"""WITH t AS (SELECT doc_id, md5(text) AS h, $ShinglesSql AS sh,
               |  CASE WHEN doc_id % 3 <> 0 THEN 0
@@ -7115,7 +7123,7 @@ object Queries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         query.awaitTermination()
-        s.read.parquet(s"$out/*").select(col("doc_id"), col("batch"))
+        readEmittedBatches(s, out).select(col("doc_id"), col("batch"))
       },
       Some(s"""$BloomScreenCtes,
            |hit AS (SELECT doc_id FROM tp JOIN bits USING (pos)

@@ -61,21 +61,29 @@ object Relational {
       .drop("__lst")
   }
 
-  /** Single-pass multi-metric DQ snapshot: one scan, one hash-agg row
-    * (ref A5, glue DQ block). `approxDistinct` switches between exact
-    * countDistinct (oracle-comparable) and HLL++ approx (the scalable
-    * default for high-cardinality keys at 100 TB). */
-  def dqSnapshot(df: DataFrame, dataset: String,
-                 nullishCols: Seq[String], numericCols: Seq[String],
-                 distinctCols: Seq[String], approxDistinct: Boolean = true): DataFrame = {
+  /** The DQ metric columns (ref A5, glue DQ block): row count, nullish
+    * count per `nullishCols`, min/max per `numericCols`, distinct count per
+    * `distinctCols`. `approxDistinct` switches between exact countDistinct
+    * (oracle-comparable) and HLL++ approx (the scalable default for
+    * high-cardinality keys at 100 TB). With `approxDistinct` the columns
+    * also work as `Dataset.observe` metrics, which reject DISTINCT. */
+  def dqMetrics(nullishCols: Seq[String], numericCols: Seq[String],
+                distinctCols: Seq[String], approxDistinct: Boolean = true): Seq[Column] = {
     import graft.functions.Clean
-    val exprs: Seq[Column] =
-      Seq(count(lit(1)).as("row_count")) ++
+    Seq(count(lit(1)).as("row_count")) ++
       nullishCols.map(c => sum(when(Clean.isNullish(col(c)), 1L).otherwise(0L)).as(s"null_$c")) ++
       numericCols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) ++
       distinctCols.map(c =>
         (if (approxDistinct) approx_count_distinct(col(c)) else countDistinct(col(c)))
           .as(s"distinct_$c"))
+  }
+
+  /** Single-pass multi-metric DQ snapshot: [[dqMetrics]] over `df` in one
+    * scan, one hash-agg row, tagged with `dataset`. */
+  def dqSnapshot(df: DataFrame, dataset: String,
+                 nullishCols: Seq[String], numericCols: Seq[String],
+                 distinctCols: Seq[String], approxDistinct: Boolean = true): DataFrame = {
+    val exprs = dqMetrics(nullishCols, numericCols, distinctCols, approxDistinct)
     df.agg(exprs.head, exprs.tail: _*).withColumn("dataset", lit(dataset))
   }
 }

@@ -1,10 +1,10 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analytics.{ImdbSchemas, ImdbTransforms, ImdbMarts}
-import graft.operators.Checkpoints
+import graft.operators.{Checkpoints, Relational}
 import graft.quality.Expectations
 import graft.quality.Expectations.dsl._
 import graft.sources.{ParquetSink, TsvSource}
@@ -14,6 +14,26 @@ import graft.sources.{ParquetSink, TsvSource}
   * `ingest → transform(movies|episodes|seasons|dq) → validate → publish`.
   * Airflow/Glue/Athena process boundaries collapse into method calls; the
   * Spark driver/executor boundary (#5) remains.
+  *
+  * One run, in phase order (a phase starts once the previous one ends):
+  *  - facts: the movie-facts write runs side by side with the
+  *    episode-facts write followed by the season-summary write (the two
+  *    lineages share no table), then the three `_LATEST` pointers move.
+  *    Each write carries its DQ metrics as a `Dataset.observe`, so no
+  *    lineage is evaluated twice.
+  *  - DQ: the three observed snapshots become one `analytics_quality`
+  *    append.
+  *  - gates: the smoke count (X4) and the GE gate on the published movie
+  *    slice, read back as `run_date=<runDate>` with `basePath` so no read
+  *    lists the table's history; then the GE gate on the cached episode
+  *    facts.
+  *  - marts: the two mart writes run side by side.
+  *  - dbt probes: the movie facts view over the published slice, and the
+  *    new trends mart slice read back the same way.
+  *
+  * A branch that throws fails the run once its sibling has finished, so
+  * no gate runs on half-written facts and no mart is published past a
+  * failed gate.
   *
   *  - X2: runDate propagation (explicit arg, UTC-today fallback)
   *  - X4: smoke gate — new run_date slice must have ≥ minRows
@@ -57,7 +77,7 @@ final class Runner(spark: SparkSession, rawDir: String, outDir: String) {
     val akas = raw("title_akas", ImdbSchemas.titleAkas)
     val episode = raw("title_episode", ImdbSchemas.titleEpisode)
 
-    // transform — episodes feed two consumers (seasons + DQ): cache the
+    // transform — episodes feed seasons, the GE gate and a mart: cache the
     // lineage once instead of the reference's triple recompute (SURVEY §4)
     val movies = ImdbTransforms.movieFacts(basics, ratings, crew, principals,
       names, akas, runDate)
@@ -65,34 +85,48 @@ final class Runner(spark: SparkSession, rawDir: String, outDir: String) {
       ratings, principals, names, runDate))
     val seasons = ImdbTransforms.seasonSummary(episodes)
 
-    ParquetSink.append(movies, s"$outDir/analytics_movie_facts_v2",
-      Seq("run_date", "decade", "genre"))                                 // S2
-    ParquetSink.append(episodes, s"$outDir/analytics_episode_facts_v2",
-      Seq("run_date", "series_decade", "seasonNumber"))
-    ParquetSink.append(seasons, s"$outDir/series_season_summary_v2",
-      Seq("run_date", "series_decade"))
+    // DQ snapshots (one-row aggs, S3/A5) observed on the fact writes —
+    // movies measured post-explode, matching the reference's grain choice
+    // (SURVEY §7.4.1)
+    val movieDq = new Runner.ObservedDq(movies, "movies",
+      Seq("primaryTitle"), Seq("averageRating", "numVotes"), Seq("tconst"))
+    val episodeDq = new Runner.ObservedDq(episodes, "episodes",
+      Seq("episodeTitle"), Seq("averageRating", "seasonNumber"), Seq("tconst", "seriesId"))
+    val seasonDq = new Runner.ObservedDq(seasons, "seasons",
+      Seq("seriesTitle"), Seq("avgSeasonRating"), Seq("seriesId"))
+
+    Runner.concurrently(
+      ParquetSink.append(movieDq.observed, s"$outDir/analytics_movie_facts_v2",
+        Seq("run_date", "decade", "genre")),                              // S2
+      {
+        ParquetSink.append(episodeDq.observed, s"$outDir/analytics_episode_facts_v2",
+          Seq("run_date", "series_decade", "seasonNumber"))
+        ParquetSink.append(seasonDq.observed, s"$outDir/series_season_summary_v2",
+          Seq("run_date", "series_decade"))
+      })
     // materialized latest pointers (ref imdb_raw_ingest.py:199-200's
     // latest/ copy): helper-less readers address the newest slice directly
     Seq("analytics_movie_facts_v2", "analytics_episode_facts_v2",
       "series_season_summary_v2").foreach(t =>
       ParquetSink.writeLatestPointer(s"$outDir/$t", runDate))
 
-    // DQ snapshots (one-row aggs, S3/A5) — movies measured post-explode,
-    // matching the reference's grain choice (SURVEY §7.4.1)
-    val dq = Seq(
-      graft.operators.Relational.dqSnapshot(movies, "movies",
-        Seq("primaryTitle"), Seq("averageRating", "numVotes"), Seq("tconst")),
-      graft.operators.Relational.dqSnapshot(episodes, "episodes",
-        Seq("episodeTitle"), Seq("averageRating", "seasonNumber"), Seq("tconst", "seriesId")),
-      graft.operators.Relational.dqSnapshot(seasons, "seasons",
-        Seq("seriesTitle"), Seq("avgSeasonRating"), Seq("seriesId")))
-      .map(_.withColumn("run_date", lit(runDate)))
+    val dq = Seq(movieDq, episodeDq, seasonDq)
+      .map(_.snapshot.withColumn("run_date", lit(runDate)))
       .reduce(_.unionByName(_, allowMissingColumns = true))               // O3
     ParquetSink.append(dq, s"$outDir/analytics_quality", Seq("dataset", "run_date"))
 
+    // the run's own slice, read by path so no gate lists the history; a
+    // table with no rows for the day has no slice directory
+    def newSlice(table: String): DataFrame = {
+      val root = s"$outDir/$table"
+      val slice = s"$root/run_date=$runDate"
+      if (new java.io.File(slice).isDirectory)
+        spark.read.option("basePath", root).parquet(slice)
+      else spark.read.parquet(root).filter(col("run_date") === runDate)
+    }
+
     // smoke gate (X4): the new slice must be non-trivially populated
-    val published = spark.read.parquet(s"$outDir/analytics_movie_facts_v2")
-      .filter(col("run_date") === runDate)
+    val published = newSlice("analytics_movie_facts_v2")
     val smokeCount = published.count()
     require(smokeCount >= minRows, s"smoke gate: $smokeCount < $minRows rows")
 
@@ -114,12 +148,13 @@ final class Runner(spark: SparkSession, rawDir: String, outDir: String) {
 
     // publish marts — idempotent slice reload (I4)
     val mfv = ImdbMarts.movieFactsView(published)
-    ParquetSink.overwriteSlices(ImdbMarts.topMoviesByGenre(mfv)
-        .withColumn("run_date", lit(runDate)),
-      s"$outDir/marts_top_movies_by_genre", Seq("run_date"))
-    ParquetSink.overwriteSlices(ImdbMarts.episodeSeasonTrends(episodes)
-        .withColumn("run_date", lit(runDate)),
-      s"$outDir/marts_episode_season_trends", Seq("run_date"))
+    Runner.concurrently(
+      ParquetSink.overwriteSlices(ImdbMarts.topMoviesByGenre(mfv)
+          .withColumn("run_date", lit(runDate)),
+        s"$outDir/marts_top_movies_by_genre", Seq("run_date")),
+      ParquetSink.overwriteSlices(ImdbMarts.episodeSeasonTrends(episodes)
+          .withColumn("run_date", lit(runDate)),
+        s"$outDir/marts_episode_season_trends", Seq("run_date")))
 
     Seq("marts_top_movies_by_genre", "marts_episode_season_trends").foreach(t =>
       ParquetSink.writeLatestPointer(s"$outDir/$t", runDate))
@@ -127,9 +162,9 @@ final class Runner(spark: SparkSession, rawDir: String, outDir: String) {
     // dbt-test layer (§5.4): probes bind to the DECLARED relations (ref
     // imdb_analytics/models/schema.yml:3-17 — marts_movie_facts_view
     // {tconst, averageRating} and marts_episode_season_trends
-    // {seasonNumber}), not their upstream inputs
-    Runner.dbtNotNullProbes(mfv,
-      spark.read.parquet(s"$outDir/marts_episode_season_trends"))
+    // {seasonNumber}), not their upstream inputs; the trends probe checks
+    // the latest-run mart, which is this run's slice
+    Runner.dbtNotNullProbes(mfv, newSlice("marts_episode_season_trends"))
 
     val report = RunReport(runDate, smokeCount, statuses.toMap)
     Manifest.write(s"$outDir/_manifests/$runDate", report)                // S6
@@ -149,6 +184,51 @@ object Runner {
     Expectations.assertAll(movieFactsView,
       Seq(notNull("tconst"), notNull("averageRating")))
     Expectations.assertAll(seasonTrends, Seq(notNull("seasonNumber")))
+  }
+
+  /** Runs `left` and `right` side by side, each on a fresh thread, and
+    * returns once both have finished; a failure is rethrown only then
+    * (the left one first, the right one attached as suppressed). Fresh
+    * threads rather than a pool: a thread copies Spark's inheritable
+    * local properties when it is created, so a pooled thread made inside
+    * a SQL execution would carry a stale `spark.sql.execution.id`. */
+  private[pipeline] def concurrently(left: => Unit, right: => Unit): Unit = {
+    val branches = Seq(() => left, () => right)
+    val failed = new Array[Throwable](branches.size)
+    val threads = branches.zipWithIndex.map { case (branch, i) =>
+      new Thread(() => try branch() catch { case e: Throwable => failed(i) = e },
+        s"runner-branch-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    failed.filter(_ != null) match {
+      case Array() => ()
+      case errors =>
+        errors.tail.foreach(errors.head.addSuppressed)
+        throw errors.head
+    }
+  }
+
+  /** A DQ snapshot observed on the one action run over [[observed]]
+    * instead of aggregated in a second pass over `df`'s lineage. */
+  private final class ObservedDq(df: DataFrame, dataset: String,
+      nullishCols: Seq[String], numericCols: Seq[String], distinctCols: Seq[String]) {
+    private val metrics = Relational.dqMetrics(nullishCols, numericCols, distinctCols)
+    private val observation = Observation()
+
+    /** `df` carrying the metrics; run exactly one action on it. */
+    val observed: DataFrame = df.observe(observation, metrics.head, metrics.tail: _*)
+
+    /** The row `Relational.dqSnapshot(df, dataset, …)` computes, built from
+      * the observed values once the action on [[observed]] is done. Its
+      * schema is `df.agg`'s, which analysis resolves without a job. */
+    def snapshot: DataFrame = {
+      val schema = df.agg(metrics.head, metrics.tail: _*).schema
+      val values = observation.get
+      df.sparkSession.createDataFrame(
+        java.util.List.of(Row.fromSeq(schema.fieldNames.toSeq.map(values))), schema)
+        .withColumn("dataset", lit(dataset))
+    }
   }
 }
 

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.analytics.{ImdbMarts, ImdbSchemas, ImdbTransforms}
+import graft.operators.Relational
 import graft.pipeline.Runner
 import graft.sources.TsvSource
 
@@ -197,6 +198,20 @@ class ImdbPipelineSpec extends AnyFunSuite {
     // DQ table has one row per dataset
     val dq = spark.read.parquet(s"$outDir/analytics_quality")
     assert(dq.select("dataset").distinct().count() == 3)
+    // the DQ observed on the fact writes equals dqSnapshot over the facts
+    Seq(
+      Relational.dqSnapshot(movies, "movies",
+        Seq("primaryTitle"), Seq("averageRating", "numVotes"), Seq("tconst")),
+      Relational.dqSnapshot(episodes, "episodes",
+        Seq("episodeTitle"), Seq("averageRating", "seasonNumber"), Seq("tconst", "seriesId")),
+      Relational.dqSnapshot(seasons, "seasons",
+        Seq("seriesTitle"), Seq("avgSeasonRating"), Seq("seriesId"))).foreach { snap =>
+      val want = snap.head()
+      val got = dq.filter(col("dataset") === want.getAs[String]("dataset") &&
+          col("run_date") === "20240101")
+        .select(snap.columns.map(col).toSeq: _*).collect()
+      assert(got.toSeq == Seq(want))
+    }
 
     // second run: unchanged sources detected, new slice appended
     val report2 = runner.run(Some("20240102"), minRows = 4)
@@ -214,6 +229,61 @@ class ImdbPipelineSpec extends AnyFunSuite {
     val report3 = runner.run(Some("20240103"), minRows = 4,
       validationSampleRate = Some(0.5))
     assert(report3.movieFactRows == 4)
+  }
+
+  /** A copy of the fixture's raw directory with `edit` applied to one table. */
+  private def rawDirWith(table: String)(edit: String => String): String = {
+    val dir = Files.createTempDirectory("imdb_raw_edit")
+    new java.io.File(rawDir).listFiles().foreach { f =>
+      val text = Files.readString(f.toPath)
+      Files.writeString(dir.resolve(f.getName),
+        if (f.getName == s"$table.tsv") edit(text) else text)
+    }
+    dir.toString
+  }
+
+  private def exists(path: String) = new java.io.File(path).exists()
+
+  test("pipeline runner: a failed GE gate throws after facts and DQ are published, before any mart") {
+    // m2's runtime 0 fails runtimeMinutes >= 1 on 1 of 4 rows (mostly 0.98)
+    val raw = rawDirWith("title_basics")(_.replace("2001\t\\N\t\\N", "2001\t\\N\t0"))
+    val outDir = Files.createTempDirectory("imdb_out_ge").toString
+    val e = intercept[IllegalArgumentException] {
+      new Runner(spark, raw, outDir).run(Some("20240101"), minRows = 4)
+    }
+    assert(e.getMessage.contains("runtimeMinutes"))
+    Seq("analytics_movie_facts_v2", "analytics_episode_facts_v2", "series_season_summary_v2",
+      "analytics_quality/dataset=movies", "analytics_quality/dataset=episodes",
+      "analytics_quality/dataset=seasons").foreach { t =>
+      assert(exists(s"$outDir/$t/run_date=20240101"), t)
+    }
+    Seq("marts_top_movies_by_genre", "marts_episode_season_trends").foreach { t =>
+      assert(!exists(s"$outDir/$t/run_date=20240101"), t)
+    }
+    assert(!exists(s"$outDir/_manifests/20240101/_SUCCESS"))
+  }
+
+  test("pipeline runner: a failed movie-facts write throws only after the episode branch wrote") {
+    val outDir = Files.createTempDirectory("imdb_out_fail").toString
+    // a regular file where the movie-facts table root belongs
+    Files.writeString(java.nio.file.Paths.get(outDir, "analytics_movie_facts_v2"), "not a table")
+    intercept[Exception] {
+      new Runner(spark, rawDir, outDir).run(Some("20240101"), minRows = 4)
+    }
+    assert(exists(s"$outDir/analytics_episode_facts_v2/run_date=20240101"))
+    assert(exists(s"$outDir/series_season_summary_v2/run_date=20240101"))
+    assert(!exists(s"$outDir/analytics_quality"))
+    assert(!exists(s"$outDir/marts_top_movies_by_genre"))
+  }
+
+  test("pipeline runner: rerunning a run_date reports the rows of the slice on disk") {
+    val outDir = Files.createTempDirectory("imdb_out_rerun").toString
+    val runner = new Runner(spark, rawDir, outDir)
+    assert(runner.run(Some("20240101"), minRows = 4).movieFactRows == 4)
+    // facts append, so the rerun's slice holds both copies
+    assert(runner.run(Some("20240101"), minRows = 4).movieFactRows == 8)
+    assert(spark.read.parquet(s"$outDir/analytics_movie_facts_v2/run_date=20240101")
+      .count() == 8)
   }
 
   test("ingest control triple: decision matches the reference's HEAD compare") {

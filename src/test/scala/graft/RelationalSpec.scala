@@ -61,6 +61,19 @@ class RelationalSpec extends AnyFunSuite {
     assert(row.getAs[Long]("null_s") == 2L)
     assert(row.getAs[Int]("min_n") == 1 && row.getAs[Int]("max_n") == 4)
     assert(row.getAs[Long]("distinct_s") == 3L) // countDistinct ignores null
+
+    // second input: the same frame written through observed dqMetrics
+    // yields the aggregated row, approx_count_distinct included
+    val metrics = Relational.dqMetrics(Seq("s"), Seq("n"), Seq("s", "n"))
+    val obs = org.apache.spark.sql.Observation()
+    val dir = java.nio.file.Files.createTempDirectory("dq_observed").resolve("t")
+    df.observe(obs, metrics.head, metrics.tail: _*).write.parquet(dir.toString)
+    val agg = Relational.dqSnapshot(df, "t", Seq("s"), Seq("n"), Seq("s", "n")).head()
+    val aggregated = agg.getValuesMap[Any](agg.schema.fieldNames.filter(_ != "dataset"))
+    assert(aggregated.keySet == Set("row_count", "null_s", "min_n", "max_n",
+      "distinct_s", "distinct_n"))
+    assert(obs.get == aggregated)
+    assert(spark.read.parquet(dir.toString).count() == 4L)
   }
 
   test("sessionize splits at gap and aggregates") {
