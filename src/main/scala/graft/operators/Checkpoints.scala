@@ -39,9 +39,8 @@ import org.apache.spark.storage.StorageLevel
   * or one in a tuple or case class) no longer reads; on an exception it
   * frees them all. Checkpoint blocks are unpersisted at once (a
   * `Dataset.unpersist` would not free them; they belong to the RDD), and
-  * shared persists leave the CacheManager. `scope.release(t)` frees
-  * superseded loop state early, at the point the next round has
-  * materialized; it does nothing for a table the scope does not own.
+  * shared persists leave the CacheManager. An iterative body runs its
+  * rounds on [[Scope.iterate]], which frees superseded loop state early.
   *
   * Hand-off. Owned tables the result still reads pass to the caller,
   * and [[release]] on the result, once it is materialized, is the one
@@ -92,8 +91,44 @@ object Checkpoints {
       df
     }
 
+    /** The round driver of every iterative operator. Round `r` (from 0)
+      * calls `step(state, r)`, which returns the next state's lazy plan,
+      * or `None` to stop; the driver materializes that plan with `keep`
+      * (a kind of this scope) and it becomes the state of round `r + 1`.
+      * Returns the last state and the number of states kept.
+      *
+      * Release rule: only AFTER `keep` has materialized the next state
+      * does the driver free the superseded state and every table the
+      * step materialized for itself — a local checkpoint cannot
+      * recompute, so the next state's materialization may still read
+      * them. A stopping round frees its own tables at once. So storage
+      * stays one state generation deep however many rounds run. An
+      * `init` the scope does not own, like any unowned table, is left
+      * alone; an exception frees everything, as [[scoped]] does. Stride,
+      * round cap and convergence are the step's: it folds several lazy
+      * iterations into one plan, throws, or returns `None`. */
+    def iterate(init: DataFrame, keep: DataFrame => DataFrame)(
+        step: (DataFrame, Int) => Option[DataFrame]): (DataFrame, Int) = {
+      @annotation.tailrec
+      def loop(state: DataFrame, round: Int): (DataFrame, Int) = {
+        val mark = owned.length
+        val plan = step(state, round)
+        val own = owned.drop(mark).map(_.df).toSeq
+        plan match {
+          case None =>
+            own.foreach(release)
+            (state, round)
+          case Some(p) =>
+            val next = keep(p)
+            (state +: own).foreach(release)
+            loop(next, round + 1)
+        }
+      }
+      loop(init, 0)
+    }
+
     /** Free `df` now if this scope owns it; otherwise do nothing. */
-    def release(df: DataFrame): Unit = {
+    private def release(df: DataFrame): Unit = {
       val i = owned.indexWhere(_.df eq df)
       if (i >= 0) owned.remove(i).free()
     }

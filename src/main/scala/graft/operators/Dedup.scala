@@ -1183,10 +1183,10 @@ object Dedup {
     * the materialized blocks — every round stays O(1) to plan. On a
     * cluster with executor churn, prefer `sparkContext.setCheckpointDir`
     * + reliable `checkpoint()` for the same truncation with HDFS-backed
-    * blocks. Every superseded round's checkpoint is released as soon as
-    * the next round materializes, so block-manager state stays O(1) in
-    * rounds. The returned labels are one checkpointed node-grain table,
-    * handed to the caller ([[Checkpoints]]). */
+    * blocks. Rounds run on [[Checkpoints.Scope.iterate]], whose release
+    * rule keeps block-manager state O(1) in rounds. The returned labels
+    * are one checkpointed node-grain table, handed to the caller
+    * ([[Checkpoints]]). */
   def connectedComponents(pairs: DataFrame, idACol: String = "id_a",
                           idBCol: String = "id_b", maxRounds: Int = 50): DataFrame =
     connectedComponentsWithRounds(pairs, idACol, idBCol, maxRounds)._1
@@ -1209,9 +1209,9 @@ object Dedup {
       pairs.select(greatest(a, b).as("u"), least(a, b).as("v"))
         .distinct())
     // down-edges (larger -> smaller); self-pairs drop here and resurface
-    // as singleton components in the final node join
-    var edges = canon.filter(col("u") =!= col("v"))
-
+    // as singleton components in the final node join. Round 0's edge
+    // set is a filter over canon, which the scope does not free early.
+    //
     // Per-round node stats, ONE aggregate over the symmetrized edges that
     // serves BOTH the large-star min computation and the convergence
     // probe. In a canonical down-edge set every smaller neighbor of n is
@@ -1223,18 +1223,18 @@ object Dedup {
     // table, no extra pass over the edge set (the naive version cost two
     // full-edge jobs per round: a groupBy-countDistinct plus a
     // self-join — ~2 extra edge passes per round at 100 TB).
-    var round = 0
-    var converged = false
-    while (!converged) {
+    val (edges, rounds) = ck.iterate(canon.filter(col("u") =!= col("v")),
+        ck.dataGrain) { (edges, round) =>
       val sym = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
       val stats = ck.proxy(sym.groupBy("u").agg(
           min(col("v")).as("mn"),
           countDistinct(when(col("v") < col("u"), col("v"))).as("nds"),
           max((col("v") > col("u")).cast("int")).as("hl")))
-      converged = stats
+      val converged = stats
         .filter(col("nds") > 1 || (col("nds") >= 1 && col("hl") === 1))
         .isEmpty
-      if (!converged) {
+      if (converged) None
+      else {
         if (round >= maxRounds)
           throw new IllegalArgumentException(
             s"connectedComponents did not converge in $maxRounds star rounds - " +
@@ -1249,19 +1249,12 @@ object Dedup {
         // small-star over the now-directed down-edges: each node's smaller
         // neighbors flatten under its minimum, plus the node itself.
         val ssMin = lsEdges.groupBy("u").agg(min(col("v")).as("m"))
-        val next = ck.dataGrain(
-          lsEdges.join(ssMin, Seq("u"))
-            .filter(col("v") =!= col("m"))
-            .select(col("v").as("u"), col("m").as("v"))
-            .unionAll(ssMin.select(col("u"), col("m").as("v")))
-            .distinct())
-        // round 0's edge set is a filter over canon, which the scope
-        // does not release here; later rounds free their own checkpoint
-        ck.release(edges)
-        edges = next
-        round += 1
+        Some(lsEdges.join(ssMin, Seq("u"))
+          .filter(col("v") =!= col("m"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .unionAll(ssMin.select(col("u"), col("m").as("v")))
+          .distinct())
       }
-      ck.release(stats)
     }
     // star edges ARE the labels for non-root nodes; roots and singleton
     // (self-pair-only) nodes map to themselves via the left join
@@ -1270,7 +1263,7 @@ object Dedup {
     val labels = ck.proxy(nodes
       .join(edges.select(col("u").as("id"), col("v").as("rep")), Seq("id"), "left")
       .select(col("id"), coalesce(col("rep"), col("id")).as("rep")))
-    (labels, round)
+    (labels, rounds)
   }
 
   /** 64-bit SimHash over the token multiset: bit b of the output is the

@@ -14,11 +14,9 @@ import org.apache.spark.sql.functions._
   * (keyed by src) and ONE aggregate back to node grain (keyed by dst);
   * both exchanges carry ids and doubles, never payloads, and the edge
   * table's partitioning is reusable across iterations. Ranks are
-  * checkpointed per iteration (the [[Dedup]]-connected-components
-  * discipline) so lineage stays one iteration deep instead of
-  * replanning the whole chain each round, and every SUPERSEDED
-  * iteration's checkpoint is released the moment the next vector
-  * materializes — block-manager storage stays O(1) in `iters`
+  * checkpointed per round of [[Checkpoints.Scope.iterate]], so lineage
+  * stays a round deep instead of replanning the whole chain, and the
+  * driver's release rule keeps block-manager storage O(1) in `iters`
   * (spec-asserted). The RESULT is itself one checkpointed node-grain
   * vector, handed to the caller ([[Checkpoints]]).
   */
@@ -112,51 +110,47 @@ object Graph {
     val teleTerm: Column =
       if (seeds.isEmpty) lit((1.0 - damping) / n)
       else lit(1.0 - damping) * col("t")
-    // pr₀ = t: lazy — the first iteration reads it off the tele/node
-    // checkpoint; a dedicated pr₀ copy job buys nothing.
-    // Iteration checkpoints run at STRIDE 2 on dangling-FREE graphs
-    // (each checkpoint job then computes two joined steps — half the
-    // materialization jobs for the same shuffles, values bit-identical
-    // because a checkpoint never changes arithmetic); dangling graphs
-    // keep stride 1 — their dm sub-aggregate re-reads pr, and a lazy
-    // pr would recompute the previous step once per reference.
-    var pr = tele.select(col("node"), col("t").as("pr"))
-    var lastCk = pr
-    var depth = 0
-    for (i <- 0 until iters) {
+    // one synchronous iteration over a rank vector
+    def iteration(pr: DataFrame): DataFrame = {
       val contribs = withDeg
         .join(pr, withDeg("src") === pr("node"))
         .select(col("dst").as("node"), (col("pr") / col("deg")).as("c"))
         .groupBy("node").agg(sum(col("c")).as("in_mass"))
       val base = tele.join(contribs, Seq("node"), "left")
-      val stepped =
-        if (nDangling == 0)
-          // dangling-free: the historical op chain, bit-identical
-          base.select(col("node"),
+      if (nDangling == 0)
+        // dangling-free: the historical op chain, bit-identical
+        base.select(col("node"),
+          (teleTerm +
+            lit(damping) * coalesce(col("in_mass"), lit(0.0))).as("pr"))
+      else {
+        // dangling mass dm = Σ pr over sink nodes (1-row aggregate
+        // over the small dangling join), redistributed through the
+        // teleport: + d·dm·t_v — Σpr stays exactly 1 per step
+        val dm = pr.join(dangling, Seq("node"))
+          .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
+        base.crossJoin(broadcast(dm))
+          .select(col("node"),
             (teleTerm +
-              lit(damping) * coalesce(col("in_mass"), lit(0.0))).as("pr"))
-        else {
-          // dangling mass dm = Σ pr over sink nodes (1-row aggregate
-          // over the small dangling join), redistributed through the
-          // teleport: + d·dm·t_v — Σpr stays exactly 1 per step
-          val dm = pr.join(dangling, Seq("node"))
-            .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
-          base.crossJoin(broadcast(dm))
-            .select(col("node"),
-              (teleTerm +
-                lit(damping) * coalesce(col("in_mass"), lit(0.0)) +
-                lit(damping) * col("dm") * col("t")).as("pr"))
-        }
-      depth += 1
-      val strideHit = depth >= (if (nDangling == 0) 2 else 1)
-      if (strideHit || i == iters - 1) {
-        pr = ck.proxy(stepped)
-        ck.release(lastCk)
-        lastCk = pr
-        depth = 0
-      } else pr = stepped
+              lit(damping) * coalesce(col("in_mass"), lit(0.0)) +
+              lit(damping) * col("dm") * col("t")).as("pr"))
+      }
     }
-    pr
+    // pr₀ = t: lazy — the first iteration reads it off the tele/node
+    // checkpoint; a dedicated pr₀ copy job buys nothing.
+    // A round runs TWO lazy iterations on dangling-FREE graphs (each
+    // checkpoint job then computes two joined steps — half the
+    // materialization jobs for the same shuffles, values bit-identical
+    // because a checkpoint never changes arithmetic); dangling graphs
+    // run one — their dm sub-aggregate re-reads pr, and a lazy pr would
+    // recompute the previous step once per reference.
+    val stride = if (nDangling == 0) 2 else 1
+    val pr0 = tele.select(col("node"), col("t").as("pr"))
+    ck.iterate(pr0, ck.proxy) { (pr, round) =>
+      val done = round * stride
+      if (done >= iters) None
+      else Some((done until math.min(done + stride, iters))
+        .foldLeft(pr)((p, _) => iteration(p)))
+    }._1
   }
 
   /** Per-node TRIANGLE counts and local clustering coefficients over an

@@ -517,113 +517,78 @@ object Selection {
         .otherwise(lit(0.0)), 6).as("budget_left"))
   }
 
-  /** Greedy MAX-COVERAGE selection — the submodular data-subset
-    * primitive (facility location over lexical features; Wei et al.
-    * ICML 2015's coverage objective): pick k documents whose shingle
-    * sets jointly cover the most of the corpus vocabulary, one
-    * farthest-marginal winner per round (the (1−1/e) greedy guarantee;
-    * the lexical sibling of the embedding-space k-center in
-    * [[Similarity.kCenterSelect]]). Ties break on id, so the greedy
-    * trajectory is fully deterministic and oracle-replayable.
+  /** The CELF lazy-greedy settle rule (Leskovec et al. KDD 2007) shared
+    * by [[maxCoverageSelect]] and [[facilityLocationSelectLazy]].
+    * Marginal gains are monotone non-increasing under submodularity, so
+    * a gain evaluated in an earlier round is an UPPER BOUND on the
+    * current one. Round 1's full sweep (unavoidable — no bounds exist
+    * yet) is the IMMUTABLE `bounds` table, (id, ub) checkpointed once
+    * and never rebuilt; everything that changes afterwards — the
+    * re-evaluated bounds and the selected set — lives in a driver-side
+    * overlay of size O(k·batch) and O(k).
     *
-    * Scale shape — CELF lazy-greedy (Leskovec et al. KDD 2007):
-    * marginal gains are monotone non-increasing under submodularity,
-    * so a gain evaluated in an earlier round is an UPPER BOUND on the
-    * current one. Round 1 evaluates every doc once (unavoidable — no
-    * bounds exist yet) and seeds a doc-grain bound table; every later
-    * round re-evaluates ONLY candidates whose stale bound could still
-    * beat the best freshly-evaluated gain — in batches of ≤ 64 per
-    * inner pass, each pass one semi-join-restricted read of the
-    * checkpointed (id, shingle-hash) index + one anti-join against the
-    * covered set (≤ k·shingles-per-doc hashes, broadcast-small) + one
-    * id-grain count. A round settles when no stale bound remains that
-    * exceeds the fresh winner's gain — INCLUDING the exact tie-break
-    * (a stale bound EQUAL to the fresh gain with a smaller id is still
-    * re-evaluated) and INCLUDING the fetch boundary (the winner must
-    * dominate the last fetched entry's bound, else the head is
-    * re-fetched at double depth: an un-fetched doc could otherwise
-    * hide a higher true gain behind a truncated head on corpora with
-    * >64 near-duplicates of an earlier winner), so the greedy
-    * trajectory is bit-identical to naive greedy and
-    * oracle-replayable. Total re-evaluations ≈ n + O(k·B)
-    * instead of naive's n·k (spec-pinned). The driver holds winners
-    * and 1-row argmaxes, never the corpus; superseded covered-set and
-    * bound-table checkpoints release per round (the PageRank
-    * discipline). All-integer output. */
-  def maxCoverageSelect(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int, shingleLen: Int = 3): DataFrame =
-    maxCoverageSelectCounted(docs, idCol, textCol, k, shingleLen)._1
+    * A later round fetches a head of `bounds` in (ub desc, id asc)
+    * order, reads it through the overlay, and evaluates batches of
+    * stale bounds that could still beat the best fresh gain (≤ 4 in the
+    * first batch, then ≤ `batchCap`), the exact tie-break included (a
+    * stale bound EQUAL to the fresh gain with a smaller id is still
+    * evaluated). It settles only when the fresh winner also dominates
+    * the fetch boundary: entries OUTSIDE the fetch have (ub <
+    * boundary.ub) or (ub == boundary.ub && id > boundary.id), so the
+    * winner (wid, wg) needs wg > boundary.ub, or wg == boundary.ub with
+    * wid ≤ boundary.id — else an un-fetched doc could still hide the
+    * true greedy winner, and the head is re-fetched at double depth.
+    * The trajectory is therefore bit-identical to naive greedy.
+    *
+    * Driver bound (r20): the widening fetch is CAPPED at
+    * fetchCapBatches·batchCap (+|selected|) rows per round — on an
+    * adversarial pool of near-tied bounds (where pure widening would
+    * pull the whole bound table to the driver) the round falls back to
+    * the caller's ONE exact argmax aggregate (the naive round's plan,
+    * 1-row collect), so driver rows per round stay O(batch), never
+    * O(|candidates|). */
+  private final class Celf(bounds: DataFrame, batchCap: Int,
+                           fetchCapBatches: Int) {
+    require(batchCap >= 1 && fetchCapBatches >= 1,
+      "batchCap and fetchCapBatches must be >= 1")
+    // first batch of a round: bounds are usually tight, so seed small
+    // and let the beater rule widen
+    private val seedCap = math.min(4, batchCap)
+    private val overlay = scala.collection.mutable.HashMap.empty[Long, Long]
+    private val selected = scala.collection.mutable.HashSet.empty[Long]
+    private val nCand = bounds.count()
+    /** Gain evaluations so far: the round-1 sweep, every evaluated
+      * beater, and the whole remaining pool per exact-fallback round. */
+    var evals: Long = nCand
+    /** The largest single driver fetch of `bounds`, in rows returned. */
+    var maxFetch = 0L
+    var nFallbacks = 0L
 
-  /** [[maxCoverageSelect]] plus the CELF re-evaluation count (number
-    * of marginal-gain computations across all rounds, round-1 full
-    * sweep included) — the spec observability hook for the
-    * "re-evaluations ≪ n·k" contract. */
-  private[graft] def maxCoverageSelectCounted(
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Int, shingleLen: Int = 3): (DataFrame, Long) =
-    Checkpoints.scoped { ck =>
-    require(k >= 1, "k must be positive")
-    val session = docs.sparkSession
-    import session.implicits._
-    val batchCap = 64
-    val seedCap = 4
-    val base = ck.dataGrain(
-      docs.select(col(idCol).cast("long").as("id"),
-          explode(graft.functions.Text.shingles(lower(col(textCol)),
-            shingleLen)).as("sh_s"))
-        .select(col("id"), xxhash64(col("sh_s")).as("sh")))
-    val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var covered: Option[DataFrame] = None
-    var reevals = 0L
-    var done = false
-    // round-1 full sweep (unavoidable — no bounds exist yet) seeds the
-    // IMMUTABLE bound table: it is checkpointed once and never
-    // rebuilt; everything that changes afterwards — the re-evaluated
-    // (monotone non-increasing) bounds and the selected set — lives in
-    // a driver-side overlay of size O(k·batch) and O(k), so a round
-    // costs one head fetch + one (rarely two) restricted gains job +
-    // the covered-set update, instead of per-round bound-table
-    // checkpoint churn (measured 2.8x on q224's floor before this)
-    val g1 = ck.proxy(base.groupBy("id").agg(count(lit(1)).as("ub")))
-    reevals += g1.count()
-    val overlay = scala.collection.mutable.HashMap.empty[Long, Long]
-    val selected = scala.collection.mutable.HashSet.empty[Long]
-    def coveredGains(ids: Seq[Long]): Map[Long, Long] = {
-      val rem = covered.fold(base)(c =>
-          base.join(broadcast(c), Seq("sh"), "left_anti"))
-        .filter(col("id").isin(ids: _*))
-        .groupBy("id").agg(count(lit(1)).as("g"))
-        .collect().map(r0 => r0.getLong(0) -> r0.getLong(1)).toMap
-      ids.map(i => i -> rem.getOrElse(i, 0L)).toMap
+    private def fetchHead(n: Int): Array[(Long, Long)] = {
+      val rows = bounds.orderBy(col("ub").desc, col(bounds.columns.head))
+        .limit(n).collect().map(r0 => (r0.getLong(0), r0.getLong(1)))
+      // record rows actually RETURNED, not the requested limit — a
+      // pool smaller than fetchN would otherwise overstate the
+      // driver-rows measurement ~6x (r20 review)
+      maxFetch = math.max(maxFetch, rows.length.toLong)
+      rows
     }
-    def pickWinner(r: Int): Option[(Long, Long)] = {
-      if (r == 1) {
-        val top = g1.orderBy(col("ub").desc, col("id")).limit(1).collect()
-        return top.headOption.map(t => (t.getLong(0), t.getLong(1)))
-      }
-      // fetch a head of the immutable (ub desc, id asc) bound table.
-      // Entries OUTSIDE the fetch have (ub < boundary.ub) or
-      // (ub == boundary.ub && id > boundary.id) where boundary is the
-      // last fetched entry — so a round may settle on a fresh winner
-      // (wid, wg) only when the winner also dominates the boundary:
-      // wg > boundary.ub, or wg == boundary.ub with wid ≤ boundary.id
-      // (every unfetched tying bound has a larger id and loses the
-      // tie-break). Otherwise an unfetched doc could still hold the
-      // true greedy winner, and the head is re-fetched at double depth
-      // until the winner dominates the boundary or the table is
-      // exhausted.
-      def fetchHead(n: Int): Array[(Long, Long)] =
-        g1.orderBy(col("ub").desc, col("id")).limit(n)
-          .collect().map(r0 => (r0.getLong(0), r0.getLong(1)))
-      var fetchN = batchCap + overlay.size + selected.size
-      var head = fetchHead(fetchN)
+
+    /** Round `r`'s winner (id, gain), now selected, or None when no
+      * candidate remains. `freshGains(ids)` returns the current gains
+      * of `ids` (an absent id gains 0); `exactArgmax(selected)` is one
+      * aggregate's argmax over the candidates not in `selected`,
+      * (gain desc, id asc). */
+    def pick(r: Int, freshGains: Seq[Long] => Map[Long, Long],
+             exactArgmax: Seq[Long] => Option[(Long, Long)]): Option[(Long, Long)] = {
+      val fetchCap = fetchCapBatches.toLong * batchCap + selected.size
       val fresh = scala.collection.mutable.HashMap.empty[Long, Long]
-      while (true) {
-        val cand = head.filterNot(p => selected(p._1))
+      @annotation.tailrec
+      def settle(fetchN: Int, head: Array[(Long, Long)]): Option[(Long, Long)] = {
+        val cands = head.filterNot(p => selected(p._1))
           .map { case (id, ub) => (id, overlay.getOrElse(id, ub)) }
         val exhausted = head.length < fetchN // whole bound table fetched
-        if (cand.isEmpty && exhausted) return None
-        val remaining = cand.filterNot(p => fresh.contains(p._1))
+        val remaining = cands.filterNot(p => fresh.contains(p._1))
         val best = if (fresh.isEmpty) None
           else Some(fresh.minBy { case (id, g) => (-g, id) })
         val beaters = best match {
@@ -633,48 +598,134 @@ object Selection {
             .filter { case (id, ub) => ub > wg || (ub == wg && id < wid) }
             .sortBy { case (id, ub) => (-ub, id) }.take(batchCap)
         }
-        if (beaters.nonEmpty) {
-          val gains = coveredGains(beaters.map(_._1))
-          reevals += beaters.size
+        if (cands.isEmpty && exhausted) None
+        else if (beaters.nonEmpty) {
+          val ids = beaters.map(_._1).toSeq
+          val g = freshGains(ids)
+          val gains = ids.map(i => i -> g.getOrElse(i, 0L))
+          evals += ids.size
           fresh ++= gains
-          overlay ++= gains // still upper bounds for every later round
-        } else {
-          // no FETCHED stale bound can beat the fresh winner,
-          // tie-break included — settled only if the winner also
-          // dominates the fetch boundary (else un-fetched bounds
-          // could still hide the true winner: re-fetch deeper)
-          val settled = best.exists { case (wid, wg) =>
+          overlay ++= gains // monotone: still valid bounds later
+          settle(fetchN, head)
+        } else if (best.exists { case (wid, wg) =>
             exhausted || {
               val (bid, bub) = head.last
               wg > bub || (wg == bub && wid <= bid)
             }
-          }
-          if (settled) return best
-          fetchN = math.max(fetchN * 2, fetchN + batchCap)
-          head = fetchHead(fetchN)
+          }) best
+        else if (fetchN >= fetchCap) {
+          evals += nCand - selected.size
+          nFallbacks += 1
+          exactArgmax(selected.toSeq)
+        } else {
+          val n = math.min(math.max(fetchN.toLong * 2,
+            fetchN.toLong + batchCap), fetchCap).toInt
+          settle(n, fetchHead(n))
         }
       }
-      None // unreachable
+      val winner =
+        if (r == 1) fetchHead(1).headOption
+        else {
+          val n = math.min(
+            (batchCap + overlay.size + selected.size).toLong, fetchCap).toInt
+          settle(n, fetchHead(n))
+        }
+      winner.foreach { case (id, _) => selected += id; overlay.remove(id) }
+      winner
     }
-    var r = 1
-    while (r <= k && !done) {
-      pickWinner(r) match {
-        case None => done = true
-        case Some((_, gain)) if r > 1 && gain == 0L =>
-          done = true // everything covered: greedy stops
-        case Some((winner, gain)) =>
-          val nextCov0 = base.filter(col("id") === winner).select("sh")
-          val nextCov = ck.proxy(
-            covered.fold(nextCov0)(_.unionByName(nextCov0)).distinct())
-          val total = nextCov.count()
-          covered.foreach(ck.release)
-          covered = Some(nextCov)
-          selected += winner
-          acc += ((r.toLong, winner, gain, total))
-          r += 1
-      }
+  }
+
+  /** Default CELF evaluation batch and per-round fetch cap (in batches)
+    * of the two lazy-greedy selectors. */
+  private val CelfBatch = 64
+  private val CelfFetchBatches = 16
+
+  /** Greedy MAX-COVERAGE selection — the submodular data-subset
+    * primitive (facility location over lexical features; Wei et al.
+    * ICML 2015's coverage objective): pick k documents whose shingle
+    * sets jointly cover the most of the corpus vocabulary, one
+    * farthest-marginal winner per round (the (1−1/e) greedy guarantee;
+    * the lexical sibling of the embedding-space k-center in
+    * [[Similarity.kCenterSelect]]). Ties break on id, so the greedy
+    * trajectory is fully deterministic and oracle-replayable.
+    *
+    * Scale shape — CELF lazy-greedy ([[Celf]]): round 1 evaluates
+    * every doc once and seeds the bound table; every later round
+    * re-evaluates only candidates whose stale bound could still win,
+    * each batch one semi-join-restricted read of the checkpointed (id,
+    * shingle-hash) index + one anti-join against the covered set
+    * (≤ k·shingles-per-doc hashes, broadcast-small) + one id-grain
+    * count, so a round costs one head fetch + one (rarely two)
+    * restricted gains job + the covered-set update (measured 2.8x on
+    * q224's floor over per-round bound-table checkpoints). Total
+    * re-evaluations ≈ n + O(k·B) instead of naive's n·k
+    * (spec-pinned), and the trajectory is bit-identical to naive
+    * greedy. The driver holds winners and 1-row argmaxes, never the
+    * corpus; covered sets are rounds of [[Checkpoints.Scope.iterate]].
+    * All-integer output. */
+  def maxCoverageSelect(docs: DataFrame, idCol: String, textCol: String,
+                        k: Int, shingleLen: Int = 3): DataFrame =
+    maxCoverageSelectCounted(docs, idCol, textCol, k, shingleLen, CelfBatch,
+      CelfFetchBatches)._1
+
+  /** [[maxCoverageSelect]] plus the CELF evaluation count (number of
+    * marginal-gain computations across all rounds, round-1 full sweep
+    * included; an exact-fallback round counts the whole remaining
+    * pool), the LARGEST single driver fetch of the bound table and the
+    * number of exact-fallback rounds — the spec hooks for
+    * "re-evaluations ≪ n·k" and "driver rows per round are bounded".
+    * `batchCap`/`fetchCapBatches` are spec-tunable to force the
+    * adversarial paths on small fixtures. Returns (trajectory, evals,
+    * maxFetch, nFallbacks). */
+  private[graft] def maxCoverageSelectCounted(
+      docs: DataFrame, idCol: String, textCol: String, k: Int,
+      shingleLen: Int, batchCap: Int,
+      fetchCapBatches: Int): (DataFrame, Long, Long, Long) =
+    Checkpoints.scoped { ck =>
+    require(k >= 1, "k must be positive")
+    val session = docs.sparkSession
+    import session.implicits._
+    val base = ck.dataGrain(
+      docs.select(col(idCol).cast("long").as("id"),
+          explode(graft.functions.Text.shingles(lower(col(textCol)),
+            shingleLen)).as("sh_s"))
+        .select(col("id"), xxhash64(col("sh_s")).as("sh")))
+    val celf = new Celf(ck.proxy(base.groupBy("id").agg(count(lit(1)).as("ub"))),
+      batchCap, fetchCapBatches)
+    // gains against `covered` of the docs `which` admits
+    def gains(covered: DataFrame, which: Column): DataFrame =
+      base.join(broadcast(covered), Seq("sh"), "left_anti")
+        .filter(which)
+        .groupBy("id").agg(count(lit(1)).as("g"))
+    val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+    val totals = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def keepCounted(df: DataFrame): DataFrame = {
+      val c = ck.proxy(df)
+      totals += c.count()
+      c
     }
-    (acc.toSeq.toDF("round", "id", "marginal_gain", "covered_total"), reevals)
+    // the state is the covered set of shingle hashes, empty before
+    // round 1
+    ck.iterate(base.select("sh").filter(lit(false)), keepCounted) {
+      (covered, round) =>
+        val r = round + 1
+        if (r > k) None
+        else celf.pick(r,
+          ids => gains(covered, col("id").isin(ids: _*)).collect()
+            .map(r0 => r0.getLong(0) -> r0.getLong(1)).toMap,
+          sel => gains(covered, !col("id").isin(sel: _*))
+            .orderBy(col("g").desc, col("id")).limit(1).collect()
+            .headOption.map(r0 => (r0.getLong(0), r0.getLong(1)))) match {
+          case Some((winner, gain)) if r == 1 || gain > 0 =>
+            picks += ((r.toLong, winner, gain))
+            Some(covered.unionByName(
+              base.filter(col("id") === winner).select("sh")).distinct())
+          case _ => None // no candidate left, or everything covered
+        }
+    }
+    (picks.zip(totals).map { case ((r, id, g), t) => (r, id, g, t) }.toSeq
+      .toDF("round", "id", "marginal_gain", "covered_total"),
+      celf.evals, celf.maxFetch, celf.nFallbacks)
   }
 
   /** FACILITY-LOCATION greedy data selection over an embedding column
@@ -722,6 +773,33 @@ object Selection {
     greedyFacilityLoop(pairs, corp.select(col("__j")), idCol, k)
   }
 
+  /** Facility-location marginal gains Σ_j max(0, s − best_j) of every
+    * candidate in `pairs` against the service table `best`. */
+  private def facilityGains(pairs: DataFrame, best: DataFrame): DataFrame =
+    pairs.join(best, Seq("__j"))
+      .groupBy(col("__c"))
+      .agg(sum(greatest(col("__s") - col("__b"), lit(0L))).as("__g"))
+
+  /** One naive facility-location round: the candidate not in `chosen`
+    * with the largest gain (ties: smaller id) — one full-table
+    * aggregate and a 1-row collect; None when none is pickable. */
+  private def facilityArgmax(pairs: DataFrame, best: DataFrame,
+                             chosen: Seq[Long]): Option[(Long, Long)] = {
+    val gains0 = facilityGains(pairs, best)
+    val gains = if (chosen.isEmpty) gains0
+      else gains0.filter(!col("__c").isin(chosen: _*))
+    gains.orderBy(col("__g").desc, col("__c")).limit(1).collect()
+      .headOption.map(r0 => (r0.getLong(0), r0.getLong(1)))
+  }
+
+  /** The service table once `winner` is selected: every corpus point
+    * keeps its best similarity to any selected candidate. */
+  private def served(best: DataFrame, pairs: DataFrame, winner: Long): DataFrame =
+    best.join(pairs.filter(col("__c") === winner)
+        .select(col("__j"), col("__s")), Seq("__j"), "left")
+      .select(col("__j"),
+        greatest(col("__b"), coalesce(col("__s"), lit(0L))).as("__b"))
+
   /** The shared greedy loop of [[facilityLocationSelect]] /
     * [[facilityLocationSelectBucketed]]: k rounds of one integer
     * aggregate over the (persisted-once) pair table + a 1-row winner
@@ -738,95 +816,49 @@ object Selection {
     val spark = pairs0.sparkSession
     import spark.implicits._
     val pairs = ck.shared(pairs0)
-    var best = ck.proxy(corpusIds.select(col("__j"), lit(0L).as("__b")))
     val sel = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    val chosen = scala.collection.mutable.Set.empty[Long]
     var objective = 0L
-    var r = 1
-    var exhausted = false
-    while (r <= k && !exhausted) {
-      val gains0 = pairs.join(best, Seq("__j"))
-        .groupBy(col("__c"))
-        .agg(sum(greatest(col("__s") - col("__b"), lit(0L))).as("__g"))
-      val gains = if (chosen.isEmpty) gains0
-        else gains0.filter(!col("__c").isin(chosen.toSeq: _*))
-      val head = gains.orderBy(col("__g").desc, col("__c")).limit(1)
-        .collect()
-      // k past the candidate pool (or an empty pool/corpus) leaves no
-      // pickable candidate: return the partial trajectory instead of an
-      // opaque NoSuchElementException mid-loop (r19, advisor finding)
-      if (head.isEmpty) exhausted = true
-      else {
-        val (wid, wg) = (head.head.getLong(0), head.head.getLong(1))
-        objective += wg
-        chosen += wid
-        sel += ((r.toLong, wid, wg, objective))
-        val superseded = best
-        best = ck.proxy(best
-          .join(pairs.filter(col("__c") === wid)
-            .select(col("__j"), col("__s")), Seq("__j"), "left")
-          .select(col("__j"),
-            greatest(col("__b"), coalesce(col("__s"), lit(0L))).as("__b")))
-        ck.release(superseded)
-        r += 1
+    ck.iterate(ck.proxy(corpusIds.select(col("__j"), lit(0L).as("__b"))),
+        ck.proxy) { (best, round) =>
+      if (round >= k) None
+      else facilityArgmax(pairs, best, sel.map(_._2).toSeq).map {
+        case (wid, wg) =>
+          objective += wg
+          sel += ((round + 1L, wid, wg, objective))
+          served(best, pairs, wid)
       }
     }
     sel.toSeq.toDF("round", idCol, "marginal_gain", "objective_total")
   }
 
-  /** CELF lazy-greedy facility location (Leskovec et al. KDD 2007
-    * "Cost-effective outbreak detection" — lazy evaluation under
-    * submodularity): BIT-IDENTICAL trajectory to
-    * [[facilityLocationSelect]] (spec-pinned, same oracle), evaluating
-    * only the candidates whose stale upper bound could still win. A
-    * candidate's marginal gain is monotone non-increasing in the
-    * selected set (submodularity), so its last evaluated gain is a
-    * valid upper bound forever; each round evaluates batches of the
-    * top stale bounds until the best fresh gain dominates every
-    * remaining bound AND the fetch boundary, ties (smaller id wins)
-    * included — the [[maxCoverageSelect]] settle rule on the gain
-    * objective. Round 1's full sweep is unavoidable (no bounds exist)
-    * and seeds the IMMUTABLE bound table; later rounds touch the pair
-    * table only for the evaluated batch (a broadcast semi-join of ≤
-    * batch ids), so total gain evaluations ≈ |candidates| + O(k·batch)
-    * instead of naive's |candidates|·k — at a 100 TB pair table the
-    * difference is k-fold fewer full-table aggregates.
-    *
-    * Driver bound (r20): the settle-widening fetch of the stale bound
-    * table is CAPPED at fetchCapBatches·batchCap (+|selected|) rows per
-    * round — on an adversarial pool of near-tied bounds (where pure
-    * widening would pull the whole bound table to the driver) the round
-    * falls back to ONE exact DataFrame-side argmax over the pair table
-    * (the naive round's plan, 1-row collect), so the trajectory stays
-    * bit-identical to naive greedy while driver rows per round stay
-    * O(batch), never O(|candidates|). */
+  /** CELF lazy-greedy facility location ([[Celf]]): BIT-IDENTICAL
+    * trajectory to [[facilityLocationSelect]] (spec-pinned, same
+    * oracle), evaluating only the candidates whose stale upper bound
+    * could still win — the [[maxCoverageSelect]] settle rule on the
+    * gain objective. Round 1's full sweep seeds the IMMUTABLE bound
+    * table; later rounds touch the pair table only for the evaluated
+    * batch (a broadcast semi-join of ≤ batch ids), so total gain
+    * evaluations ≈ |candidates| + O(k·batch) instead of naive's
+    * |candidates|·k — at a 100 TB pair table the difference is k-fold
+    * fewer full-table aggregates. A round whose settle fetch reaches
+    * the cap runs the naive round's plan instead. */
   def facilityLocationSelectLazy(corpus: DataFrame, candidates: DataFrame,
                                  idCol: String, vecCol: String, k: Int,
                                  simScale: Double = 1e4): DataFrame =
     facilityLocationSelectLazyCounted(corpus, candidates, idCol, vecCol,
-      k, simScale)._1
+      k, simScale, CelfBatch, CelfFetchBatches)._1
 
-  /** [[facilityLocationSelectLazy]] plus the evaluation count (round-1
-    * full sweep included; an exact-fallback round counts the whole
-    * remaining pool) and the LARGEST single driver fetch of the bound
-    * table — the spec hooks for "evaluations ≪ n·k" and "driver rows
-    * per round are bounded". `batchCap`/`fetchCapBatches` are
-    * spec-tunable to force the adversarial paths on small fixtures.
-    * Returns (trajectory, evals, maxFetch, nFallbacks). */
+  /** [[facilityLocationSelectLazy]] with the counters and tunables of
+    * [[maxCoverageSelectCounted]]. Returns (trajectory, evals,
+    * maxFetch, nFallbacks). */
   private[graft] def facilityLocationSelectLazyCounted(
       corpus: DataFrame, candidates: DataFrame, idCol: String,
-      vecCol: String, k: Int, simScale: Double = 1e4,
-      batchCap: Int = 64,
-      fetchCapBatches: Int = 16): (DataFrame, Long, Long, Long) =
+      vecCol: String, k: Int, simScale: Double, batchCap: Int,
+      fetchCapBatches: Int): (DataFrame, Long, Long, Long) =
     Checkpoints.scoped { ck =>
     require(k >= 1, "need k >= 1")
-    require(batchCap >= 1 && fetchCapBatches >= 1,
-      "batchCap and fetchCapBatches must be >= 1")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val seedCap = math.min(4, batchCap) // first batch of a round:
-                    // bounds are usually tight, so seed small and let
-                    // the beater rule widen
     val cand = candidates.select(col(idCol).cast("long").as("__c"),
       col(vecCol).as("__vc"))
     val corp = corpus.select(col(idCol).cast("long").as("__j"),
@@ -835,120 +867,27 @@ object Selection {
       .select(col("__c"), col("__j"),
         round(graft.functions.Vectors.cosine(col("__vc"), col("__vj")) *
           lit(simScale), 0).cast("long").as("__s")))
-    var best = ck.proxy(corp.select(col("__j"), lit(0L).as("__b")))
+    val best0 = ck.proxy(corp.select(col("__j"), lit(0L).as("__b")))
     // round-1 full sweep = the immutable bound table (gains vs best=0)
-    val g1 = ck.proxy(pairs.groupBy(col("__c"))
-      .agg(sum(greatest(col("__s"), lit(0L))).as("ub")))
-    var evals = g1.count()
-    val nCand = evals
-    var maxFetch = 0L
-    var nFallbacks = 0L
-    val overlay = scala.collection.mutable.HashMap.empty[Long, Long]
-    val selected = scala.collection.mutable.HashSet.empty[Long]
-    def freshGains(ids: Seq[Long]): Map[Long, Long] = {
-      val g = pairs.filter(col("__c").isin(ids: _*))
-        .join(best, Seq("__j"))
-        .groupBy(col("__c"))
-        .agg(sum(greatest(col("__s") - col("__b"), lit(0L))).as("__g"))
-        .collect().map(r0 => r0.getLong(0) -> r0.getLong(1)).toMap
-      ids.map(i => i -> g.getOrElse(i, 0L)).toMap
-    }
-    // one exact naive-shaped round: full-table gain aggregate, 1-row
-    // argmax collect — the CAPPED escape from settle-widening. Same
-    // (gain desc, id asc) rule as greedyFacilityLoop, so the trajectory
-    // cannot diverge; costs one full aggregate like a naive round.
-    def exactArgmax(): Option[(Long, Long)] = {
-      val gains0 = pairs.join(best, Seq("__j"))
-        .groupBy(col("__c"))
-        .agg(sum(greatest(col("__s") - col("__b"), lit(0L))).as("__g"))
-      val gains = if (selected.isEmpty) gains0
-        else gains0.filter(!col("__c").isin(selected.toSeq: _*))
-      evals += nCand - selected.size
-      nFallbacks += 1
-      gains.orderBy(col("__g").desc, col("__c")).limit(1).collect()
-        .headOption.map(r0 => (r0.getLong(0), r0.getLong(1)))
-    }
-    def pickWinner(r: Int): Option[(Long, Long)] = {
-      // per-round driver bound: never pull more than this many bound
-      // rows; past it, exactArgmax() answers in one aggregate
-      val fetchCap = fetchCapBatches.toLong * batchCap + selected.size
-      def fetchHead(n: Int): Array[(Long, Long)] = {
-        val rows = g1.orderBy(col("ub").desc, col("__c")).limit(n)
-          .collect().map(r0 => (r0.getLong(0), r0.getLong(1)))
-        // record rows actually RETURNED, not the requested limit — a
-        // pool smaller than fetchN would otherwise overstate the
-        // driver-rows measurement ~6x (r20 review)
-        maxFetch = math.max(maxFetch, rows.length.toLong)
-        rows
-      }
-      if (r == 1) {
-        return fetchHead(1).headOption
-      }
-      var fetchN = math.min(
-        (batchCap + overlay.size + selected.size).toLong, fetchCap).toInt
-      var head = fetchHead(fetchN)
-      val fresh = scala.collection.mutable.HashMap.empty[Long, Long]
-      while (true) {
-        val cands = head.filterNot(p => selected(p._1))
-          .map { case (id, ub) => (id, overlay.getOrElse(id, ub)) }
-        val exhausted = head.length < fetchN
-        if (cands.isEmpty && exhausted) return None
-        val remaining = cands.filterNot(p => fresh.contains(p._1))
-        val bestFresh = if (fresh.isEmpty) None
-          else Some(fresh.minBy { case (id, g) => (-g, id) })
-        val beaters = bestFresh match {
-          case None => remaining.sortBy { case (id, ub) => (-ub, id) }
-            .take(seedCap)
-          case Some((wid, wg)) => remaining
-            .filter { case (id, ub) => ub > wg || (ub == wg && id < wid) }
-            .sortBy { case (id, ub) => (-ub, id) }.take(batchCap)
-        }
-        if (beaters.nonEmpty) {
-          val gains = freshGains(beaters.map(_._1))
-          evals += beaters.size
-          fresh ++= gains
-          overlay ++= gains // monotone: still valid bounds later
-        } else {
-          val settled = bestFresh.exists { case (wid, wg) =>
-            exhausted || {
-              val (bid, bub) = head.last
-              wg > bub || (wg == bub && wid <= bid)
-            }
-          }
-          if (settled) return bestFresh
-          if (fetchN >= fetchCap) return exactArgmax()
-          fetchN = math.min(
-            math.max(fetchN.toLong * 2, fetchN.toLong + batchCap),
-            fetchCap).toInt
-          head = fetchHead(fetchN)
-        }
-      }
-      None // unreachable
-    }
+    val celf = new Celf(ck.proxy(pairs.groupBy(col("__c"))
+      .agg(sum(greatest(col("__s"), lit(0L))).as("ub"))),
+      batchCap, fetchCapBatches)
     val sel = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     var objective = 0L
-    var r = 1
-    var exhausted = false
-    while (r <= k && !exhausted) {
-      pickWinner(r) match {
-        case None => exhausted = true
-        case Some((wid, wg)) =>
+    ck.iterate(best0, ck.proxy) { (best, round) =>
+      if (round >= k) None
+      else celf.pick(round + 1,
+        ids => facilityGains(pairs.filter(col("__c").isin(ids: _*)), best)
+          .collect().map(r0 => r0.getLong(0) -> r0.getLong(1)).toMap,
+        chosen => facilityArgmax(pairs, best, chosen)).map {
+        case (wid, wg) =>
           objective += wg
-          selected += wid
-          overlay.remove(wid)
-          sel += ((r.toLong, wid, wg, objective))
-          val superseded = best
-          best = ck.proxy(best
-            .join(pairs.filter(col("__c") === wid)
-              .select(col("__j"), col("__s")), Seq("__j"), "left")
-            .select(col("__j"),
-              greatest(col("__b"), coalesce(col("__s"), lit(0L))).as("__b")))
-          ck.release(superseded)
-          r += 1
+          sel += ((round + 1L, wid, wg, objective))
+          served(best, pairs, wid)
       }
     }
     (sel.toSeq.toDF("round", idCol, "marginal_gain", "objective_total"),
-      evals, maxFetch, nFallbacks)
+      celf.evals, celf.maxFetch, celf.nFallbacks)
   }
 
   /** [[facilityLocationSelect]] with the corpus side routed through an

@@ -728,10 +728,10 @@ object Similarity {
     * a constant-depth expression tree, where the naive form (rebuild
     * the min over ALL r centers every round) is Σr = k²/2 evals with a
     * k-deep `least` tree: the exact pathology [[Tokenizer.encode]]'s
-    * scaladoc diagnoses for per-merge HOF replay. Superseded state is
-    * released as soon as the next round materializes (the PageRank
-    * discipline), so block-manager footprint stays one state
-    * generation regardless of k. For k ≥ ~10³ at corpus scale,
+    * scaladoc diagnoses for per-merge HOF replay. Rounds run on
+    * [[Checkpoints.Scope.iterate]], whose release rule keeps the
+    * block-manager footprint one state generation regardless of k.
+    * For k ≥ ~10³ at corpus scale,
     * the remaining cost is k sequential driver rounds; the published
     * fix is a partition-local pre-coreset (two-level Gonzalez: run
     * farthest-first per partition for k' > k local centers, then the
@@ -769,19 +769,17 @@ object Similarity {
     var centers =
       Vector((seed.getLong(0), seed.getSeq[Double](1), Option.empty[Double]))
     // (id, v, d_min) vs the centers so far; rebuilt (not re-derived)
-    // each round from ONE new-center kernel — see the scaladoc
-    var state = base
-    for (r <- 1 until k) {
-      val next = ck.dataGrain(
-        kCenterRound(state, centers.last._2, first = r == 1))
-      // round 1 supersedes the persisted input itself: no later round
-      // reads it
-      ck.release(state)
-      state = next
-      val cand = state
-        .orderBy(col("d_min").desc, col("id")).limit(1).collect().head
-      centers = centers :+
-        ((cand.getLong(0), cand.getSeq[Double](1), Some(cand.getDouble(2))))
+    // each round from ONE new-center kernel — see the scaladoc. Round 0
+    // supersedes the persisted input itself: no later round reads it.
+    ck.iterate(base, ck.dataGrain) { (state, round) =>
+      if (round > 0) {
+        val cand = state
+          .orderBy(col("d_min").desc, col("id")).limit(1).collect().head
+        centers = centers :+
+          ((cand.getLong(0), cand.getSeq[Double](1), Some(cand.getDouble(2))))
+      }
+      if (centers.size == k) None
+      else Some(kCenterRound(state, centers.last._2, first = round == 0))
     }
     import spark.implicits._
     centers.zipWithIndex.map { case ((id, _, dOpt), i) =>

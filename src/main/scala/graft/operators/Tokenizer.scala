@@ -107,27 +107,25 @@ object Tokenizer {
     Checkpoints.scoped { ck =>
     require(nMerges >= 0, "nMerges must be non-negative")
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var cached = ck.shared(toSymbols(docs, textCol))
-    cached.count()
-    var continue = true
-    var i = 0
-    while (i < nMerges && continue) {
-      val top = pairCounts(cached)
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) continue = false
-      else {
-        val (a, b) = (top(0).getString(0), top(0).getString(1))
-        merges += ((a, b))
-        val next = ck.shared(cached
-          .select(applyMerge(col("sym"), a, b).as("sym")))
-        next.count()
-        ck.release(cached)
-        cached = next
-      }
-      i += 1
+    ck.iterate(keepShared(ck)(toSymbols(docs, textCol)), keepShared(ck)) {
+      (cached, i) =>
+        if (i >= nMerges) None
+        else pairCounts(cached)
+          .orderBy(col("cnt").desc, col("a"), col("b"))
+          .limit(1).collect().headOption.map { top =>
+            val (a, b) = (top.getString(0), top.getString(1))
+            merges += ((a, b))
+            cached.select(applyMerge(col("sym"), a, b).as("sym"))
+          }
     }
     merges.toSeq
+  }
+
+  /** A trainer round's symbol table, persisted and filled at once. */
+  private def keepShared(ck: Checkpoints.Scope)(df: DataFrame): DataFrame = {
+    val s = ck.shared(df)
+    s.count()
+    s
   }
 
   /** [[trainMerges]]' 100 TB path: BATCHED shielded-greedy merges —
@@ -171,19 +169,15 @@ object Tokenizer {
     require(nMerges >= 0, "nMerges must be non-negative")
     require(maxBatch >= 1, "maxBatch must be >= 1")
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var cached = ck.shared(toSymbols(docs, textCol))
-    cached.count()
-    var rounds = 0
-    var continue = true
-    while (merges.size < nMerges && continue) {
+    val (_, kept) = ck.iterate(keepShared(ck)(toSymbols(docs, textCol)),
+        keepShared(ck)) { (cached, _) =>
       val k = math.min(maxBatch, nMerges - merges.size)
       // collect a deterministic candidate prefix wide enough that
       // shield skips rarely starve the batch (model-grain rows)
-      val ranked = pairCounts(cached)
+      lazy val ranked = pairCounts(cached)
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(k * 8).collect()
-      rounds += 1
-      if (ranked.isEmpty) continue = false
+      if (k == 0 || ranked.isEmpty) None
       else {
         val used = scala.collection.mutable.Set.empty[String]
         val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -204,19 +198,17 @@ object Tokenizer {
         val spark = cached.sparkSession
         import spark.implicits._
         val bcBatch = spark.sparkContext.broadcast(batch.toArray)
-        val next = ck.shared(cached.select(col("sym")).as[Seq[String]]
+        Some(cached.select(col("sym")).as[Seq[String]]
           .map { s =>
             val buf = scala.collection.mutable.ArrayBuffer.empty[String]
             buf ++= s
             applyMergesJvm(buf, bcBatch.value).toSeq
           }
           .toDF("sym"))
-        next.count()
-        ck.release(cached)
-        cached = next
       }
     }
-    (merges.toSeq, rounds)
+    // every round scans once; a scan that found no pair keeps no state
+    (merges.toSeq, if (merges.size < nMerges) kept + 1 else kept)
   }
 
   /** [[trainMergesBatchedWithRounds]] without the round count. */

@@ -59,6 +59,12 @@ class CheckpointsSpec extends AnyFunSuite {
         Graph.personalizedPageRank(edges, seeds, 5, 0.85))
       ()
     }),
+    "Dedup.connectedComponents on converging input" -> (() => {
+      import spark.implicits._
+      val chain = (1L to 40L).sliding(2).map(w => (w(0), w(1))).toSeq
+        .toDF("id_a", "id_b")
+      materializeAndRelease(Dedup.connectedComponents(chain))
+    }),
     "Dedup.connectedComponents past maxRounds" -> (() => {
       import spark.implicits._
       val chain = (1L to 40L).sliding(2).map(w => (w(0), w(1))).toSeq
@@ -79,8 +85,20 @@ class CheckpointsSpec extends AnyFunSuite {
       sel.count()
       Checkpoints.release(sel)
     }),
+    "Selection.facilityLocationSelectLazy" -> (() => {
+      val emb = Tables(spark, TestSpark.sf0001, "embeddings").limit(40)
+      val sel = Selection.facilityLocationSelectLazy(emb, emb.limit(10),
+        "vec_id", "embedding", k = 3)
+      sel.count()
+      Checkpoints.release(sel)
+    }),
     "Tokenizer.trainMerges" -> (() => {
       Tokenizer.trainMerges(docs.limit(50), "text", nMerges = 3)
+      ()
+    }),
+    "Tokenizer.trainMergesBatched" -> (() => {
+      Tokenizer.trainMergesBatched(docs.limit(50), "text", nMerges = 6,
+        maxBatch = 3)
       ()
     }),
     "Corpus.prepare" -> (() => {
@@ -199,22 +217,52 @@ class CheckpointsSpec extends AnyFunSuite {
     }
   }
 
-  test("scope.release frees owned loop state now and ignores tables it " +
-       "does not own") {
+  test("scope.iterate frees superseded and round-own state once the next is kept") {
     import spark.implicits._
+    def alive(df: DataFrame): Boolean = persistentRdds.contains(checkpointRdd(df))
     val callerOwned = (1L to 5L).toDF("id").localCheckpoint(true)
-    val callerRdd = checkpointRdd(callerOwned)
-    Checkpoints.scoped { ck =>
-      val a = ck.proxy(callerOwned.select((col("id") + 1).as("id")))
-      ck.release(callerOwned)
-      ck.release(a)
-      assert(!persistentRdds.contains(checkpointRdd(a)),
-        "owned state is freed at once")
-      assert(persistentRdds.contains(callerRdd),
-        "a table the scope does not own is left alone")
+    assertNoLeak {
+      val kept = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val own = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      Checkpoints.scoped { ck =>
+        val keep = (df: DataFrame) => {
+          assert(alive(own.last),
+            "a round's own table survives until the next state is kept")
+          val k = ck.proxy(df)
+          kept += k
+          k
+        }
+        val (last, rounds) = ck.iterate(callerOwned, keep) { (state, round) =>
+          assert(state.count() == 5, "a step reads the previous state")
+          assert(kept.dropRight(1).forall(!alive(_)),
+            "every superseded owned state is freed")
+          assert(own.forall(!alive(_)), "earlier rounds' own tables are freed")
+          own += ck.proxy(state.select((col("id") + 1).as("id")))
+          if (round == 3) None
+          else Some(own.last.select((col("id") - 1).as("id")))
+        }
+        assert(rounds == 3 && (last eq kept.last))
+        assert(alive(last), "the last state stays the scope's until exit")
+        assert(!alive(own.last), "a stopping round frees its own table at once")
+      }
+      assert(alive(callerOwned), "an init the scope does not own is left alone")
+      assert(callerOwned.count() == 5)
     }
-    assert(callerOwned.count() == 5)
     dropCallerCheckpoint(callerOwned)
+
+    // an exception in round r frees every owned table: init, state and
+    // the round's own
+    assertNoLeak {
+      intercept[IllegalStateException] {
+        Checkpoints.scoped { ck =>
+          ck.iterate(ck.proxy((1L to 5L).toDF("id")), ck.proxy) { (state, round) =>
+            val own = ck.proxy(state.select((col("id") + 1).as("id")))
+            if (round == 2) throw new IllegalStateException("boom")
+            Some(own.select((col("id") - 1).as("id")))
+          }
+        }
+      }
+    }
   }
 
   test("release frees a scope's shared persist that the result reads") {

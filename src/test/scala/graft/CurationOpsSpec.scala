@@ -442,21 +442,10 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(out.map(_._3).sliding(2).forall(w => w.last <= w.head))
   }
 
-  test("maxCoverageSelect: CELF trajectory equals naive greedy, re-evals << n*k") {
-    import spark.implicits._
-    val words = Vector("aa", "bb", "cc", "dd", "ee", "ff", "gg", "hh",
-      "ii", "jj", "kk", "ll")
-    def text(seed: Int): String =
-      (0 until 10).map(i => words((seed * 5 + i * i) % words.size))
-        .mkString(" ")
-    val n = 40
-    val k = 6
-    val docs = (1 to n).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
-    val (outDf, reevals) = graft.operators.Selection
-      .maxCoverageSelectCounted(docs, "doc_id", "text", k, shingleLen = 3)
-    val got = outDf.collect().map(r => (r.getLong(0), r.getLong(1),
-      r.getLong(2), r.getLong(3))).toSeq
-    // driver-side naive greedy on the same shingle sets
+  /** Driver-side naive greedy max-coverage over the 3-shingle sets of
+    * `docs` (doc_id, text): (round, id, marginal_gain, covered_total). */
+  private def naiveMaxCoverage(docs: org.apache.spark.sql.DataFrame,
+                               k: Int): Seq[(Long, Long, Long, Long)] = {
     val sets = docs.select(col("doc_id"),
         graft.functions.Text.shingles(lower(col("text")), 3))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
@@ -473,7 +462,26 @@ class CurationOpsSpec extends AnyFunSuite {
         want += ((r.toLong, wid, wgain.toLong, covered.size.toLong))
       }
     }
-    assert(got == want.toSeq, s"got $got want $want")
+    want.toSeq
+  }
+
+  test("maxCoverageSelect: CELF trajectory equals naive greedy, re-evals << n*k") {
+    import spark.implicits._
+    val words = Vector("aa", "bb", "cc", "dd", "ee", "ff", "gg", "hh",
+      "ii", "jj", "kk", "ll")
+    def text(seed: Int): String =
+      (0 until 10).map(i => words((seed * 5 + i * i) % words.size))
+        .mkString(" ")
+    val n = 40
+    val k = 6
+    val docs = (1 to n).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
+    val (outDf, reevals, _, _) = graft.operators.Selection
+      .maxCoverageSelectCounted(docs, "doc_id", "text", k, shingleLen = 3,
+        batchCap = 64, fetchCapBatches = 16)
+    val got = outDf.collect().map(r => (r.getLong(0), r.getLong(1),
+      r.getLong(2), r.getLong(3))).toSeq
+    val want = naiveMaxCoverage(docs, k)
+    assert(got == want, s"got $got want $want")
     // CELF contract: round 1 sweeps all n docs once; later rounds only
     // re-evaluate bound-order heads — far fewer than naive's n per round
     assert(reevals >= n, s"round-1 sweep missing: $reevals")
@@ -1145,7 +1153,8 @@ class CurationOpsSpec extends AnyFunSuite {
       rv, cand, "vec_id", "embedding", k = 4))
     val (lazyDf, evals, _, _) =
       graft.operators.Selection.facilityLocationSelectLazyCounted(
-        rv, cand, "vec_id", "embedding", k = 4)
+        rv, cand, "vec_id", "embedding", k = 4, simScale = 1e4,
+        batchCap = 64, fetchCapBatches = 16)
     assert(traj(lazyDf) == naive,
       s"lazy trajectory ${traj(lazyDf)} diverges from naive $naive")
     val nCand = cand.count()
@@ -1183,8 +1192,8 @@ class CurationOpsSpec extends AnyFunSuite {
     // may never exceed fetchCapBatches*batchCap + |selected| = 8 + 4
     val (capped, _, maxFetch, nFallbacks) =
       graft.operators.Selection.facilityLocationSelectLazyCounted(
-        rv, cand, "vec_id", "embedding", k = 5, batchCap = 4,
-        fetchCapBatches = 2)
+        rv, cand, "vec_id", "embedding", k = 5, simScale = 1e4,
+        batchCap = 4, fetchCapBatches = 2)
     assert(traj(capped) == naive,
       s"capped-fallback trajectory ${traj(capped)} diverges from $naive")
     assert(maxFetch <= 2L * 4 + 4,
@@ -1193,6 +1202,24 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(nFallbacks >= 1,
       "fixture must be adversarial enough that the exact-argmax " +
         "fallback actually fires (otherwise this test proves nothing)")
+
+    // the same settle rule caps maxCoverageSelect: 30 near-duplicate
+    // docs share six shingles and differ in a 1-3 word tail, so round-1
+    // bounds are 7-9 and near-tied while every later true gain is <= 3,
+    // and the pool is larger than the 8 + |selected| cap
+    val docs = (1 to 30).map { i =>
+      val tail = (0 to i % 3).map(j => s"u${i}x$j")
+      (i.toLong, ((0 until 8).map(j => s"c$j") ++ tail).mkString(" "))
+    }.toDF("doc_id", "text")
+    val (cov, _, covFetch, covFallbacks) = graft.operators.Selection
+      .maxCoverageSelectCounted(docs, "doc_id", "text", k = 5, shingleLen = 3,
+        batchCap = 4, fetchCapBatches = 2)
+    val covTraj = traj(cov)
+    assert(covTraj == naiveMaxCoverage(docs, 5),
+      s"capped max-coverage trajectory $covTraj diverges from naive greedy")
+    assert(covFetch <= 2L * 4 + 4,
+      s"max-coverage driver fetch $covFetch exceeded the documented cap")
+    assert(covFallbacks >= 1, "max-coverage fixture must reach the fallback")
   }
 
   test("conformalIntervalGate: exact k-th-smallest-residual width, " +

@@ -34,14 +34,16 @@ object ScaleProbeMain {
       for (k <- Seq(4, 16, 48)) {
         // fresh run each k (no warm sharing beyond the JVM)
         val t0 = System.nanoTime()
-        val (out, reevals) = graft.operators.Selection
-          .maxCoverageSelectCounted(docs, "doc_id", "text", k)
+        val (out, reevals, maxFetch, nFallbacks) = graft.operators.Selection
+          .maxCoverageSelectCounted(docs, "doc_id", "text", k, shingleLen = 3,
+            batchCap = 64, fetchCapBatches = 16)
         val rows = out.count()
         val dt = (System.nanoTime() - t0) / 1e9
         val n = docs.count()
         println(f"CELF k=$k%-3d rounds=$rows%-3d total=$dt%7.2f s " +
           f"reevals=$reevals (n=$n, naive would be ${n * rows}); " +
-          f"tail reevals/round=${if (rows > 1) (reevals - n) / (rows - 1) else 0}")
+          f"tail reevals/round=${if (rows > 1) (reevals - n) / (rows - 1) else 0} " +
+          f"max fetch=$maxFetch fallbacks=$nFallbacks")
       }
     }
 
